@@ -38,10 +38,11 @@ import re
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 _MANIFEST_DIR = "_v"
 _COMMIT_IDX = "_commits.idx"  # publish-time version->(ts, op) sidecar
@@ -696,6 +697,41 @@ def _live_deletes(deletes: list[dict] | None, files: list[dict]) -> list[dict]:
         for d in deletes
         if any(_delete_applies(d, e, d.get("col", "")) for e in files)
     ]
+
+
+def _uri_abspath(uri: str) -> str:
+    """Local absolute path of an ``input_file_name()`` URI."""
+    import urllib.parse
+
+    return os.path.abspath(urllib.parse.unquote(urllib.parse.urlparse(uri).path))
+
+
+def _local_values(tdir: str, entries: list[dict], col: str) -> set:
+    """Non-null values of column ``col`` in just-written local files,
+    read in-process (pyarrow, one column), so no Spark job runs."""
+    import pyarrow.parquet as pq
+
+    out: set = set()
+    for e in entries:
+        out.update(
+            pq.read_table(os.path.join(tdir, e["path"]), columns=[col])
+            .column(0)
+            .to_pylist()
+        )
+    out.discard(None)
+    return out
+
+
+class _DmlScope(NamedTuple):
+    """The snapshot a row-level DML reads (``Warehouse._dml_scope``)."""
+
+    version: int
+    doc: dict
+    schema: StructType
+    phys: dict
+    skipping: list[tuple]  # the tuple predicates on physical names
+    candidates: list[dict]
+    stats: dict
 
 
 class TableNotFoundError(Exception):
@@ -4550,32 +4586,13 @@ class Warehouse:
                     f"the predicate {replace_where!r} (Delta semantics: "
                     "the batch must satisfy the replace predicate)"
                 )
-            untouched, rewrite, schema, version, _n, stats = (
-                self._touched_by_predicate(
-                    tdir, meta, predicate, predicates=preds
-                )
-            )
-            doc = self._manifest_doc(tdir, version)
-            new_files = list(self._write_table_files(tdir, aligned, meta))
-            if rewrite:
-                kept = self._read_entries(
-                    tdir, rewrite, schema, meta.get("physical"),
-                    doc.get("deletes"), meta.get("key"),
-                ).filter(~F.coalesce(predicate, F.lit(False)))
-                new_files += self._write_table_files(tdir, kept, meta)
-            v = self._publish_rewrite(
-                tdir, version,
-                {_scope_key(e) for e in rewrite} if meta["partition_by"] else None,
-                rewrite, untouched, new_files, meta["schema"],
-                phys=meta.get("physical"),
-                rebase_validate=self._predicate_rebase_validator(
-                    tdir, schema, meta.get("physical") or {}, predicate,
-                    preds,
-                ),
-                op="overwrite",
+            # the CoW DELETE rewrite, with the batch in the same commit
+            v, _n, stats = self._dml_cow(
+                tdir, meta, predicate, preds, op="overwrite", batch=aligned
             )
             return {
-                "version": v, "replaced_files": len(rewrite), **stats,
+                "version": v, "replaced_files": stats["rewritten_files"],
+                **stats,
             }
         if not dynamic or not meta.get("partition_by"):
             v = self.insert(ns, table, df, overwrite=True)
@@ -4972,6 +4989,7 @@ class Warehouse:
         # Bloom/min-max pruning of the match probe. Over-cap batches
         # probe every file with a distributed semi-join instead.
         key_vals: set | None = None
+        t_keys = time.perf_counter()
         kp = (
             match_keys.limit(self._MERGE_COLLECT_KEYS_MAX + 1).collect()
         )
@@ -5028,11 +5046,7 @@ class Warehouse:
                 .distinct()
                 .collect()
             )
-            import urllib.parse
-
-            for r in per_file:
-                p = urllib.parse.unquote(urllib.parse.urlparse(r["_f"]).path)
-                hit.add(by_abs[os.path.abspath(p)])
+            hit = {by_abs[_uri_abspath(r["_f"])] for r in per_file}
         rewrite = [e for e in entries if e["path"] in hit]
         untouched = [e for e in entries if e["path"] not in hit]
         self.last_merge_stats["rewritten_files"] = len(rewrite)
@@ -5072,30 +5086,20 @@ class Warehouse:
 
         t_write = time.perf_counter()
         self.last_merge_stats["walls"] = {
-            "probe_sec": round(t_write - t_probe, 3)
+            "keys_sec": round(t_probe - t_keys, 3),
+            "probe_sec": round(t_write - t_probe, 3),
         }
         new_files = self._write_table_files(tdir, merged, meta)
         self.last_merge_stats["walls"]["write_data_sec"] = round(
             time.perf_counter() - t_write, 3
         )
 
-        def validate_rebase(fresh: list[dict]) -> bool:
-            # A concurrent append into an untouched partition may hold a
-            # matched key the probe never saw -- carried over blindly it
-            # would produce duplicate keys (or survive a delete). Blooms
-            # pre-prune; survivors get a bounded existence probe.
-            cand = fresh
-            if key_vals is not None:
-                cand = self._prune_entries_by_keys(fresh, phys_key, key_vals)
-            if not cand:
-                return True
-            df = self._read_files(tdir, cand, schema, phys=phys_map).select(key)
-            if key_vals:
-                df = df.filter(F.col(key).isin(*key_vals))
-            else:
-                df = df.join(match_keys, key, "left_semi")
-            return df.limit(1).count() == 0
-
+        # a concurrent append into an untouched partition may hold a
+        # matched key the probe never saw: carried over blindly it would
+        # duplicate the key (or survive a delete)
+        validate_rebase, _ = self._keyed_validators(
+            tdir, schema, phys_map, key, key_vals, match_keys
+        )
         t_pub = time.perf_counter()
         out = self._publish_rewrite(
             tdir, version, touched if pcol else None, rewrite, untouched,
@@ -5152,19 +5156,8 @@ class Warehouse:
                 sum(e["records"] for e in data_files)
                 <= self._MERGE_COLLECT_KEYS_MAX
             ):
-                import pyarrow.parquet as pq
-
-                vals: list = []
-                for e in data_files:
-                    vals += (
-                        pq.read_table(
-                            os.path.join(tdir, e["path"]), columns=[phys_key]
-                        )
-                        .column(0)
-                        .to_pylist()
-                    )
                 del_files = self._write_delete_files_from_keys(
-                    tdir, {v for v in vals if v is not None}, meta
+                    tdir, _local_values(tdir, data_files, phys_key), meta
                 )
             if del_files is None:  # over-cap batch or unmapped key type
                 del_files = self._write_delete_files(
@@ -5230,32 +5223,11 @@ class Warehouse:
                 meta,
             ) or None
 
-            def rebase_validate(fresh: list[dict]) -> bool:
-                # the stored change set's pre-images bind to the READ
-                # snapshot: a concurrent commit whose new files HOLD a
-                # batch key would make them stale -- conflict instead of
-                # publishing a lying changelog. Blooms/min-max pre-prune;
-                # survivors get a bounded existence probe (a fresh file
-                # with fully disjoint keys must NOT abort the merge --
-                # concurrent disjoint MoR merges stay conflict-free
-                # even with the change feed on)
-                cand = (
-                    self._prune_entries_by_keys(fresh, phys_key, key_vals)
-                    if key_vals is not None
-                    else fresh
-                )
-                if not cand:
-                    return True
-                df = self._read_files(
-                    tdir, cand, schema, phys=phys
-                ).select(key)
-                if key_vals:
-                    df = df.filter(F.col(key).isin(*key_vals))
-                else:
-                    df = df.join(match_keys, key, "left_semi")
-                return df.limit(1).count() == 0
-
-            rebase_validate_changes = self._cdf_change_validator(
+            # the stored pre-images bind to the READ snapshot: a
+            # concurrent commit whose files hold a batch key would make
+            # them stale, so conflict instead of publishing a lying
+            # changelog (key-disjoint concurrent MoR merges still rebase)
+            rebase_validate, rebase_validate_changes = self._keyed_validators(
                 tdir, schema, phys, key, key_vals, match_keys
             )
 
@@ -5291,98 +5263,6 @@ class Warehouse:
         self.last_merge_stats["walls"] = walls
         return out
 
-    def _touched_by_predicate(
-        self,
-        tdir: str,
-        meta: dict,
-        predicate,
-        predicates: list[tuple] | None = None,
-        count_matches: bool = False,
-    ) -> tuple[list[dict], list[dict], StructType, int, int | None, dict]:
-        """Split the current manifest into (untouched, rewrite) for a
-        row-level predicate, at FILE granularity: manifest min/max +
-        Bloom skipping first drops every file the optional tuple
-        ``predicates`` provably can't match (the same `plan_files`
-        matching the read path uses), then ONE pruned columnar probe --
-        grouped by ``input_file_name`` -- finds the files that actually
-        hold matching rows. Everything else carries over by reference
-        (Iceberg copy-on-write DELETE/UPDATE rewrites only affected
-        files: at 100 TB, ``DELETE WHERE key = k`` probes the handful of
-        files the manifest can't rule out and rewrites ~one, never a
-        partition, never the table).
-
-        ``count_matches`` also returns the matching-row count, folded
-        into the same probe scan so UPDATE's reporting costs no second
-        pass. The trailing stats dict reports ``manifest_files`` /
-        ``probed_files`` / ``rewritten_files`` -- the observable pruning
-        surface."""
-        version = self._versions(tdir)[-1]
-        doc = self._manifest_doc(tdir, version)
-        entries = doc["files"]
-        schema = StructType.fromJson(meta["schema"])
-        phys = self._snapshot_phys(doc, meta)
-        if predicates:
-            tr = [(phys.get(c, c), op, v) for c, op, v in predicates]
-            candidates = self._prune_entries(entries, tr)
-        else:
-            candidates = entries
-        stats = {"manifest_files": len(entries), "probed_files": len(candidates)}
-        if not candidates:
-            stats["rewritten_files"] = 0
-            return entries, [], schema, version, 0 if count_matches else None, stats
-        import urllib.parse
-
-        by_abs = {
-            os.path.abspath(os.path.join(tdir, e["path"])): e for e in candidates
-        }
-        # deletes-aware probe: rows already removed by a merge-on-read
-        # equality delete must neither count as matches nor flag their
-        # file for rewrite on their own (_f is captured at scan stage,
-        # before the anti-join)
-        probe = self._read_entries(
-            tdir, candidates, schema, phys, doc.get("deletes"),
-            meta.get("key"), file_col="_f",
-        )
-        per_file = (
-            probe.filter(predicate)
-            .groupBy("_f")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        hit = set()
-        for r in per_file:
-            p = urllib.parse.unquote(urllib.parse.urlparse(r["_f"]).path)
-            hit.add(by_abs[os.path.abspath(p)]["path"])
-        n_match = sum(r["_n"] for r in per_file) if count_matches else None
-        untouched = [e for e in entries if e["path"] not in hit]
-        rewrite = [e for e in entries if e["path"] in hit]
-        stats["rewritten_files"] = len(rewrite)
-        return untouched, rewrite, schema, version, n_match, stats
-
-    def _predicate_rebase_validator(
-        self, tdir: str, schema: StructType, phys: dict, predicate,
-        predicates: list[tuple] | None,
-    ):
-        """Rebase-safety check for row-level DML: a concurrent commit's
-        files OUTSIDE the rewrite scope are only safe to carry over if
-        none of their rows match the DML predicate (Iceberg validates
-        conflicting data files against the filter table-wide). Manifest
-        stats/Blooms pre-prune the fresh files; only survivors get a
-        bounded existence probe."""
-
-        def validate(fresh: list[dict]) -> bool:
-            if predicates:
-                tr = [(phys.get(c, c), op, v) for c, op, v in predicates]
-                fresh = self._prune_entries(fresh, tr)
-            if not fresh:
-                return True
-            df = self._read_files(tdir, fresh, schema, phys=phys)
-            return (
-                df.filter(F.coalesce(predicate, F.lit(False))).limit(1).count() == 0
-            )
-
-        return validate
-
     @staticmethod
     def _predicate_spec(predicate, predicates):
         """Normalize a DML predicate: ``predicate`` may be a Column, or
@@ -5394,85 +5274,38 @@ class Warehouse:
             predicate = Warehouse._predicate_column(predicates)
         return predicate, predicates
 
-    def delete_where(
-        self, ns: str, table: str, predicate, predicates=None,
-        strategy: str = "cow",
-    ) -> dict:
-        """Row-level DELETE (``DELETE FROM t WHERE ...``).
+    @staticmethod
+    def _assigned(
+        rows: DataFrame, schema: StructType, exprs: dict, where=None, keep=()
+    ) -> DataFrame:
+        """The UPDATE projection: each column named in ``exprs`` takes
+        its expression, cast to the column type -- only on rows where
+        the boolean column ``where`` holds, when given. Other columns
+        and the ``keep`` columns pass through."""
 
-        ``strategy="cow"`` (default): file-level copy-on-write. Files
-        the manifest (min/max + key Bloom) proves clean are never read;
-        probed files with no matching row carry over by reference; only
-        files actually holding matches are rewritten without them.
+        def value(f):
+            v = exprs[f.name].cast(f.dataType)
+            if where is not None:
+                v = F.when(F.col(where), v).otherwise(F.col(f.name))
+            return v.alias(f.name)
 
-        ``strategy="mor"`` (merge-on-read, Iceberg v2 equality deletes;
-        requires a table key): NO data file is rewritten -- the pruned
-        probe finds the live matching keys and commits them as an
-        equality-delete file; readers anti-join it against older data
-        files and ``compact()`` folds it in. At 100 TB, deleting a few
-        scattered rows writes kilobytes instead of rewriting gigabytes.
-        KEY-granular by definition (exactly Iceberg equality-delete
-        semantics): on a table whose key column is not actually unique
-        (plain ``insert`` never enforces uniqueness), the delete removes
-        EVERY live copy of a matched key -- including copies the
-        predicate didn't match -- and ``deleted_rows`` counts distinct
-        keys. Tables that tolerate duplicate keys should use the
-        row-granular ``strategy="cow"``.
-
-        ``predicate`` may be a Column or a list of ``(col, op, value)``
-        tuples -- the tuple form (or the ``predicates`` hint) is what
-        enables manifest skipping, exactly like ``read(predicates=...)``.
-        Returns the new version, the exact deleted-row count, and the
-        probe's pruning stats."""
-        tdir = self._table_dir(ns, table)
-        meta = self.table_meta(ns, table)
-        predicate, predicates = self._predicate_spec(predicate, predicates)
-        if strategy == "mor":
-            return self._delete_where_mor(tdir, meta, predicate, predicates)
-        if strategy == "mor-pos":
-            return self._delete_where_mor_pos(
-                tdir, meta, predicate, predicates
-            )
-        if strategy != "cow":
-            raise ValueError(f"unknown DELETE strategy {strategy!r}")
-        untouched, rewrite, schema, version, n_match, stats = self._touched_by_predicate(
-            tdir, meta, predicate, predicates=predicates, count_matches=True
+        return rows.select(
+            *[value(f) if f.name in exprs else F.col(f.name) for f in schema.fields],
+            *keep,
         )
-        if not rewrite:
-            return {"version": version, "deleted_rows": 0, **stats}
-        # NULL predicate results keep the row (SQL DELETE semantics:
-        # delete only where the predicate is TRUE); the read applies any
-        # pending equality deletes so the rewrite never resurrects
-        # merge-on-read ghosts
-        doc = self._manifest_doc(tdir, version)
-        current = self._read_entries(
-            tdir, rewrite, schema, meta.get("physical"), doc.get("deletes"),
-            meta.get("key"),
-        )
-        kept = current.filter(~F.coalesce(predicate, F.lit(False)))
-        new_files = self._write_table_files(tdir, kept, meta)
-        change_files = None
-        if meta.get("change_feed"):
-            # stored CDF: the deleted rows are the commit's change set
-            dropped = current.filter(F.coalesce(predicate, F.lit(False)))
-            change_files = self._write_change_files(
-                tdir,
-                dropped.withColumn("_change_type", F.lit("delete")),
-                meta,
-            )
-        v = self._publish_rewrite(
-            tdir, version,
-            {_scope_key(e) for e in rewrite} if meta["partition_by"] else None,
-            rewrite, untouched, new_files, meta["schema"], phys=meta.get("physical"),
-            rebase_validate=self._predicate_rebase_validator(
-                tdir, schema, meta.get("physical") or {}, predicate, predicates
-            ),
-            op="delete",
-            change_files=change_files,
-        )
-        return {"version": v, "deleted_rows": n_match, **stats}
 
-    def _cdf_change_validator(
+    def _key_frame(
+        self, tdir: str, entries: list[dict], col: str, key: str, dtype
+    ) -> DataFrame:
+        """The key column of data or equality-delete files, stored under
+        the physical name ``col``, read as one column ``key``."""
+        return (
+            self.spark.read.schema(StructType([StructField(col, dtype, True)]))
+            .parquet(*[os.path.join(tdir, e["path"]) for e in entries])
+            .select(F.col(col).alias(key))
+        )
+
+    def _keyed_validators(
         self,
         tdir: str,
         schema: StructType,
@@ -5481,508 +5314,422 @@ class Warehouse:
         key_vals: set | None,
         keys_df: DataFrame,
     ):
-        """Build a ``rebase_validate_changes`` callback for commits with
-        stored change files pending: True iff a concurrent commit's
-        fresh equality-delete files and removed data files are provably
-        key-disjoint from this commit's change set (Bloom/min-max
-        pre-prune, then a bounded existence probe -- the same ladder the
-        fresh-data-file validator runs). Positional deletes bind to
-        (file, pos) addresses, not keys, and conflict conservatively."""
+        """Rebase validators for a commit bound to a key set read from
+        its snapshot: MERGE's batch keys, or the keys an MoR DELETE or
+        UPDATE writes as equality deletes. The keyed check prunes files
+        by key Bloom and min/max when ``key_vals`` was small enough to
+        collect, then runs a bounded existence probe: ``isin`` over the
+        collected keys, else a semi-join with ``keys_df``.
+
+        Returns ``(validate, validate_changes)``. ``validate(fresh)``
+        holds iff no concurrently added data file may hold a key:
+        carried over blindly, it would duplicate a merged key, or be
+        killed by this commit's newer delete. ``validate_changes(
+        fresh_deletes, removed)`` holds iff a concurrent commit's
+        equality deletes and removed data files miss the keys, so this
+        commit's stored change-feed pre-images are still live.
+        Positional deletes bind to (file, pos), not keys, and conflict
+        conservatively."""
         phys_key = phys.get(key, key)
+        dtype = schema[key].dataType
 
-        def validate(fresh_dels: list[dict], removed: list[dict]) -> bool:
-            if any(d.get("kind") == "pos" for d in fresh_dels):
-                return False
-            for ents, is_del in ((fresh_dels, True), (removed, False)):
-                cand = (
-                    self._prune_entries_by_keys(ents, phys_key, key_vals)
-                    if key_vals is not None
-                    else ents
-                )
-                if not cand:
-                    continue
-                if is_del:
-                    col = cand[0].get("col", phys_key)
-                    df = self.spark.read.parquet(
-                        *[os.path.join(tdir, e["path"]) for e in cand]
-                    ).select(F.col(col).alias(key))
-                else:
-                    # removed data files are immutable on disk; the
-                    # manifest-level removal doesn't unlink them
-                    df = self._read_files(
-                        tdir, cand, schema, phys=phys
-                    ).select(key)
-                if key_vals:
-                    df = df.filter(F.col(key).isin(*key_vals))
-                else:
-                    df = df.join(keys_df, key, "left_semi")
-                if df.limit(1).count() > 0:
-                    return False
-            return True
-
-        return validate
-
-    def _delete_where_mor(
-        self, tdir: str, meta: dict, predicate, predicates
-    ) -> dict:
-        """Merge-on-read DELETE: one pruned, deletes-aware probe finds
-        the live matching keys; the commit appends an equality-delete
-        file and rewrites nothing. Rebase safety: a concurrent commit's
-        new data files must not contain any of OUR deleted keys -- their
-        rows are newer than our read and may no longer match the
-        predicate (a concurrent upsert of the same key), yet our delete
-        file would still kill them after a blind rebase (its sequence
-        ends up higher). Bloom/min-max pre-prune the fresh files; any
-        survivor turns the rebase into a conflict."""
-        key = meta.get("key")
-        if key is None:
-            raise ValueError(
-                "merge-on-read DELETE needs a table key (equality deletes); "
-                "use strategy='cow'"
-            )
-        version = self._versions(tdir)[-1]
-        doc = self._manifest_doc(tdir, version)
-        entries = doc["files"]
-        schema = StructType.fromJson(meta["schema"])
-        phys = self._snapshot_phys(doc, meta)
-        candidates = (
-            self._prune_entries(
-                entries, [(phys.get(c, c), op, v) for c, op, v in predicates]
-            )
-            if predicates
-            else entries
-        )
-        stats = {
-            "manifest_files": len(entries),
-            "probed_files": len(candidates),
-            "rewritten_files": 0,
-        }
-        if not candidates:
-            return {"version": version, "deleted_rows": 0, "delete_files": 0, **stats}
-        probe = self._read_entries(
-            tdir, candidates, schema, phys, doc.get("deletes"), key
-        ).filter(F.coalesce(predicate, F.lit(False)))
-        matched = probe.select(key).distinct()
-        del_files = self._write_delete_files(tdir, matched, meta, coalesce_one=False)
-        if not del_files:
-            return {"version": version, "deleted_rows": 0, "delete_files": 0, **stats}
-        change_files = None
-        if meta.get("change_feed"):
-            # stored CDF (Delta's documented trade: one extra pass over
-            # the matched rows): the deleted pre-images ARE the commit's
-            # change set -- changelog consumers read them directly
-            # instead of re-deriving pre-images from the delete keys
-            change_files = self._write_change_files(
-                tdir,
-                probe.withColumn("_change_type", F.lit("delete")),
-                meta,
-            ) or None
-        deleted = sum(d.get("records", 0) for d in del_files)
-        key_vals: set | None = None
-        if deleted <= self._MERGE_COLLECT_KEYS_MAX:
-            # read the just-written delete files straight back (driver-
-            # side, bounded) instead of recomputing the probe plan
-            import pyarrow.parquet as pq
-
-            key_vals = set()
-            for d in del_files:
-                key_vals |= set(
-                    pq.read_table(
-                        os.path.join(tdir, d["path"]), columns=[d["col"]]
-                    ).column(0).to_pylist()
-                )
-        phys_key = phys.get(key, key)
-
-        def validate_rebase(fresh: list[dict]) -> bool:
+        def holds_key(entries: list[dict]) -> bool:
             cand = (
-                self._prune_entries_by_keys(fresh, phys_key, key_vals)
-                if key_vals is not None
-                else fresh
-            )
-            if not cand:
-                return True
-            df = self._read_files(tdir, cand, schema, phys=phys).select(key)
-            if key_vals:
-                df = df.filter(F.col(key).isin(*key_vals))
-            else:
-                df = df.join(matched, key, "left_semi")
-            return df.limit(1).count() == 0
-
-        v = self._publish_append(
-            tdir, version, [], meta["schema"], phys=meta.get("physical"),
-            new_deletes=del_files, rebase_validate=validate_rebase,
-            op="delete", change_files=change_files,
-            rebase_validate_changes=self._cdf_change_validator(
-                tdir, schema, phys, key, key_vals, matched
-            ),
-        )
-        return {
-            "version": v, "deleted_rows": deleted,
-            "delete_files": len(del_files), **stats,
-        }
-
-    def _delete_where_mor_pos(
-        self, tdir: str, meta: dict, predicate, predicates
-    ) -> dict:
-        """Merge-on-read DELETE with POSITION delete files (Iceberg v2
-        positional deletes): ROW-granular and KEYLESS -- the complement
-        of the equality path. One pruned, deletes-aware probe reads the
-        matching rows WITH their (file, row-ordinal) address
-        (``_metadata.row_index``); the commit appends a position-delete
-        file naming those addresses and rewrites nothing. Readers
-        anti-join on (path, pos) for exactly the targeted files;
-        ``compact()`` folds the delete in (its targets leave the
-        manifest, so it dangles). Unlike equality deletes this removes
-        ONLY the matched rows -- duplicate-key tables keep their other
-        copies -- and needs no table key at all.
-
-        Rebase safety: position deletes bind to immutable file paths,
-        so a concurrent APPEND never conflicts; but a concurrent
-        rewrite that removed one of our target files (compaction, CoW
-        DML) would silently resurrect its rows -- the rebase validator
-        turns that into a conflict."""
-        version = self._versions(tdir)[-1]
-        doc = self._manifest_doc(tdir, version)
-        entries = doc["files"]
-        schema = StructType.fromJson(meta["schema"])
-        phys = self._snapshot_phys(doc, meta)
-        candidates = (
-            self._prune_entries(
-                entries, [(phys.get(c, c), op, v) for c, op, v in predicates]
-            )
-            if predicates
-            else entries
-        )
-        stats = {
-            "manifest_files": len(entries),
-            "probed_files": len(candidates),
-            "rewritten_files": 0,
-        }
-        if not candidates:
-            return {
-                "version": version, "deleted_rows": 0, "delete_files": 0,
-                **stats,
-            }
-        probe = self._read_entries(
-            tdir, candidates, schema, phys, doc.get("deletes"),
-            meta.get("key"), keep_pos=True,
-        ).filter(F.coalesce(predicate, F.lit(False)))
-        addr = probe.join(
-            F.broadcast(self._basename_relpath_map(candidates)),
-            "__abase",
-        ).select(
-            F.col("__relpath").alias("file"),
-            F.col("__pos").alias("pos"),
-        )
-        del_files = self._write_pos_delete_files(tdir, addr)
-        if not del_files:
-            return {
-                "version": version, "deleted_rows": 0, "delete_files": 0,
-                **stats,
-            }
-        change_files = None
-        if meta.get("change_feed"):
-            # stored CDF for positional deletes (VERDICT r12 #3): the
-            # matched rows ARE the commit's change set -- exactly the
-            # rows the addresses kill, row-granular (no key needed).
-            # One extra pruned pass, the documented CDF-at-write trade.
-            change_files = self._write_change_files(
-                tdir,
-                probe.select(*schema.fieldNames()).withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                meta,
-            ) or None
-        deleted = sum(d.get("records", 0) for d in del_files)
-        target_set = set(del_files[0]["targets"])
-
-        def validate_rebase(_fresh: list[dict]) -> bool:
-            tip = self._versions(tdir)[-1]
-            live = {e["path"] for e in self._manifest(tdir, tip)}
-            return target_set <= live
-
-        # no rebase_validate_changes: position pre-images bind to
-        # addresses, not keys -- any concurrent delete-bearing commit
-        # conflicts conservatively when change files are pending
-        v = self._publish_append(
-            tdir, version, [], meta["schema"], phys=meta.get("physical"),
-            new_deletes=del_files, rebase_validate=validate_rebase,
-            op="delete", change_files=change_files,
-        )
-        return {
-            "version": v, "deleted_rows": deleted,
-            "delete_files": len(del_files), **stats,
-        }
-
-    def _update_where_mor(
-        self, tdir: str, meta: dict, assignments: dict, predicate, predicates
-    ) -> dict:
-        """Merge-on-read UPDATE (delete + reinsert): one pruned,
-        deletes-aware probe reads ONLY the matching rows, applies the
-        assignments, and commits the updated copies as new data files
-        plus ONE equality-delete file of their keys -- the delete (at
-        the commit's sequence) kills every older copy while the updated
-        rows, written at the same sequence, survive. Zero existing
-        files are read beyond the probe and zero are rewritten: the
-        commit is O(matches), not O(touched files). Key-granular like
-        MoR DELETE (every row of a matched key is superseded -- exact
-        for unique-key tables; use CoW for multi-row keys), and the key
-        itself cannot be reassigned (the delete file must keep
-        addressing the pre-image). Rebase rule mirrors MoR DELETE: a
-        concurrent commit appending any matched key conflicts."""
-        key = meta.get("key")
-        if key is None:
-            raise ValueError(
-                "merge-on-read UPDATE needs a table key (equality "
-                "deletes); use strategy='cow'"
-            )
-        if key in assignments:
-            raise ValueError(
-                "merge-on-read UPDATE cannot reassign the key column; "
-                "use strategy='cow'"
-            )
-        version = self._versions(tdir)[-1]
-        doc = self._manifest_doc(tdir, version)
-        entries = doc["files"]
-        schema = StructType.fromJson(meta["schema"])
-        phys = self._snapshot_phys(doc, meta)
-        candidates = (
-            self._prune_entries(
-                entries, [(phys.get(c, c), op, v) for c, op, v in predicates]
-            )
-            if predicates
-            else entries
-        )
-        stats = {
-            "manifest_files": len(entries),
-            "probed_files": len(candidates),
-            "rewritten_files": 0,
-        }
-        if not candidates:
-            return {"version": version, "updated_rows": 0, "delete_files": 0, **stats}
-        matched = self._read_entries(
-            tdir, candidates, schema, phys, doc.get("deletes"), key
-        ).filter(F.coalesce(predicate, F.lit(False)))
-        updated = matched.select(
-            *[
-                assignments[f.name].cast(f.dataType).alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-                for f in schema.fields
-            ]
-        )
-        self._check_constraints(updated, meta)
-        data_files = self._write_table_files(tdir, updated, meta)
-        if not data_files:
-            return {"version": version, "updated_rows": 0, "delete_files": 0, **stats}
-        # the matched keys are already materialized in the new data
-        # files -- read them back (key column only, columnar) instead
-        # of running the probe plan a second time
-        phys_key = (meta.get("physical") or {}).get(key, key)
-        from pyspark.sql.types import StructField as _SF
-
-        kdf = self.spark.read.schema(
-            StructType([_SF(phys_key, schema[key].dataType, True)])
-        ).parquet(
-            *[os.path.join(tdir, e["path"]) for e in data_files]
-        ).select(F.col(phys_key).alias(key)).distinct()
-        del_files = self._write_delete_files(tdir, kdf, meta, coalesce_one=True)
-        n_updated = sum(e.get("records", 0) for e in data_files)
-        key_vals: set | None = None
-        if n_updated <= self._MERGE_COLLECT_KEYS_MAX:
-            import pyarrow.parquet as pq
-
-            key_vals = set()
-            for d in del_files:
-                key_vals |= set(
-                    pq.read_table(
-                        os.path.join(tdir, d["path"]), columns=[d["col"]]
-                    ).column(0).to_pylist()
-                )
-        change_files = None
-        if meta.get("change_feed"):
-            # stored CDF: the equality delete is KEY-granular, so the
-            # pre-images are every live row holding a matched key --
-            # including copies the predicate didn't match (pruned by
-            # key over the WHOLE manifest: the predicate's candidates
-            # may miss other copies of a matched key)
-            kcand = (
                 self._prune_entries_by_keys(entries, phys_key, key_vals)
                 if key_vals is not None
                 else entries
             )
-            pre = self._read_entries(
-                tdir, kcand, schema, phys, doc.get("deletes"), key
-            ).join(kdf, key, "left_semi")
-            post = self._read_files(
-                tdir, data_files, schema, phys=meta.get("physical")
-            )
-            change_files = self._write_change_files(
-                tdir,
-                pre.withColumn("_change_type", F.lit("delete")).unionByName(
-                    post.withColumn("_change_type", F.lit("insert"))
-                ),
-                meta,
-            ) or None
-
-        def validate_rebase(fresh: list[dict]) -> bool:
-            cand = (
-                self._prune_entries_by_keys(fresh, phys_key, key_vals)
-                if key_vals is not None
-                else fresh
-            )
             if not cand:
-                return True
-            df = self._read_files(tdir, cand, schema, phys=phys).select(key)
-            if key_vals:
-                df = df.filter(F.col(key).isin(*key_vals))
-            else:
-                df = df.join(kdf, key, "left_semi")
-            return df.limit(1).count() == 0
+                return False
+            # delete entries name their key column; removed data files
+            # stay on disk, the manifest-level removal doesn't unlink them
+            df = self._key_frame(
+                tdir, cand, cand[0].get("col", phys_key), key, dtype
+            )
+            df = (
+                df.filter(F.col(key).isin(*key_vals))
+                if key_vals
+                else df.join(keys_df, key, "left_semi")
+            )
+            return df.limit(1).count() > 0
 
-        v = self._publish_append(
-            tdir, version, data_files, meta["schema"],
-            phys=meta.get("physical"), new_deletes=del_files,
-            rebase_validate=validate_rebase, op="update",
-            change_files=change_files,
-            rebase_validate_changes=self._cdf_change_validator(
-                tdir, schema, phys, key, key_vals, kdf
-            ),
-        )
-        return {
-            "version": v, "updated_rows": n_updated,
-            "delete_files": len(del_files), **stats,
-        }
+        def validate(fresh: list[dict]) -> bool:
+            return not holds_key(fresh)
 
-    def _update_where_mor_pos(
-        self, tdir: str, meta: dict, assignments: dict, predicate, predicates
-    ) -> dict:
-        """Merge-on-read UPDATE via POSITION deletes: row-granular and
-        keyless. One pruned, deletes-aware probe reads the matching
-        rows WITH their (file, row-ordinal) address, applies the
-        assignments, and stages the result ONCE; the commit appends the
-        updated copies as new data files plus a position-delete file of
-        the old addresses. Unlike the equality path this supersedes
-        EXACTLY the matched rows (safe on duplicate-key and keyless
-        tables) and any column -- including a key -- may be reassigned,
-        because the delete binds to addresses, not values. O(matches)
-        like the equality path; rebase turns a concurrent rewrite of a
-        target file into a conflict (same rule as mor-pos DELETE)."""
+        def validate_changes(fresh_dels: list[dict], removed: list[dict]) -> bool:
+            if any(d.get("kind") == "pos" for d in fresh_dels):
+                return False
+            return not (holds_key(fresh_dels) or holds_key(removed))
+
+        return validate, validate_changes
+
+    def _dml_scope(self, tdir: str, meta: dict, predicates) -> _DmlScope:
+        """The snapshot a row-level DML reads: the tip manifest, the
+        logical schema, the snapshot's column map, and the candidate
+        files that manifest min/max and Bloom skipping cannot rule out
+        for the optional tuple ``predicates`` (the matching
+        ``plan_files`` runs). ``stats`` starts the pruning counts every
+        DML result reports."""
         version = self._versions(tdir)[-1]
         doc = self._manifest_doc(tdir, version)
-        entries = doc["files"]
-        schema = StructType.fromJson(meta["schema"])
         phys = self._snapshot_phys(doc, meta)
-        candidates = (
-            self._prune_entries(
-                entries, [(phys.get(c, c), op, v) for c, op, v in predicates]
-            )
-            if predicates
-            else entries
+        skipping = [(phys.get(c, c), op, v) for c, op, v in predicates or ()]
+        candidates = self._prune_entries(doc["files"], skipping)
+        return _DmlScope(
+            version, doc, StructType.fromJson(meta["schema"]), phys, skipping,
+            candidates,
+            {"manifest_files": len(doc["files"]), "probed_files": len(candidates)},
         )
-        stats = {
-            "manifest_files": len(entries),
-            "probed_files": len(candidates),
-            "rewritten_files": 0,
-        }
-        noop = {
-            "version": version, "updated_rows": 0, "delete_files": 0, **stats,
-        }
-        if not candidates:
-            return noop
-        matched = (
-            self._read_entries(
-                tdir, candidates, schema, phys, doc.get("deletes"),
-                meta.get("key"), keep_pos=True,
+
+    def _dml_cow(
+        self, tdir: str, meta: dict, predicate, predicates, post=None,
+        op: str = "delete", batch: DataFrame | None = None,
+    ) -> tuple[int, int, dict]:
+        """Copy-on-write row-level DML at FILE granularity. ONE pruned,
+        deletes-aware probe, grouped by ``input_file_name``, finds and
+        counts the matching rows per file. Only files holding matches
+        are rewritten: without them (DELETE) or with their ``post``
+        images (UPDATE). Everything else carries over by reference, so
+        at 100 TB ``DELETE WHERE key = k`` rewrites about one file.
+        ``batch`` (INSERT ... REPLACE WHERE) appends rows in the same
+        commit; its change feed stays derived.
+
+        Rebase: a concurrent commit's files outside the rewrite scope
+        are carried over only if none of their rows match the predicate
+        (Iceberg validates conflicting data files against the filter
+        table-wide). Stats and Blooms pre-prune; survivors get a
+        bounded existence probe."""
+        s = self._dml_scope(tdir, meta, predicates)
+        cond = F.coalesce(predicate, F.lit(False))
+        hit: dict[str, int] = {}
+        if s.candidates:
+            by_abs = {
+                os.path.abspath(os.path.join(tdir, e["path"])): e["path"]
+                for e in s.candidates
+            }
+            # rows an MoR equality delete already removed neither count
+            # nor flag their file (_f is taken at scan stage)
+            per_file = (
+                self._read_entries(
+                    tdir, s.candidates, s.schema, s.phys, s.doc.get("deletes"),
+                    meta.get("key"), file_col="_f",
+                )
+                .filter(cond)
+                .groupBy("_f")
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .collect()
             )
-            .filter(F.coalesce(predicate, F.lit(False)))
-            .join(
-                F.broadcast(self._basename_relpath_map(candidates)),
-                "__abase",
-            )
+            hit = {by_abs[_uri_abspath(r["_f"])]: r["_n"] for r in per_file}
+        rewrite = [e for e in s.doc["files"] if e["path"] in hit]
+        untouched = [e for e in s.doc["files"] if e["path"] not in hit]
+        stats = dict(s.stats, rewritten_files=len(rewrite))
+        if not rewrite and batch is None:
+            return s.version, 0, stats
+        new_files = (
+            [] if batch is None else self._write_table_files(tdir, batch, meta)
         )
-        # one probe: stage updated rows + old addresses together, then
-        # split columnar (data files from the row columns, the delete
-        # file from the address columns)
-        staged = matched.select(
-            *[
-                assignments[f.name].cast(f.dataType).alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-                for f in schema.fields
-            ],
-            F.col("__relpath").alias("__file"),
-            F.col("__pos"),
-        )
-        stage = os.path.join(tdir, "data", f".upd-{uuid.uuid4().hex[:12]}")
         change_files = None
-        try:
-            staged.write.mode("overwrite").parquet(stage)
-            snap = self.spark.read.parquet(stage)
-            updated = snap.select(*schema.fieldNames())
+        if rewrite:
+            # the rewrite applies pending equality deletes: it must never
+            # resurrect MoR ghost rows; NULL predicates keep the row
+            current = self._read_entries(
+                tdir, rewrite, s.schema, s.phys, s.doc.get("deletes"),
+                meta.get("key"),
+            )
+            change = current.filter(cond).withColumn(
+                "_change_type", F.lit("delete")
+            )
+            if post is None:
+                kept = current.filter(~cond)
+            else:
+                # the match marker carries through so the post-image
+                # and the change set see the same rows
+                marked = post(current.withColumn("__upd", cond), "__upd", ["__upd"])
+                kept = marked.drop("__upd")
+                self._check_constraints(kept, meta)
+                change = change.unionByName(
+                    marked.filter(F.col("__upd"))
+                    .drop("__upd")
+                    .withColumn("_change_type", F.lit("insert"))
+                )
+            new_files += self._write_table_files(tdir, kept, meta)
+            if meta.get("change_feed") and batch is None:
+                change_files = self._write_change_files(tdir, change, meta)
+
+        def validate(fresh: list[dict]) -> bool:
+            fresh = self._prune_entries(fresh, s.skipping)
+            return not fresh or (
+                self._read_files(tdir, fresh, s.schema, phys=s.phys)
+                .filter(cond).limit(1).count() == 0
+            )
+
+        v = self._publish_rewrite(
+            tdir, s.version,
+            {_scope_key(e) for e in rewrite} if meta["partition_by"] else None,
+            rewrite, untouched, new_files, meta["schema"],
+            phys=meta.get("physical"), rebase_validate=validate, op=op,
+            change_files=change_files,
+        )
+        return v, sum(hit.values()), stats
+
+    def _dml_mor(
+        self, tdir: str, meta: dict, predicate, predicates, post=None,
+        op: str = "delete",
+    ) -> tuple[int, int, dict]:
+        """Merge-on-read row-level DML with EQUALITY deletes (Iceberg
+        v2; needs a table key). One pruned, deletes-aware probe reads
+        the matching rows. An UPDATE writes their ``post`` images as new
+        data files. The commit adds an equality-delete file of the
+        matched keys and rewrites nothing: the delete, at the commit's
+        sequence, kills every older copy of each key, while the updated
+        rows, written at the same sequence, survive. O(matches), not
+        O(touched files).
+
+        KEY-granular: on a table whose key is not unique, every live
+        copy of a matched key goes, and a DELETE counts distinct keys.
+        Rebase: a concurrent commit that appends a matched key
+        conflicts. Its rows are newer than our read, yet our delete,
+        re-stamped above them, would kill them."""
+        key = meta.get("key")
+        if key is None:
+            raise ValueError(
+                f"merge-on-read {op.upper()} needs a table key (equality "
+                "deletes); use strategy='cow'"
+            )
+        s = self._dml_scope(tdir, meta, predicates)
+        stats = dict(s.stats, rewritten_files=0, delete_files=0)
+        if not s.candidates:
+            return s.version, 0, stats
+        matched = self._read_entries(
+            tdir, s.candidates, s.schema, s.phys, s.doc.get("deletes"), key
+        ).filter(F.coalesce(predicate, F.lit(False)))
+        phys_key, dtype = s.phys.get(key, key), s.schema[key].dataType
+        data_files: list[dict] = []
+        keys_df = matched.select(key)
+        if post is not None:
+            updated = post(matched)
             self._check_constraints(updated, meta)
             data_files = self._write_table_files(tdir, updated, meta)
             if not data_files:
-                return noop
-            addr = snap.select(
-                F.col("__file").alias("file"), F.col("__pos").alias("pos")
+                return s.version, 0, stats
+            # the matched keys are in the new data files: read them back
+            # instead of running the probe a second time
+            keys_df = self._key_frame(tdir, data_files, phys_key, key, dtype)
+        del_files = self._write_delete_files(
+            tdir, keys_df.distinct(), meta, coalesce_one=post is not None
+        )
+        if not del_files:
+            return s.version, 0, stats
+        n = sum(e.get("records", 0) for e in data_files or del_files)
+        key_vals = (
+            _local_values(tdir, del_files, phys_key)
+            if n <= self._MERGE_COLLECT_KEYS_MAX
+            else None
+        )
+        keys_df = self._key_frame(tdir, del_files, phys_key, key, dtype)
+        change_files = None
+        if meta.get("change_feed"):
+            # stored CDF: a DELETE's pre-images are the matched rows. An
+            # UPDATE's are every live row holding a matched key, copies
+            # the predicate did not match included (its reinserted rows
+            # replace them all), so prune by key over the WHOLE manifest
+            change = matched.withColumn("_change_type", F.lit("delete"))
+            if data_files:
+                files = s.doc["files"]
+                if key_vals is not None:
+                    files = self._prune_entries_by_keys(files, phys_key, key_vals)
+                change = (
+                    self._read_entries(
+                        tdir, files, s.schema, s.phys, s.doc.get("deletes"), key
+                    )
+                    .join(keys_df, key, "left_semi")
+                    .withColumn("_change_type", F.lit("delete"))
+                    .unionByName(
+                        self._read_files(tdir, data_files, s.schema, phys=s.phys)
+                        .withColumn("_change_type", F.lit("insert"))
+                    )
+                )
+            change_files = self._write_change_files(tdir, change, meta)
+        validate, validate_changes = self._keyed_validators(
+            tdir, s.schema, s.phys, key, key_vals, keys_df
+        )
+        v = self._publish_append(
+            tdir, s.version, data_files, meta["schema"],
+            phys=meta.get("physical"), new_deletes=del_files,
+            rebase_validate=validate, op=op, change_files=change_files,
+            rebase_validate_changes=validate_changes,
+        )
+        return v, n, dict(stats, delete_files=len(del_files))
+
+    def _dml_mor_pos(
+        self, tdir: str, meta: dict, predicate, predicates, post=None,
+        op: str = "delete",
+    ) -> tuple[int, int, dict]:
+        """Merge-on-read row-level DML with POSITION deletes (Iceberg v2
+        position delete files): ROW-granular and KEYLESS. One pruned,
+        deletes-aware probe reads the matching rows with their (file,
+        row-ordinal) address (``_metadata.row_index``). An UPDATE stages
+        their ``post`` images together with the addresses once and
+        writes the images as new data files. The commit adds a
+        position-delete file of the old addresses and rewrites nothing.
+        Exactly the matched rows go -- duplicate-key tables keep their
+        other copies -- and any column, the key too, may be reassigned.
+        Readers anti-join on (path, pos) for exactly the targeted
+        files; ``compact()`` folds the delete in.
+
+        Rebase: the addresses bind to immutable file paths, so a
+        concurrent append never conflicts; a concurrent rewrite that
+        removed a target file (compaction, CoW DML) would resurrect its
+        rows, so that conflicts."""
+        s = self._dml_scope(tdir, meta, predicates)
+        stats = dict(s.stats, rewritten_files=0, delete_files=0)
+        if not s.candidates:
+            return s.version, 0, stats
+        names = s.schema.fieldNames()
+        probe = self._read_entries(
+            tdir, s.candidates, s.schema, s.phys, s.doc.get("deletes"),
+            meta.get("key"), keep_pos=True,
+        ).filter(F.coalesce(predicate, F.lit(False)))
+        rows = probe.join(
+            F.broadcast(self._basename_relpath_map(s.candidates)), "__abase"
+        )
+        data_files, change_files = [], None
+        stage = os.path.join(tdir, "data", f".upd-{uuid.uuid4().hex[:12]}")
+        try:
+            if post is not None:
+                post(rows, keep=["__relpath", "__pos"]).write.mode(
+                    "overwrite"
+                ).parquet(stage)
+                rows = self.spark.read.parquet(stage)
+                self._check_constraints(rows.select(*names), meta)
+                data_files = self._write_table_files(
+                    tdir, rows.select(*names), meta
+                )
+            del_files = self._write_pos_delete_files(
+                tdir,
+                rows.select(
+                    F.col("__relpath").alias("file"), F.col("__pos").alias("pos")
+                ),
             )
-            del_files = self._write_pos_delete_files(tdir, addr)
+            if not del_files:
+                return s.version, 0, stats
             if meta.get("change_feed"):
-                # stored CDF (VERDICT r12 #3): pre-images re-read from
-                # the probe (immutable files -- deterministic second
-                # pass), post-images from the staged updated rows;
-                # row-granular like the addresses themselves
-                pre = matched.select(*schema.fieldNames())
-                change_files = self._write_change_files(
-                    tdir,
-                    pre.withColumn(
-                        "_change_type", F.lit("delete")
-                    ).unionByName(
-                        updated.withColumn("_change_type", F.lit("insert"))
-                    ),
-                    meta,
-                ) or None
+                # stored CDF, row-granular like the addresses: pre-images
+                # re-read from the probe (immutable files), post-images
+                # from the stage
+                change = probe.select(*names).withColumn(
+                    "_change_type", F.lit("delete")
+                )
+                if data_files:
+                    change = change.unionByName(
+                        rows.select(*names).withColumn(
+                            "_change_type", F.lit("insert")
+                        )
+                    )
+                change_files = self._write_change_files(tdir, change, meta)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        n_updated = sum(e.get("records", 0) for e in data_files)
-        target_set = set(del_files[0]["targets"]) if del_files else set()
+        targets = set(del_files[0]["targets"])
 
-        def validate_rebase(_fresh: list[dict]) -> bool:
+        def validate(_fresh: list[dict]) -> bool:
             tip = self._versions(tdir)[-1]
-            live = {e["path"] for e in self._manifest(tdir, tip)}
-            return target_set <= live
+            return targets <= {e["path"] for e in self._manifest(tdir, tip)}
 
+        # no rebase_validate_changes: position pre-images bind to
+        # addresses, not keys, so any concurrent delete-bearing commit
+        # conflicts when change files are pending
         v = self._publish_append(
-            tdir, version, data_files, meta["schema"],
+            tdir, s.version, data_files, meta["schema"],
             phys=meta.get("physical"), new_deletes=del_files,
-            rebase_validate=validate_rebase, op="update",
-            change_files=change_files,
+            rebase_validate=validate, op=op, change_files=change_files,
         )
-        return {
-            "version": v, "updated_rows": n_updated,
-            "delete_files": len(del_files), **stats,
-        }
+        n = sum(e.get("records", 0) for e in data_files or del_files)
+        return v, n, dict(stats, delete_files=len(del_files))
+
+    def _row_level_dml(
+        self, ns: str, table: str, meta: dict, op: str, strategy: str,
+        predicate, predicates, post=None,
+    ) -> dict:
+        """Run a DELETE or UPDATE (``op``) through the body of its
+        ``strategy``; returns the result dict both public methods give."""
+        body = {
+            "cow": self._dml_cow, "mor": self._dml_mor, "mor-pos": self._dml_mor_pos,
+        }.get(strategy)
+        if body is None:
+            raise ValueError(f"unknown {op.upper()} strategy {strategy!r}")
+        predicate, predicates = self._predicate_spec(predicate, predicates)
+        v, n, stats = body(
+            self._table_dir(ns, table), meta, predicate, predicates,
+            post=post, op=op,
+        )
+        rows_key = "deleted_rows" if op == "delete" else "updated_rows"
+        return {"version": v, rows_key: n, **stats}
+
+    def delete_where(
+        self, ns: str, table: str, predicate, predicates=None,
+        strategy: str = "cow",
+    ) -> dict:
+        """Row-level DELETE (``DELETE FROM t WHERE ...``).
+
+        ``strategy`` picks how the commit records the change (README,
+        "Row-level DML strategies"):
+
+        - ``"cow"`` (default): file-level copy-on-write. Files the
+          manifest proves clean are never read; probed files with no
+          matching row carry over by reference; only files holding
+          matches are rewritten without them.
+        - ``"mor"``: merge-on-read with an equality-delete file of the
+          matched keys (needs a table key). Nothing is rewritten; at
+          100 TB deleting a few scattered rows writes kilobytes instead
+          of gigabytes. KEY-granular: on a table whose key is not
+          unique, every live copy of a matched key goes, and
+          ``deleted_rows`` counts distinct keys.
+        - ``"mor-pos"``: merge-on-read with a position-delete file of
+          the matched rows' (file, row) addresses. Row-granular, needs
+          no key.
+
+        ``predicate`` may be a Column or a list of ``(col, op, value)``
+        tuples -- the tuple form (or the ``predicates`` hint) is what
+        enables manifest skipping, exactly like ``read(predicates=...)``.
+        Returns the new version, the deleted-row count and the probe's
+        pruning stats (``manifest_files``, ``probed_files``,
+        ``rewritten_files``; merge-on-read adds ``delete_files``)."""
+        return self._row_level_dml(
+            ns, table, self.table_meta(ns, table), "delete", strategy,
+            predicate, predicates,
+        )
 
     def update_where(
         self, ns: str, table: str, assignments: dict, predicate,
         predicates=None, strategy: str = "cow",
     ) -> dict:
-        """Row-level UPDATE (``UPDATE t SET col = expr WHERE ...``):
-        file-level copy-on-write, same manifest pruning as delete_where
-        (``predicate`` may be tuples, enabling min/max + Bloom file
-        skipping before the probe). ``assignments`` maps column name ->
-        Column expression evaluated on the matching rows. If an
-        assignment moves a row's partition value, the rewrite lands it
-        in its new partition (the write path derives partition values
-        from the data, so migration is automatic).
+        """Row-level UPDATE (``UPDATE t SET col = expr WHERE ...``).
+        ``assignments`` maps column name -> Column expression evaluated
+        on the matching rows' pre-update values. ``predicate`` and
+        ``predicates`` work as in :meth:`delete_where`.
 
-        ``strategy="mor"``: delete + reinsert via an equality-delete
-        commit (see :meth:`_update_where_mor`) -- O(matches) instead of
-        O(touched files), for keyed tables."""
-        tdir = self._table_dir(ns, table)
+        ``strategy`` picks how the commit records the change (README,
+        "Row-level DML strategies"):
+
+        - ``"cow"`` (default): file-level copy-on-write; only files
+          holding matches are rewritten. An assignment that moves a
+          row's partition value lands it in its new partition, and
+          generated columns whose sources change are recomputed.
+        - ``"mor"``: delete + reinsert. The updated rows are written as
+          new data files plus an equality-delete file of their keys, so
+          the commit is O(matches), not O(touched files). Needs a table
+          key, which cannot be reassigned; KEY-granular like the
+          ``"mor"`` DELETE.
+        - ``"mor-pos"``: delete + reinsert with a position-delete file
+          of the old rows' addresses. Row-granular, needs no key, and
+          any column, the key too, may be reassigned.
+
+        Neither merge-on-read strategy recomputes generated columns.
+        Returns the new version, the updated-row count and the pruning
+        stats."""
         meta = self.table_meta(ns, table)
-        bad = [c for c in assignments if c not in StructType.fromJson(meta["schema"]).fieldNames()]
+        schema = StructType.fromJson(meta["schema"])
+        bad = [c for c in assignments if c not in schema.fieldNames()]
         if bad:
             raise ValueError(f"unknown columns in UPDATE assignments: {bad}")
         generated = meta.get("generated") or {}
@@ -5992,102 +5739,34 @@ class Warehouse:
                 f"cannot assign GENERATED ALWAYS AS columns {gen_assigned}"
             )
         # generated columns whose expression references an assigned
-        # column must be RECOMPUTED from the post-update row (Delta
+        # column are RECOMPUTED from the post-update row (Delta
         # recomputes generated columns whose sources change)
-        gen_affected = {
-            g: e
+        gen = {
+            g: F.expr(e)
             for g, e in generated.items()
             if any(_exprs_referencing({g: e}, c) for c in assignments)
         }
-        predicate, predicates = self._predicate_spec(predicate, predicates)
-        if strategy in ("mor", "mor-pos") and gen_affected:
+        if strategy in ("mor", "mor-pos") and gen:
             raise ValueError(
                 "merge-on-read UPDATE cannot recompute generated "
-                f"columns {sorted(gen_affected)}; use strategy='cow'"
+                f"columns {sorted(gen)}; use strategy='cow'"
             )
-        if strategy == "mor":
-            return self._update_where_mor(
-                tdir, meta, assignments, predicate, predicates
+        if strategy == "mor" and meta.get("key") in assignments:
+            raise ValueError(
+                "merge-on-read UPDATE cannot reassign the key column; "
+                "use strategy='cow'"
             )
-        if strategy == "mor-pos":
-            return self._update_where_mor_pos(
-                tdir, meta, assignments, predicate, predicates
-            )
-        if strategy != "cow":
-            raise ValueError(f"unknown strategy {strategy!r}")
-        untouched, rewrite, schema, version, n_updated, stats = self._touched_by_predicate(
-            tdir, meta, predicate, predicates=predicates, count_matches=True
+
+        def post(rows, where=None, keep=()):
+            # the assignments evaluate together over pre-update values
+            # (SQL UPDATE semantics), then affected generated columns
+            # over the post-update row
+            rows = self._assigned(rows, schema, assignments, where, keep)
+            return self._assigned(rows, schema, gen, where, keep)
+
+        return self._row_level_dml(
+            ns, table, meta, "update", strategy, predicate, predicates, post
         )
-        if not rewrite:
-            return {"version": version, "updated_rows": 0, **stats}
-        # deletes-aware: the rewrite must not resurrect merge-on-read
-        # ghost rows living in the files it re-materializes
-        current = self._read_entries(
-            tdir, rewrite, schema, meta.get("physical"),
-            self._manifest_doc(tdir, version).get("deletes"), meta.get("key"),
-        )
-        cond = F.coalesce(predicate, F.lit(False))
-        # stage 1: the explicit assignments, evaluated simultaneously
-        # over pre-update values (SQL UPDATE semantics); stage 2:
-        # generated columns whose sources changed recompute from the
-        # POST-update row. The match marker carries through so stage 2
-        # and the optional CDF write see the same row set.
-        stage1 = current.withColumn("__upd", cond).select(
-            *[
-                (
-                    F.when(
-                        F.col("__upd"),
-                        assignments[f.name].cast(f.dataType),
-                    )
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ],
-            "__upd",
-        )
-        stage2 = stage1.select(
-            *[
-                (
-                    F.when(
-                        F.col("__upd"),
-                        F.expr(gen_affected[f.name]).cast(f.dataType),
-                    )
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                    if f.name in gen_affected
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ],
-            "__upd",
-        )
-        updated = stage2.drop("__upd")
-        self._check_constraints(updated, meta)
-        new_files = self._write_table_files(tdir, updated, meta)
-        change_files = None
-        if meta.get("change_feed"):
-            # stored CDF: pre-images as 'delete', post-images as
-            # 'insert' -- raw (un-netted) pairs; changelog nets at read
-            matched = current.filter(cond)
-            post = stage2.filter(F.col("__upd")).drop("__upd")
-            change = matched.withColumn(
-                "_change_type", F.lit("delete")
-            ).unionByName(post.withColumn("_change_type", F.lit("insert")))
-            change_files = self._write_change_files(tdir, change, meta)
-        v = self._publish_rewrite(
-            tdir, version,
-            {_scope_key(e) for e in rewrite} if meta["partition_by"] else None,
-            rewrite, untouched, new_files, meta["schema"], phys=meta.get("physical"),
-            rebase_validate=self._predicate_rebase_validator(
-                tdir, schema, meta.get("physical") or {}, predicate, predicates
-            ),
-            op="update",
-            change_files=change_files,
-        )
-        return {"version": v, "updated_rows": n_updated, **stats}
 
     # -- access control (D8: the reference's LakeFormation grants,
     # stack/lakeformation.py:186-243 -- ALL to the pipeline role on the

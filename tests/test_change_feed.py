@@ -9,6 +9,9 @@ contain no exceptAll netting of rewritten data files."""
 
 from __future__ import annotations
 
+import contextlib
+import unittest.mock as mock
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import (
@@ -222,15 +225,30 @@ def _mor_cdf_table(spark, tmp_path, name="w"):
     return wh
 
 
+@contextlib.contextmanager
+def _stale_read(wh, read_version):
+    """Pin the next DML's read snapshot to ``read_version``: its first
+    version lookup sees the stale tip, every later one (the publish
+    CAS and its rebase) the real one -- exactly what losing the CAS
+    race looks like."""
+    real = wh._versions
+    calls = []
+
+    def versions(tdir, branch=None):
+        calls.append(1)
+        vs = real(tdir, branch)
+        return [v for v in vs if v <= read_version] if len(calls) == 1 else vs
+
+    with mock.patch.object(wh, "_versions", side_effect=versions):
+        yield
+
+
 def _race_merge(wh, spark, batch_rows, read_version):
-    """Drive the MoR MERGE internals against a pinned (stale) read
-    snapshot -- exactly what losing the CAS race looks like."""
-    tdir = wh._table_dir("ns", "t")
-    meta = wh.table_meta("ns", "t")
-    src = spark.createDataFrame(batch_rows, S)
-    keys = src.select("id").distinct()
-    wh.last_merge_stats = {}
-    return wh._merge_upsert_mor(tdir, meta, src, keys, read_version)
+    """MoR MERGE of ``batch_rows`` against a stale read snapshot."""
+    with _stale_read(wh, read_version):
+        return wh.merge_upsert(
+            "ns", "t", spark.createDataFrame(batch_rows, S), strategy="mor"
+        )
 
 
 def test_stored_cdf_merge_conflicts_with_concurrent_delete_of_batch_key(
@@ -332,21 +350,14 @@ def test_stored_cdf_mor_delete_conflicts_with_concurrent_delete_overlap(
 
     wh = _mor_cdf_table(spark, tmp_path)
     tdir = wh._table_dir("ns", "t")
-    meta = wh.table_meta("ns", "t")
     read_version = wh._versions(tdir)[-1]
     wh.delete_where("ns", "t", [("id", "=", "k3")], strategy="mor")
-    # replay the loser against the stale snapshot via the internal
-    # (the public API would re-read the tip and see k3 already gone)
-    import unittest.mock as mock
-
-    with mock.patch.object(
-        wh, "_versions", side_effect=[[read_version]] + [
-            wh._versions(tdir)
-        ] * 50,
-    ):
+    # replay the loser against the stale snapshot (a fresh read would
+    # see k3 already gone)
+    with _stale_read(wh, read_version):
         with pytest.raises(CommitConflictError, match="change-feed"):
-            wh._delete_where_mor(
-                tdir, meta, F.col("id").isin("k3", "k4"), None
+            wh.delete_where(
+                "ns", "t", F.col("id").isin("k3", "k4"), strategy="mor"
             )
 
 

@@ -24,12 +24,6 @@ from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse im
     Warehouse,
 )
 
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4
-# -- the full suite outgrew the driver's verification budget). Run
-# everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
-
 SCHEMA = StructType(
     [
         StructField("id", StringType(), False),
@@ -353,6 +347,77 @@ def test_cow_rewrite_conflicts_with_concurrent_mor_delete(
     _race_one_commit(monkeypatch, wh, racer)
     with pytest.raises(CommitConflictError):
         wh.update_where("ns", "t", {"v": F.lit(0)}, [("day", "=", "d0")])
+
+
+def test_mor_update_conflicts_with_concurrent_matching_append(
+    spark, wh, monkeypatch
+):
+    """Equality UPDATE mirrors equality DELETE: its delete file would
+    kill a concurrently appended newer copy of an updated key."""
+    _base(spark, wh)
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        wh.insert("ns", "t", _df(spark, [("k1", "d1", 9999)]).coalesce(1))
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    with pytest.raises(CommitConflictError):
+        wh.update_where(
+            "ns", "t", {"v": F.lit(5)}, [("id", "=", "k1")], strategy="mor"
+        )
+
+
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_mor_pos_rebases_over_concurrent_append(spark, wh, monkeypatch, op):
+    """Position deletes bind to immutable file paths: a concurrent
+    append never conflicts, and both changes survive the rebase."""
+    expect = _base(spark, wh)
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        wh.insert("ns", "t", _df(spark, [("kZ", "d1", 77)]).coalesce(1))
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    if op == "delete":
+        wh.delete_where("ns", "t", [("id", "=", "k1")], strategy="mor-pos")
+        del expect["k1"]
+    else:
+        wh.update_where(
+            "ns", "t", {"v": F.lit(111)}, [("id", "=", "k1")],
+            strategy="mor-pos",
+        )
+        expect["k1"] = ("k1", "d1", 111)
+    expect["kZ"] = ("kZ", "d1", 77)
+    assert _state(wh) == expect
+
+
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_mor_pos_conflicts_with_concurrent_compaction(
+    spark, wh, monkeypatch, op
+):
+    """A concurrent compaction removes the file the position delete
+    targets: a blind rebase would dangle the delete and resurrect the
+    row, so it must conflict."""
+    _base(spark, wh)
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        wh.compact("ns", "t", min_files_per_partition=1)
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    with pytest.raises(CommitConflictError):
+        if op == "delete":
+            wh.delete_where(
+                "ns", "t", [("id", "=", "k1")], strategy="mor-pos"
+            )
+        else:
+            wh.update_where(
+                "ns", "t", {"v": F.lit(111)}, [("id", "=", "k1")],
+                strategy="mor-pos",
+            )
 
 
 # ---------------------------------------------------------------------------
