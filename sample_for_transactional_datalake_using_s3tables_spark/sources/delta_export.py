@@ -180,7 +180,7 @@ def import_delta_table(
 
     from pyspark.sql.types import StructType
 
-    from .warehouse import _extract_file_meta
+    from .warehouse import _extract_file_meta, _pack_blooms
 
     state = replay_delta_log(os.path.join(source_dir, "_delta_log"))
     md = state["metaData"]
@@ -228,6 +228,7 @@ def import_delta_table(
             entries.append(
                 {"path": os.path.relpath(full, tdir), **m, "partition": None}
             )
+        _pack_blooms(tdir, entries)
     wh._publish_append(
         tdir, wh._versions(tdir)[-1], entries, json.loads(schema.json())
     )

@@ -131,7 +131,7 @@ def _file_stats(md) -> dict:
 # are still probed with the legacy positions -- never mis-pruned.
 _BLOOM_M = 8192
 _BLOOM_K = 4
-_BLOOM_M_MAX = 262144  # 32 KiB of bits -> 64 KiB hex per manifest entry
+_BLOOM_M_MAX = 262144  # 32 KiB of bits per file in its commit's pack
 _BLOOM_BITS_PER_KEY = 24
 _U64 = (1 << 64) - 1
 
@@ -219,7 +219,8 @@ def _build_bloom(values) -> dict | None:
     predicates -- a predicate value of a different type would never
     hash-match, and pruning on it would break the 'prune only when
     provably no match' invariant (Spark's row filter may still match
-    via implicit cast)."""
+    via implicit cast). This inline form is what ``_pack_blooms``
+    moves into the commit dir's pack before publish."""
     nn = [v for v in values if v is not None]
     if not nn:
         return None  # all-null column: no information, store nothing
@@ -236,15 +237,90 @@ def _build_bloom(values) -> dict | None:
     return {"type": tag, "bits": bytes(bits).hex(), "m": m, "k": k}
 
 
-@functools.lru_cache(maxsize=256)
-def _bloom_bits(bloom_hex: str) -> bytes:
-    """Memoized hex decode: plan_files probes every (file, predicate)
-    pair against 8 KiB-hex blooms; decoding once per distinct bloom
-    keeps metadata-only planning allocation-light on large manifests."""
-    return bytes.fromhex(bloom_hex)
+# Key Bloom bits live OUTSIDE the manifest (Iceberg keeps its Bloom
+# filters in Puffin side files, not in manifests): every writer of file
+# entries writes the bits once, as raw bytes, to ONE pack per commit dir
+# (``data/<commit_id>/_blooms.bin``), and the entry's bloom keeps only
+# ``{"type", "m", "k", "off"}`` (the length is m/8). The pack path is
+# derived from the entry's own path, so it follows its data under
+# shallow clones, '..'-relative rebasing and table renames. A pack lives
+# as long as any .parquet file remains in its commit dir;
+# expire_snapshots and remove_orphan_files delete it after that.
+_BLOOM_PACK = "_blooms.bin"
 
 
-def _bloom_may_contain(bloom, value) -> bool:
+def _pack_rel(path: str) -> str:
+    """Pack of a file entry ``path``: the file's directory, minus a
+    trailing ``_p=`` partition component, plus ``_blooms.bin``."""
+    d = os.path.dirname(path)
+    if os.path.basename(d).startswith("_p="):
+        d = os.path.dirname(d)
+    return os.path.join(d, _BLOOM_PACK)
+
+
+def _pack_blooms(tdir: str, entries: list[dict]) -> None:
+    """Move the inline ``_build_bloom`` bits of just-written entries into
+    their commit dirs' packs; each bloom becomes ``{"type", "m", "k",
+    "off"}`` in place. Called next to the data write, before publish, so
+    a crash leaves only an orphan, just as it does for data."""
+    packs: dict[str, list[dict]] = {}
+    for e in entries:
+        for b in (e.get("blooms") or {}).values():
+            if isinstance(b, dict) and "bits" in b:
+                packs.setdefault(_pack_rel(e["path"]), []).append(b)
+    for rel, blooms in packs.items():
+        off = 0
+        # "x": each commit dir is fresh, so an existing pack is a bug
+        with open(os.path.join(tdir, rel), "xb") as f:
+            for b in blooms:
+                bits = bytes.fromhex(b.pop("bits"))
+                f.write(bits)
+                b["off"] = off
+                off += len(bits)
+
+
+def _drop_dead_packs(packs) -> None:
+    """Delete each Bloom pack (absolute path) whose commit dir holds no
+    .parquet file any more -- the end of a pack's lifetime."""
+    for pack in packs:
+        walk = os.walk(os.path.dirname(pack))
+        if not any(fn.endswith(".parquet") for _d, _s, fs in walk for fn in fs):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(pack)
+
+
+@functools.lru_cache(maxsize=1024)
+def _pack_read(tdir: str, path: str, off: int, n: int) -> bytes:
+    """``n`` bytes at ``off`` of the Bloom pack of the entry at ``path``
+    in the table dir ``tdir``. Packs are immutable and named by a fresh
+    commit id, so the cache never goes stale: a probe loop reads each
+    Bloom from disk once and resolves no path per probed value."""
+    with open(os.path.join(tdir, _pack_rel(path)), "rb") as f:
+        f.seek(off)
+        bits = f.read(n)
+    if len(bits) != n:
+        raise OSError(f"short read in the Bloom pack of {path}")
+    return bits
+
+
+def _bloom_bits(bloom: dict, path: str, tdir: str | None) -> bytes | None:
+    """The bit array of a key Bloom: inline hex (a ``_build_bloom``
+    result) or ``m/8`` bytes at ``off`` in the pack of the commit dir of
+    the entry at ``path``, resolved from the table dir ``tdir``. None
+    when unreadable; callers then keep the file."""
+    if "bits" in bloom:
+        return bytes.fromhex(bloom["bits"])
+    if tdir is None or "off" not in bloom:
+        return None
+    try:
+        return _pack_read(tdir, path, bloom["off"], bloom["m"] // 8)
+    except OSError:
+        return None
+
+
+def _bloom_may_contain(
+    bloom, value, path: str = "", tdir: str | None = None
+) -> bool:
     if isinstance(bloom, str):
         # legacy manifest format (pre-typed blooms stored a bare hex
         # string): degrade to no-prune instead of crashing plan_files
@@ -258,7 +334,9 @@ def _bloom_may_contain(bloom, value) -> bool:
         pos = _bloom_hashes(value)
     else:
         pos = _bloom_positions(value, m, bloom.get("k", _BLOOM_K))
-    bits = _bloom_bits(bloom["bits"])
+    bits = _bloom_bits(bloom, path, tdir)
+    if bits is None:
+        return True
     return all(bits[p // 8] & (1 << (p % 8)) for p in pos)
 
 
@@ -338,10 +416,12 @@ def _extract_file_meta(full: str, bloom_col: str | None) -> dict:
     return meta
 
 
-def _entry_may_hold_any(entry: dict, col: str, values) -> bool:
+def _entry_may_hold_any(
+    entry: dict, col: str, values, tdir: str | None = None
+) -> bool:
     """True if the file may contain ANY of the key values (per-file
     stats range + Bloom, early-exit on the first possible hit)."""
-    return any(_entry_may_match(entry, [(col, "=", v)]) for v in values)
+    return any(_entry_may_match(entry, [(col, "=", v)], tdir) for v in values)
 
 
 class _BulkKeyProbe:
@@ -354,13 +434,15 @@ class _BulkKeyProbe:
     range check by bisect) and the values' bloom bit positions as one
     numpy matrix; each entry then costs two bisects plus one vectorized
     gather over its 8 KiB bloom. Semantics are identical to
-    any(_entry_may_match(entry, [(col, "=", v)])): conservative
-    (missing stats/blooms or cross-type values keep the entry)."""
+    any(_entry_may_match(entry, [(col, "=", v)], tdir)): conservative
+    (missing stats/blooms or cross-type values keep the entry). Pack
+    Blooms resolve from the table dir ``tdir``."""
 
-    def __init__(self, values) -> None:
+    def __init__(self, values, tdir: str | None = None) -> None:
         import numpy as np
 
         self._np = np
+        self.tdir = tdir
         vals = [v for v in values if v is not None]
         tags = {_bloom_tag(v) for v in vals}
         # mixed/bloom-unsafe batches: fall back to "keep" on the bloom
@@ -445,9 +527,12 @@ class _BulkKeyProbe:
             or blooms.get("m") is None  # pre-r14 positions scheme: keep
         ):
             return True
+        raw = _bloom_bits(blooms, entry.get("path", ""), self.tdir)
+        if raw is None:
+            return True
         np = self._np
         m, k = blooms["m"], blooms.get("k", _BLOOM_K)
-        bits = np.frombuffer(_bloom_bits(blooms["bits"]), dtype=np.uint8)
+        bits = np.frombuffer(raw, dtype=np.uint8)
         # survivor-chained probe (optimization r14): a key survives only
         # if ALL k hash bits are set, so test hash j on just the keys
         # that survived hashes < j. The survivor set shrinks
@@ -519,9 +604,12 @@ class _BulkKeyProbe:
                 or b.get("m") is None
             ):
                 continue  # conservative keep (out[i] stays True)
+            raw = _bloom_bits(b, e.get("path", ""), self.tdir)
+            if raw is None:
+                continue
             groups.setdefault(
                 (b["m"], b.get("k", _BLOOM_K)), []
-            ).append((i, cand, b))
+            ).append((i, cand, np.frombuffer(raw, dtype=np.uint8)))
         n = self.h12.shape[0]
         lut = np.left_shift(np.uint8(1), np.arange(8, dtype=np.uint8))
         for (m, k), members in groups.items():
@@ -541,16 +629,11 @@ class _BulkKeyProbe:
                 sels.append(lut[(pos & np.uint64(7)).astype(np.uint8)])
             for c0 in range(0, len(members), self._BATCH_ENTRIES):
                 chunk = members[c0 : c0 + self._BATCH_ENTRIES]
-                bmat = np.stack(
-                    [
-                        np.frombuffer(_bloom_bits(b["bits"]), dtype=np.uint8)
-                        for _i, _c, b in chunk
-                    ]
-                )
+                bmat = np.stack([bits for _i, _c, bits in chunk])
                 alive = (bmat[:, idxs[0]] & sels[0][None, :]) != 0
                 for j in range(1, nb):
                     alive &= (bmat[:, idxs[j]] & sels[j][None, :]) != 0
-                for row, (i, cand, b) in enumerate(chunk):
+                for row, (i, cand, _bits) in enumerate(chunk):
                     a = alive[row]
                     if cand is not None:
                         surv = np.nonzero(a[cand])[0] + cand.start
@@ -580,12 +663,15 @@ class _BulkKeyProbe:
         return out
 
 
-def _entry_may_match(entry: dict, predicates: list[tuple]) -> bool:
+def _entry_may_match(
+    entry: dict, predicates: list[tuple], tdir: str | None = None
+) -> bool:
     """Conservative data skipping: False only when the file's min/max
-    PROVE no row can satisfy every predicate. Missing stats, unknown
-    columns, or None values always keep the file (parquet min/max
-    exclude nulls, so value comparisons can't prune all-null files --
-    they carry no stats at all and are kept)."""
+    or key Bloom PROVE no row can satisfy every predicate. Missing
+    stats, unknown columns, None values or an unreadable Bloom always
+    keep the file (parquet min/max exclude nulls, so value comparisons
+    can't prune all-null files -- they carry no stats at all and are
+    kept). Pack Blooms resolve from the table dir ``tdir``."""
     import datetime
 
     stats = entry.get("stats") or {}
@@ -595,7 +681,9 @@ def _entry_may_match(entry: dict, predicates: list[tuple]) -> bool:
             raise ValueError(f"unsupported prune op {op!r}")
         if value is None:
             continue
-        if op == "=" and col in blooms and not _bloom_may_contain(blooms[col], value):
+        if op == "=" and col in blooms and not _bloom_may_contain(
+            blooms[col], value, entry.get("path", ""), tdir
+        ):
             return False
         if col not in stats:
             continue
@@ -2295,49 +2383,55 @@ class Warehouse:
     # through one core (same pattern as the per-commit footer build).
     _PLAN_DISTRIBUTE_THRESHOLD = 4096
 
-    def _prune_entries(self, entries: list[dict], predicates: list[tuple]) -> list[dict]:
-        """Data-skipping filter over a manifest file list (min/max +
-        Bloom); distributed for very large manifests."""
+    def _prune_entries(
+        self, tdir: str, entries: list[dict], predicates: list[tuple]
+    ) -> list[dict]:
+        """Data-skipping filter over a manifest file list of the table
+        at ``tdir`` (min/max + Bloom); distributed for very large
+        manifests."""
         if not predicates:
             return entries
         if len(entries) <= self._PLAN_DISTRIBUTE_THRESHOLD:
-            return [e for e in entries if _entry_may_match(e, predicates)]
+            return [e for e in entries if _entry_may_match(e, predicates, tdir)]
         sc = self.spark.sparkContext
         n = max(1, min(len(entries) // 1024, sc.defaultParallelism))
         preds = list(predicates)
         return (
             sc.parallelize(entries, n)
-            .filter(lambda e: _entry_may_match(e, preds))
+            .filter(lambda e: _entry_may_match(e, preds, tdir))
             .collect()
         )
 
     def _prune_entries_by_keys(
-        self, entries: list[dict], col: str, values: set
+        self, tdir: str, entries: list[dict], col: str, values: set
     ) -> list[dict]:
-        """Keep entries that may hold ANY of the key values; distributed
-        for very large manifests (the driver never runs the
-        keys x files Bloom loop over a huge file list). Large key sets
-        use the vectorized probe (see _BulkKeyProbe) on either path."""
+        """Keep entries of the table at ``tdir`` that may hold ANY of the
+        key values; distributed for very large manifests (the driver
+        never runs the keys x files Bloom loop over a huge file list).
+        Large key sets use the vectorized probe (see _BulkKeyProbe) on
+        either path."""
         bulk = len(values) > self._BULK_KEY_PROBE_MIN
         if len(entries) <= self._PLAN_DISTRIBUTE_THRESHOLD:
             if bulk:
-                probe = _BulkKeyProbe(values)
+                probe = _BulkKeyProbe(values, tdir)
                 keep = probe.entries_may_hold_any(entries, col)
                 return [e for e, k in zip(entries, keep) if k]
-            return [e for e in entries if _entry_may_hold_any(e, col, values)]
+            return [
+                e for e in entries if _entry_may_hold_any(e, col, values, tdir)
+            ]
         sc = self.spark.sparkContext
         n = max(1, min(len(entries) // 1024, sc.defaultParallelism))
         vals = frozenset(values)
         if bulk:
 
             def _part(it):
-                probe = _BulkKeyProbe(vals)
+                probe = _BulkKeyProbe(vals, tdir)
                 return [e for e in it if probe.entry_may_hold_any(e, col)]
 
             return sc.parallelize(entries, n).mapPartitions(_part).collect()
         return (
             sc.parallelize(entries, n)
-            .filter(lambda e: _entry_may_hold_any(e, col, vals))
+            .filter(lambda e: _entry_may_hold_any(e, col, vals, tdir))
             .collect()
         )
 
@@ -2553,19 +2647,22 @@ class Warehouse:
         with the data files the tip added since ``read_version``;
         returning False turns the rebase into a conflict.
 
-        When ``change_files`` are pending, rebasing additionally guards
-        against concurrent commits that ADDED delete files or REMOVED
-        data files since ``read_version``: such commits carry no fresh
-        data files for ``rebase_validate`` to probe, yet they can remove
-        rows this commit's stored pre-images still describe --
-        publishing would double-count the delete in the changelog (and
-        double-subtract it in CDF-folded MV refreshes).
+        When ``change_files`` are pending, or the commit is an UPDATE
+        (``op="update"``), rebasing additionally guards against
+        concurrent commits that ADDED delete files or REMOVED data files
+        since ``read_version``: such commits carry no fresh data files
+        for ``rebase_validate`` to probe, yet they can remove rows this
+        commit's stored pre-images still describe -- publishing would
+        double-count the delete in the changelog (and double-subtract it
+        in CDF-folded MV refreshes) -- or rows a merge-on-read UPDATE
+        rewrites, whose post-images would then reinsert a deleted row.
         ``rebase_validate_changes(fresh_deletes, removed_entries) ->
-        bool`` lets the caller prove the concurrent delete/removal is
-        key-disjoint from its change set (delete files carry key
-        stats + Blooms; removed data files are immutable on disk, so
-        both prune and probe like fresh data files); absent a
-        validator, any such commit is a conflict."""
+        bool`` lets the caller prove the concurrent delete/removal
+        misses its rows (the keyed check: delete files carry key stats +
+        Blooms, removed data files are immutable on disk, so both prune
+        and probe like fresh data files; the position check: no target
+        file removed or hit); absent a validator, any such commit is a
+        conflict."""
         version = read_version
         if rebase_validate is not None:
             base_doc0 = self._manifest_doc(tdir, read_version, branch)
@@ -2647,12 +2744,14 @@ class Warehouse:
             except CommitConflictError:
                 version = self._versions(tdir, branch)[-1]
                 tip_doc = self._manifest_doc(tdir, version, branch)
-                if change_files and rebase_validate is not None:
-                    # stored pre-images bind to the read snapshot: a
-                    # concurrent deletes-only commit (MoR equality /
-                    # positional DELETE adds ZERO data files) or a
-                    # whole-file CoW removal would stale them without
-                    # ever reaching the fresh-data-file probe below
+                if (
+                    change_files or op == "update"
+                ) and rebase_validate is not None:
+                    # stored pre-images and UPDATE post-images bind to
+                    # the read snapshot: a concurrent deletes-only commit
+                    # (MoR equality / positional DELETE adds ZERO data
+                    # files) or a whole-file CoW removal would stale them
+                    # without ever reaching the fresh-data-file probe
                     fresh_dels = [
                         d for d in (tip_doc.get("deletes") or [])
                         if d["path"] not in known_dels
@@ -2669,8 +2768,8 @@ class Warehouse:
                         raise CommitConflictError(
                             "concurrent delete-bearing commit since read "
                             "snapshot would stale this commit's stored "
-                            "change-feed pre-images; re-run on the new "
-                            "snapshot"
+                            "change-feed pre-images or UPDATE post-images; "
+                            "re-run on the new snapshot"
                         ) from None
                     known_dels |= {d["path"] for d in fresh_dels}
                 if rebase_validate is not None:
@@ -2973,6 +3072,10 @@ class Warehouse:
                     part = comp[3:]
             for fn in files:
                 if not fn.endswith(".parquet"):
+                    # Hadoop sidecars (_SUCCESS, .part-*.crc) name no
+                    # file once the parts are renamed, and nothing else
+                    # would ever delete them
+                    os.remove(os.path.join(dirpath, fn))
                     continue
                 # give every file a TABLE-UNIQUE basename: dynamic
                 # partitioning reuses one task's part-file name across
@@ -3035,6 +3138,7 @@ class Warehouse:
                 # derived their partition value (spec 0 stays implicit)
                 entry["spec"] = spec_id
             entries.append(entry)
+        _pack_blooms(tdir, entries)
         return entries
 
     def _write_delete_files(
@@ -3116,6 +3220,7 @@ class Warehouse:
         bloom = _build_bloom(vals)
         if bloom is not None:
             entry["blooms"] = {phys_key: bloom}
+            _pack_blooms(tdir, [entry])
         return [entry]
 
     def _write_pos_delete_files(
@@ -3496,7 +3601,7 @@ class Warehouse:
                     self._plan_idx_counters["idx_fallbacks"] += 1
                 else:
                     if tr:
-                        entries = self._prune_entries(entries, tr)
+                        entries = self._prune_entries(tdir, entries, tr)
                     schema = StructType.fromJson(
                         idx.get("schema") or meta["schema"]
                     )
@@ -3520,7 +3625,7 @@ class Warehouse:
             # snapshot's column mapping before matching
             phys = self._snapshot_phys(doc, meta)
             tr = [(phys.get(c, c), op, v) for c, op, v in predicates]
-            entries = self._prune_entries(entries, tr)
+            entries = self._prune_entries(tdir, entries, tr)
         schema = StructType.fromJson(doc.get("schema", meta["schema"]))
         return entries, schema
 
@@ -4813,6 +4918,9 @@ class Warehouse:
             if os.path.exists(p):
                 os.remove(p)
                 removed += 1
+        _drop_dead_packs(
+            {os.path.join(tdir, _pack_rel(e["path"])) for e in doc["files"]}
+        )
         os.remove(os.path.join(tdir, _MANIFEST_DIR, f"{self._STAGE_PREFIX}{staging_id}.json"))
         return {"removed_files": removed}
 
@@ -5009,7 +5117,7 @@ class Warehouse:
         # rewrites the handful of files with matches, never a partition.
         t_probe = time.perf_counter()
         candidates = (
-            self._prune_entries_by_keys(entries, phys_key, key_vals)
+            self._prune_entries_by_keys(tdir, entries, phys_key, key_vals)
             if key_vals is not None
             else entries
         )
@@ -5201,7 +5309,9 @@ class Warehouse:
             phys_key = phys.get(key, key)
             key_vals = {r[0] for r in kp} if small else None
             candidates = (
-                self._prune_entries_by_keys(doc["files"], phys_key, key_vals)
+                self._prune_entries_by_keys(
+                    tdir, doc["files"], phys_key, key_vals
+                )
                 if key_vals is not None
                 else doc["files"]
             )
@@ -5335,7 +5445,7 @@ class Warehouse:
 
         def holds_key(entries: list[dict]) -> bool:
             cand = (
-                self._prune_entries_by_keys(entries, phys_key, key_vals)
+                self._prune_entries_by_keys(tdir, entries, phys_key, key_vals)
                 if key_vals is not None
                 else entries
             )
@@ -5374,7 +5484,7 @@ class Warehouse:
         doc = self._manifest_doc(tdir, version)
         phys = self._snapshot_phys(doc, meta)
         skipping = [(phys.get(c, c), op, v) for c, op, v in predicates or ()]
-        candidates = self._prune_entries(doc["files"], skipping)
+        candidates = self._prune_entries(tdir, doc["files"], skipping)
         return _DmlScope(
             version, doc, StructType.fromJson(meta["schema"]), phys, skipping,
             candidates,
@@ -5457,7 +5567,7 @@ class Warehouse:
                 change_files = self._write_change_files(tdir, change, meta)
 
         def validate(fresh: list[dict]) -> bool:
-            fresh = self._prune_entries(fresh, s.skipping)
+            fresh = self._prune_entries(tdir, fresh, s.skipping)
             return not fresh or (
                 self._read_files(tdir, fresh, s.schema, phys=s.phys)
                 .filter(cond).limit(1).count() == 0
@@ -5489,7 +5599,10 @@ class Warehouse:
         copy of a matched key goes, and a DELETE counts distinct keys.
         Rebase: a concurrent commit that appends a matched key
         conflicts. Its rows are newer than our read, yet our delete,
-        re-stamped above them, would kill them."""
+        re-stamped above them, would kill them. For an UPDATE (or with
+        the change feed on) so does a concurrent delete file or removed
+        data file that may hold a matched key: the post-images would
+        reinsert a row that commit deleted."""
         key = meta.get("key")
         if key is None:
             raise ValueError(
@@ -5537,7 +5650,9 @@ class Warehouse:
             if data_files:
                 files = s.doc["files"]
                 if key_vals is not None:
-                    files = self._prune_entries_by_keys(files, phys_key, key_vals)
+                    files = self._prune_entries_by_keys(
+                        tdir, files, phys_key, key_vals
+                    )
                 change = (
                     self._read_entries(
                         tdir, files, s.schema, s.phys, s.doc.get("deletes"), key
@@ -5580,7 +5695,9 @@ class Warehouse:
         Rebase: the addresses bind to immutable file paths, so a
         concurrent append never conflicts; a concurrent rewrite that
         removed a target file (compaction, CoW DML) would resurrect its
-        rows, so that conflicts."""
+        rows, so that conflicts, and so does, for an UPDATE or with the
+        change feed on, a concurrent delete file that may hit a target
+        file."""
         s = self._dml_scope(tdir, meta, predicates)
         stats = dict(s.stats, rewritten_files=0, delete_files=0)
         if not s.candidates:
@@ -5630,18 +5747,27 @@ class Warehouse:
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         targets = set(del_files[0]["targets"])
+        target_entries = [e for e in s.doc["files"] if e["path"] in targets]
+        phys_key = s.phys.get(meta.get("key"), meta.get("key"))
 
         def validate(_fresh: list[dict]) -> bool:
             tip = self._versions(tdir)[-1]
             return targets <= {e["path"] for e in self._manifest(tdir, tip)}
 
-        # no rebase_validate_changes: position pre-images bind to
-        # addresses, not keys, so any concurrent delete-bearing commit
-        # conflicts when change files are pending
+        def validate_changes(fresh_dels: list[dict], removed: list[dict]) -> bool:
+            # the addressed rows are still live: no target file left the
+            # manifest, and no concurrent delete file may hit one
+            return not any(e["path"] in targets for e in removed) and not any(
+                _delete_applies(d, e, phys_key)
+                for d in fresh_dels
+                for e in target_entries
+            )
+
         v = self._publish_append(
             tdir, s.version, data_files, meta["schema"],
             phys=meta.get("physical"), new_deletes=del_files,
             rebase_validate=validate, op=op, change_files=change_files,
+            rebase_validate_changes=validate_changes,
         )
         n = sum(e.get("records", 0) for e in data_files or del_files)
         return v, n, dict(stats, delete_files=len(del_files))
@@ -6408,7 +6534,8 @@ class Warehouse:
         snapshot references. Bounds metadata + storage growth under
         continuous MERGE traffic. Time travel to an expired version then
         raises ``ValueError``; current reads are untouched (their
-        manifests and files are exactly the kept set)."""
+        manifests and files are exactly the kept set). A commit dir's
+        Bloom pack is deleted with its last data file."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         tdir = self._table_dir(ns, table)
@@ -6436,6 +6563,7 @@ class Warehouse:
             for p in self._clone_referenced_files(tdir)
         }
         removed = 0
+        packs: set[str] = set()
         prefix = os.path.abspath(tdir) + os.sep
         for v in expire:
             for e in self._doc_all_entries(tdir, v):
@@ -6447,10 +6575,13 @@ class Warehouse:
                     # clone must not reach into its source's data dir)
                     if not os.path.abspath(path).startswith(prefix):
                         continue
+                    packs.add(os.path.join(tdir, _pack_rel(e["path"])))
                     if os.path.exists(path):
                         os.remove(path)
                         removed += 1
             os.remove(os.path.join(tdir, _MANIFEST_DIR, f"{v:08d}.json"))
+        # a commit dir's Bloom pack goes with its last data file
+        _drop_dead_packs(packs)
         return {"expired_versions": expire, "removed_files": removed}
 
     def remove_orphan_files(
@@ -6462,8 +6593,11 @@ class Warehouse:
         commit never published). ``older_than_seconds`` protects
         in-flight commits: a file younger than the horizon may belong to
         a concurrent writer that has not published yet, exactly
-        Iceberg's ``older_than`` guard. Metadata-only planning; one
-        os.walk over the data dir."""
+        Iceberg's ``older_than`` guard. Bloom packs older than the
+        horizon whose commit dir holds no data file any more go too
+        (``removed_files`` counts data files only). Metadata-only
+        planning; one os.walk over the data dir, plus one per such
+        pack's commit dir."""
         import time as _time
 
         tdir = self._table_dir(ns, table)
@@ -6493,18 +6627,26 @@ class Warehouse:
         live |= self._clone_referenced_files(tdir)
         cutoff = _time.time() - older_than_seconds
         removed = 0
+        old_packs = []
         data_root = os.path.join(tdir, "data")
         for dirpath, _dirs, files in os.walk(data_root):
             for fn in files:
                 full = os.path.abspath(os.path.join(dirpath, fn))
-                if full in live or not fn.endswith(".parquet"):
+                if full in live or not fn.endswith((".parquet", _BLOOM_PACK)):
                     continue
                 try:
-                    if os.path.getmtime(full) <= cutoff:
+                    if os.path.getmtime(full) > cutoff:
+                        continue
+                    if fn == _BLOOM_PACK:
+                        old_packs.append(full)
+                    else:
                         os.remove(full)
                         removed += 1
                 except FileNotFoundError:
                     continue  # concurrent maintenance
+        # a crashed write's Bloom pack outlives its data files: it goes
+        # once its commit dir holds none (not counted as a data file)
+        _drop_dead_packs(old_packs)
         return {"removed_files": removed}
 
     def rollback_to(self, ns: str, table: str, version: int) -> int:

@@ -106,13 +106,18 @@ def test_bulk_key_probe_matches_scalar():
     across: str and int keys, range-prunable and bloom-prunable
     entries, missing stats/blooms, legacy bare-hex blooms, cross-type
     blooms, None keys (keep-all), and mixed-type batches (bloom
-    no-prune)."""
+    no-prune) -- with the Blooms inline and moved into Bloom packs."""
+    import copy
+    import os
     import random
+    import shutil
+    import tempfile
 
     from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import (
         _BulkKeyProbe,
         _build_bloom,
         _entry_may_hold_any,
+        _pack_blooms,
     )
 
     rng = random.Random(7)
@@ -149,15 +154,42 @@ def test_bulk_key_probe_matches_scalar():
         set(rng.sample(range(100), 50)) | {None},  # None -> keep all
         {f"TXN_{i}" for i in range(2500)} | set(range(100)),  # mixed
     ]
+    # the same entries with their Blooms moved into per-commit packs,
+    # as every writer stores them: one pack per commit dir, here one
+    # commit dir per entry (partitioned like a real table's files)
+    tdir = tempfile.mkdtemp()
+    packed: dict[int, list[dict]] = {}
+    for group, entries in enumerate((str_entries, int_entries)):
+        copies = copy.deepcopy(entries)
+        for i, e in enumerate(copies):
+            e["path"] = f"data/c{group}-{i}/_p=d{i % 3}/f.parquet"
+            os.makedirs(os.path.join(tdir, f"data/c{group}-{i}"))
+        _pack_blooms(tdir, copies)
+        packed[id(entries)] = copies
+    assert not any(
+        "bits" in b
+        for es in packed.values()
+        for e in es
+        for b in (e.get("blooms") or {}).values()
+        if isinstance(b, dict)
+    )
     for batch in batches:
         probe = _BulkKeyProbe(batch)
+        pack_probe = _BulkKeyProbe(batch, tdir)
         for entries in (str_entries, int_entries):
-            for e in entries:
+            in_packs = packed[id(entries)]
+            pack_bulk = pack_probe.entries_may_hold_any(in_packs, "k")
+            for e, pe, pb in zip(entries, in_packs, pack_bulk):
                 scalar = _entry_may_hold_any(e, "k", batch)
                 bulk = probe.entry_may_hold_any(e, "k")
+                # pack-backed entries decide exactly as inline ones
+                assert _entry_may_hold_any(pe, "k", batch, tdir) == scalar
+                assert pack_probe.entry_may_hold_any(pe, "k") == bulk
+                assert pb == bulk
                 # exact parity, except bulk may be conservative (keep)
                 # where scalar pruned ONLY for mixed-type batches
                 if len({type(v) for v in batch if v is not None}) == 1:
                     assert bulk == scalar, (e.keys(), sorted(batch)[:3])
                 else:
                     assert bulk or not scalar
+    shutil.rmtree(tdir)

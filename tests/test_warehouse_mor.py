@@ -420,6 +420,74 @@ def test_mor_pos_conflicts_with_concurrent_compaction(
             )
 
 
+@pytest.mark.parametrize("racer_strategy", ["cow", "mor"])
+def test_mor_update_conflicts_with_concurrent_delete(
+    spark, wh, monkeypatch, racer_strategy
+):
+    """An equality UPDATE that loses the race to a DELETE of a matched
+    key must conflict even without the change feed: the DELETE adds only
+    a delete file (mor) or removes the key's file (cow), so no fresh data
+    file reaches the keyed probe, yet a blind rebase would reinsert the
+    deleted row's post-image."""
+    expect = _base(spark, wh)
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        wh.delete_where("ns", "t", [("id", "=", "k1")], strategy=racer_strategy)
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    with pytest.raises(CommitConflictError):
+        wh.update_where(
+            "ns", "t", {"v": F.lit(111)}, [("id", "=", "k1")], strategy="mor"
+        )
+    del expect["k1"]
+    assert _state(wh) == expect
+
+
+def test_mor_pos_update_conflicts_with_concurrent_emptying_delete(
+    spark, wh, monkeypatch
+):
+    """A position UPDATE that loses the race to a CoW DELETE emptying its
+    target file must conflict even without the change feed: the DELETE
+    adds no data file for the position check to see, yet a blind rebase
+    would reinsert the updated row."""
+    expect = _base(spark, wh)
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        wh.delete_where("ns", "t", [("day", "=", "d1")])
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    with pytest.raises(CommitConflictError):
+        wh.update_where(
+            "ns", "t", {"v": F.lit(111)}, [("id", "=", "k1")],
+            strategy="mor-pos",
+        )
+    assert _state(wh) == {k: r for k, r in expect.items() if r[1] != "d1"}
+
+
+def test_mor_pos_update_rebases_over_disjoint_delete(spark, wh, monkeypatch):
+    """The position check is precise: a concurrent position DELETE of a
+    row in another file hits no target, so the UPDATE rebases and both
+    changes survive."""
+    expect = _base(spark, wh)
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        wh.delete_where("ns", "t", [("id", "=", "k2")], strategy="mor-pos")
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    wh.update_where(
+        "ns", "t", {"v": F.lit(111)}, [("id", "=", "k1")], strategy="mor-pos"
+    )
+    del expect["k2"]
+    expect["k1"] = ("k1", "d1", 111)
+    assert _state(wh) == expect
+
+
 # ---------------------------------------------------------------------------
 # maintenance keeps delete files alive
 # ---------------------------------------------------------------------------
