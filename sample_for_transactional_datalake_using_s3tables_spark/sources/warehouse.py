@@ -41,7 +41,7 @@ import uuid
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.types import StructField, StructType
 
 _MANIFEST_DIR = "_v"
@@ -787,6 +787,19 @@ def _live_deletes(deletes: list[dict] | None, files: list[dict]) -> list[dict]:
     ]
 
 
+def _spark_output_files(stage: str):
+    """Yield ``(dirpath, filename)`` for each parquet file a Spark write
+    left under ``stage``, deleting Hadoop's sidecars (``_SUCCESS``,
+    ``.part-*.crc``) on the way: they name no table file, and nothing
+    else would ever delete them."""
+    for dirpath, _dirs, files in os.walk(stage):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                yield dirpath, fn
+            else:
+                os.remove(os.path.join(dirpath, fn))
+
+
 def _uri_abspath(uri: str) -> str:
     """Local absolute path of an ``input_file_name()`` URI."""
     import urllib.parse
@@ -811,15 +824,51 @@ def _local_values(tdir: str, entries: list[dict], col: str) -> set:
 
 
 class _DmlScope(NamedTuple):
-    """The snapshot a row-level DML reads (``Warehouse._dml_scope``)."""
+    """The snapshot a row-level commit reads and the rows it targets
+    (``Warehouse._dml_scope``). A predicate scope targets the rows
+    ``cond`` holds on; ``skipping`` (its tuple predicates on physical
+    names) prunes files. A keyed scope targets the rows whose ``key``
+    is in ``keys``, a one-column frame named ``key``; ``key_vals`` are
+    its values when they fit on the driver, and then prune files by key
+    Bloom and min/max. NULL predicates and NULL keys are out of scope."""
 
     version: int
     doc: dict
+    branch: str | None
     schema: StructType
     phys: dict
-    skipping: list[tuple]  # the tuple predicates on physical names
-    candidates: list[dict]
-    stats: dict
+    cond: Column | None = None
+    skipping: tuple = ()
+    key: str | None = None
+    key_vals: set | None = None
+    keys: DataFrame | None = None
+
+    def keyed(self, key: str, key_vals: set | None, keys: DataFrame) -> "_DmlScope":
+        return self._replace(
+            cond=None, skipping=(), key=key, key_vals=key_vals, keys=keys
+        )
+
+    def match(self, df: DataFrame) -> DataFrame:
+        if self.key is None:
+            return df.filter(self.cond)
+        return df.join(self.keys, self.key, "left_semi")
+
+    def miss(self, df: DataFrame) -> DataFrame:
+        if self.key is None:
+            return df.filter(~self.cond)
+        # an anti-join as ONE exchange: the rows and the keys, tagged,
+        # hash-partitioned on the key together (a broadcast of the keys
+        # would cost a Spark job of its own); a NULL key matches nothing
+        return (
+            df.withColumn("__k", F.lit(False))
+            .unionByName(
+                self.keys.dropna().withColumn("__k", F.lit(True)),
+                allowMissingColumns=True,
+            )
+            .withColumn("__hit", F.max("__k").over(Window.partitionBy(self.key)))
+            .filter(~F.col("__hit"))
+            .drop("__k", "__hit")
+        )
 
 
 class TableNotFoundError(Exception):
@@ -2360,11 +2409,8 @@ class Warehouse:
     # of O(keys x entries) scalar bloom probes), and the alternative --
     # probing EVERY data file's key column per MERGE -- made steady-
     # state CDC throughput decay linearly with table size (each 10k-row
-    # trigger re-read the whole key column). Parameterized for
-    # deployments with thinner drivers.
-    _MERGE_COLLECT_KEYS_MAX = int(
-        os.environ.get("SPARK_GRAFT_MERGE_KEYS_MAX", "200000")
-    )
+    # trigger re-read the whole key column).
+    _MERGE_COLLECT_KEYS_MAX = 200_000
 
     # Above this many batch keys, _prune_entries_by_keys switches from
     # the scalar early-exit loop to the vectorized _BulkKeyProbe.
@@ -2403,13 +2449,16 @@ class Warehouse:
         )
 
     def _prune_entries_by_keys(
-        self, tdir: str, entries: list[dict], col: str, values: set
+        self, tdir: str, entries: list[dict], col: str, values: set | None
     ) -> list[dict]:
         """Keep entries of the table at ``tdir`` that may hold ANY of the
-        key values; distributed for very large manifests (the driver
-        never runs the keys x files Bloom loop over a huge file list).
-        Large key sets use the vectorized probe (see _BulkKeyProbe) on
-        either path."""
+        key values (all of them when ``values`` is None: a key set too
+        large to collect); distributed for very large manifests (the
+        driver never runs the keys x files Bloom loop over a huge file
+        list). Large key sets use the vectorized probe (see
+        _BulkKeyProbe) on either path."""
+        if values is None:
+            return entries
         bulk = len(values) > self._BULK_KEY_PROBE_MIN
         if len(entries) <= self._PLAN_DISTRIBUTE_THRESHOLD:
             if bulk:
@@ -3064,31 +3113,18 @@ class Warehouse:
         else:
             out.write.parquet(stage)
         paths: list[tuple[str, str | None]] = []
-        for dirpath, _dirs, files in os.walk(stage):
-            part = None
-            if partition_by:
-                comp = os.path.basename(dirpath)
-                if comp.startswith("_p="):
-                    part = comp[3:]
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    # Hadoop sidecars (_SUCCESS, .part-*.crc) name no
-                    # file once the parts are renamed, and nothing else
-                    # would ever delete them
-                    os.remove(os.path.join(dirpath, fn))
-                    continue
-                # give every file a TABLE-UNIQUE basename: dynamic
-                # partitioning reuses one task's part-file name across
-                # _p= dirs, but positional deletes address rows by
-                # basename (the URI-encoding-proof join key -- see
-                # _basename_relpath_map), which demands uniqueness.
-                # Files aren't referenced by any manifest yet, so the
-                # rename is free.
-                dst = os.path.join(
-                    dirpath, f"{uuid.uuid4().hex}.parquet"
-                )
-                os.rename(os.path.join(dirpath, fn), dst)
-                paths.append((dst, part))
+        for dirpath, fn in _spark_output_files(stage):
+            comp = os.path.basename(dirpath)
+            part = comp[3:] if partition_by and comp.startswith("_p=") else None
+            # give every file a TABLE-UNIQUE basename: dynamic
+            # partitioning reuses one task's part-file name across _p=
+            # dirs, but positional deletes address rows by basename (the
+            # URI-encoding-proof join key -- see _basename_relpath_map),
+            # which demands uniqueness. Files aren't referenced by any
+            # manifest yet, so the rename is free.
+            dst = os.path.join(dirpath, f"{uuid.uuid4().hex}.parquet")
+            os.rename(os.path.join(dirpath, fn), dst)
+            paths.append((dst, part))
         if not paths:
             return []
         key_col = bloom_col if (bloom_col and bloom_col in df.columns) else None
@@ -4493,9 +4529,8 @@ class Warehouse:
         cdir = os.path.join(tdir, "data", f"changes-{uuid.uuid4().hex[:12]}")
         out.write.mode("overwrite").parquet(cdir)
         return [
-            {"path": os.path.relpath(os.path.join(cdir, fn), tdir)}
-            for fn in sorted(os.listdir(cdir))
-            if fn.endswith(".parquet")
+            {"path": os.path.relpath(os.path.join(d, fn), tdir)}
+            for d, fn in sorted(_spark_output_files(cdir))
         ]
 
     def set_column_default(
@@ -4693,8 +4728,10 @@ class Warehouse:
                 )
             # the CoW DELETE rewrite, with the batch in the same commit
             v, _n, stats = self._dml_cow(
-                tdir, meta, predicate, preds, op="overwrite", batch=aligned
+                tdir, meta, self._dml_scope(tdir, meta, predicate, preds),
+                op="overwrite", batch=aligned,
             )
+            stats.pop("walls")
             return {
                 "version": v, "replaced_files": stats["rewritten_files"],
                 **stats,
@@ -4968,8 +5005,11 @@ class Warehouse:
         equality-delete file -- O(table keys) shuffle, zero data-file
         rewrites, the shape you want for a 100 TB dimension sync.
 
-        ``strategy="cow"`` (default): file-level copy-on-write -- only
-        files actually holding a matched key are rewritten.
+        ``strategy="cow"`` (default): file-level copy-on-write -- the
+        files holding a batch key (upserted or delete-marked) are
+        rewritten without it, and the batch is appended in the same
+        write: one row per key, as with ``mor``, also where the table
+        held a key twice. Files holding no batch key carry over.
         ``strategy="mor"`` (merge-on-read, the Iceberg v2 / Flink
         upsert-writer pattern): the commit appends the batch's rows as
         new data files plus ONE equality-delete file of the batch's
@@ -5006,9 +5046,11 @@ class Warehouse:
             if merge_schema
             else self.table_meta(ns, table)
         )
-        key, pcol = meta["key"], meta["partition_by"]
+        key = meta["key"]
         if key is None:
             raise ValueError(f"{ns}.{table} has no key; use insert()")
+        if strategy not in ("cow", "mor"):
+            raise ValueError(f"unknown MERGE strategy {strategy!r}")
 
         deletes = None
         if delete_col is not None:
@@ -5027,351 +5069,86 @@ class Warehouse:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-
-        version = self._versions(tdir, branch)[-1]
-        doc = self._manifest_doc(tdir, version, branch)
-        entries = doc["files"]
-        schema = StructType.fromJson(meta["schema"])
-        phys_map = meta.get("physical") or {}
-        phys_key = phys_map.get(key, key)
-        match_keys = source.select(key).distinct()
+        match_keys = source.select(key)  # unique after the dedup
         if deletes is not None:
             match_keys = match_keys.union(deletes).distinct()
-        self.last_merge_stats = {"manifest_files": len(entries)}
-        if strategy == "mor":
-            # delete wins over a same-batch update of the same key
-            # (matching the CoW path's left_anti): a delete-marked key's
-            # update row must not land in the batch's data files, where
-            # the shared sequence number would shield it from the
-            # equality delete
-            if deletes is not None:
-                source = source.join(deletes, key, "left_anti")
-            if sync_deletes:
-                # WHEN NOT MATCHED BY SOURCE THEN DELETE, rewrite-free:
-                # one column-pruned scan of the key column finds target
-                # keys absent from the batch; they ride the commit's
-                # equality-delete file alongside the batch keys
-                target_keys = self._read_entries(
-                    tdir, entries, schema, phys_map, doc.get("deletes"), key
-                ).select(key)
-                stale = target_keys.join(
-                    match_keys, key, "left_anti"
-                ).distinct()
-                match_keys = match_keys.union(stale)
-            return self._merge_upsert_mor(
-                tdir, meta, source, match_keys, version, branch=branch,
-                # no delete-marked rows and no by-source stale keys ==
-                # match_keys is exactly the deduped source's key set,
-                # recoverable from the written data files (fast path)
-                keys_equal_source=(deletes is None and not sync_deletes),
-            )
-        if strategy != "cow":
-            raise ValueError(f"unknown MERGE strategy {strategy!r}")
-        if sync_deletes:
+            # delete wins over a same-batch update of the same key: its
+            # update row must not land in the batch's files (under mor
+            # their shared sequence number would shield it from the
+            # equality delete)
+            source = source.join(deletes, key, "left_anti")
+
+        s = self._dml_scope(tdir, meta, branch=branch)
+        self.last_merge_stats = {"manifest_files": len(s.doc["files"])}
+        if strategy == "cow" and sync_deletes:
             # UPDATE SET * + INSERT * + by-source DELETE makes the
             # result table exactly the deduped source: publish ONE
             # overwrite commit via the raw CAS -- no retry/rebase, so
             # ANY concurrent commit raises CommitConflictError
             # (serializable: a by-source delete is only correct against
             # the exact snapshot it read)
-            if deletes is not None:
-                # delete wins over a same-batch update of the same key,
-                # matching the MoR and plain-CoW paths' left_anti
-                source = source.join(deletes, key, "left_anti")
             new_files = self._write_table_files(tdir, source, meta)
             self.last_merge_stats.update(
                 mode="cow-sync", probed_files=0,
-                rewritten_files=len(entries),
+                rewritten_files=len(s.doc["files"]),
             )
             self._publish(
-                tdir, version + 1,
-                [dict(e, seq=version + 1) for e in new_files],
+                tdir, s.version + 1,
+                [dict(e, seq=s.version + 1) for e in new_files],
                 schema=meta["schema"], phys=meta.get("physical"),
                 deletes=None, branch=branch, op="merge",
             )
-            return version + 1
+            return s.version + 1
+        if strategy == "mor":
+            if sync_deletes:
+                # WHEN NOT MATCHED BY SOURCE THEN DELETE, rewrite-free:
+                # one column-pruned scan of the key column finds target
+                # keys absent from the batch; they ride the commit's
+                # equality-delete file alongside the batch keys
+                stale = self._read_entries(
+                    tdir, s.doc["files"], s.schema, s.phys, s.doc.get("deletes"),
+                    key,
+                ).select(key).join(match_keys, key, "left_anti").distinct()
+                match_keys = match_keys.union(stale)
+            v, _n, stats = self._dml_mor(
+                tdir, meta, s, op="merge", batch=source,
+                # no delete-marked and no by-source keys: the batch's own
+                keys=match_keys if deletes is not None or sync_deletes else None,
+            )
+            self.last_merge_stats.update(stats, mode="mor")
+            return v
 
-        # Small-batch fast path (the CDC steady state: a micro-batch of
-        # a few thousand keys against a huge table): ONE bounded collect
-        # retrieves the batch's distinct keys, driving manifest-level
-        # Bloom/min-max pruning of the match probe. Over-cap batches
-        # probe every file with a distributed semi-join instead.
-        key_vals: set | None = None
-        t_keys = time.perf_counter()
-        kp = (
-            match_keys.limit(self._MERGE_COLLECT_KEYS_MAX + 1).collect()
-        )
+        # Copy-on-write: a keyed rewrite. ONE bounded collect retrieves
+        # the batch's distinct keys (upserts and delete marks), driving
+        # manifest-level Bloom/min-max pruning of the match probe, and
+        # the probe semi-joins a LOCAL relation of them. Arrow path
+        # (pandas): pickled tuples cost ~0.5 s at 200k keys. Over-cap
+        # batches probe every file against match_keys.
+        t0 = time.perf_counter()
+        kp = match_keys.limit(self._MERGE_COLLECT_KEYS_MAX + 1).collect()
+        key_vals = None
+        keys = match_keys
         if len(kp) <= self._MERGE_COLLECT_KEYS_MAX:
             key_vals = {r[0] for r in kp}
-        if key_vals is not None and not key_vals:
-            return version  # empty batch: nothing to merge, no empty commit
+            if not key_vals:
+                return s.version  # empty batch: nothing to merge, no empty commit
+            import pandas as pd
 
-        # File-level copy-on-write (matching delete_where/update_where):
-        # ONE pruned columnar probe -- key column only, grouped by
-        # input_file_name -- finds the files that actually hold a
-        # matched key (upsert keys AND delete keys together; a key an
-        # update migrates across partitions is found wherever its stale
-        # copy lives, matching Iceberg MERGE semantics). Files holding
-        # no matched key carry over by manifest reference even inside
-        # partitions that receive inserts; at 100 TB a CDC batch
-        # rewrites the handful of files with matches, never a partition.
-        t_probe = time.perf_counter()
-        candidates = (
-            self._prune_entries_by_keys(tdir, entries, phys_key, key_vals)
-            if key_vals is not None
-            else entries
-        )
-        self.last_merge_stats["probed_files"] = len(candidates)
-        hit: set[str] = set()
-        if candidates:
-            by_abs = {
-                os.path.abspath(os.path.join(tdir, e["path"])): e["path"]
-                for e in candidates
-            }
-            probe = self._read_files(tdir, candidates, schema, phys=phys_map)
-            # collected-key batches probe against a LOCAL relation of
-            # the already-collected keys instead of the match_keys
-            # DataFrame -- whose semi-join would otherwise recompute
-            # the within-batch dedup window per probe (optimization
-            # r14; ~0.5 s per CDC trigger). Arrow path (pandas) -- the
-            # pickled-tuples path costs ~0.5 s at 200k keys. Nulls are
-            # dropped: an equality semi-join never matches them anyway.
-            if key_vals is not None:
-                import pandas as pd
-
-                probe_keys = self.spark.createDataFrame(
-                    pd.DataFrame(
-                        {key: sorted(v for v in key_vals if v is not None)}
-                    ),
-                    StructType([schema[key]]),
-                )
-            else:
-                probe_keys = match_keys
-            per_file = (
-                probe.select(key, F.input_file_name().alias("_f"))
-                .join(probe_keys, key, "left_semi")
-                .select("_f")
-                .distinct()
-                .collect()
+            # nulls dropped: an equality join never matches them
+            keys = self.spark.createDataFrame(
+                pd.DataFrame({key: sorted(v for v in key_vals if v is not None)}),
+                StructType([s.schema[key]]),
             )
-            hit = {by_abs[_uri_abspath(r["_f"])] for r in per_file}
-        rewrite = [e for e in entries if e["path"] in hit]
-        untouched = [e for e in entries if e["path"] not in hit]
-        self.last_merge_stats["rewritten_files"] = len(rewrite)
-        touched = (
-            {_scope_key(e) for e in rewrite} if pcol else None
+        walls = {"keys_sec": round(time.perf_counter() - t0, 3)}
+        # files holding a batch key, wherever it lives (an update that
+        # migrates a key across partitions finds its stale copy), are
+        # rewritten without it; the batch lands in the same write
+        v, _n, stats = self._dml_cow(
+            tdir, meta, s.keyed(key, key_vals, keys), op="merge", batch=source
         )
-        # deletes-aware: rewriting a file must not resurrect rows a
-        # pending merge-on-read equality delete already removed
-        current = self._read_entries(
-            tdir, rewrite, schema, meta.get("physical"), doc.get("deletes"), key
-        )
-
-        merged = current.alias("t").join(
-            source.alias("s"), F.col(f"t.{key}") == F.col(f"s.{key}"), "full"
-        )
-        # matched -> source row wins entirely (UPDATE SET *); unmatched
-        # source -> INSERT *; unmatched target -> keep.
-        if not rewrite:
-            # insert-only fast path (optimization r13, guide 2.4
-            # "remove shuffles outright"): no file holds a matched key,
-            # so `current` is empty by construction and the full-outer
-            # join would only re-shuffle the batch to produce itself --
-            # the merge result IS the deduped source. The steady-state
-            # CDC trigger (all-new keys) takes this path.
-            merged = source.select(*[F.col(c.name) for c in schema.fields])
-        else:
-            merged = merged.select(
-                *[
-                    F.when(F.col(f"s.{key}").isNotNull(), F.col(f"s.{c.name}"))
-                    .otherwise(F.col(f"t.{c.name}"))
-                    .alias(c.name)
-                    for c in schema.fields
-                ]
-            )
-        if deletes is not None:
-            merged = merged.join(deletes, key, "left_anti")
-
-        t_write = time.perf_counter()
-        self.last_merge_stats["walls"] = {
-            "keys_sec": round(t_probe - t_keys, 3),
-            "probe_sec": round(t_write - t_probe, 3),
-        }
-        new_files = self._write_table_files(tdir, merged, meta)
-        self.last_merge_stats["walls"]["write_data_sec"] = round(
-            time.perf_counter() - t_write, 3
-        )
-
-        # a concurrent append into an untouched partition may hold a
-        # matched key the probe never saw: carried over blindly it would
-        # duplicate the key (or survive a delete)
-        validate_rebase, _ = self._keyed_validators(
-            tdir, schema, phys_map, key, key_vals, match_keys
-        )
-        t_pub = time.perf_counter()
-        out = self._publish_rewrite(
-            tdir, version, touched if pcol else None, rewrite, untouched,
-            new_files, meta["schema"], phys=meta.get("physical"),
-            rebase_validate=validate_rebase, branch=branch, op="merge",
-        )
-        self.last_merge_stats["walls"]["publish_sec"] = round(
-            time.perf_counter() - t_pub, 3
-        )
-        return out
-
-    def _merge_upsert_mor(
-        self,
-        tdir: str,
-        meta: dict,
-        source: DataFrame,
-        match_keys: DataFrame,
-        version: int,
-        branch: str | None = None,
-        keys_equal_source: bool = False,
-    ) -> int:
-        """Merge-on-read MERGE commit: append the (already deduped,
-        validated) batch as data files plus one equality-delete file of
-        ALL batch keys (upserts and delete-marked rows alike). The data
-        and delete files share the commit's sequence number, so the
-        delete kills every OLDER copy of each key while the batch's own
-        rows -- same seq, not < -- survive: exactly latest-wins upsert,
-        with zero reads of existing data. Commits never conflict with
-        each other (pure appends; a lost version race rebases and
-        re-stamps, serializing by final commit order).
-
-        ``keys_equal_source`` (optimization r14): the caller asserts
-        ``match_keys`` is exactly the deduped source's key set (no
-        delete-marked rows, no by-source stale keys). The steady-state
-        CDC trigger then commits ONE Spark job: write the data files,
-        recover the batch's key values from the just-written local
-        footers (the same column the Bloom build already reads), and
-        write the equality-delete file in-process from those values --
-        the former flow ran a collect job for the keys (recomputing the
-        within-batch dedup), a distinct+coalesce job, a write job and a
-        footer job for the delete file, every trigger."""
-        t0 = time.perf_counter()
-        walls: dict[str, float] = {}
-        if keys_equal_source and not meta.get("change_feed"):
-            data_files = self._write_table_files(tdir, source, meta)
-            walls["write_data_sec"] = round(time.perf_counter() - t0, 3)
-            if not data_files:
-                return version  # empty batch: no empty commit
-            t1 = time.perf_counter()
-            key = meta["key"]
-            phys_key = (meta.get("physical") or {}).get(key, key)
-            del_files = None
-            if (
-                sum(e["records"] for e in data_files)
-                <= self._MERGE_COLLECT_KEYS_MAX
-            ):
-                del_files = self._write_delete_files_from_keys(
-                    tdir, _local_values(tdir, data_files, phys_key), meta
-                )
-            if del_files is None:  # over-cap batch or unmapped key type
-                del_files = self._write_delete_files(
-                    tdir, match_keys, meta, coalesce_one=False
-                )
-            walls["write_deletes_sec"] = round(time.perf_counter() - t1, 3)
-            t2 = time.perf_counter()
-            self.last_merge_stats.update(
-                mode="mor", probed_files=0, rewritten_files=0,
-                data_files=len(data_files), delete_files=len(del_files),
-            )
-            out = self._publish_append(
-                tdir, version, data_files, meta["schema"],
-                phys=meta.get("physical"), new_deletes=del_files,
-                branch=branch, op="merge",
-            )
-            walls["publish_sec"] = round(time.perf_counter() - t2, 3)
-            self.last_merge_stats["walls"] = walls
-            return out
-        kp = match_keys.limit(self._MERGE_COLLECT_KEYS_MAX + 1).collect()
-        if not kp:
-            return version  # empty batch: no empty commit
-        small = len(kp) <= self._MERGE_COLLECT_KEYS_MAX
-        change_files = None
-        rebase_validate = None
-        rebase_validate_changes = None
-        if meta.get("change_feed"):
-            # stored CDF for MoR MERGE (Delta's documented CDF-on-MERGE
-            # trade): one pruned, deletes-aware pre-image pass at write
-            # time -- bounded by the files the batch keys may touch
-            # (Bloom/min-max pruning for CDC-sized batches) -- buys an
-            # O(changed rows) changelog read instead of a derived diff
-            # that re-reads those files on EVERY changelog consumer
-            # (incremental MV refreshes, CDF replays). Pre-images =
-            # live rows holding batch keys (updates AND delete-marks);
-            # post-images = the batch's upsert rows.
-            key = meta["key"]
-            doc = self._manifest_doc(tdir, version, branch)
-            schema = StructType.fromJson(meta["schema"])
-            phys = self._snapshot_phys(doc, meta)
-            phys_key = phys.get(key, key)
-            key_vals = {r[0] for r in kp} if small else None
-            candidates = (
-                self._prune_entries_by_keys(
-                    tdir, doc["files"], phys_key, key_vals
-                )
-                if key_vals is not None
-                else doc["files"]
-            )
-            mk = match_keys.withColumnRenamed(
-                match_keys.columns[0], "__cdc_mk"
-            )
-            if small:
-                mk = F.broadcast(mk)
-            pre = self._read_entries(
-                tdir, candidates, schema, phys, doc.get("deletes"), key
-            ).join(mk, F.col(key) == F.col("__cdc_mk"), "left_semi")
-            change_files = self._write_change_files(
-                tdir,
-                pre.withColumn(
-                    "_change_type", F.lit("delete")
-                ).unionByName(
-                    source.withColumn("_change_type", F.lit("insert"))
-                ),
-                meta,
-            ) or None
-
-            # the stored pre-images bind to the READ snapshot: a
-            # concurrent commit whose files hold a batch key would make
-            # them stale, so conflict instead of publishing a lying
-            # changelog (key-disjoint concurrent MoR merges still rebase)
-            rebase_validate, rebase_validate_changes = self._keyed_validators(
-                tdir, schema, phys, key, key_vals, match_keys
-            )
-
-        t1 = time.perf_counter()
-        data_files = self._write_table_files(tdir, source, meta)
-        walls["write_data_sec"] = round(time.perf_counter() - t1, 3)
-        t1 = time.perf_counter()
-        del_files = None
-        if small:
-            # keys already on the driver: one in-process pyarrow write
-            # instead of a distinct+coalesce job + write job + footer job
-            del_files = self._write_delete_files_from_keys(
-                tdir, {r[0] for r in kp}, meta
-            )
-        if del_files is None:
-            del_files = self._write_delete_files(
-                tdir, match_keys, meta, coalesce_one=small
-            )
-        walls["write_deletes_sec"] = round(time.perf_counter() - t1, 3)
-        self.last_merge_stats.update(
-            mode="mor", probed_files=0, rewritten_files=0,
-            data_files=len(data_files), delete_files=len(del_files),
-        )
-        t1 = time.perf_counter()
-        out = self._publish_append(
-            tdir, version, data_files, meta["schema"],
-            phys=meta.get("physical"), new_deletes=del_files, branch=branch,
-            op="merge", change_files=change_files,
-            rebase_validate=rebase_validate,
-            rebase_validate_changes=rebase_validate_changes,
-        )
-        walls["publish_sec"] = round(time.perf_counter() - t1, 3)
-        self.last_merge_stats["walls"] = walls
-        return out
+        stats["walls"] = {**walls, **stats["walls"]}
+        self.last_merge_stats.update(stats)
+        return v
 
     @staticmethod
     def _predicate_spec(predicate, predicates):
@@ -5415,185 +5192,169 @@ class Warehouse:
             .select(F.col(col).alias(key))
         )
 
-    def _keyed_validators(
-        self,
-        tdir: str,
-        schema: StructType,
-        phys: dict,
-        key: str,
-        key_vals: set | None,
-        keys_df: DataFrame,
-    ):
-        """Rebase validators for a commit bound to a key set read from
-        its snapshot: MERGE's batch keys, or the keys an MoR DELETE or
-        UPDATE writes as equality deletes. The keyed check prunes files
-        by key Bloom and min/max when ``key_vals`` was small enough to
-        collect, then runs a bounded existence probe: ``isin`` over the
-        collected keys, else a semi-join with ``keys_df``.
-
-        Returns ``(validate, validate_changes)``. ``validate(fresh)``
-        holds iff no concurrently added data file may hold a key:
-        carried over blindly, it would duplicate a merged key, or be
-        killed by this commit's newer delete. ``validate_changes(
-        fresh_deletes, removed)`` holds iff a concurrent commit's
-        equality deletes and removed data files miss the keys, so this
-        commit's stored change-feed pre-images are still live.
-        Positional deletes bind to (file, pos), not keys, and conflict
-        conservatively."""
-        phys_key = phys.get(key, key)
-        dtype = schema[key].dataType
-
-        def holds_key(entries: list[dict]) -> bool:
-            cand = (
-                self._prune_entries_by_keys(tdir, entries, phys_key, key_vals)
-                if key_vals is not None
-                else entries
-            )
-            if not cand:
-                return False
-            # delete entries name their key column; removed data files
-            # stay on disk, the manifest-level removal doesn't unlink them
-            df = self._key_frame(
-                tdir, cand, cand[0].get("col", phys_key), key, dtype
-            )
-            df = (
-                df.filter(F.col(key).isin(*key_vals))
-                if key_vals
-                else df.join(keys_df, key, "left_semi")
-            )
-            return df.limit(1).count() > 0
-
-        def validate(fresh: list[dict]) -> bool:
-            return not holds_key(fresh)
-
-        def validate_changes(fresh_dels: list[dict], removed: list[dict]) -> bool:
-            if any(d.get("kind") == "pos" for d in fresh_dels):
-                return False
-            return not (holds_key(fresh_dels) or holds_key(removed))
-
-        return validate, validate_changes
-
-    def _dml_scope(self, tdir: str, meta: dict, predicates) -> _DmlScope:
-        """The snapshot a row-level DML reads: the tip manifest, the
-        logical schema, the snapshot's column map, and the candidate
-        files that manifest min/max and Bloom skipping cannot rule out
-        for the optional tuple ``predicates`` (the matching
-        ``plan_files`` runs). ``stats`` starts the pruning counts every
-        DML result reports."""
-        version = self._versions(tdir)[-1]
-        doc = self._manifest_doc(tdir, version)
+    def _dml_scope(
+        self, tdir: str, meta: dict, predicate=None, predicates=None,
+        branch: str | None = None,
+    ) -> _DmlScope:
+        """The snapshot a row-level commit reads (the tip of ``branch``,
+        its logical schema and column map) and, when ``predicate`` is
+        given, the rows it targets; ``predicates`` are the optional tuple
+        form that prunes files (the matching ``plan_files`` runs).
+        :meth:`_DmlScope.keyed` turns it into a keyed scope."""
+        version = self._versions(tdir, branch)[-1]
+        doc = self._manifest_doc(tdir, version, branch)
         phys = self._snapshot_phys(doc, meta)
-        skipping = [(phys.get(c, c), op, v) for c, op, v in predicates or ()]
-        candidates = self._prune_entries(tdir, doc["files"], skipping)
         return _DmlScope(
-            version, doc, StructType.fromJson(meta["schema"]), phys, skipping,
-            candidates,
-            {"manifest_files": len(doc["files"]), "probed_files": len(candidates)},
+            version, doc, branch, StructType.fromJson(meta["schema"]), phys,
+            cond=None if predicate is None else F.coalesce(predicate, F.lit(False)),
+            skipping=tuple((phys.get(c, c), op, v) for c, op, v in predicates or ()),
         )
 
+    def _scope_files(self, tdir: str, s: _DmlScope, entries: list[dict]) -> list[dict]:
+        """The ``entries`` that manifest min/max and Bloom skipping
+        cannot rule out for the scope ``s``."""
+        if s.key is None:
+            return self._prune_entries(tdir, entries, list(s.skipping))
+        return self._prune_entries_by_keys(
+            tdir, entries, s.phys.get(s.key, s.key), s.key_vals
+        )
+
+    def _scope_holds(self, tdir: str, s: _DmlScope, entries: list[dict]) -> bool:
+        """Does any of ``entries`` hold a row in the scope ``s``? The
+        rebase check of every row-level commit: run on the data files a
+        concurrent commit added and, for a keyed scope, on its delete
+        files and removed data files. Stats and Blooms pre-prune; the
+        survivors get a bounded existence probe, which for a keyed scope
+        reads the key column alone (delete files name theirs; removed
+        data files stay on disk, since leaving the manifest unlinks
+        nothing)."""
+        cand = self._scope_files(tdir, s, entries)
+        if not cand:
+            return False
+        if s.key is None:
+            df = self._read_files(tdir, cand, s.schema, phys=s.phys)
+        else:
+            col = cand[0].get("col", s.phys.get(s.key, s.key))
+            df = self._key_frame(tdir, cand, col, s.key, s.schema[s.key].dataType)
+        return s.match(df).limit(1).count() > 0
+
     def _dml_cow(
-        self, tdir: str, meta: dict, predicate, predicates, post=None,
+        self, tdir: str, meta: dict, s: _DmlScope, post=None,
         op: str = "delete", batch: DataFrame | None = None,
     ) -> tuple[int, int, dict]:
-        """Copy-on-write row-level DML at FILE granularity. ONE pruned,
-        deletes-aware probe, grouped by ``input_file_name``, finds and
-        counts the matching rows per file. Only files holding matches
-        are rewritten: without them (DELETE) or with their ``post``
-        images (UPDATE). Everything else carries over by reference, so
-        at 100 TB ``DELETE WHERE key = k`` rewrites about one file.
-        ``batch`` (INSERT ... REPLACE WHERE) appends rows in the same
-        commit; its change feed stays derived.
+        """Copy-on-write row-level commit at FILE granularity. ONE
+        pruned, deletes-aware probe, grouped by ``input_file_name``,
+        finds and counts the rows in scope per file. Only files holding
+        them are rewritten: without them (DELETE, MERGE) or with their
+        ``post`` images (UPDATE). Everything else carries over by
+        reference, so at 100 TB ``DELETE WHERE key = k`` rewrites about
+        one file. ``batch`` (MERGE, INSERT ... REPLACE WHERE) is written
+        with the kept rows in one write, hash-distributed on the table
+        key so a touched partition's kept and new rows share a task and
+        a file; its change feed stays derived.
 
         Rebase: a concurrent commit's files outside the rewrite scope
-        are carried over only if none of their rows match the predicate
+        are carried over only if none of their rows is in scope
         (Iceberg validates conflicting data files against the filter
-        table-wide). Stats and Blooms pre-prune; survivors get a
-        bounded existence probe."""
-        s = self._dml_scope(tdir, meta, predicates)
-        cond = F.coalesce(predicate, F.lit(False))
+        table-wide); see :meth:`_scope_holds`."""
+        walls: dict[str, float] = {}
+        t0 = time.perf_counter()
+        files = s.doc["files"]
+        candidates = self._scope_files(tdir, s, files)
         hit: dict[str, int] = {}
-        if s.candidates:
+        if candidates:
             by_abs = {
                 os.path.abspath(os.path.join(tdir, e["path"])): e["path"]
-                for e in s.candidates
+                for e in candidates
             }
             # rows an MoR equality delete already removed neither count
             # nor flag their file (_f is taken at scan stage)
             per_file = (
-                self._read_entries(
-                    tdir, s.candidates, s.schema, s.phys, s.doc.get("deletes"),
-                    meta.get("key"), file_col="_f",
+                s.match(
+                    self._read_entries(
+                        tdir, candidates, s.schema, s.phys, s.doc.get("deletes"),
+                        meta.get("key"), file_col="_f",
+                    )
                 )
-                .filter(cond)
                 .groupBy("_f")
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .collect()
             )
             hit = {by_abs[_uri_abspath(r["_f"])]: r["_n"] for r in per_file}
-        rewrite = [e for e in s.doc["files"] if e["path"] in hit]
-        untouched = [e for e in s.doc["files"] if e["path"] not in hit]
-        stats = dict(s.stats, rewritten_files=len(rewrite))
+        rewrite = [e for e in files if e["path"] in hit]
+        untouched = [e for e in files if e["path"] not in hit]
+        stats = {
+            "manifest_files": len(files), "probed_files": len(candidates),
+            "rewritten_files": len(rewrite), "walls": walls,
+        }
+        walls["probe_sec"] = round(time.perf_counter() - t0, 3)
         if not rewrite and batch is None:
             return s.version, 0, stats
-        new_files = (
-            [] if batch is None else self._write_table_files(tdir, batch, meta)
-        )
-        change_files = None
+        out, change = batch, None
         if rewrite:
             # the rewrite applies pending equality deletes: it must never
-            # resurrect MoR ghost rows; NULL predicates keep the row
+            # resurrect MoR ghost rows
             current = self._read_entries(
                 tdir, rewrite, s.schema, s.phys, s.doc.get("deletes"),
                 meta.get("key"),
             )
-            change = current.filter(cond).withColumn(
-                "_change_type", F.lit("delete")
-            )
+            change = s.match(current).withColumn("_change_type", F.lit("delete"))
             if post is None:
-                kept = current.filter(~cond)
+                out = s.miss(current)
             else:
                 # the match marker carries through so the post-image
                 # and the change set see the same rows
-                marked = post(current.withColumn("__upd", cond), "__upd", ["__upd"])
-                kept = marked.drop("__upd")
-                self._check_constraints(kept, meta)
+                marked = post(current.withColumn("__upd", s.cond), "__upd", ["__upd"])
+                out = marked.drop("__upd")
+                self._check_constraints(out, meta)
                 change = change.unionByName(
                     marked.filter(F.col("__upd"))
                     .drop("__upd")
                     .withColumn("_change_type", F.lit("insert"))
                 )
-            new_files += self._write_table_files(tdir, kept, meta)
-            if meta.get("change_feed") and batch is None:
-                change_files = self._write_change_files(tdir, change, meta)
-
-        def validate(fresh: list[dict]) -> bool:
-            fresh = self._prune_entries(tdir, fresh, s.skipping)
-            return not fresh or (
-                self._read_files(tdir, fresh, s.schema, phys=s.phys)
-                .filter(cond).limit(1).count() == 0
-            )
-
+            if batch is not None:
+                out = out.unionByName(batch)
+                if meta.get("key"):
+                    # no extra shuffle for MERGE: its kept rows and its
+                    # deduped batch both arrive hash-partitioned on the key
+                    out = out.repartition(meta["key"])
+        t0 = time.perf_counter()
+        new_files = self._write_table_files(tdir, out, meta)
+        change_files = None
+        if change is not None and batch is None and meta.get("change_feed"):
+            change_files = self._write_change_files(tdir, change, meta)
+        walls["write_data_sec"] = round(time.perf_counter() - t0, 3)
+        t0 = time.perf_counter()
         v = self._publish_rewrite(
             tdir, s.version,
             {_scope_key(e) for e in rewrite} if meta["partition_by"] else None,
             rewrite, untouched, new_files, meta["schema"],
-            phys=meta.get("physical"), rebase_validate=validate, op=op,
-            change_files=change_files,
+            phys=meta.get("physical"),
+            rebase_validate=lambda fresh: not self._scope_holds(tdir, s, fresh),
+            branch=s.branch, op=op, change_files=change_files,
         )
+        walls["publish_sec"] = round(time.perf_counter() - t0, 3)
         return v, sum(hit.values()), stats
 
     def _dml_mor(
-        self, tdir: str, meta: dict, predicate, predicates, post=None,
-        op: str = "delete",
+        self, tdir: str, meta: dict, s: _DmlScope, post=None,
+        op: str = "delete", batch: DataFrame | None = None,
+        keys: DataFrame | None = None,
     ) -> tuple[int, int, dict]:
-        """Merge-on-read row-level DML with EQUALITY deletes (Iceberg
+        """Merge-on-read row-level commit with EQUALITY deletes (Iceberg
         v2; needs a table key). One pruned, deletes-aware probe reads
-        the matching rows. An UPDATE writes their ``post`` images as new
+        the rows in scope. An UPDATE writes their ``post`` images as new
         data files. The commit adds an equality-delete file of the
         matched keys and rewrites nothing: the delete, at the commit's
         sequence, kills every older copy of each key, while the updated
         rows, written at the same sequence, survive. O(matches), not
         O(touched files).
+
+        MERGE runs no probe: its deduped ``batch`` is the post-images,
+        and the keys are the batch's own unless ``keys`` (a one-column
+        frame) names more, the delete-marked and by-source ones. Keys
+        that fit on the driver are written in-process
+        (``_write_delete_files_from_keys``), larger sets by a Spark job.
 
         KEY-granular: on a table whose key is not unique, every live
         copy of a matched key goes, and a DELETE counts distinct keys.
@@ -5602,83 +5363,122 @@ class Warehouse:
         re-stamped above them, would kill them. For an UPDATE (or with
         the change feed on) so does a concurrent delete file or removed
         data file that may hold a matched key: the post-images would
-        reinsert a row that commit deleted."""
+        reinsert a row that commit deleted. A MERGE without the change
+        feed is latest-wins by design and never conflicts."""
         key = meta.get("key")
         if key is None:
             raise ValueError(
                 f"merge-on-read {op.upper()} needs a table key (equality "
                 "deletes); use strategy='cow'"
             )
-        s = self._dml_scope(tdir, meta, predicates)
-        stats = dict(s.stats, rewritten_files=0, delete_files=0)
-        if not s.candidates:
-            return s.version, 0, stats
-        matched = self._read_entries(
-            tdir, s.candidates, s.schema, s.phys, s.doc.get("deletes"), key
-        ).filter(F.coalesce(predicate, F.lit(False)))
+        cap = self._MERGE_COLLECT_KEYS_MAX
         phys_key, dtype = s.phys.get(key, key), s.schema[key].dataType
-        data_files: list[dict] = []
-        keys_df = matched.select(key)
-        if post is not None:
-            updated = post(matched)
-            self._check_constraints(updated, meta)
-            data_files = self._write_table_files(tdir, updated, meta)
+        files = s.doc["files"]
+        walls: dict[str, float] = {}
+        stats = {
+            "manifest_files": len(files), "probed_files": 0,
+            "rewritten_files": 0, "delete_files": 0, "data_files": 0,
+            "walls": walls,
+        }
+        matched, key_vals = None, None
+        if batch is None:
+            candidates = self._scope_files(tdir, s, files)
+            stats["probed_files"] = len(candidates)
+            if not candidates:
+                return s.version, 0, stats
+            matched = s.match(
+                self._read_entries(
+                    tdir, candidates, s.schema, s.phys, s.doc.get("deletes"), key
+                )
+            )
+            if post is None:
+                keys = matched.select(key)
+            else:
+                batch = post(matched)
+                self._check_constraints(batch, meta)
+        elif keys is not None:
+            kp = keys.limit(cap + 1).collect()
+            if not kp:
+                return s.version, 0, stats  # empty batch: no empty commit
+            if len(kp) <= cap:
+                key_vals = {r[0] for r in kp}
+        t0 = time.perf_counter()
+        data_files = [] if batch is None else self._write_table_files(tdir, batch, meta)
+        walls["write_data_sec"] = round(time.perf_counter() - t0, 3)
+        t0 = time.perf_counter()
+        if keys is None:
+            # the keys are the post-images' own: read them back from the
+            # new data files instead of running the batch or probe again
             if not data_files:
                 return s.version, 0, stats
-            # the matched keys are in the new data files: read them back
-            # instead of running the probe a second time
-            keys_df = self._key_frame(tdir, data_files, phys_key, key, dtype)
-        del_files = self._write_delete_files(
-            tdir, keys_df.distinct(), meta, coalesce_one=post is not None
+            if sum(e["records"] for e in data_files) <= cap:
+                key_vals = _local_values(tdir, data_files, phys_key)
+        del_files = (
+            None if key_vals is None
+            else self._write_delete_files_from_keys(tdir, key_vals, meta)
         )
+        if del_files is None:  # keys off the driver, or an unmapped key type
+            if keys is None:
+                keys = self._key_frame(tdir, data_files, phys_key, key, dtype)
+            del_files = self._write_delete_files(
+                tdir, keys, meta, coalesce_one=key_vals is not None
+            )
+        walls["write_deletes_sec"] = round(time.perf_counter() - t0, 3)
         if not del_files:
             return s.version, 0, stats
         n = sum(e.get("records", 0) for e in data_files or del_files)
-        key_vals = (
-            _local_values(tdir, del_files, phys_key)
-            if n <= self._MERGE_COLLECT_KEYS_MAX
-            else None
-        )
-        keys_df = self._key_frame(tdir, del_files, phys_key, key, dtype)
-        change_files = None
-        if meta.get("change_feed"):
-            # stored CDF: a DELETE's pre-images are the matched rows. An
-            # UPDATE's are every live row holding a matched key, copies
-            # the predicate did not match included (its reinserted rows
-            # replace them all), so prune by key over the WHOLE manifest
-            change = matched.withColumn("_change_type", F.lit("delete"))
-            if data_files:
-                files = s.doc["files"]
-                if key_vals is not None:
-                    files = self._prune_entries_by_keys(
-                        tdir, files, phys_key, key_vals
-                    )
-                change = (
+        change_files = validate = validate_changes = None
+        if op != "merge" or meta.get("change_feed"):
+            if key_vals is None and sum(e["records"] for e in del_files) <= cap:
+                key_vals = _local_values(tdir, del_files, phys_key)
+            ks = s.keyed(
+                key, key_vals, self._key_frame(tdir, del_files, phys_key, key, dtype)
+            )
+            if meta.get("change_feed"):
+                # stored CDF: a DELETE's pre-images are the matched rows.
+                # An UPDATE's or a MERGE's are every live row holding a
+                # matched key, copies the predicate did not match
+                # included (the post-images replace them all), so prune
+                # by key over the WHOLE manifest
+                pre = matched if op == "delete" else ks.match(
                     self._read_entries(
-                        tdir, files, s.schema, s.phys, s.doc.get("deletes"), key
+                        tdir, self._scope_files(tdir, ks, files), s.schema,
+                        s.phys, s.doc.get("deletes"), key,
                     )
-                    .join(keys_df, key, "left_semi")
-                    .withColumn("_change_type", F.lit("delete"))
-                    .unionByName(
+                )
+                change = pre.withColumn("_change_type", F.lit("delete"))
+                if data_files:
+                    change = change.unionByName(
                         self._read_files(tdir, data_files, s.schema, phys=s.phys)
                         .withColumn("_change_type", F.lit("insert"))
                     )
+                change_files = self._write_change_files(tdir, change, meta)
+
+            def validate(fresh: list[dict]) -> bool:
+                return not self._scope_holds(tdir, ks, fresh)
+
+            def validate_changes(fresh_dels: list[dict], removed: list[dict]) -> bool:
+                # position deletes bind to (file, pos), not keys
+                if any(d.get("kind") == "pos" for d in fresh_dels):
+                    return False
+                return not (
+                    self._scope_holds(tdir, ks, fresh_dels)
+                    or self._scope_holds(tdir, ks, removed)
                 )
-            change_files = self._write_change_files(tdir, change, meta)
-        validate, validate_changes = self._keyed_validators(
-            tdir, s.schema, s.phys, key, key_vals, keys_df
-        )
+
+        t0 = time.perf_counter()
         v = self._publish_append(
             tdir, s.version, data_files, meta["schema"],
             phys=meta.get("physical"), new_deletes=del_files,
-            rebase_validate=validate, op=op, change_files=change_files,
-            rebase_validate_changes=validate_changes,
+            rebase_validate=validate, branch=s.branch, op=op,
+            change_files=change_files, rebase_validate_changes=validate_changes,
         )
-        return v, n, dict(stats, delete_files=len(del_files))
+        walls["publish_sec"] = round(time.perf_counter() - t0, 3)
+        stats.update(delete_files=len(del_files), data_files=len(data_files))
+        return v, n, stats
 
     def _dml_mor_pos(
-        self, tdir: str, meta: dict, predicate, predicates, post=None,
-        op: str = "delete",
+        self, tdir: str, meta: dict, s: _DmlScope, post=None, op: str = "delete"
     ) -> tuple[int, int, dict]:
         """Merge-on-read row-level DML with POSITION deletes (Iceberg v2
         position delete files): ROW-granular and KEYLESS. One pruned,
@@ -5698,17 +5498,23 @@ class Warehouse:
         rows, so that conflicts, and so does, for an UPDATE or with the
         change feed on, a concurrent delete file that may hit a target
         file."""
-        s = self._dml_scope(tdir, meta, predicates)
-        stats = dict(s.stats, rewritten_files=0, delete_files=0)
-        if not s.candidates:
+        candidates = self._scope_files(tdir, s, s.doc["files"])
+        stats = {
+            "manifest_files": len(s.doc["files"]),
+            "probed_files": len(candidates), "rewritten_files": 0,
+            "delete_files": 0,
+        }
+        if not candidates:
             return s.version, 0, stats
         names = s.schema.fieldNames()
-        probe = self._read_entries(
-            tdir, s.candidates, s.schema, s.phys, s.doc.get("deletes"),
-            meta.get("key"), keep_pos=True,
-        ).filter(F.coalesce(predicate, F.lit(False)))
+        probe = s.match(
+            self._read_entries(
+                tdir, candidates, s.schema, s.phys, s.doc.get("deletes"),
+                meta.get("key"), keep_pos=True,
+            )
+        )
         rows = probe.join(
-            F.broadcast(self._basename_relpath_map(s.candidates)), "__abase"
+            F.broadcast(self._basename_relpath_map(candidates)), "__abase"
         )
         data_files, change_files = [], None
         stage = os.path.join(tdir, "data", f".upd-{uuid.uuid4().hex[:12]}")
@@ -5783,11 +5589,11 @@ class Warehouse:
         }.get(strategy)
         if body is None:
             raise ValueError(f"unknown {op.upper()} strategy {strategy!r}")
-        predicate, predicates = self._predicate_spec(predicate, predicates)
-        v, n, stats = body(
-            self._table_dir(ns, table), meta, predicate, predicates,
-            post=post, op=op,
-        )
+        tdir = self._table_dir(ns, table)
+        s = self._dml_scope(tdir, meta, *self._predicate_spec(predicate, predicates))
+        v, n, stats = body(tdir, meta, s, post=post, op=op)
+        stats.pop("walls", None)
+        stats.pop("data_files", None)
         rows_key = "deleted_rows" if op == "delete" else "updated_rows"
         return {"version": v, rows_key: n, **stats}
 

@@ -240,6 +240,8 @@ def test_clone_rename_branch_and_time_travel_prune_through_packs(spark, wh):
 
 def test_writes_leave_no_hadoop_sidecars(spark, wh):
     tdir = _table(spark, wh)
+    # the change feed on: the MoR DELETE also writes change files
+    wh.set_change_feed("ns", "t", True)
     wh.merge_upsert("ns", "t", spark.createDataFrame([(_key(2), "d0", 0)], SCHEMA))
     wh.delete_where("ns", "t", [("id", "=", _key(3))], strategy="mor")
     wh.compact("ns", "t", min_files_per_partition=2)

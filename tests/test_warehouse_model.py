@@ -19,12 +19,6 @@ from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse im
 
 from .test_warehouse import SCHEMA, _df
 
-import pytest
-
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4).
-# Run everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
 
 KEYS = ("a", "b", "c")
 PARTS = ("d1", "d2", None)

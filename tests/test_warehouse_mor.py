@@ -278,6 +278,20 @@ def test_cow_merge_after_mor_merge(spark, wh):
     assert _state(wh) == expect
 
 
+def test_cow_merge_probe_skips_ghost_rows(spark, wh):
+    """A file whose only copy of a batch key is a ghost (killed by a
+    pending equality delete) holds no match: the CoW MERGE rewrites the
+    live copy's file alone, not the ghost's file and its live
+    neighbours."""
+    wh.create_namespace("ns")
+    wh.create_table("ns", "t", SCHEMA, key="id", partition_by="day")
+    wh.insert("ns", "t", _df(spark, [("a", "d1", 1), ("b", "d1", 2)]).coalesce(1))
+    wh.merge_upsert("ns", "t", _df(spark, [("a", "d2", 3)]), strategy="mor")
+    wh.merge_upsert("ns", "t", _df(spark, [("a", "d2", 4)]))
+    assert wh.last_merge_stats["rewritten_files"] == 1
+    assert _state(wh) == {"a": ("a", "d2", 4), "b": ("b", "d1", 2)}
+
+
 # ---------------------------------------------------------------------------
 # concurrency
 # ---------------------------------------------------------------------------
