@@ -435,8 +435,8 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
         # (b2) MoR CDC: the 100 TB ingest DEFAULT (VERDICT r9 #4) --
         # merge-on-read MERGE (append data + equality-delete files,
         # zero rewrites per trigger) into a fresh table, same envelope
-        # corpus, then one auto_maintain backlog fold (the schedulable
-        # compaction a deployment runs beside the stream), then the
+        # corpus, then one auto_maintain pass (the schedulable
+        # maintenance a deployment runs beside the stream), then the
         # same 100-row commit-to-queryable probe.
         try:
             mor_runs: list[float] = []

@@ -38,6 +38,7 @@ import re
 import shutil
 import time
 import uuid
+from collections import Counter
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
@@ -748,6 +749,16 @@ def _delete_applies(d: dict, e: dict, phys_key: str) -> bool:
     ):
         return True
     return not (lo_d > hi_e or hi_d < lo_e)
+
+
+def _deleted_rows(d: dict, e: dict) -> int:
+    """Rows of data file ``e`` that delete file ``d``, which applies to
+    it, removes: exact for a position delete that counts its rows per
+    target, else the delete's record count."""
+    targets = d.get("targets")
+    if isinstance(targets, dict):
+        return targets[e["path"]]
+    return d.get("records", 0)
 
 
 def _exprs_referencing(exprs: dict, col: str) -> list[str]:
@@ -3260,33 +3271,51 @@ class Warehouse:
         return [entry]
 
     def _write_pos_delete_files(
-        self, tdir: str, addr_df: DataFrame
+        self, tdir: str, addr_df: DataFrame, max_rows: int
     ) -> list[dict]:
         """Write a ``(file, pos)`` address set as POSITION delete
         parquet files (Iceberg v2 position deletes): ``file`` is the
         data file's manifest-relative path, ``pos`` the row ordinal
-        inside it. The manifest entry records the distinct target
-        paths, so readers bind the delete to exactly the files it
-        names (``_delete_applies``) and it dangles the moment its
-        targets leave the manifest (compaction folds it in). The
-        caller stamps ``seq`` at publish."""
+        inside it. ``max_rows`` bounds the set (the records of the
+        files it addresses); a set small enough to collect keys for
+        (``_MERGE_COLLECT_KEYS_MAX``) goes to one file, as a small
+        equality-delete key set does. Each manifest entry records
+        ``targets``, the rows it deletes per target path, so readers
+        bind the delete to exactly the files it names
+        (``_delete_applies``), maintenance reads exact per-file delete
+        counts, and it dangles the moment its targets leave the
+        manifest (compaction folds it in). The caller stamps ``seq`` at
+        publish."""
         addr_df = addr_df.select(
             F.col("file").cast("string"), F.col("pos").cast("long")
         ).where(F.col("file").isNotNull())
+        if max_rows <= self._MERGE_COLLECT_KEYS_MAX:
+            addr_df = addr_df.coalesce(1)
         entries = self._write_files(tdir, addr_df, None)
         if not entries:
             return []
-        # distinct target paths: one tiny job over the (dictionary-
-        # encoded) path column of the just-written delete files --
+        # per-file, per-target row counts: one tiny job over the
+        # (dictionary-encoded) path column of the just-written files --
         # bounded by the probe's candidate-file count, not by rows
-        targets = sorted(
-            r.file
-            for r in self.spark.read.parquet(
+        targets: dict[str, dict[str, int]] = {}
+        for r in (
+            self.spark.read.parquet(
                 *[os.path.join(tdir, e["path"]) for e in entries]
-            ).select("file").distinct().collect()
-        )
+            )
+            .groupBy(
+                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+                .alias("d"),
+                "file",
+            )
+            .count()
+            .collect()
+        ):
+            targets.setdefault(r["d"], {})[r["file"]] = r["count"]
         return [
-            dict(e, kind="pos", content="deletes", targets=targets)
+            dict(
+                e, kind="pos", content="deletes",
+                targets=dict(sorted(targets[os.path.basename(e["path"])].items())),
+            )
             for e in entries
         ]
 
@@ -3353,10 +3382,11 @@ class Warehouse:
         """Union of equality-delete files as one column ``__delkey``.
         Each entry stores the PHYSICAL key column name it was written
         under (``col``), so later renames of the logical key stay
-        metadata-only for delete files too. ``with_seq`` adds each
-        file's commit sequence as ``__dseq`` (files sharing (col, seq)
-        scan as one branch) -- the single-join read path aggregates it
-        to the per-key max."""
+        metadata-only for delete files too. ``with_seq`` instead gives
+        one row per key with ``__dseq``, the newest sequence of a delete
+        holding it (files sharing (col, seq) scan as one branch),
+        broadcast while the delete set is small: a row of a data file at
+        sequence ``f`` is deleted iff its key's ``__dseq > f``."""
         from pyspark.sql.types import StructField
 
         out = None
@@ -3373,6 +3403,13 @@ class Warehouse:
                     "__dseq", F.lit(int(seq)).cast("bigint")
                 )
             out = df if out is None else out.unionByName(df)
+        if with_seq:
+            out = out.groupBy("__delkey").agg(F.max("__dseq").alias("__dseq"))
+            if (
+                sum(d.get("records", 0) for d in dels)
+                <= self._DELETE_BROADCAST_RECORDS
+            ):
+                out = F.broadcast(out)
         return out
 
     def _read_entries(
@@ -3496,19 +3533,9 @@ class Warehouse:
             # the whole read: (key -> max delete seq); a row survives
             # iff no delete holds its key or the newest one is not
             # newer than the row's data file
-            kdf = (
-                self._read_delete_keys(
-                    tdir, eq_applicable, schema[key].dataType,
-                    with_seq=True,
-                )
-                .groupBy("__delkey")
-                .agg(F.max("__dseq").alias("__dseq"))
+            kdf = self._read_delete_keys(
+                tdir, eq_applicable, schema[key].dataType, with_seq=True
             )
-            if (
-                sum(d.get("records", 0) for d in eq_applicable)
-                <= self._DELETE_BROADCAST_RECORDS
-            ):
-                kdf = F.broadcast(kdf)
             dirty = (
                 dirty.join(
                     kdf, F.col(key) == F.col("__delkey"), "left"
@@ -3545,24 +3572,26 @@ class Warehouse:
         )
 
     def _basename_relpath_map(self, entries: list[dict]) -> DataFrame:
-        """Broadcastable ``(__abase, __relpath)`` map recovering each
-        scanned file's manifest-relative path from its basename --
-        the URI-encoding-proof way to turn ``_metadata.file_path``
-        back into the path a position-delete file must store. Raises
-        loudly if two entries share a basename (never happens for
-        Spark part files, whose names embed a per-job UUID), because a
-        double-valued map would silently mis-address deletes."""
-        by_base: dict[str, str] = {}
+        """Broadcastable ``(__abase, __relpath, __fseq)`` map recovering
+        each scanned file's manifest-relative path and data sequence
+        number from its basename -- the URI-encoding-proof way to turn
+        ``_metadata.file_path`` back into the path a position-delete
+        file must store. Raises loudly if two entries share a basename
+        (never happens for Spark part files, whose names embed a
+        per-job UUID), because a double-valued map would silently
+        mis-address deletes."""
+        by_base: dict[str, dict] = {}
         for e in entries:
             base = os.path.basename(e["path"])
-            if by_base.setdefault(base, e["path"]) != e["path"]:
+            if by_base.setdefault(base, e)["path"] != e["path"]:
                 raise RuntimeError(
                     f"data-file basename {base!r} is not unique within "
-                    f"the table ({by_base[base]!r} vs {e['path']!r}); "
+                    f"the table ({by_base[base]['path']!r} vs {e['path']!r}); "
                     "cannot address positional deletes by basename"
                 )
         return self.spark.createDataFrame(
-            list(by_base.items()), "__abase string, __relpath string"
+            [(b, e["path"], _seq_of(e)) for b, e in by_base.items()],
+            "__abase string, __relpath string, __fseq bigint",
         )
 
     def plan_files(
@@ -5533,6 +5562,7 @@ class Warehouse:
                 rows.select(
                     F.col("__relpath").alias("file"), F.col("__pos").alias("pos")
                 ),
+                sum(e.get("records", 0) for e in candidates),
             )
             if not del_files:
                 return s.version, 0, stats
@@ -5552,7 +5582,7 @@ class Warehouse:
                 change_files = self._write_change_files(tdir, change, meta)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        targets = set(del_files[0]["targets"])
+        targets = {p for d in del_files for p in d["targets"]}
         target_entries = [e for e in s.doc["files"] if e["path"] in targets]
         phys_key = s.phys.get(meta.get("key"), meta.get("key"))
 
@@ -5991,12 +6021,20 @@ class Warehouse:
         """rewrite_data_files analog: coalesce small files per partition
         (the reference's 1 MB/60 s Firehose buffers produce many small
         files; S3 Tables auto-compacts -- here it's an explicit call).
+        Rewrites every partition holding ``min_files_per_partition`` or
+        more files, and every partition holding a file that a pending
+        merge-on-read delete applies to, whatever its file count:
+        folding the deletes in lets the manifest drop them and reads
+        shed the anti-join. So after an explicit compact no delete is
+        pending. (``auto_maintain`` picks partitions by its own, cheaper
+        policy.)
 
         ``sort_by`` -- cluster rewritten rows (Iceberg table sort-order
         analog): a single column name sorts lexicographically; a LIST of
         numeric columns Z-orders (interleaved-bit Morton key scaled by
         the rewrite set's manifest min/max), giving tight per-file
-        ranges on every listed column simultaneously.
+        ranges on every listed column simultaneously. Defaults to the
+        table's write order.
 
         ``target_files`` -- with ``sort_by``, range-split the rewrite
         set into this many curve-disjoint files instead of one file per
@@ -6006,40 +6044,44 @@ class Warehouse:
         queries prune most of the table from the manifest alone)."""
         tdir = self._table_dir(ns, table)
         meta = self.table_meta(ns, table)
+        version = self._versions(tdir)[-1]
+        doc = self._manifest_doc(tdir, version)
+        live_dels = _live_deletes(doc.get("deletes"), doc["files"])
+        rewrite: list[dict] = []
+        for es in self._partitions(doc["files"]):
+            if len(es) >= min_files_per_partition or any(
+                _delete_applies(d, e, d.get("col", "")) for e in es for d in live_dels
+            ):
+                rewrite += es
+        if not rewrite:
+            return version
+        return self._rewrite_files(
+            tdir, meta, version, doc, rewrite, sort_by, target_files
+        )
+
+    @staticmethod
+    def _partitions(files: list[dict]) -> list[list[dict]]:
+        """``files`` grouped by partition (spec id and value)."""
+        by_part: dict[tuple, list[dict]] = {}
+        for e in files:
+            by_part.setdefault(_scope_key(e), []).append(e)
+        return list(by_part.values())
+
+    def _rewrite_files(
+        self, tdir: str, meta: dict, version: int, doc: dict,
+        rewrite: list[dict], sort_by=None, target_files: int | None = None,
+    ) -> int:
+        """Rewrite the data files ``rewrite`` of snapshot ``version``
+        (``doc``), whole partitions of them, with every pending delete
+        applied, and publish it as one ``replace`` commit: the body
+        ``compact`` and ``auto_maintain`` share, each with its own file
+        selection. ``sort_by`` and ``target_files`` are ``compact``'s."""
         schema = StructType.fromJson(meta["schema"])
         if sort_by is None and meta.get("write_order"):
             # default to the table's declared write order (Iceberg
             # rewrite_data_files honors the table sort order)
             wo = meta["write_order"]
             sort_by = wo[0] if len(wo) == 1 else list(wo)
-        version = self._versions(tdir)[-1]
-        doc = self._manifest_doc(tdir, version)
-        entries = doc["files"]
-        live_dels = _live_deletes(doc.get("deletes"), entries)
-        key_col = meta.get("key")
-        phys_compact_key = (meta.get("physical") or {}).get(key_col, key_col)
-        by_part: dict[tuple, list[dict]] = {}
-        for e in entries:
-            by_part.setdefault(_scope_key(e), []).append(e)
-        keep, rewrite = [], []
-        for part, es in by_part.items():
-            # a partition holding files with pending merge-on-read
-            # deletes compacts regardless of file count: folding the
-            # equality deletes in (rewrite_position_deletes analog) is
-            # what lets the manifest drop them and reads shed the
-            # anti-join
-            pending = any(
-                _delete_applies(d, e, phys_compact_key)
-                for e in es
-                for d in live_dels
-            )
-            (
-                rewrite
-                if len(es) >= min_files_per_partition or pending
-                else keep
-            ).extend(es)
-        if not rewrite:
-            return version
         # deletes-aware: compaction materializes the merge-on-read
         # deletes into the rewritten files
         df = self._read_entries(
@@ -6082,11 +6124,12 @@ class Warehouse:
             phys=meta.get("physical"),
             spec_id=meta.get("partition_spec_id", 0),
         )
+        paths = {e["path"] for e in rewrite}
         return self._publish_rewrite(
             tdir, version,
             {_scope_key(e) for e in rewrite} if meta["partition_by"] else None,
-            rewrite, keep, new_files, meta["schema"], phys=meta.get("physical"),
-            op="replace",
+            rewrite, [e for e in doc["files"] if e["path"] not in paths],
+            new_files, meta["schema"], phys=meta.get("physical"), op="replace",
         )
 
     # -- named refs (Iceberg tags: a ref pins a snapshot by name; time
@@ -6275,6 +6318,14 @@ class Warehouse:
         self.drop_branch(ns, table, name)
         return new_tip
 
+    # auto_maintain rewrites a partition once this share of its rows is
+    # deleted (Iceberg rewrite_data_files delete-ratio-threshold, whose
+    # default this is) ...
+    _MAINTAIN_DELETE_RATIO = 0.3
+    # ... or once one of its files carries more live delete files than
+    # this, which bounds the branches a read builds per data file group
+    _MAINTAIN_MAX_FILE_DELETES = 4
+
     def auto_maintain(
         self,
         ns: str,
@@ -6287,49 +6338,232 @@ class Warehouse:
         """One-call table maintenance policy (the reference's S3 Tables
         performs compaction, snapshot management, and unreferenced-file
         removal AUTOMATICALLY -- reference README.md's managed-table
-        value proposition; here it is an explicit, schedulable call):
+        value proposition; here it is an explicit, schedulable call).
+        One call costs O(rows changed since the last call), not O(table):
 
-        1. COMPACT partitions that accumulated ``min_files_per_partition``
-           or more files averaging under ``small_file_bytes`` (the
+        1. RESOLVE every live equality-delete file into position deletes
+           on the data files that hold its keys, as one ``replace``
+           commit (:meth:`_resolve_equality_deletes`). Reads then take
+           the position anti-join for exactly those files, and the
+           manifest knows how many rows each file has lost.
+        2. REWRITE only the partitions that need it (Iceberg
+           ``rewrite_data_files``): those whose deleted share reaches
+           ``_MAINTAIN_DELETE_RATIO``, those holding a file that carries
+           more than ``_MAINTAIN_MAX_FILE_DELETES`` live delete files,
+           and those that accumulated ``min_files_per_partition`` or
+           more files averaging under ``small_file_bytes`` (the
            streaming-ingest small-file shape; Firehose's 1 MB/60 s
-           buffers produce exactly this),
-        2. EXPIRE all but the newest ``keep_last`` snapshots (tagged
+           buffers produce exactly this). The rewrite folds their
+           deletes in; other partitions keep theirs.
+        3. EXPIRE all but the newest ``keep_last`` snapshots (tagged
            snapshots always survive),
-        3. REMOVE orphaned data files older than the in-flight horizon.
+        4. REMOVE orphaned data files older than the in-flight horizon.
 
-        Metadata-driven throughout: the compaction decision reads the
-        manifest only; nothing scans data that doesn't get rewritten."""
+        ``compacted`` reports whether step 2 committed a rewrite, and
+        ``compacted_to_version`` its version. An explicit
+        :meth:`compact` still folds every pending delete."""
         tdir = self._table_dir(ns, table)
         if not os.path.exists(tdir):
             raise TableNotFoundError(f"{ns}.{table}")
+        meta = self.table_meta(ns, table)
+        self._resolve_equality_deletes(tdir, meta)
         version = self._versions(tdir)[-1]
         doc = self._manifest_doc(tdir, version)
-        by_part: dict[str | None, list[dict]] = {}
-        for e in doc["files"]:
-            by_part.setdefault(e["partition"], []).append(e)
-        needs_compact = bool(
-            _live_deletes(doc.get("deletes"), doc["files"])
-        ) or any(
-            len(es) >= min_files_per_partition
-            and (sum(x.get("bytes", 0) for x in es) / len(es)) < small_file_bytes
-            for es in by_part.values()
+        dels = _live_deletes(doc.get("deletes"), doc["files"])
+        rewrite: list[dict] = []
+        for es in self._partitions(doc["files"]):
+            deleted = most = 0
+            for e in es:
+                hits = [d for d in dels if _delete_applies(d, e, d.get("col", ""))]
+                most = max(most, len(hits))
+                deleted += sum(_deleted_rows(d, e) for d in hits)
+            rows = sum(e.get("records", 0) for e in es)
+            small = sum(e.get("bytes", 0) for e in es) / len(es) < small_file_bytes
+            if (
+                (deleted and deleted >= self._MAINTAIN_DELETE_RATIO * rows)
+                or most > self._MAINTAIN_MAX_FILE_DELETES
+                or (small and len(es) >= min_files_per_partition)
+            ):
+                rewrite += es
+        compacted_to = (
+            self._rewrite_files(tdir, meta, version, doc, rewrite)
+            if rewrite
+            else None
         )
-        compacted_to = None
-        if needs_compact:
-            compacted_to = self.compact(
-                ns, table, min_files_per_partition=min_files_per_partition
-            )
         expired = self.expire_snapshots(ns, table, keep_last=keep_last)
         orphans = self.remove_orphan_files(
             ns, table, older_than_seconds=orphan_horizon_seconds
         )
         return {
-            "compacted": needs_compact,
+            "compacted": compacted_to is not None,
             "compacted_to_version": compacted_to,
             "expired_versions": expired["expired_versions"],
             "removed_expired_files": expired["removed_files"],
             "removed_orphan_files": orphans["removed_files"],
         }
+
+    def _resolve_equality_deletes(self, tdir: str, meta: dict) -> int | None:
+        """Turn every live equality-delete file of the tip into position
+        deletes on the data files that actually hold its keys (Iceberg's
+        equality-to-position delete conversion), and publish them in its
+        place as one ``replace`` commit; the change feed, stream and MV
+        readers skip it, since no row changes. Returns that version, or
+        None when no equality delete is live.
+
+        Candidates are the files a delete may apply to (sequence rule:
+        a delete at seq ``d`` hits only files with seq < ``d``; key
+        min/max). A candidate row is addressed when the newest equality
+        delete holding its key is newer than its file and no live
+        position delete names it already, so each new position-delete
+        entry counts exactly the rows it removes per target file.
+        Candidates of at most ``_MERGE_COLLECT_KEYS_MAX`` rows, the
+        trigger-sized steady state, resolve in-process
+        (:meth:`_resolve_in_process`), larger sets by a Spark join
+        (:meth:`_resolve_distributed`).
+
+        Rebase: a concurrent append only adds files newer than every
+        resolved delete, so it rebases. It conflicts when a target file
+        left the manifest, when a resolved delete left the delete list
+        (a concurrent rollback or resolution), or when the tip holds a
+        file the read snapshot did not that a resolved delete applies
+        to: those rows would never be resolved."""
+        key = meta.get("key")
+        if key is None:
+            return None  # equality deletes need a table key
+        s = self._dml_scope(tdir, meta)
+        files = s.doc["files"]
+        live = _live_deletes(s.doc.get("deletes"), files)
+        eq = [d for d in live if d.get("kind") != "pos"]
+        if not eq:
+            return None
+        phys_key = s.phys.get(key, key)
+        cand = [e for e in files if any(_delete_applies(d, e, phys_key) for d in eq)]
+        pos = [d for d in live if d.get("kind") == "pos"]
+        if sum(e.get("records", 0) for e in cand) <= self._MERGE_COLLECT_KEYS_MAX:
+            new_dels = self._resolve_in_process(tdir, cand, eq, pos, phys_key)
+        else:
+            new_dels = self._resolve_distributed(tdir, s, cand, eq, pos, key)
+        gone = {d["path"] for d in eq}
+        targets = {p for d in new_dels for p in d["targets"]}
+        read_paths = {e["path"] for e in files}
+        version = s.version
+        for _ in range(self._MAX_COMMIT_RETRIES):
+            doc = self._manifest_doc(tdir, version)
+            tip_dels = doc.get("deletes") or []
+            if (
+                not targets <= {e["path"] for e in doc["files"]}
+                or not gone <= {d["path"] for d in tip_dels}
+                or any(
+                    _delete_applies(d, e, phys_key)
+                    for e in doc["files"]
+                    if e["path"] not in read_paths
+                    for d in eq
+                )
+            ):
+                raise CommitConflictError(
+                    "a concurrent commit changed the files an equality-"
+                    "delete resolution addresses; re-run maintenance"
+                )
+            dels = [d for d in tip_dels if d["path"] not in gone]
+            dels += [dict(d, seq=version + 1) for d in new_dels]
+            try:
+                self._publish(
+                    tdir, version + 1, doc["files"], schema=doc.get("schema"),
+                    phys=doc.get("physical"),
+                    deletes=_live_deletes(dels, doc["files"]), op="replace",
+                )
+                return version + 1
+            except CommitConflictError:
+                version = self._versions(tdir)[-1]
+        raise CommitConflictError(
+            f"delete resolution lost {self._MAX_COMMIT_RETRIES} version "
+            "races; giving up"
+        )
+
+    def _resolve_distributed(
+        self, tdir: str, s: _DmlScope, cand: list[dict], eq: list[dict],
+        pos: list[dict], key: str,
+    ) -> list[dict]:
+        """The position deletes :meth:`_resolve_equality_deletes` writes,
+        computed by Spark: the candidates, pruned by key Bloom when the
+        delete keys fit on the driver, are read with their row addresses
+        and live position deletes applied, and joined with each key's
+        newest equality-delete sequence."""
+        phys_key = s.phys.get(key, key)
+        if sum(d.get("records", 0) for d in eq) <= self._MERGE_COLLECT_KEYS_MAX:
+            key_vals: set = set()
+            for d in eq:
+                key_vals |= _local_values(tdir, [d], d["col"])
+            cand = self._prune_entries_by_keys(tdir, cand, phys_key, key_vals)
+        if not cand:
+            return []
+        rows = self._read_entries(
+            tdir, cand, s.schema, s.phys, pos, key, keep_pos=True
+        )
+        kdf = self._read_delete_keys(tdir, eq, s.schema[key].dataType, with_seq=True)
+        addrs = (
+            rows.join(F.broadcast(self._basename_relpath_map(cand)), "__abase")
+            .join(kdf, F.col(key) == F.col("__delkey"))
+            .where(F.col("__dseq") > F.col("__fseq"))
+            .select(F.col("__relpath").alias("file"), F.col("__pos").alias("pos"))
+        )
+        return self._write_pos_delete_files(
+            tdir, addrs, sum(e.get("records", 0) for e in cand)
+        )
+
+    def _resolve_in_process(
+        self, tdir: str, cand: list[dict], eq: list[dict], pos: list[dict],
+        phys_key: str,
+    ) -> list[dict]:
+        """The position deletes :meth:`_resolve_equality_deletes` writes,
+        computed in-process (pyarrow) for a candidate set small enough
+        to hold on the driver, as ``_write_delete_files_from_keys``
+        writes a small equality delete: no Spark job. A row at ordinal
+        ``i`` of candidate ``e`` is addressed when the newest equality
+        delete holding its key is newer than ``e`` and no live position
+        delete ``pos`` already names ``(e, i)``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        def column(path: str, col: str) -> list:
+            t = pq.read_table(os.path.join(tdir, path), columns=[col])
+            return t.column(0).to_pylist()
+
+        newest: dict = {}
+        for d in eq:
+            for k in column(d["path"], d["col"]):
+                newest[k] = max(newest.get(k, 0), d["seq"])
+        dead = {
+            a
+            for d in pos
+            for a in zip(column(d["path"], "file"), column(d["path"], "pos"))
+        }
+        files, positions = [], []
+        for e in cand:
+            seq = _seq_of(e)
+            for i, k in enumerate(column(e["path"], phys_key)):
+                if newest.get(k, 0) > seq and (e["path"], i) not in dead:
+                    files.append(e["path"])
+                    positions.append(i)
+        if not files:
+            return []
+        stage = os.path.join(tdir, "data", uuid.uuid4().hex[:12])
+        os.makedirs(stage, exist_ok=True)
+        full = os.path.join(stage, f"{uuid.uuid4().hex}.parquet")
+        addrs = {
+            "file": pa.array(files, pa.string()),
+            "pos": pa.array(positions, pa.int64()),
+        }
+        pq.write_table(pa.table(addrs), full)
+        meta = _extract_file_meta(full, None)
+        del meta["abs"]
+        return [
+            {
+                "path": os.path.relpath(full, tdir), **meta, "partition": None,
+                "kind": "pos", "content": "deletes",
+                "targets": dict(sorted(Counter(files).items())),
+            }
+        ]
 
     def expire_snapshots(self, ns: str, table: str, keep_last: int = 1) -> dict:
         """``expire_snapshots`` analog (Iceberg table maintenance; the

@@ -314,7 +314,7 @@ def stream_cdc_to_table(
     ``strategy="mor"`` switches every trigger's MERGE to merge-on-read
     (append data + equality-delete files, zero rewrites per commit) --
     the high-throughput CDC steady state; schedule ``auto_maintain`` to
-    fold the backlog."""
+    keep the delete backlog bounded."""
     raw = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 100)  # reference batch_size=100

@@ -22,19 +22,12 @@ import multiprocessing
 import os
 import tempfile
 
-import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import (
     CommitConflictError,
     Warehouse,
 )
-
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4
-# -- the full suite outgrew the driver's verification budget). Run
-# everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
 
 S = StructType(
     [

@@ -92,15 +92,21 @@ def test_full_reference_journey(spark, wh):
         ).columns
         assert sorted(cols) == ["amount", "status", "transaction_id"]
 
-        # -- stage 3: maintenance folds the MoR backlog; history and
-        # time travel survive --
+        # -- stage 3: maintenance resolves the MoR backlog (one of four
+        # rows deleted stays under the rewrite ratio), an explicit
+        # compact folds it; history and time travel survive --
         v_before = wh.current_version("analytics", "transactions")
         assert wh.deletes_df("analytics", "transactions").count() >= 1
         res = wh.auto_maintain(
             "analytics", "transactions", keep_last=10,
             orphan_horizon_seconds=3600,
         )
-        assert res["compacted"]
+        assert not res["compacted"]
+        tdir = wh._table_dir("analytics", "transactions")
+        doc = wh._manifest_doc(tdir, wh.current_version("analytics", "transactions"))
+        assert [d["kind"] for d in doc["deletes"]] == ["pos"]
+        assert wh.read("analytics", "transactions").count() == 3
+        wh.compact("analytics", "transactions")
         assert wh.deletes_df("analytics", "transactions").count() == 0
         v1_rows = wh.read("analytics", "transactions", version=v_before).count()
         assert v1_rows == 3

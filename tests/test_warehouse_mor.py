@@ -502,6 +502,60 @@ def test_mor_pos_update_rebases_over_disjoint_delete(spark, wh, monkeypatch):
     assert _state(wh) == expect
 
 
+@pytest.mark.parametrize("racer_op", ["compact", "cow_merge"])
+def test_delete_resolution_conflicts_with_concurrent_rewrite(
+    spark, wh, monkeypatch, racer_op
+):
+    """auto_maintain resolves the MoR upsert's equality delete into a
+    position delete on k1's base file; a concurrent compaction or CoW
+    MERGE rewrites that file, so the resolution must conflict rather
+    than publish addresses into a file that left the manifest."""
+    expect = _base(spark, wh)
+    wh.merge_upsert("ns", "t", _df(spark, [("k1", "d1", 111)]), strategy="mor")
+    expect["k1"] = ("k1", "d1", 111)
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        if racer_op == "compact":
+            wh.compact("ns", "t", min_files_per_partition=1)
+        else:
+            wh.merge_upsert("ns", "t", _df(spark, [("k3", "d1", 333)]))
+            expect["k3"] = ("k3", "d1", 333)
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    with pytest.raises(CommitConflictError):
+        wh.auto_maintain("ns", "t")
+    assert _state(wh) == expect
+
+
+def test_delete_resolution_rebases_over_concurrent_mor_merge(
+    spark, wh, monkeypatch
+):
+    """A concurrent MoR MERGE only adds files newer than the resolved
+    delete: the resolution rebases, and its equality delete stays live
+    beside the new position delete."""
+    expect = _base(spark, wh)
+    wh.merge_upsert("ns", "t", _df(spark, [("k1", "d1", 111)]), strategy="mor")
+    expect["k1"] = ("k1", "d1", 111)
+    batch = [("k2", "d0", 222), ("kN", "d1", 5)]
+
+    def racer():
+        monkeypatch.setattr(whmod.Warehouse, "_publish", orig)
+        wh.merge_upsert("ns", "t", _df(spark, batch), strategy="mor")
+
+    orig = whmod.Warehouse._publish
+    _race_one_commit(monkeypatch, wh, racer)
+    v = wh.current_version("ns", "t")
+    wh.auto_maintain("ns", "t")
+    expect.update({r[0]: r for r in batch})
+    tdir = wh._table_dir("ns", "t")
+    doc = wh._manifest_doc(tdir, v + 2)
+    assert doc["op"] == "replace"
+    assert sorted(d.get("kind", "eq") for d in doc["deletes"]) == ["eq", "pos"]
+    assert _state(wh) == expect
+
+
 # ---------------------------------------------------------------------------
 # maintenance keeps delete files alive
 # ---------------------------------------------------------------------------
@@ -537,12 +591,18 @@ def test_rollback_restores_mor_snapshot(spark, wh):
 
 
 def test_auto_maintain_folds_mor_backlog(spark, wh):
+    """One upserted row of ten in its partition is under the delete
+    ratio: maintenance turns the equality delete into a position delete
+    on the one file holding the key and rewrites nothing."""
     expect = _base(spark, wh)
     wh.merge_upsert("ns", "t", _df(spark, [("k9", "d1", 900)]), strategy="mor")
     expect["k9"] = ("k9", "d1", 900)
     res = wh.auto_maintain("ns", "t", keep_last=1, orphan_horizon_seconds=0)
-    assert res["compacted"]
-    assert wh.deletes_df("ns", "t").collect() == []
+    assert not res["compacted"]
+    tdir = wh._table_dir("ns", "t")
+    dels = wh._manifest_doc(tdir, wh.current_version("ns", "t"))["deletes"]
+    assert [d["kind"] for d in dels] == ["pos"]
+    assert list(dels[0]["targets"].values()) == [1]
     assert _state(wh) == expect
 
 
