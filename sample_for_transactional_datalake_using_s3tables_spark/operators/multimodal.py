@@ -2,24 +2,21 @@
 
 The pattern for image/audio/video at 100 TB: store the media as an
 opaque ``binary`` column with typed metadata columns alongside, and run
-decode / feature-extraction as Arrow-batched ``mapInPandas`` stages
-(pandas UDFs are the sanctioned Python hot path -- row-at-a-time UDFs
-are not).
+decode / feature-extraction as Arrow-batched ``mapInPandas`` /
+``applyInPandas`` stages (pandas UDFs are the sanctioned Python hot
+path -- row-at-a-time UDFs are not).
 
-Decode status: the common containers are decoded FOR REAL with the
-stdlib + numpy -- PPM (P6), 24-bit BMP, PNG (zlib inflate + full
-scanline de-filtering), animated GIF (full variable-width LZW, frame
-composition), WAV (16-bit PCM), and baseline grayscale JPEG (canonical
-Huffman + dequant + IDCT, ``jpegcodec.py``) -- each certified
-end-to-end through the oracle gate (real binary synthesis -> Spark
-binary column -> Arrow batch -> real parser -> features). What remains
-behind the clearly-marked PIL/librosa/av seam: color/subsampled JPEG,
-interlaced PNG/GIF, and compressed audio/video codecs. The
-``multimodal_image_features``/``multimodal_audio_stats`` queries keep
-exercising the batch plumbing with deterministic stand-in features.
-
-``documents.text`` stands in for a media blob via utf-8 encoding in the
-stub queries; the real-decode query synthesizes genuine PPM/WAV bytes.
+Two containers are encoded and decoded FOR REAL with the stdlib +
+numpy: PNG (zlib inflate + full scanline de-filtering, Adam7) and
+animated GIF (variable-width LZW, frame composition), and the
+WebDataset query packs PNG members into tar shards
+(``sources/webdataset.py``). Each is certified end-to-end through the
+oracle gate (real binary synthesis -> Spark binary column -> Arrow
+batch -> real parser -> features). The ``multimodal_image_features``/
+``multimodal_audio_stats``/``multimodal_resize`` queries exercise the
+batch plumbing with deterministic stand-in features of
+``documents.text`` bytes; a production deployment decodes other
+formats with an imaging or audio library in the same stage shape.
 """
 
 from __future__ import annotations
@@ -151,94 +148,6 @@ def _decode_png(payload: bytes):
     if ch == 1:
         return np.repeat(px, 3, axis=2)
     return px[..., :3].copy()  # drop alpha for the (h, w, 3) contract
-
-
-def decode_image(payload: bytes):
-    """Decode an image payload to an ``(h, w, 3)`` uint8 array.
-
-    REAL decoding for formats parsable without imaging libraries:
-    PPM ``P6`` (header + raw RGB), uncompressed 24-bit BMP (BGR rows,
-    bottom-up, 4-byte-aligned), 8-bit grey/RGB/RGBA PNG (stdlib zlib
-    inflate + full scanline de-filtering, incl. Adam7), baseline AND
-    progressive JPEG (grayscale + JFIF YCbCr color) via the real
-    Huffman + dequant + IDCT in ``jpegcodec``, and strip-based TIFF
-    (none/PackBits/LZW, both byte orders) via ``tiffcodec``."""
-    import numpy as np
-
-    if payload[: len(_PNG_MAGIC)] == _PNG_MAGIC:
-        return _decode_png(payload)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiffcodec import decode_tiff
-
-        px = decode_tiff(payload)
-        if px.ndim == 2:
-            return np.repeat(px[..., None], 3, axis=2)
-        return px
-    if payload[:2] == b"\xff\xd8":
-        from .jpegcodec import decode_jpeg
-
-        px = decode_jpeg(payload)  # progressive JPEG raises (PIL seam)
-        if px.ndim == 2:
-            return np.repeat(px[..., None], 3, axis=2)
-        return px
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webpcodec import decode_webp
-
-        return decode_webp(payload)[..., :3].copy()  # drop alpha
-    if payload[:2] == b"P6":
-        import re as _re
-
-        m = _re.match(rb"P6\s+(\d+)\s+(\d+)\s+(\d+)\s", payload)
-        if m is None:
-            raise ValueError("malformed PPM header")
-        w, h = int(m.group(1)), int(m.group(2))
-        data = payload[m.end() : m.end() + w * h * 3]
-        if len(data) < w * h * 3:
-            raise ValueError("truncated PPM pixel data")
-        return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
-    if payload[:2] == b"BM":
-        import struct
-
-        off = struct.unpack_from("<I", payload, 10)[0]
-        w = struct.unpack_from("<i", payload, 18)[0]
-        h = struct.unpack_from("<i", payload, 22)[0]
-        bpp = struct.unpack_from("<H", payload, 28)[0]
-        if bpp != 24:
-            raise NotImplementedError("only uncompressed 24-bit BMP supported")
-        row_size = (w * 3 + 3) & ~3
-        rows = [
-            np.frombuffer(payload, np.uint8, count=w * 3, offset=off + r * row_size)
-            for r in range(abs(h))
-        ]
-        arr = np.stack(rows[::-1] if h > 0 else rows).reshape(abs(h), w, 3)
-        return arr[..., ::-1].copy()  # BGR -> RGB
-    raise NotImplementedError(
-        "unrecognized image container (PIL/torchvision deployment seam for "
-        "formats beyond PPM/BMP/PNG/GIF/baseline-grayscale-JPEG)"
-    )
-
-
-def decode_audio(payload: bytes):
-    """Decode a WAV or FLAC payload to ``(samples[frames, ch],
-    sample_rate)`` -- REAL decoding via the from-scratch codecs:
-    RIFF/WAVE (operators/audiocodec.py: PCM 8/16/24/32-bit, IEEE
-    float32/64, G.711 mu-law / A-law, IMA ADPCM) and FLAC
-    (operators/flaccodec.py: full lossless decode with CRC + MD5
-    verification). Perceptual codecs (MP3/OGG/AAC) need librosa/av and
-    raise."""
-    if payload[:4] == b"fLaC":
-        from .flaccodec import decode_flac
-
-        samples, sr = decode_flac(payload)  # int32; bps=16 fits int16
-        return samples.astype("int16"), sr
-    if payload[:4] != b"RIFF":
-        raise NotImplementedError(
-            "compressed audio decoding requires an audio library not present "
-            "in this environment (librosa/av deployment seam)"
-        )
-    from .audiocodec import parse_wav
-
-    return parse_wav(payload)
 
 
 def _image_feature_batches(batches: Iterator) -> Iterator:
@@ -405,17 +314,11 @@ FROM p
 """
 
 
-REAL_DECODE_SCHEMA = (
-    "doc_id long, width int, height int, channels int, mean_pixel double, "
-    "wav_ms long, wav_peak int"
-)
-
-
 def encode_png(px, filters=(0, 1, 2)) -> bytes:
     """REAL PNG encoding with the stdlib: 8-bit RGB, one IDAT, scanline
     filters cycling through ``filters`` (exercising the decoder's
-    None/Sub/Up paths in production queries; Average/Paeth are covered
-    by targeted tests)."""
+    None/Sub/Up paths in ``multimodal_webdataset``; Average/Paeth are
+    covered by targeted tests)."""
     import struct
     import zlib
 
@@ -451,136 +354,6 @@ def encode_png(px, filters=(0, 1, 2)) -> bytes:
         + chunk(b"IDAT", zlib.compress(bytes(raw)))
         + chunk(b"IEND", b"")
     )
-
-
-def _synthesize_media_batches(batches: Iterator) -> Iterator:
-    """Stage 1: REAL media synthesis -- a genuine image (rotating by
-    doc_id through zlib-compressed PNG, LZW-compressed TIFF, VP8L
-    lossless WebP (predictor transform + color cache), raw PPM P6, and
-    TTN2 JPEG-in-TIFF -- the scanned-document shape: per-strip
-    abbreviated JPEG streams + a shared JPEGTables tag -- exercising
-    five container decode paths end-to-end) and a genuine 16-bit PCM
-    WAV per doc, parameterized by doc_id so the oracle can recompute
-    the expected features analytically. The JPEG-TIFF rows use EVEN
-    pixel values and multiple-of-8 dims so the flat-quant DCT
-    roundtrip is exact (DC = 8*(val-128); /16 quantization is lossless
-    for even val), keeping the oracle a pure formula."""
-    import io
-    import wave
-
-    import numpy as np
-    import pandas as pd
-
-    from .tiffcodec import encode_tiff
-
-    for pdf in batches:
-        imgs, auds = [], []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, val = d % 8 + 2, d % 6 + 2, d % 256
-            if d % 4 == 3:
-                w, h, val = (d % 2 + 1) * 8, (d % 3 + 1) * 8, (d % 128) * 2
-                px = np.full((h, w, 3), val, dtype=np.uint8)
-                imgs.append(encode_tiff(px, compression="jpeg"))
-            elif d % 3 == 0:
-                px = np.full((h, w, 3), val, dtype=np.uint8)
-                if d % 2:
-                    # lossy WebP (VP8 intra, round 8): flat images
-                    # reconstruct EXACTLY at qindex 0 (DC-only residual,
-                    # dequant step divides it), so the mean-pixel
-                    # formula oracle holds unchanged
-                    from .vp8codec import encode_webp_lossy
-
-                    imgs.append(encode_webp_lossy(px, qindex=0))
-                else:
-                    imgs.append(encode_png(px))
-            elif d % 3 == 1:
-                px = np.full((h, w, 3), val, dtype=np.uint8)
-                imgs.append(encode_tiff(px, compression="lzw"))
-            elif d % 2 == 0:
-                # VP8L lossless WebP (predictor + color cache engaged):
-                # lossless, so the oracle's mean-pixel formula holds
-                from .webpcodec import encode_webp_lossless
-
-                px = np.full((h, w, 3), val, dtype=np.uint8)
-                imgs.append(
-                    encode_webp_lossless(px, predictor_mode=2, cache_bits=4)
-                )
-            else:
-                imgs.append(b"P6\n%d %d\n255\n" % (w, h) + bytes([val]) * (w * h * 3))
-            n, amp = d % 64 + 8, d % 1000
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as f:
-                f.setnchannels(1)
-                f.setsampwidth(2)
-                f.setframerate(8000)
-                f.writeframes(np.full(n, amp, dtype=np.int16).tobytes())
-            auds.append(buf.getvalue())
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].astype("int64"), "img": imgs, "aud": auds}
-        )
-
-
-def _real_decode_batches(batches: Iterator) -> Iterator:
-    """Stage 2: REAL decoding of the binary columns through the actual
-    parsers (decode_image / decode_audio) -- per-object Python inside an
-    Arrow batch is the sanctioned decoder shape."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for d, img, aud in zip(pdf["doc_id"], pdf["img"], pdf["aud"]):
-            arr = decode_image(bytes(img))
-            samples, sr = decode_audio(bytes(aud))
-            rows.append(
-                (
-                    int(d),
-                    arr.shape[1],
-                    arr.shape[0],
-                    arr.shape[2],
-                    float(arr.mean()),
-                    len(samples) * 1000 // sr,
-                    int(np.abs(samples).max()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "channels",
-                "mean_pixel", "wav_ms", "wav_peak",
-            ],
-        )
-
-
-def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL decode end-to-end: synthesize genuine PPM + WAV payloads
-    (stage 1), round-trip them through Spark ``binary`` columns and
-    Arrow batches, then decode with the actual parsers (stage 2) and
-    emit true image dims / mean pixel / audio duration / peak. The
-    oracle recomputes every feature from the synthesis parameters, so a
-    hash match certifies the real format encode -> binary column ->
-    decode path, not a stub."""
-    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    media = docs.select("doc_id").mapInPandas(
-        _synthesize_media_batches, "doc_id long, img binary, aud binary"
-    )
-    return media.mapInPandas(_real_decode_batches, REAL_DECODE_SCHEMA)
-
-
-MULTIMODAL_REAL_DECODE_SQL = """
-SELECT doc_id,
-       CAST(CASE WHEN doc_id % 4 = 3 THEN (doc_id % 2 + 1) * 8
-                 ELSE doc_id % 8 + 2 END AS INTEGER) AS width,
-       CAST(CASE WHEN doc_id % 4 = 3 THEN (doc_id % 3 + 1) * 8
-                 ELSE doc_id % 6 + 2 END AS INTEGER) AS height,
-       3 AS channels,
-       CAST(CASE WHEN doc_id % 4 = 3 THEN (doc_id % 128) * 2
-                 ELSE doc_id % 256 END AS DOUBLE) AS mean_pixel,
-       (doc_id % 64 + 8) * 1000 // 8000 AS wav_ms,
-       CAST(doc_id % 1000 AS INTEGER) AS wav_peak
-FROM documents
-"""
 
 
 # -- real animated-GIF codec (stdlib + numpy): LZW both directions --
@@ -814,209 +587,6 @@ def decode_gif(payload: bytes):
     return frames, delays
 
 
-# -- real signal processing: FFT spectral features over genuine WAVs --
-
-_SPEC_N = 256  # samples per clip (32 ms at 8 kHz)
-_SPEC_SR = 8000
-_SPEC_WIN, _SPEC_HOP = 64, 32
-
-SPECTRAL_SCHEMA = (
-    "doc_id long, n_samples int, sample_rate int, dominant_bin int, "
-    "dominant_freq double, n_frames int"
-)
-
-
-def _synthesize_sine_batches(batches: Iterator) -> Iterator:
-    """Genuine WAVs, each a pure sine placed EXACTLY on DFT bin
-    ``doc_id %% 100 + 4`` of a 256-sample window (an integer number of
-    periods -> no spectral leakage), amplitude ``doc_id %% 900 + 100``.
-    The ENCODING rotates by doc_id: 16-bit PCM, G.711 mu-law, IMA
-    ADPCM, A-law (operators/audiocodec.py), and FLAC
-    (operators/flaccodec.py, lossless) -- the dominant DFT bin is
-    invariant under companding/ADPCM quantization noise (>25 dB SNR on
-    these amplitudes) and untouched by FLAC, so the SAME analytic
-    oracle certifies every compressed decode path. Bin-aligned
-    synthesis is what makes the downstream FFT features recomputable
-    by the SQL oracle."""
-    import numpy as np
-    import pandas as pd
-
-    from .audiocodec import encode_wav
-    from .flaccodec import encode_flac
-
-    codecs = ("pcm16", "ulaw", "ima_adpcm", "alaw", "flac")
-    t = np.arange(_SPEC_N)
-    for pdf in batches:
-        wavs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            k, amp = d % 100 + 4, d % 900 + 100
-            samples = np.round(
-                amp * np.sin(2.0 * np.pi * k * t / _SPEC_N)
-            ).astype(np.int16)
-            codec = codecs[d % 5]
-            wavs.append(
-                encode_flac(samples, _SPEC_SR, use_lpc=d % 2 == 0)
-                if codec == "flac"
-                else encode_wav(samples, _SPEC_SR, codec=codec)
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].astype("int64"), "aud": wavs}
-        )
-
-
-def _spectral_batches(batches: Iterator) -> Iterator:
-    """REAL DSP on executors: decode the WAV (stdlib), run a numpy
-    ``rfft``, report the dominant frequency bin and the STFT frame
-    count (win=64, hop=32). Per-clip numpy inside an Arrow batch -- the
-    sanctioned decoder shape; at 100 TB this is the embarrassingly
-    parallel map stage of an audio-curation pipeline."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for d, aud in zip(pdf["doc_id"], pdf["aud"]):
-            samples, sr = decode_audio(bytes(aud))
-            mono = samples[:, 0].astype(np.float64)
-            n = len(mono)
-            spec = np.abs(np.fft.rfft(mono))
-            k = int(np.argmax(spec[1:])) + 1  # skip DC
-            rows.append(
-                (
-                    int(d), n, sr, k, k * sr / n,
-                    (n - _SPEC_WIN) // _SPEC_HOP + 1,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_samples", "sample_rate", "dominant_bin",
-                "dominant_freq", "n_frames",
-            ],
-        )
-
-
-def multimodal_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real audio DSP end-to-end: synthesize bin-aligned sine WAVs,
-    round-trip through Spark ``binary`` columns, decode with the stdlib
-    parser and extract FFT spectral features with numpy -- all inside
-    Arrow ``mapInPandas`` stages. The oracle recomputes every feature
-    from the synthesis parameters (dominant bin/freq are exact because
-    the sine sits on a DFT bin and 8000/256 = 31.25 is binary-exact),
-    so a hash match certifies genuine encode -> decode -> FFT math,
-    not byte-length arithmetic."""
-    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    wavs = docs.select("doc_id").mapInPandas(
-        _synthesize_sine_batches, "doc_id long, aud binary"
-    )
-    return wavs.mapInPandas(_spectral_batches, SPECTRAL_SCHEMA)
-
-
-MULTIMODAL_SPECTRAL_SQL = """
-SELECT doc_id,
-       256 AS n_samples,
-       8000 AS sample_rate,
-       CAST(doc_id % 100 + 4 AS INTEGER) AS dominant_bin,
-       CAST((doc_id % 100 + 4) * 31.25 AS DOUBLE) AS dominant_freq,
-       7 AS n_frames
-FROM documents
-"""
-
-
-JPEG_SCHEMA = "doc_id long, width int, height int, mean_pixel double"
-
-
-def _synthesize_jpeg_batches(batches: Iterator) -> Iterator:
-    """Genuine baseline JPEGs (real DCT + quantization + canonical
-    Huffman), constant EVEN sample value ``(doc_id %% 120)*2 + 8`` so
-    the lossy pipeline is exactly invertible (the DC coefficient of a
-    constant block divides the flat quant step) and the oracle can
-    recompute the decoded mean analytically. Every THIRD payload is a
-    COLOR JPEG (JFIF YCbCr, 4:2:0 chroma subsampling, 16-multiple
-    dims) of the same constant gray -- the YCbCr transform is identity
-    on R=G=B, so the color path is bit-exact too and the SAME oracle
-    certifies it. Every FIFTH payload is PROGRESSIVE (SOF2: multi-scan
-    spectral selection + successive approximation), gray or color per
-    the same %3 split -- identical quantized coefficients mean the
-    decoded pixels (and the oracle) are unchanged, so a hash match
-    certifies the progressive scan machinery too."""
-    import numpy as np
-    import pandas as pd
-
-    from .jpegcodec import (
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-
-    for pdf in batches:
-        jpegs = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            v = (d % 120) * 2 + 8
-            progressive = d % 5 == 0
-            if d % 3 == 0:
-                w, h = (d % 2 + 1) * 16, (d % 3 + 1) * 16
-                img = np.full((h, w, 3), v, dtype=np.uint8)
-                jpegs.append(
-                    encode_jpeg_progressive(img)
-                    if progressive
-                    else encode_jpeg_color(img)
-                )
-            else:
-                w, h = (d % 4 + 1) * 8, (d % 3 + 1) * 8
-                img = np.full((h, w), v, dtype=np.uint8)
-                jpegs.append(
-                    encode_jpeg_progressive(img)
-                    if progressive
-                    else encode_jpeg_gray(img)
-                )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].astype("int64"), "jpg": jpegs}
-        )
-
-
-def _jpeg_decode_batches(batches: Iterator) -> Iterator:
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for d, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-            arr = decode_image(bytes(jpg))  # (h, w, 3) via the JPEG path
-            rows.append(
-                (int(d), arr.shape[1], arr.shape[0], float(arr.mean()))
-            )
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "width", "height", "mean_pixel"]
-        )
-
-
-def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline-JPEG decode end-to-end: real DCT/quant/Huffman encode,
-    binary-column round trip, real entropy+IDCT decode on executors.
-    Bin-exact synthesis (constant even-valued blocks under a flat quant
-    table) makes the decoded features analytically recomputable, so the
-    oracle hash certifies the actual JPEG math."""
-    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    jpgs = docs.select("doc_id").mapInPandas(
-        _synthesize_jpeg_batches, "doc_id long, jpg binary"
-    )
-    return jpgs.mapInPandas(_jpeg_decode_batches, JPEG_SCHEMA)
-
-
-MULTIMODAL_JPEG_SQL = """
-SELECT doc_id,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN (doc_id % 2 + 1) * 16
-                 ELSE (doc_id % 4 + 1) * 8 END AS INTEGER) AS width,
-       CAST(CASE WHEN doc_id % 3 = 0 THEN (doc_id % 3 + 1) * 16
-                 ELSE (doc_id % 3 + 1) * 8 END AS INTEGER) AS height,
-       CAST((doc_id % 120) * 2 + 8 AS DOUBLE) AS mean_pixel
-FROM documents
-"""
-
-
 GIF_FRAME_SCHEMA = (
     "doc_id long, n_frames int, n_sampled int, first_mean double, "
     "last_mean double, total_delay_cs long"
@@ -1103,94 +673,8 @@ FROM documents
 """
 
 
-VIDEO_FRAME_SCHEMA = (
-    "doc_id long, n_frames int, fps int, n_sampled int, "
-    "first_mean double, last_mean double"
-)
-
-
-def _synthesize_avi_batches(batches: Iterator) -> Iterator:
-    """Genuine MJPEG AVIs: ``doc_id % 4 + 2`` constant-even-gray
-    frames (frame f's value = ``(doc_id*2 + 34*f) % 256``, always even
-    so the flat-quant JPEG pipeline is exactly invertible), RIFF
-    hdrl/movi/idx1 container, fps = ``doc_id % 20 + 5``."""
-    import numpy as np
-    import pandas as pd
-
-    from .avicodec import encode_avi_mjpeg
-
-    for pdf in batches:
-        avis = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            w, h, nf = (d % 2 + 1) * 16, (d % 3 + 1) * 16, d % 4 + 2
-            frames = [
-                np.full((h, w, 3), (d * 2 + 34 * f) % 256, dtype=np.uint8)
-                for f in range(nf)
-            ]
-            avis.append(encode_avi_mjpeg(frames, fps=d % 20 + 5))
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].astype("int64"), "avi": avis}
-        )
-
-
-def _avi_frame_batches(batches: Iterator) -> Iterator:
-    """REAL container + codec decode on executors: RIFF walk, per-frame
-    JPEG entropy/IDCT decode, then every-2nd-frame sampling -- the
-    video-curation frame-extraction stage with a true video
-    container."""
-    import numpy as np
-    import pandas as pd
-
-    from .avicodec import decode_avi_mjpeg, sample_frames
-
-    for pdf in batches:
-        rows = []
-        for d, avi in zip(pdf["doc_id"], pdf["avi"]):
-            frames, fps = decode_avi_mjpeg(bytes(avi))
-            sampled = sample_frames(frames, 2)
-            rows.append(
-                (
-                    int(d), len(frames), fps, len(sampled),
-                    float(frames[0].mean()), float(frames[-1].mean()),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_frames", "fps", "n_sampled",
-                "first_mean", "last_mean",
-            ],
-        )
-
-
-def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MJPEG-AVI frame extraction end-to-end: synthesize genuine RIFF
-    video containers whose frames are real JPEG payloads, round-trip
-    through binary columns, decode container + every frame with the
-    from-scratch codecs, and frame-sample. Constant even-gray frames
-    under the flat quant table decode bit-exactly, so the oracle
-    recomputes every feature analytically -- a hash match certifies a
-    TRUE video-container decode path (the step up from the GIF frame
-    query toward the ffmpeg seam)."""
-    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    avis = docs.select("doc_id").mapInPandas(
-        _synthesize_avi_batches, "doc_id long, avi binary"
-    )
-    return avis.mapInPandas(_avi_frame_batches, VIDEO_FRAME_SCHEMA)
-
-
-MULTIMODAL_VIDEO_SQL = """
-SELECT doc_id,
-       CAST(doc_id % 4 + 2 AS INTEGER) AS n_frames,
-       CAST(doc_id % 20 + 5 AS INTEGER) AS fps,
-       CAST((doc_id % 4 + 2 + 1) // 2 AS INTEGER) AS n_sampled,
-       CAST(doc_id * 2 % 256 AS DOUBLE) AS first_mean,
-       CAST((doc_id * 2 + 34 * (doc_id % 4 + 1)) % 256 AS DOUBLE) AS last_mean
-FROM documents
-"""
-
-
+# ``jpg_mean`` keeps the name it had when the image member was a JPEG:
+# the registry's output schema is part of the driver contract.
 WEBDATASET_SCHEMA = (
     "doc_id long, n_files int, text_md5 string, jpg_mean double, "
     "meta_ok boolean"
@@ -1199,16 +683,16 @@ WEBDATASET_SCHEMA = (
 
 def _build_shard_batches(key, pdf):
     """One WebDataset tar shard per group: every doc becomes a sample
-    (``<key>.txt`` + ``<key>.jpg`` + ``<key>.json``), members laid out
-    sample-contiguously. Runs as applyInPandas -- the distributed
-    shard-building stage of corpus packaging."""
+    (``<key>.txt`` + ``<key>.png`` + ``<key>.json``), members laid out
+    sample-contiguously. The image is a constant grey PNG, so its
+    decoded mean is exactly ``v``. Runs as applyInPandas -- the
+    distributed shard-building stage of corpus packaging."""
     import json as _json
 
     import numpy as np
     import pandas as pd
 
     from ..sources.webdataset import encode_tar_shard
-    from .jpegcodec import encode_jpeg_gray
 
     samples = {}
     for d, text in zip(pdf["doc_id"], pdf["text"]):
@@ -1217,7 +701,7 @@ def _build_shard_batches(key, pdf):
         w, h = (d % 4 + 1) * 8, (d % 3 + 1) * 8
         samples[f"{d:012d}"] = {
             "txt": str(text).encode(),
-            "jpg": encode_jpeg_gray(np.full((h, w), v, dtype=np.uint8)),
+            "png": encode_png(np.full((h, w, 3), v, dtype=np.uint8)),
             "json": _json.dumps({"doc_id": d, "v": v}).encode(),
         }
     return pd.DataFrame(
@@ -1228,14 +712,13 @@ def _build_shard_batches(key, pdf):
 def _parse_shard_batches(batches: Iterator) -> Iterator:
     """Distributed shard consumption: stream samples out of each tar
     (shard-sequential, the WebDataset read shape), decode every member
-    with the real codecs, emit per-sample features."""
+    with the real decoders, emit per-sample features."""
     import hashlib
     import json as _json
 
     import pandas as pd
 
     from ..sources.webdataset import iter_samples
-    from .jpegcodec import decode_jpeg
 
     for pdf in batches:
         rows = []
@@ -1243,7 +726,7 @@ def _parse_shard_batches(batches: Iterator) -> Iterator:
             for skey, files in iter_samples(bytes(shard)):
                 d = int(skey)
                 meta = _json.loads(files["json"])
-                px = decode_jpeg(files["jpg"])
+                px = _decode_png(files["png"])
                 rows.append(
                     (
                         d,
@@ -1265,10 +748,10 @@ def _parse_shard_batches(batches: Iterator) -> Iterator:
 def multimodal_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset tar-shard packaging round trip (the de-facto
     multimodal training-corpus format): build shards DISTRIBUTED (one
-    per hash group, one .txt/.jpg/.json sample per doc), then consume
-    them shard-sequentially with the real tar reader + JPEG decoder.
+    per hash group, one .txt/.png/.json sample per doc), then consume
+    them shard-sequentially with the real tar reader + PNG decoder.
     ``text_md5`` must equal md5 of the original document text and the
-    JPEG mean must hit the analytic constant, so the oracle certifies
+    image mean must hit the analytic constant, so the oracle certifies
     the pack -> shard -> stream-unpack -> decode chain end to end."""
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     shards = (
@@ -1289,12 +772,8 @@ FROM documents
 
 QUERIES = {
     "multimodal_image_features": multimodal_image_features,
-    "multimodal_real_decode": multimodal_real_decode,
     "multimodal_gif_frames": multimodal_gif_frames,
-    "multimodal_video_frames": multimodal_video_frames,
     "multimodal_webdataset": multimodal_webdataset,
-    "multimodal_jpeg_decode": multimodal_jpeg_decode,
-    "multimodal_spectral_features": multimodal_spectral_features,
     "multimodal_audio_stats": multimodal_audio_stats,
     "multimodal_frame_sample": multimodal_frame_sample,
     "multimodal_resize": multimodal_resize,
@@ -1302,12 +781,8 @@ QUERIES = {
 
 ORACLES = {
     "multimodal_image_features": MULTIMODAL_IMAGE_SQL,
-    "multimodal_real_decode": MULTIMODAL_REAL_DECODE_SQL,
     "multimodal_gif_frames": MULTIMODAL_GIF_SQL,
-    "multimodal_video_frames": MULTIMODAL_VIDEO_SQL,
     "multimodal_webdataset": MULTIMODAL_WEBDATASET_SQL,
-    "multimodal_jpeg_decode": MULTIMODAL_JPEG_SQL,
-    "multimodal_spectral_features": MULTIMODAL_SPECTRAL_SQL,
     "multimodal_audio_stats": MULTIMODAL_AUDIO_SQL,
     "multimodal_frame_sample": MULTIMODAL_FRAME_SQL,
     "multimodal_resize": MULTIMODAL_RESIZE_SQL,

@@ -13,8 +13,8 @@ Usage: python scripts/driver_sim.py [first_n | --all] [name ...]
 ``--all`` sweeps EVERY registry query -- the window is the same
 ``all_queries()`` dict the record's ``checked`` count derives from, so
 the two can never drift (VERDICT r11 'what's wrong' #2: a hand-typed
-``154`` silently skipped the 155th row, retention_cohorts, and the
-record couldn't say which). ``--record`` writes a JSON record carrying
+count one short of the registry silently skipped its last row,
+retention_cohorts, and the record couldn't say which). ``--record`` writes a JSON record carrying
 the full per-query outcome list (name, status, rows, seconds), the
 failures, and the slowest-10 -- every row auditable by name.
 """

@@ -137,6 +137,13 @@ def test_point_lookup_and_cow_merge_prune_like_inline_blooms(spark, wh):
     keep = _BulkKeyProbe(big).entries_may_hold_any(list(inline.values()), "id")
     want = [e for e, k in zip(files, keep) if k]
     assert _paths(wh._prune_entries_by_keys(tdir, files, "id", big)) == _paths(want)
+    # past the driver cap, each Spark partition runs the same probe
+    wh._PLAN_DISTRIBUTE_THRESHOLD = 0
+    assert _paths(wh._prune_entries_by_keys(tdir, files, "id", big)) == _paths(want)
+    one = {_key(7)}
+    want_one = [e for e in files if _entry_may_hold_any(inline[e["path"]], "id", one)]
+    assert _paths(wh._prune_entries_by_keys(tdir, files, "id", one)) == _paths(want_one)
+    del wh._PLAN_DISTRIBUTE_THRESHOLD
     # CoW MERGE: the probe's candidates are the inline-Bloom candidates
     keys = {_key(1), _key(6), "new-1", "new-2"}
     want = [e for e in files if _entry_may_hold_any(inline[e["path"]], "id", keys)]

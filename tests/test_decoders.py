@@ -1,117 +1,11 @@
-"""Real media decoders (container-feasible formats): PPM/BMP via pure
-numpy parsing, WAV via stdlib wave; PIL/librosa seams raise clearly."""
+"""Real media decoders: PNG (zlib inflate + scanline de-filtering,
+Adam7) and animated GIF (variable-width LZW, frame composition), plus
+the WebDataset shard round trip that carries a PNG member. Only the
+Spark-backed GIF query test is a long-tail (``slow``) battery."""
 
 from __future__ import annotations
 
-import io
-import struct
-import wave
-
-import numpy as np
 import pytest
-
-from sample_for_transactional_datalake_using_s3tables_spark.operators.multimodal import (
-    decode_audio,
-    decode_image,
-)
-
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4
-# -- the full suite outgrew the driver's verification budget). Run
-# everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
-
-
-def _make_bmp(arr: np.ndarray) -> bytes:
-    """Minimal uncompressed 24-bit BMP writer (bottom-up, BGR,
-    4-byte-aligned rows) for roundtrip-testing the decoder."""
-    h, w, _ = arr.shape
-    row_size = (w * 3 + 3) & ~3
-    pixel_bytes = bytearray()
-    for r in range(h - 1, -1, -1):  # bottom-up
-        row = arr[r, :, ::-1].tobytes()  # RGB -> BGR
-        pixel_bytes += row + b"\x00" * (row_size - len(row))
-    off = 14 + 40
-    size = off + len(pixel_bytes)
-    header = b"BM" + struct.pack("<IHHI", size, 0, 0, off)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixel_bytes), 0, 0, 0, 0)
-    return header + dib + bytes(pixel_bytes)
-
-
-def test_ppm_roundtrip():
-    rng = np.random.RandomState(7)
-    arr = rng.randint(0, 256, size=(5, 9, 3), dtype=np.uint8)
-    payload = b"P6\n9 5\n255\n" + arr.tobytes()
-    got = decode_image(payload)
-    assert np.array_equal(got, arr)
-
-
-def test_bmp_roundtrip_with_row_padding():
-    rng = np.random.RandomState(11)
-    arr = rng.randint(0, 256, size=(4, 3, 3), dtype=np.uint8)  # w=3 -> padded rows
-    got = decode_image(_make_bmp(arr))
-    assert np.array_equal(got, arr)
-
-
-def test_wav_roundtrip_stereo():
-    samples = (np.arange(24, dtype=np.int16) - 12).reshape(-1, 2)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(2)
-        f.setsampwidth(2)
-        f.setframerate(16000)
-        f.writeframes(samples.tobytes())
-    got, sr = decode_audio(buf.getvalue())
-    assert sr == 16000
-    assert np.array_equal(got, samples)
-
-
-def test_undecodable_formats_raise_seam():
-    with pytest.raises(ValueError):
-        # truncated VP8 chunk: parsed by the real VP8 decoder (round
-        # 8), rejected as malformed -- no longer a codec seam
-        decode_image(b"RIFFxxxxWEBPVP8 ")
-    with pytest.raises(Exception):
-        decode_image(b"II*\x00....")  # malformed TIFF: parsed, rejected
-    with pytest.raises(NotImplementedError, match="audio library"):
-        decode_audio(b"ID3\x04....")
-    with pytest.raises(ValueError):
-        decode_image(b"P6 garbage")
-    with pytest.raises(ValueError):
-        decode_image(b"\x89PNG\r\n\x1a\n....")  # malformed PNG: parsed, rejected
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0....")  # malformed JPEG: parsed, rejected
-
-
-def test_spectral_features_match_numpy_reference(spark, sf_dir_small):
-    """The FFT stage reports exactly the analytic dominant bin for
-    bin-aligned sines, and the frame math matches the STFT params."""
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.multimodal import (
-        _SPEC_HOP,
-        _SPEC_N,
-        _SPEC_WIN,
-        multimodal_spectral_features,
-    )
-
-    rows = {
-        r.doc_id: r
-        for r in multimodal_spectral_features(spark, sf_dir_small).collect()
-    }
-    assert rows
-    for d, r in list(rows.items())[:20]:
-        k = d % 100 + 4
-        assert r.dominant_bin == k
-        assert r.dominant_freq == k * 8000 / _SPEC_N
-        assert r.n_frames == (_SPEC_N - _SPEC_WIN) // _SPEC_HOP + 1
-    # independent reference: rebuild one clip and FFT it with numpy
-    d = next(iter(rows))
-    k, amp = d % 100 + 4, d % 900 + 100
-    t = np.arange(_SPEC_N)
-    sig = np.round(amp * np.sin(2 * np.pi * k * t / _SPEC_N))
-    ref_bin = int(np.argmax(np.abs(np.fft.rfft(sig))[1:])) + 1
-    assert rows[d].dominant_bin == ref_bin
 
 
 def test_png_roundtrip_all_filters():
@@ -122,14 +16,13 @@ def test_png_roundtrip_all_filters():
 
     from sample_for_transactional_datalake_using_s3tables_spark.operators.multimodal import (
         _decode_png,
-        decode_image,
         encode_png,
     )
 
     rng = np.random.RandomState(7)
     px = rng.randint(0, 256, size=(9, 11, 3), dtype=np.uint8)
     for filters in [(0,), (1,), (2,), (0, 1, 2)]:
-        got = decode_image(encode_png(px, filters=filters))
+        got = _decode_png(encode_png(px, filters=filters))
         assert (got == px).all(), f"filters={filters}"
     # Average/Paeth: build the filtered stream by hand and decode
     import struct
@@ -210,6 +103,8 @@ def test_png_greyscale_and_rgba():
     rgba = np.random.RandomState(3).randint(0, 256, (3, 4, 4), dtype=np.uint8)
     got = _decode_png(build(rgba, 6, 4))
     assert got.shape == (3, 4, 3) and (got == rgba[..., :3]).all()
+    with pytest.raises(ValueError):
+        _decode_png(_PNG_MAGIC + b"....")  # no IHDR: parsed, rejected
 
 
 def test_gif_roundtrip_and_lzw_specials():
@@ -233,6 +128,7 @@ def test_gif_roundtrip_and_lzw_specials():
     assert bytes(_lzw_decode(bytes([0x8C, 0x0B]), 2)) == b"\x01\x01\x01"
 
 
+@pytest.mark.slow  # runs a Spark query
 def test_gif_frames_query_matches_analytics(spark, sf_dir_small):
     from sample_for_transactional_datalake_using_s3tables_spark.operators.multimodal import (
         multimodal_gif_frames,
@@ -247,142 +143,6 @@ def test_gif_frames_query_matches_analytics(spark, sf_dir_small):
         assert r.first_mean == float(d % 256)
         assert r.last_mean == float((d + 17 * (nf - 1)) % 256)
         assert r.total_delay_cs == 4 * nf
-
-
-def test_jpeg_roundtrip_exact_and_lossy():
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.jpegcodec import (
-        decode_jpeg_gray,
-        encode_jpeg_gray,
-    )
-
-    # constant even-valued images survive the lossy pipeline EXACTLY
-    for v in (8, 100, 246):
-        px = np.full((16, 24), v, dtype=np.uint8)
-        assert (decode_jpeg_gray(encode_jpeg_gray(px)) == px).all()
-    # arbitrary content: real quantization loss, bounded
-    rng = np.random.RandomState(5)
-    px = rng.randint(0, 256, (32, 40), dtype=np.uint8)
-    got = decode_jpeg_gray(encode_jpeg_gray(px))
-    err = np.abs(got.astype(int) - px.astype(int))
-    assert err.max() <= 40 and err.mean() < 8
-    # smooth content: small loss (DCT does its job)
-    x = np.linspace(0, 255, 64)
-    grad = np.clip(np.add.outer(x, x) / 2, 0, 255).astype(np.uint8)
-    err2 = np.abs(
-        decode_jpeg_gray(encode_jpeg_gray(grad)).astype(int) - grad.astype(int)
-    )
-    assert err2.max() <= 12
-
-
-def test_jpeg_via_decode_image_and_progressive():
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.jpegcodec import (
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-
-    px = np.full((8, 8), 100, dtype=np.uint8)
-    got = decode_image(encode_jpeg_gray(px))
-    assert got.shape == (8, 8, 3) and (got == 100).all()
-    # color JPEG (4:2:0) decodes for real through decode_image now
-    rgb = np.full((16, 16, 3), 150, dtype=np.uint8)
-    got = decode_image(encode_jpeg_color(rgb))
-    assert got.shape == (16, 16, 3) and (got == 150).all()
-    # progressive (SOF2) decodes for real too -- constant even values
-    # stay bit-exact through the multi-scan pipeline
-    got = decode_image(encode_jpeg_progressive(px))
-    assert got.shape == (8, 8, 3) and (got == 100).all()
-    got = decode_image(encode_jpeg_progressive(rgb))
-    assert got.shape == (16, 16, 3) and (got == 150).all()
-
-
-def test_jpeg_progressive_matches_baseline_decode():
-    """Progressive encode carries the SAME quantized coefficients as
-    baseline, so its decode must be BIT-EXACT with the baseline decode
-    of the same pixels -- the strongest check the scan machinery (DC
-    first/refine, spectral AC bands, successive-approximation AC
-    refinement with EOB runs and correction bits) can face."""
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(11)
-    for shape in [(8, 8), (16, 24), (40, 32), (8, 64)]:
-        px = rng.randint(0, 256, shape, dtype=np.uint8)
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_progressive(px)),
-            decode_jpeg(encode_jpeg_gray(px)),
-        ), shape
-    for sub in (True, False):
-        mcu = 16 if sub else 8
-        px = rng.randint(0, 256, (2 * mcu, 3 * mcu, 3), dtype=np.uint8)
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_progressive(px, subsample=sub)),
-            decode_jpeg(encode_jpeg_color(px, subsample=sub)),
-        ), sub
-    # smooth gradients exercise long EOB runs across blocks
-    x = np.linspace(0, 255, 64)
-    grad = np.clip(np.add.outer(x, x) / 2, 0, 255).astype(np.uint8)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(grad)),
-        decode_jpeg(encode_jpeg_gray(grad)),
-    )
-    # sparse impulses exercise ZRL-in-refinement and correction bits
-    imp = np.full((32, 32), 128, dtype=np.uint8)
-    imp[::7, ::5] = 255
-    imp[3::11, 2::9] = 0
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(imp)),
-        decode_jpeg(encode_jpeg_gray(imp)),
-    )
-
-
-def test_jpeg_color_roundtrips():
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_color,
-    )
-
-    # constant even gray through the COLOR pipeline is bit-exact (the
-    # YCbCr transform is identity on R=G=B and the DC divides the
-    # quant step)
-    for v in (64, 128, 200):
-        img = np.full((16, 32, 3), v, dtype=np.uint8)
-        assert (decode_jpeg(encode_jpeg_color(img)) == img).all()
-    # constant color: bounded only by YCbCr round-trip rounding
-    img = np.zeros((32, 32, 3), np.uint8)
-    img[:] = (200, 30, 90)
-    out = decode_jpeg(encode_jpeg_color(img))
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-    # smooth gradient survives 4:2:0 nearly losslessly
-    x = np.linspace(0, 255, 48)
-    grad = np.stack([np.tile(x, (32, 1))] * 3, -1).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg_color(grad))
-    assert np.abs(out.astype(int) - grad.astype(int)).max() <= 2
-    # random content: 4:4:4 bounded by quantization alone; 4:2:0 loses
-    # chroma detail (that's its job) but stays a valid decode
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, (32, 48, 3), dtype=np.uint8)
-    out444 = decode_jpeg(encode_jpeg_color(img, subsample=False))
-    assert np.abs(out444.astype(int) - img.astype(int)).max() <= 40
-    out420 = decode_jpeg(encode_jpeg_color(img))
-    assert out420.shape == img.shape
-    # luma is not chroma-subsampled: Y plane stays close even at 4:2:0
-    def luma(a):
-        return 0.299 * a[..., 0] + 0.587 * a[..., 1] + 0.114 * a[..., 2]
-
-    assert np.abs(luma(out420) - luma(img)).max() <= 40
 
 
 def test_gif_transparency_delta_frames_and_disposal():
@@ -640,259 +400,25 @@ def test_gif_interlaced_frame_deinterlaces():
     assert (frames[0][..., 1:] == 0).all()
 
 
-def test_jpeg_restart_markers_all_modes():
-    """DRI/RSTn restart intervals: byte-aligned resync points with DC
-    predictor (and EOB-run) resets -- decode must be bit-identical to
-    the restart-free encoding in every mode (baseline gray/color,
-    progressive gray/color)."""
-    import numpy as np
+def test_webdataset_shards_round_trip_png_members():
+    """The ``multimodal_webdataset`` stages without Spark: a tar shard
+    built from a pandas frame streams back three members per sample,
+    and the constant grey PNG decodes to its exact mean."""
+    import pandas as pd
 
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
+    from sample_for_transactional_datalake_using_s3tables_spark.operators.multimodal import (
+        _build_shard_batches,
+        _parse_shard_batches,
     )
 
-    rng = np.random.RandomState(23)
-    g = rng.randint(0, 256, (40, 32), dtype=np.uint8)
-    base_g = decode_jpeg(encode_jpeg_gray(g))
-    for ri in (1, 2, 7):
-        wr = encode_jpeg_gray(g, restart_interval=ri)
-        assert b"\xff\xdd" in wr and b"\xff\xd0" in wr
-        assert np.array_equal(decode_jpeg(wr), base_g), ri
-    c = rng.randint(0, 256, (32, 48, 3), dtype=np.uint8)
-    base_c = decode_jpeg(encode_jpeg_color(c))
-    for ri in (1, 3):
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_color(c, restart_interval=ri)), base_c
-        ), ri
-    base_pg = decode_jpeg(encode_jpeg_progressive(g))
-    for ri in (1, 2, 5):
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_progressive(g, restart_interval=ri)),
-            base_pg,
-        ), ri
-    base_pc = decode_jpeg(encode_jpeg_progressive(c))
-    for ri in (1, 2):
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_progressive(c, restart_interval=ri)),
-            base_pc,
-        ), ri
-
-
-def test_avi_mjpeg_container_roundtrip():
-    """MJPEG AVI: RIFF hdrl/movi/idx1 container + per-frame JPEG.
-    Constant even-gray frames decode bit-exactly; non-MJPEG streams
-    raise the ffmpeg seam."""
-    import struct
-
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.avicodec import (
-        decode_avi_mjpeg,
-        encode_avi_mjpeg,
-        sample_frames,
+    docs = pd.DataFrame(
+        {"doc_id": [0, 7, 121, 250], "text": ["a", "bb", "", "caf\u00e9"]}
     )
-
-    frames = [
-        np.full((32, 16, 3), (10 + 34 * f) % 256, dtype=np.uint8)
-        for f in range(5)
-    ]
-    avi = encode_avi_mjpeg(frames, fps=12)
-    dec, fps = decode_avi_mjpeg(avi)
-    assert fps == 12 and len(dec) == 5
-    assert all(np.array_equal(a, b) for a, b in zip(frames, dec))
-    assert len(sample_frames(dec, 2)) == 3
-    # random content: container is transparent; loss bounded by the
-    # JPEG luma behavior (chroma subsampled)
-    rng = np.random.RandomState(4)
-    rf = [rng.randint(0, 256, (32, 32, 3), dtype=np.uint8) for _ in range(2)]
-    dec2, _ = decode_avi_mjpeg(encode_avi_mjpeg(rf, fps=5))
-    assert len(dec2) == 2 and dec2[0].shape == (32, 32, 3)
-    # foreign codec fourcc -> seam
-    bad = avi.replace(b"vidsMJPG", b"vidsH264", 1)
-    with pytest.raises(NotImplementedError, match="ffmpeg"):
-        decode_avi_mjpeg(bad)
-    with pytest.raises(ValueError, match="AVI"):
-        decode_avi_mjpeg(b"RIFF\x00\x00\x00\x00WAVE")
-
-
-def test_tiff_roundtrips_all_compressions():
-    """Strip-based TIFF: none / PackBits / TIFF-LZW (early change),
-    gray + RGB, multi-strip, lossless."""
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.tiffcodec import (
-        decode_tiff,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(6)
-    for comp in ("none", "packbits", "lzw", "deflate"):
-        g = rng.randint(0, 256, (23, 17), dtype=np.uint8)
-        assert np.array_equal(decode_tiff(encode_tiff(g, comp)), g), comp
-        c = rng.randint(0, 256, (12, 9, 3), dtype=np.uint8)
-        assert np.array_equal(decode_tiff(encode_tiff(c, comp)), c), comp
-    # LZW genuinely compresses smooth content
-    big = (np.add.outer(np.arange(64), np.arange(48)) % 256).astype(np.uint8)
-    assert len(encode_tiff(big, "lzw")) < 0.7 * big.size
-    # decode_image routes TIFF and grays -> 3 channels
-    got = decode_image(encode_tiff(big, "lzw"))
-    assert got.shape == (64, 48, 3) and (got[..., 0] == big).all()
-
-
-def test_tiff_big_endian_and_white_is_zero():
-    """Hand-built MM (big-endian) fixture with WhiteIsZero photometric:
-    the reader honors both."""
-    import struct
-
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.tiffcodec import (
-        decode_tiff,
-    )
-
-    h, w = 3, 4
-    px = np.arange(12, dtype=np.uint8).reshape(h, w)
-
-    def tag(t, typ, count, inline4):
-        return struct.pack(">HHI", t, typ, count) + inline4
-
-    def short(v):
-        return struct.pack(">HH", v, 0)
-
-    def long_(v):
-        return struct.pack(">I", v)
-
-    n = 9
-    data_off = 8 + 2 + 12 * n + 4
-    tags = (
-        tag(256, 4, 1, long_(w))
-        + tag(257, 4, 1, long_(h))
-        + tag(258, 3, 1, short(8))
-        + tag(259, 3, 1, short(1))
-        + tag(262, 3, 1, short(0))      # WhiteIsZero
-        + tag(273, 4, 1, long_(data_off))
-        + tag(277, 3, 1, short(1))
-        + tag(278, 4, 1, long_(h))
-        + tag(279, 4, 1, long_(h * w))
-    )
-    payload = (
-        b"MM\x00*" + struct.pack(">I", 8)
-        + struct.pack(">H", n) + tags + struct.pack(">I", 0)
-        + px.tobytes()
-    )
-    got = decode_tiff(payload)
-    assert np.array_equal(got, 255 - px)  # photometric inversion
-
-
-def test_tiff_jpeg_new_style_matches_plain_jpeg_path():
-    """TTN2 compression=7: the container roundtrip is bit-exact vs the
-    plain-JPEG codec path (strips decode to exactly what the same band
-    through encode/decode_jpeg yields), the strips are genuinely
-    ABBREVIATED (no DQT -- the shared tables live in the JPEGTables
-    tag), and even-valued constant images survive exactly (the fixture
-    contract multimodal_real_decode's oracle formula relies on)."""
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_gray,
-    )
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.tiffcodec import (
-        _TAG_JPEG_TABLES,
-        decode_tiff,
-        encode_tiff,
-    )
-
-    rng = np.random.RandomState(11)
-    g = np.kron(
-        rng.randint(0, 256, (3, 4), dtype=np.uint8), np.ones((8, 8), np.uint8)
-    )
-    t = encode_tiff(g, compression="jpeg")
-    ref = np.vstack(
-        [decode_jpeg(encode_jpeg_gray(g[r:r + 8])) for r in range(0, 24, 8)]
-    )
-    assert np.array_equal(decode_tiff(t), ref)
-    # the JPEGTables tag is present and the strip streams carry no DQT
-    assert struct.pack("<H", _TAG_JPEG_TABLES) in t
-    # find the first strip's SOS: exactly one DQT total (in the tables)
-    assert t.count(b"\xff\xdb") == 1
-
-    c = np.kron(
-        rng.randint(0, 256, (2, 3, 1), dtype=np.uint8),
-        np.ones((8, 8, 3), np.uint8),
-    )
-    tc = encode_tiff(c, compression="jpeg")
-    refc = np.vstack(
-        [
-            decode_jpeg(encode_jpeg_color(c[r:r + 8], subsample=False))
-            for r in range(0, 16, 8)
-        ]
-    )
-    assert np.array_equal(decode_tiff(tc), refc)
-
-    # even-value constants are EXACT (flat /16 quant, DC = 8*(val-128))
-    for val in (0, 2, 128, 254):
-        px = np.full((16, 8, 3), val, dtype=np.uint8)
-        assert np.array_equal(
-            decode_tiff(encode_tiff(px, compression="jpeg")), px
-        ), val
-    # decode_image routes TIFF magic to the JPEG-in-TIFF path too
-    px = np.full((8, 16, 3), 200, dtype=np.uint8)
-    assert np.array_equal(
-        decode_image(encode_tiff(px, compression="jpeg")), px
-    )
-
-
-def test_tiff_jpeg_old_style_interchange_format():
-    """Deprecated TIFF 6.0 JPEG (compression=6): the
-    JPEGInterchangeFormat/[Length] tags point at one full-image
-    interchange stream; decode must follow them (hand-built fixture --
-    our encoder never writes old-style)."""
-    import numpy as np
-
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.jpegcodec import (
-        decode_jpeg,
-        encode_jpeg_gray,
-    )
-    from sample_for_transactional_datalake_using_s3tables_spark.operators.tiffcodec import (
-        decode_tiff,
-    )
-
-    rng = np.random.RandomState(3)
-    g = np.kron(
-        rng.randint(0, 256, (2, 5), dtype=np.uint8), np.ones((8, 8), np.uint8)
-    )
-    stream = encode_jpeg_gray(g)
-
-    def tag(t, typ, count, val):
-        return struct.pack("<HHI4s", t, typ, count, val)
-
-    def long_(v):
-        return struct.pack("<I", v)
-
-    def short(v):
-        return struct.pack("<HH", v, 0)
-
-    n = 9
-    data_off = 8 + 2 + 12 * n + 4
-    tags = (
-        tag(256, 4, 1, long_(40))
-        + tag(257, 4, 1, long_(16))
-        + tag(258, 3, 1, short(8))
-        + tag(259, 3, 1, short(6))       # old-style JPEG
-        + tag(262, 3, 1, short(1))
-        + tag(277, 3, 1, short(1))
-        + tag(278, 4, 1, long_(16))
-        + tag(513, 4, 1, long_(data_off))
-        + tag(514, 4, 1, long_(len(stream)))
-    )
-    payload = (
-        b"II*\x00" + struct.pack("<I", 8)
-        + struct.pack("<H", n) + tags + struct.pack("<I", 0)
-        + stream
-    )
-    assert np.array_equal(decode_tiff(payload), decode_jpeg(stream))
+    shard = _build_shard_batches((3,), docs)
+    assert list(shard["shard_id"]) == [3]
+    out = pd.concat(list(_parse_shard_batches(iter([shard]))))
+    assert sorted(out["doc_id"]) == [0, 7, 121, 250]
+    for r in out.itertuples():
+        assert r.n_files == 3
+        assert r.jpg_mean == (r.doc_id % 120) * 2 + 8
+        assert r.meta_ok

@@ -66,7 +66,7 @@ def test_priority_window_covers_every_module():
         assert m.QUERIES.keys() & window, f"{m.__name__} has no driver-checked query"
 
 
-@pytest.mark.slow  # resolves all 155 registry schemas: ~2 min alone
+@pytest.mark.slow  # resolves all 151 registry schemas: ~2 min alone
 def test_output_schemas_are_canonicalizable(spark):
     """No DecimalType / array / map / struct in any final projection --
     the exact types that broke the round-1 harness comparison."""

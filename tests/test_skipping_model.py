@@ -101,19 +101,23 @@ def test_bloom_unsafe_or_mixed_columns_yield_no_bloom():
 
 
 def test_bulk_key_probe_matches_scalar():
-    """_BulkKeyProbe (vectorized large-batch pruning, r13) must keep
+    """_BulkKeyProbe (vectorized pruning, the one key prune) must keep
     exactly the entries the scalar any(_entry_may_match) loop keeps,
-    across: str and int keys, range-prunable and bloom-prunable
-    entries, missing stats/blooms, legacy bare-hex blooms, cross-type
-    blooms, None keys (keep-all), and mixed-type batches (bloom
-    no-prune) -- with the Blooms inline and moved into Bloom packs."""
+    across: str, int, float and date keys, 1- to 4,000-key batches,
+    range-prunable and bloom-prunable entries, missing stats/blooms,
+    legacy bare-hex blooms, cross-type blooms, None keys (keep-all),
+    the empty batch (prune-all), and mixed-type batches (bloom
+    no-prune) -- with the Blooms inline and moved into Bloom packs,
+    and through Warehouse._prune_entries_by_keys."""
     import copy
+    import datetime
     import os
     import random
     import shutil
     import tempfile
 
     from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import (
+        Warehouse,
         _BulkKeyProbe,
         _build_bloom,
         _entry_may_hold_any,
@@ -142,6 +146,9 @@ def test_bulk_key_probe_matches_scalar():
         entry(["TXN_1", "TXN_2"], legacy=True),
         {"stats": {"other": [0, 9]}},  # no info on k at all
         entry([5, 6, 7]),  # int bloom vs str batch: cross-type keep
+        # date keys: manifests hold their stats as ISO strings
+        {"stats": {"k": ["2024-01-01", "2024-01-31"]}},
+        {"stats": {"k": ["2024-03-01", "2024-03-31"]}},
     ]
     int_entries = [
         entry(list(range(lo, lo + 50))) for lo in range(0, 1000, 50)
@@ -153,6 +160,14 @@ def test_bulk_key_probe_matches_scalar():
         set(rng.sample(range(20000), 4000)),
         set(rng.sample(range(100), 50)) | {None},  # None -> keep all
         {f"TXN_{i}" for i in range(2500)} | set(range(100)),  # mixed
+        # trigger-sized uniform batches: 1, 10 and 1,300 keys
+        {"TXN_517"},
+        {f"TXN_{i}" for i in rng.sample(range(5000), 10)},
+        {f"TXN_{i}" for i in rng.sample(range(5000), 1300)},
+        set(rng.sample(range(5000), 10)),
+        {float(v) + 0.5 for v in rng.sample(range(2000), 10)},  # no bloom
+        {datetime.date(2024, 3, d) for d in range(1, 11)},  # no bloom
+        set(),  # no key: every entry pruned
     ]
     # the same entries with their Blooms moved into per-commit packs,
     # as every writer stores them: one pack per commit dir, here one
@@ -173,12 +188,23 @@ def test_bulk_key_probe_matches_scalar():
         for b in (e.get("blooms") or {}).values()
         if isinstance(b, dict)
     )
+    wh = Warehouse.__new__(Warehouse)  # driver-side pruning needs no session
     for batch in batches:
         probe = _BulkKeyProbe(batch)
         pack_probe = _BulkKeyProbe(batch, tdir)
+        uniform = len({type(v) for v in batch if v is not None}) <= 1
         for entries in (str_entries, int_entries):
             in_packs = packed[id(entries)]
             pack_bulk = pack_probe.entries_may_hold_any(in_packs, "k")
+            kept = wh._prune_entries_by_keys(tdir, in_packs, "k", batch)
+            assert [id(e) for e in kept] == [
+                id(pe) for pe, pb in zip(in_packs, pack_bulk) if pb
+            ]
+            if uniform:
+                assert [id(e) for e in kept] == [
+                    id(pe) for pe in in_packs
+                    if _entry_may_hold_any(pe, "k", batch, tdir)
+                ]
             for e, pe, pb in zip(entries, in_packs, pack_bulk):
                 scalar = _entry_may_hold_any(e, "k", batch)
                 bulk = probe.entry_may_hold_any(e, "k")
@@ -188,7 +214,7 @@ def test_bulk_key_probe_matches_scalar():
                 assert pb == bulk
                 # exact parity, except bulk may be conservative (keep)
                 # where scalar pruned ONLY for mixed-type batches
-                if len({type(v) for v in batch if v is not None}) == 1:
+                if uniform:
                     assert bulk == scalar, (e.keys(), sorted(batch)[:3])
                 else:
                     assert bulk or not scalar

@@ -23,11 +23,6 @@ from sample_for_transactional_datalake_using_s3tables_spark.streaming.cdc import
 
 from .test_streaming import TS, envelope
 
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4).
-# Run everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
-
 
 @pytest.fixture()
 def wh(spark):
