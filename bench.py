@@ -700,6 +700,8 @@ def bench_planning(spark) -> dict[str, float]:
     - ``plan_predicate``: min/max+Bloom data skipping down to 1 file
       (the >4096-entry path runs distributed via sc.parallelize)
     - ``plan_partition``: partition pruning to 1/32 of the entries
+    - ``commit_append_s`` / ``commit_append_bytes``: one 1-file append
+      onto the 100k-entry table (the commit writes its actions only)
     - ``delete_noop``: predicate DELETE whose pruning proves 0 matches
       (pure metadata, no rewrite)
     - ``commit_index_rebuild``: _commits.idx rebuilt from manifests
@@ -736,7 +738,7 @@ def bench_planning(spark) -> dict[str, float]:
         tdir = wh._table_dir("p", "big")
         # layout mirrors a write-ordered time-partitioned table: ids
         # CLUSTER within partitions (files land partition-by-partition,
-        # so the partition-grouped index can prune whole partitions on
+        # so the checkpoint's partition groups can prune whole partitions on
         # an id predicate -- Iceberg's O(candidate partitions) case),
         # while v is hash-scattered (uncorrelated with partitions: group
         # stats can't prune, only per-entry min/max can)
@@ -775,15 +777,15 @@ def bench_planning(spark) -> dict[str, float]:
         got = _t("plan_full", lambda: wh.plan_files("p", "big"))
         if got is not None:
             assert len(got[0]) == n, f"expected {n} entries, got {len(got[0])}"
-        # first selective plan BUILDS the partition-grouped index
-        # (one-time, amortized); steady state is plan_predicate
+        # first selective plan reads the checkpoint's header cold;
+        # steady state is plan_predicate
         got = _t(
             "plan_predicate_cold",
             lambda: wh.plan_files(
                 "p", "big", predicates=[("id", "=", 42_123_500)]
             ),
         )
-        wh._plan_idx_counters["entries_loaded"] = 0
+        wh._plan_counters["entries_loaded"] = 0
         got = _t(
             "plan_predicate",
             lambda: wh.plan_files(
@@ -793,7 +795,7 @@ def bench_planning(spark) -> dict[str, float]:
         if got is not None:
             out["plan_predicate_kept"] = float(len(got[0]))
             out["plan_predicate_entries_parsed"] = float(
-                wh._plan_idx_counters["entries_loaded"]
+                wh._plan_counters["entries_loaded"]
             )
         # partition-UNcorrelated predicate: group stats keep every
         # partition, so this measures load-all-groups + per-entry skip
@@ -820,6 +822,22 @@ def bench_planning(spark) -> dict[str, float]:
         )
         if got is not None:
             out["plan_partition_kept"] = float(len(got[0]))
+
+        def _sizes() -> dict[str, int]:
+            return {
+                os.path.join(d, f): os.path.getsize(os.path.join(d, f))
+                for d, _, fs in os.walk(tdir) for f in fs
+            }
+
+        before = _sizes()
+        one = dict(entries[0], path="data/day=new/f_new.parquet",
+                   partition="dnew")
+        if _t("commit_append_s", lambda: wh._publish_append(
+            tdir, wh._versions(tdir)[-1], [one], meta["schema"]
+        )) is not None:
+            out["commit_append_bytes"] = float(sum(
+                n for p, n in _sizes().items() if n > before.get(p, -1)
+            ))
         _t(
             "delete_noop",
             lambda: wh.delete_where("p", "big", [("id", ">=", 10**15)]),

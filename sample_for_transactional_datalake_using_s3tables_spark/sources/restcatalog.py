@@ -60,6 +60,7 @@ into the warehouse's link() CAS.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -71,7 +72,13 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import types as T
 
-from .warehouse import CommitConflictError, TableNotFoundError, Warehouse
+from . import txlog
+from .warehouse import (
+    MANIFEST_LIST_DIR,
+    CommitConflictError,
+    TableNotFoundError,
+    Warehouse,
+)
 
 # -- Iceberg schema JSON <-> Spark StructType ----------------------------
 
@@ -968,19 +975,22 @@ class IcebergRestCatalogServer:
                 400, "BadRequestException",
                 f"invalid change range ({v_from}, {v_to}]",
             )
-        prev = {
-            e["path"]
-            for e in (
-                self.wh._manifest(tdir, v_from) if v_from in versions else []
-            )
-        }
         changes: list[dict] = []
-        doc = None
+        prev = v_from if v_from in versions else None
         for v in versions:
             if v <= v_from or v > v_to:
                 continue
-            doc = self.wh._manifest_doc(tdir, v)
-            paths = {e["path"] for e in doc["files"]}
+            if prev == v - 1:  # the commit's own log entry
+                doc = txlog.delta(self.wh._vdir(tdir), v)
+                added = doc.get("add", ())
+            else:  # across expired versions: diff the snapshots
+                doc = self.wh._manifest_doc(tdir, v)
+                before = (
+                    {e["path"] for e in self.wh._manifest(tdir, prev)}
+                    if prev is not None else set()
+                )
+                added = [e for e in doc["files"] if e["path"] not in before]
+            prev = v
             op = doc.get("op", "append")
             if doc.get("change_files"):
                 changes.append({
@@ -1001,7 +1011,7 @@ class IcebergRestCatalogServer:
                     "added-data-files": [
                         {"path": e["path"],
                          "records": e.get("records", 0)}
-                        for e in doc["files"] if e["path"] not in prev
+                        for e in added
                     ],
                 })
             else:
@@ -1011,7 +1021,6 @@ class IcebergRestCatalogServer:
                     "the table's change_feed property or consume via "
                     "snapshot diff",
                 )
-            prev = paths
         tip_doc = self.wh._manifest_doc(tdir, v_to)
         return 200, {
             "table": f"{ns}.{tbl}",
@@ -1341,6 +1350,30 @@ class IcebergRestCatalogServer:
             uuid.uuid5(uuid.NAMESPACE_URL, f"{tdir}@{created}")
         )
 
+    def _manifest_list(self, tdir: str, v: int) -> str:
+        """Path of snapshot ``v``'s full manifest doc (``files``,
+        ``deletes``, ``schema``, ``physical``) for external readers.
+        The table's own log stores per-commit actions, so the facade
+        materializes the doc once, under a name addressed by its
+        content (a rebased clone gets a fresh file, never a stale one);
+        expire_snapshots removes expired versions' docs."""
+        doc = self.wh._manifest_doc(tdir, v)
+        text = json.dumps(
+            {k: doc[k] for k in ("version", "files", "deletes", "schema",
+                                 "physical", "op", "ts") if k in doc}
+        )
+        out = os.path.join(
+            tdir, MANIFEST_LIST_DIR,
+            f"{v:08d}-{hashlib.sha1(text.encode()).hexdigest()[:16]}.json",
+        )
+        if not os.path.exists(out):
+            os.makedirs(os.path.dirname(out), exist_ok=True)
+            tmp = f"{out}.tmp-{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                f.write(text)
+            os.replace(tmp, out)
+        return out
+
     def _load_result(
         self, ns: str, tbl: str, snapshots_mode: str = "all"
     ) -> dict:
@@ -1387,9 +1420,7 @@ class IcebergRestCatalogServer:
             {
                 "snapshot-id": r["version"],
                 "timestamp-ms": int((r.get("ts") or 0) * 1000),
-                "manifest-list": os.path.join(
-                    tdir, "_v", f"{r['version']:08d}.json"
-                ),
+                "manifest-list": self._manifest_list(tdir, r["version"]),
                 "summary": {
                     "operation": r.get("op") or "append",
                     "total-data-files": str(r["n_files"]),
@@ -1421,7 +1452,7 @@ class IcebergRestCatalogServer:
             "refs": refs,
         }
         return {
-            "metadata-location": f"{tdir}/_v/{current:08d}.json",
+            "metadata-location": self._manifest_list(tdir, current),
             "metadata": doc,
         }
 

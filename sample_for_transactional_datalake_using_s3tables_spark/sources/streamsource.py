@@ -6,15 +6,16 @@ The reference's pipeline tails a CDC stream into the table (reference:
 stack/firehose.py ingest path); the mirror-image capability -- tailing
 the TABLE itself as a stream -- is what downstream consumers use to
 chain pipelines off a transactional lake. This module provides it with
-exactly-once semantics: offsets are manifest versions, batches are the
-data files appended between two versions (the same manifest-diff
-planning as ``Warehouse.read_incremental``), and checkpoint recovery
+exactly-once semantics: offsets are table versions, batches are the
+data files appended between two versions (each commit's log entry, the
+same planning as ``Warehouse.read_incremental``), and checkpoint recovery
 replays any offset range deterministically because snapshots are
 immutable.
 
 Design for 100 TB:
-- Planning is metadata-only (two manifest JSONs per commit) and runs on
-  the driver; no data file is opened to decide what a batch contains.
+- Planning is metadata-only (one small log entry per commit, read
+  through :mod:`.txlog` like every ``Warehouse`` read) and runs on the
+  driver; no data file is opened to decide what a batch contains.
 - Each appended data file becomes one input partition, so a batch scan
   parallelizes across executors like any file source.
 - Partitions yield pyarrow RecordBatches (Arrow path), not Python-tuple
@@ -42,6 +43,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from . import txlog
+
 _MANIFEST_DIR = "_v"
 _SCHEMA_FILE = "_table.json"
 
@@ -50,25 +53,6 @@ def _vdir(tdir: str, branch: str | None = None) -> str:
     return os.path.join(
         tdir, _MANIFEST_DIR if not branch else f"{_MANIFEST_DIR}@{branch}"
     )
-
-
-def _versions(tdir: str, branch: str | None) -> list[int]:
-    # keep the filter in lockstep with Warehouse._versions: the version
-    # dir also holds NON-numeric artifacts (_fork.json in every branch
-    # dir, staged-commit drafts), which must never parse as versions --
-    # this standalone copy exists because stream workers deserialize
-    # options and re-import without a Warehouse instance
-    vdir = _vdir(tdir, branch)
-    return sorted(
-        int(f[:-5])
-        for f in os.listdir(vdir)
-        if f.endswith(".json") and f[:-5].isdigit()
-    )
-
-
-def _doc(tdir: str, v: int, branch: str | None) -> dict:
-    with open(os.path.join(_vdir(tdir, branch), f"{v:08d}.json")) as f:
-        return json.load(f)
 
 
 class _FileSlice(InputPartition):
@@ -129,7 +113,7 @@ class WarehouseAppendsStreamReader(DataSourceStreamReader):
         a hard-coded 0 made every such stream unstartable. The baseline
         snapshot's contents are the stream's initial state (not
         replayed); pass from_version to position explicitly."""
-        versions = _versions(self.tdir, self.branch)
+        versions = txlog.versions(_vdir(self.tdir, self.branch))
         return versions[0] if versions else 0
 
     def initialOffset(self) -> dict:
@@ -138,7 +122,7 @@ class WarehouseAppendsStreamReader(DataSourceStreamReader):
         return {"version": self._initial_version()}
 
     def latestOffset(self) -> dict:
-        versions = _versions(self.tdir, self.branch)
+        versions = txlog.versions(_vdir(self.tdir, self.branch))
         tip = versions[-1] if versions else 0
         if self._max_versions is None:
             return {"version": max(tip, self._hwm)}
@@ -166,7 +150,7 @@ class WarehouseAppendsStreamReader(DataSourceStreamReader):
             self._cursor = max(lo, hi)
         if hi <= lo:
             return []  # replay of an empty checkpointed range
-        live = set(_versions(self.tdir, self.branch))
+        live = set(txlog.versions(_vdir(self.tdir, self.branch)))
         missing = [v for v in range(lo, hi + 1) if v not in live]
         if missing:
             raise ValueError(
@@ -174,19 +158,17 @@ class WarehouseAppendsStreamReader(DataSourceStreamReader):
                 "from a live snapshot (set from_version)"
             )
         out: list[InputPartition] = []
-        doc_lo = _doc(self.tdir, lo, self.branch)
-        prev_paths = {e["path"] for e in doc_lo["files"]}
-        prev_dels = {d["path"] for d in doc_lo.get("deletes") or []}
+        vdir = _vdir(self.tdir, self.branch)
+        src = txlog.plan_source(vdir, lo)  # the schema binding at lo
+        schema, phys = src.schema, src.physical
         for v in range(lo + 1, hi + 1):
-            doc = _doc(self.tdir, v, self.branch)
-            cur_paths = {e["path"] for e in doc["files"]}
-            cur_dels = {d["path"] for d in doc.get("deletes") or []}
-            added = cur_paths - prev_paths
-            removed = prev_paths - cur_paths
-            new_dels = cur_dels - prev_dels
-            op = doc.get("op")
+            d = txlog.delta(vdir, v)
+            schema = d.get("schema", schema)
+            phys = d.get("physical", phys)
+            added = d.get("add", ())
+            op = d.get("op")
             skip = op == "replace" and self.skip_replace
-            if not skip and (removed or new_dels):
+            if not skip and (d.get("remove") or d.get("add_deletes")):
                 if self.on_delete == "raise":
                     raise ValueError(
                         f"commit {v} ({op or 'unknown op'}) deletes or "
@@ -205,11 +187,9 @@ class WarehouseAppendsStreamReader(DataSourceStreamReader):
                 # (null-filling live data, or resurrecting a retired
                 # physical column after drop + re-add). A logical column
                 # absent from this snapshot's schema null-fills.
-                phys_v = doc.get("physical") or {}
+                phys_v = phys or {}
                 doc_fields = (
-                    {fl["name"] for fl in doc["schema"]["fields"]}
-                    if doc.get("schema")
-                    else None
+                    {fl["name"] for fl in schema["fields"]} if schema else None
                 )
                 names_v = []
                 for f in self.schema.fields:
@@ -219,14 +199,10 @@ class WarehouseAppendsStreamReader(DataSourceStreamReader):
                         names_v.append(
                             (phys_v.get(f.name, f.name), f.name, f.dataType)
                         )
-                for e in doc["files"]:
-                    if e["path"] in added:
-                        out.append(
-                            _FileSlice(
-                                os.path.join(self.tdir, e["path"]), names_v
-                            )
-                        )
-            prev_paths, prev_dels = cur_paths, cur_dels
+                for e in added:
+                    out.append(
+                        _FileSlice(os.path.join(self.tdir, e["path"]), names_v)
+                    )
         return out
 
     def read(self, partition: _FileSlice):

@@ -8,11 +8,18 @@ keyed upsert via ``unique_keys``; reference scripts/update_metadata.py:62-148
 on Spark + parquet, since no Iceberg/Delta runtime jars ship in this
 environment. The design mirrors Iceberg's:
 
-- A table = data files + a chain of immutable JSON **manifests** (one per
-  commit) listing its files with per-file partition value and row count.
-- Commits are **optimistic**: the manifest is staged then published with
-  an atomic ``os.link`` (fails if the version already exists -> retry),
-  the analog of the reference's ``versionToken`` swap
+- A table = data files + a **transaction log** (:mod:`.txlog`, Delta
+  Lake's design): each commit's version file ``_v/<version>.json`` holds
+  only its actions -- the file entries (partition value, row count,
+  min/max stats, Bloom reference) it adds, the paths it removes, the
+  same for merge-on-read delete files, and the schema or column mapping
+  only when they change. Every ``_CHECKPOINT_INTERVAL`` commits a
+  ``_v/<version>.ckpt`` checkpoint holds the full state grouped by
+  partition; a snapshot is the newest checkpoint plus a replay of the
+  tail. ``_manifest_doc`` is the one reader of full snapshot docs.
+- Commits are **optimistic**: the version file is staged then published
+  with an atomic ``os.link`` (fails if the version already exists ->
+  retry), the analog of the reference's ``versionToken`` swap
   (scripts/update_metadata.py:135-141).
 - MERGE is **partition-level copy-on-write**: only partitions touched by
   the source batch are rewritten; untouched files carry over by
@@ -21,7 +28,7 @@ environment. The design mirrors Iceberg's:
 - Reads are **manifest-pruned**: ``read(partition_filter=...)`` selects
   file paths from manifest metadata before Spark ever lists a directory
   (Iceberg-style partition pruning above the FileScan).
-- Time travel: ``read(version=N)`` reads any historical manifest.
+- Time travel: ``read(version=N)`` reads any live historical snapshot.
 
 The partition column is stored redundantly as a normal data column, so
 files are self-contained and manifest pruning composes with Spark's own
@@ -32,6 +39,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import glob
 import json
 import os
 import re
@@ -45,32 +53,24 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.types import StructField, StructType
 
+from . import txlog
+from .txlog import part_key as _part_key
+
 _MANIFEST_DIR = "_v"
 _COMMIT_IDX = "_commits.idx"  # publish-time version->(ts, op) sidecar
 _SCHEMA_FILE = "_table.json"
 _CLONES_FILE = "_clones.json"  # shallow-clone back-refs (clone dirs, root-rel)
 _REFS_IDX_FILE = "_refs.idx"  # cached external-refs of a clone (fingerprinted)
-_PLAN_IDX_FILE = "_plan.idx"  # partition-grouped planning index (fingerprinted)
 _CLONE_PENDING = "_clone_pending"  # marker: clone creation in flight
 _REBASE_PENDING = "_rebase_pending"  # marker: manifest rebase in flight
+# full manifest docs the REST facade materializes for external readers
+MANIFEST_LIST_DIR = "_manifest_lists"
 
 # Hidden-partitioning transforms (Iceberg partition-spec analog: the
 # table partitions on a DERIVED value; queries never see or maintain the
 # derived column). ``partition_by`` accepts a raw column name (identity)
 # or "days(col)" / "bucket(N, col)" / "truncate(W, col)".
 _TRANSFORM_RE = re.compile(r"^(days|bucket|truncate)\(\s*(?:(\d+)\s*,\s*)?(\w+)\s*\)$")
-
-# Canonical manifest value for a NULL partition: the same sentinel Spark
-# uses for the partition directory name, so manifest entries (derived
-# from directory names) and partition-value computations (derived from
-# data) always agree.
-NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _part_key(value) -> str:
-    """Canonical manifest partition key for a partition value."""
-    return NULL_PARTITION if value is None else str(value)
-
 
 def _scope_key(entry: dict) -> tuple[int, str]:
     """Conflict-scope key of a manifest entry: the partition value
@@ -126,12 +126,15 @@ def _file_stats(md) -> dict:
 # m grows with the file's key count (~24 bits/key, capped so manifests
 # stay small) and k with m/n, so a trigger-sized file (~1k keys) gets
 # a 32768-bit / 16-hash bloom whose any-of-50k-keys keep probability
-# is ~4 % instead of ~100 %. Positions use standard double hashing
+# is ~4 % instead of ~100 %. The floor is 512 bits: a merge-on-read
+# commit's ~21-key files get 512 bits / 16 hashes (~8e-6 false-positive
+# rate per key) instead of a mostly empty 8192-bit pack slot each.
+# Positions use standard double hashing
 # (h1 + i*h2 mod m, Kirsch-Mitzenmacher) so k is free to vary; blooms
 # store their (m, k). A Bloom of any other shape -- a bare hex string or
 # a dict without its type tag, m or k -- is unreadable and keeps its
 # file (_bloom_usable): it can never mis-prune.
-_BLOOM_M = 8192
+_BLOOM_M = 512
 _BLOOM_M_MAX = 262144  # 32 KiB of bits per file in its commit's pack
 _BLOOM_BITS_PER_KEY = 24
 _U64 = (1 << 64) - 1
@@ -139,7 +142,7 @@ _U64 = (1 << 64) - 1
 
 def _bloom_params(n: int) -> tuple[int, int]:
     """(m, k) for a file holding ``n`` keys: m = pow2 >= 24*n within
-    [8192, 262144]; k ~ 0.7*m/n capped to [2, 16]."""
+    [512, 262144]; k ~ 0.7*m/n capped to [2, 16]."""
     m = _BLOOM_M
     target = _BLOOM_BITS_PER_KEY * max(1, n)
     while m < target and m < _BLOOM_M_MAX:
@@ -547,7 +550,7 @@ class _BulkKeyProbe:
         if pos.size == 0:
             return True
         h1, h2 = h[:, 0], h[:, 1]
-        # m is always a power of two (_bloom_params doubles from 8192),
+        # m is always a power of two (_bloom_params doubles from 512),
         # so "% m" == "& (m-1)" -- identical positions, no uint64 mod
         mask = np.uint64(m - 1)
         lut = np.left_shift(np.uint8(1), np.arange(8, dtype=np.uint8))
@@ -884,12 +887,9 @@ class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # observability for tests/bench: how much metadata planning
-        # actually touched (see _plan_index)
-        self._plan_idx_counters = {
-            "groups_loaded": 0, "entries_loaded": 0, "idx_plans": 0,
-            "idx_fallbacks": 0,
-        }
+        # observability for tests/bench: how much metadata selective
+        # planning parsed (checkpoint groups loaded, entries considered)
+        self._plan_counters = {"groups_loaded": 0, "entries_loaded": 0}
         os.makedirs(root, exist_ok=True)
 
     # -- namespace DDL (reference lambda/custom_resource/index.py:76-81) --
@@ -1168,16 +1168,10 @@ class Warehouse:
     def _all_entry_paths(self, tdir: str) -> set[str]:
         """Resolved abspaths of every file any snapshot (main +
         branches) or WAP-staged batch of ``tdir`` references."""
-        paths: set[str] = set()
-        for v in self._versions(tdir):
-            for e in self._doc_all_entries(tdir, v):
-                paths.add(os.path.abspath(os.path.join(tdir, e["path"])))
+        rel = self._referenced(tdir, self._versions(tdir))
         for b in self._branches(tdir):
-            for v in self._versions(tdir, b):
-                for e in self._doc_all_entries(tdir, v, b):
-                    paths.add(
-                        os.path.abspath(os.path.join(tdir, e["path"]))
-                    )
+            rel |= self._referenced(tdir, self._versions(tdir, b), b)
+        paths = {os.path.abspath(os.path.join(tdir, p)) for p in rel}
         mdir = os.path.join(tdir, _MANIFEST_DIR)
         if os.path.isdir(mdir):
             for fn in os.listdir(mdir):
@@ -1196,10 +1190,11 @@ class Warehouse:
 
     def _manifest_fingerprint(self, tdir: str) -> list:
         """Cheap (stat-only, zero file opens) fingerprint of everything
-        ``_all_entry_paths`` would read: every file in every manifest
-        dir (main + branches; version manifests and WAP-staged batches
-        both live there), as (name, size, mtime_ns), plus the table
-        dir's own abspath so a rename/move invalidates."""
+        ``_all_entry_paths`` would read: every file in every version
+        dir (main + branches; version files, the expired list and
+        WAP-staged batches all live there) but the checkpoints, which
+        only restate versions, as (name, size, mtime_ns), plus the
+        table dir's own abspath so a rename/move invalidates."""
         ent: list = [os.path.abspath(tdir)]
         for d in sorted(os.listdir(tdir)):
             if d != _MANIFEST_DIR and not d.startswith(_MANIFEST_DIR + "@"):
@@ -1208,6 +1203,8 @@ class Warehouse:
             if not os.path.isdir(mdir):
                 continue
             for fn in sorted(os.listdir(mdir)):
+                if fn.endswith(".ckpt"):
+                    continue
                 try:
                     st = os.stat(os.path.join(mdir, fn))
                 except OSError:
@@ -1299,26 +1296,42 @@ class Warehouse:
         .tmp files are cleaned on ANY failure."""
         changed_sources: set[str] = set()
 
+        def moved(p: str) -> str | None:
+            if ".." not in p.split("/"):
+                return None
+            ap = os.path.normpath(os.path.join(old_tdir, p))
+            # existence check = idempotence: a path already rebased to
+            # the new location fails to resolve from the OLD dir and is
+            # left alone (live entries always resolve -- back-refs pin
+            # clone-referenced files). Every occurrence of one path
+            # string (an add, its later remove, a checkpoint copy) gets
+            # the same answer, so replay stays consistent.
+            if not os.path.exists(ap):
+                return None
+            owner = self._owning_table_dir(ap)
+            if owner:
+                changed_sources.add(owner)
+            return os.path.relpath(ap, new_tdir)
+
         def fix(entries: list[dict]) -> tuple[list[dict], bool]:
             out, touched = [], False
             for e in entries:
-                p = e.get("path", "")
-                if ".." in p.split("/"):
-                    ap = os.path.normpath(os.path.join(old_tdir, p))
-                    # existence check = idempotence: an entry already
-                    # rebased to the new location fails to resolve from
-                    # the OLD dir and is left alone (live entries always
-                    # resolve -- back-refs pin clone-referenced files)
-                    if not os.path.exists(ap):
-                        out.append(e)
-                        continue
-                    e = dict(e, path=os.path.relpath(ap, new_tdir))
+                q = moved(e.get("path", ""))
+                if q is not None:
+                    e = dict(e, path=q)
                     touched = True
-                    owner = self._owning_table_dir(ap)
-                    if owner:
-                        changed_sources.add(owner)
                 out.append(e)
             return out, touched
+
+        def fix_paths(paths: list[str]) -> tuple[list[str], bool]:
+            out = [moved(p) or p for p in paths]
+            return out, out != paths
+
+        def stage(fpath: str, data: bytes) -> None:
+            tmp = f"{fpath}.tmp-{uuid.uuid4().hex}"
+            staged.append((tmp, fpath))
+            with open(tmp, "wb") as f:
+                f.write(data)
 
         mdirs = [os.path.join(new_tdir, _MANIFEST_DIR)] + [
             os.path.join(new_tdir, f"{_MANIFEST_DIR}@{b}")
@@ -1330,21 +1343,45 @@ class Warehouse:
                 if not os.path.isdir(mdir):
                     continue
                 for fn in os.listdir(mdir):
-                    if not fn.endswith(".json"):
-                        continue
                     fpath = os.path.join(mdir, fn)
+                    if fn.endswith(".ckpt") and fn[:-5].isdigit():
+                        head, entries, _ = txlog.read_checkpoint(fpath)
+                        entries, t1 = fix(entries)
+                        dels, t2 = fix(head.get("deletes") or [])
+                        commit = dict(head.get("commit") or {})
+                        commit["change_files"], t3 = fix(
+                            commit.get("change_files") or []
+                        )
+                        if not commit["change_files"]:
+                            del commit["change_files"]
+                        if t1 or t2 or t3:
+                            st = txlog.State(
+                                {e["path"]: e for e in entries},
+                                {d["path"]: d for d in dels},
+                                head.get("schema"), head.get("physical"),
+                                commit, 0, 0, (),
+                            )
+                            stage(fpath, txlog.checkpoint_bytes(head["version"], st))
+                        continue
+                    if not fn.endswith(".json") or ".tmp-" in fn:
+                        continue
                     with open(fpath) as f:
                         doc = json.load(f)
+                    if not isinstance(doc, dict):
+                        continue  # the expired-version list
                     any_touched = False
-                    for key in ("files", "deletes", "change_files"):
+                    for key in (
+                        "files", "deletes", "change_files", "add", "add_deletes"
+                    ):
                         if doc.get(key):
                             doc[key], t = fix(doc[key])
                             any_touched |= t
+                    for key in ("remove", "remove_deletes"):
+                        if doc.get(key):
+                            doc[key], t = fix_paths(doc[key])
+                            any_touched |= t
                     if any_touched:
-                        tmp = f"{fpath}.tmp-{uuid.uuid4().hex}"
-                        with open(tmp, "w") as f:
-                            json.dump(doc, f)
-                        staged.append((tmp, fpath))
+                        stage(fpath, json.dumps(doc).encode())
         except BaseException:
             for tmp, _ in staged:
                 with contextlib.suppress(OSError):
@@ -1648,13 +1685,14 @@ class Warehouse:
         """The last ``mv_stamp`` riding the MV storage table's commit
         chain -- the authoritative refresh watermark record. Every
         refresh commit carries one, so the reverse walk opens one or
-        two manifests, never the history."""
+        two log entries, never the history."""
         storage = self.mv_storage_table(name)
         tdir = self._table_dir(ns, storage)
         if not os.path.exists(tdir):
             return None
+        vdir = self._vdir(tdir)
         for v in reversed(self._versions(tdir)):
-            doc = self._manifest_doc(tdir, v)
+            doc = txlog.read_version(vdir, v)
             if "mv_stamp" in doc:
                 return doc["mv_stamp"]
         return None
@@ -2170,11 +2208,7 @@ class Warehouse:
         vdir = self._vdir(tdir, branch)
         if branch and not os.path.isdir(vdir):
             raise ValueError(f"unknown branch {branch!r}")
-        return sorted(
-            int(f[:-5])
-            for f in os.listdir(vdir)
-            if f.endswith(".json") and f[:-5].isdigit()
-        )
+        return txlog.versions(vdir)
 
     def current_version(
         self, ns: str, table: str, branch: str | None = None
@@ -2187,13 +2221,15 @@ class Warehouse:
     def _manifest_doc(
         self, tdir: str, version: int, branch: str | None = None
     ) -> dict:
-        with open(os.path.join(self._vdir(tdir, branch), f"{version:08d}.json")) as f:
-            return json.load(f)
+        """Version ``version`` as a full manifest doc (``files``,
+        ``deletes``, ``schema``, ``physical`` and the commit's own
+        fields), rebuilt from the transaction log (:mod:`.txlog`)."""
+        return txlog.doc(self._vdir(tdir, branch), version)
 
     def _manifest(
         self, tdir: str, version: int, branch: str | None = None
     ) -> list[dict]:
-        return self._manifest_doc(tdir, version, branch)["files"]
+        return list(txlog.state(self._vdir(tdir, branch), version).files.values())
 
     def _doc_all_entries(
         self, tdir: str, version: int, branch: str | None = None
@@ -2207,6 +2243,31 @@ class Warehouse:
             + list(doc.get("deletes") or [])
             + list(doc.get("change_files") or [])
         )
+
+    def _referenced(
+        self, tdir: str, versions, branch: str | None = None
+    ) -> set[str]:
+        """Paths (table-relative) of every file any of ``versions``
+        references, by ``_doc_all_entries``. A run of consecutive
+        versions costs one full state plus the later commits' added
+        entries: each state is a subset of its predecessor's plus the
+        commit's adds."""
+        vdir = self._vdir(tdir, branch)
+        out: set[str] = set()
+        prev = None
+        for v in sorted(versions):
+            if prev == v - 1:
+                d = txlog.read_version(vdir, v)
+                es = [
+                    *d.get("add", ()), *d.get("add_deletes", ()),
+                    *d.get("files", ()), *(d.get("deletes") or ()),
+                    *(d.get("change_files") or ()),
+                ]
+            else:
+                es = self._doc_all_entries(tdir, v, branch)
+            out.update(e["path"] for e in es)
+            prev = v
+        return out
 
     def _branches(self, tdir: str) -> list[str]:
         prefix = _MANIFEST_DIR + "@"
@@ -2234,11 +2295,13 @@ class Warehouse:
     ) -> None:
         """Atomic optimistic commit: link() fails if the version exists
         (the reference's versionToken CAS, scripts/update_metadata.py:135-141).
-        The manifest embeds the schema (and the logical->physical column
-        mapping) as of this commit, binding both to the snapshot
-        (Iceberg-style) so time travel sees the historical shape.
-        ``deletes`` carries the snapshot's live equality-delete files
-        (merge-on-read). ``op`` stamps the commit's operation type
+        ``files``/``deletes`` are the snapshot's FULL state (its data
+        files and live merge-on-read delete files) with its schema and
+        logical->physical column mapping, bound to the snapshot
+        (Iceberg-style) so time travel sees the historical shape. The
+        version file stores only the actions against ``version - 1``
+        (:func:`txlog.publish`), and a checkpoint follows every
+        ``_CHECKPOINT_INTERVAL`` commits. ``op`` stamps the commit's operation type
         (Iceberg snapshot summary ``operation``): incremental/changelog
         readers skip ``replace`` commits (compaction rewrites no data)
         by stamp instead of diffing content. ``ts`` overrides the commit
@@ -2246,53 +2309,39 @@ class Warehouse:
         must preserve the ORIGINAL commit time (Iceberg's fast_forward
         keeps snapshot timestamps) so timestamp time travel stays
         truthful across a promote."""
-        import time as _time
-
-        doc: dict = {"version": version, "files": files}
-        doc["ts"] = _time.time() if ts is None else ts
-        if op:
-            doc["op"] = op
+        commit: dict = {"ts": time.time() if ts is None else ts, "op": op}
         if txn:
             # Delta txnAppId/txnVersion analog: the idempotence stamp
             # rides the COMMIT itself, so a crash can never land data
-            # without its stamp (the ledger IS the manifest chain)
-            doc["txn"] = [str(txn[0]), int(txn[1])]
+            # without its stamp (the ledger IS the commit log)
+            commit["txn"] = [str(txn[0]), int(txn[1])]
         if copied:
             # COPY INTO source-file ledger: rides the commit (atomic
             # with the data), so "was this file loaded" is answerable
-            # from the manifest chain alone and survives index rebuild
-            doc["copied"] = sorted(copied)
+            # from the log alone and survives index rebuild
+            commit["copied"] = sorted(copied)
         if change_files:
             # stored Change Data Feed (Delta enableChangeDataFeed): the
             # commit's logical change set, persisted at write time so
             # changelog() reads O(changed rows) instead of re-deriving
             # pre-images from data-file diffs
-            doc["change_files"] = change_files
+            commit["change_files"] = change_files
         if mv_stamp:
             # materialized-view refresh watermark: rides the storage
             # commit so the stamp and the data it describes are ONE
             # atomic publish (a crash can never leave storage holding a
             # delta the watermark doesn't record, or vice versa)
-            doc["mv_stamp"] = mv_stamp
-        if schema is not None:
-            doc["schema"] = schema
-        if phys:
-            doc["physical"] = phys
-        if deletes:
-            doc["deletes"] = deletes
+            commit["mv_stamp"] = mv_stamp
         vdir = self._vdir(tdir, branch)
-        tmp = os.path.join(vdir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        target = os.path.join(vdir, f"{version:08d}.json")
         try:
-            os.link(tmp, target)
+            doc = txlog.publish(
+                vdir, version, files, deletes, schema, phys, commit,
+                self._CHECKPOINT_INTERVAL, self._PLAN_DISTRIBUTE_THRESHOLD,
+            )
         except FileExistsError as e:
             raise CommitConflictError(
                 f"version {version} was committed concurrently"
             ) from e
-        finally:
-            os.unlink(tmp)
         # Compact commit index: one JSONL line per publish so
         # snapshot_as_of/history resolve timestamps with O(1) file opens
         # instead of re-parsing every manifest (manifests stay the
@@ -2424,6 +2473,11 @@ class Warehouse:
     # through one core (same pattern as the per-commit footer build).
     _PLAN_DISTRIBUTE_THRESHOLD = 4096
 
+    # A checkpoint of the full state follows every this many commits
+    # (Delta's default), or once more than _PLAN_DISTRIBUTE_THRESHOLD
+    # entries were added since the last one (see txlog).
+    _CHECKPOINT_INTERVAL = 10
+
     def _prune_entries(
         self, tdir: str, entries: list[dict], predicates: list[tuple]
     ) -> list[dict]:
@@ -2464,177 +2518,6 @@ class Warehouse:
         sc = self.spark.sparkContext
         n = max(1, min(len(entries) // 1024, sc.defaultParallelism))
         return sc.parallelize(entries, n).mapPartitions(keep).collect()
-
-    # -- partition-grouped planning index (VERDICT r9 #3) ------------
-    #
-    # Predicate planning used to re-parse and re-distribute the FULL
-    # manifest entry list on every selective read: ~1.4-1.7 s at 100k
-    # entries, ~15 s of added latency per pruned query at 1M files.
-    # Iceberg pays O(candidate partitions) instead, via
-    # partition-grouped manifests under a small manifest list. The same
-    # layout here: a fingerprinted sidecar pair in the branch's _v dir
-    # (the _commits.idx / _refs.idx pattern) --
-    #
-    #   _plan.idx           small JSON header: tip fingerprint, schema,
-    #                       physical map, and per-partition-group rows
-    #                       {partition, spec, n, stats, offset, length}
-    #                       where stats = merged min/max over the group
-    #   _plan-<uuid>.dat    the entries themselves, one compact JSON
-    #                       array PER GROUP at (offset, length) byte
-    #                       ranges -- so planning parses ONLY surviving
-    #                       partitions' entries
-    #
-    # plan_files prunes groups first (driver-side: group count = live
-    # partition count, thousands at most), then seek-reads and
-    # min/max/Bloom-filters only the survivors. Built lazily on first
-    # predicate plan against a tip, atomically replaced (tmp +
-    # os.replace), keyed by the tip manifest's (version, size,
-    # mtime_ns): any new commit changes the tip version and the index
-    # rebuilds; any reader that finds a stale or torn index falls back
-    # to the full-parse path (fail-open, never fail-wrong).
-
-    def _plan_fingerprint(self, vdir: str, version: int) -> list:
-        st = os.stat(os.path.join(vdir, f"{version:08d}.json"))
-        return [version, st.st_size, st.st_mtime_ns]
-
-    @staticmethod
-    def _merge_group_stats(entries: list[dict]) -> dict:
-        """Per-column [min, max] over a partition group -- a column
-        appears ONLY if every entry carries comparable stats for it
-        (missing or mixed-type stats make the bound unprovable, so the
-        group is conservatively kept by omission)."""
-        merged: dict = {}
-        dropped: set = set()
-        for i, e in enumerate(entries):
-            stats = e.get("stats") or {}
-            if i == 0:
-                for c, (lo, hi) in stats.items():
-                    merged[c] = [lo, hi]
-                continue
-            for c in list(merged):
-                if c not in stats:
-                    dropped.add(c)
-                    del merged[c]
-            for c, (lo, hi) in stats.items():
-                if c not in merged:
-                    if i > 0 and c not in dropped:
-                        dropped.add(c)
-                    continue
-                mlo, mhi = merged[c]
-                try:
-                    if lo < mlo:
-                        merged[c][0] = lo
-                    if hi > mhi:
-                        merged[c][1] = hi
-                except TypeError:
-                    del merged[c]
-                    dropped.add(c)
-        return merged
-
-    def _plan_index(
-        self, tdir: str, version: int, branch: str | None
-    ) -> dict | None:
-        """Load (or lazily build) the planning index for ``version``.
-        Serves ONLY the branch tip; historical versions return None and
-        take the full-parse path."""
-        vdir = self._vdir(tdir, branch)
-        try:
-            fp = self._plan_fingerprint(vdir, version)
-        except OSError:
-            return None
-        idx_path = os.path.join(vdir, _PLAN_IDX_FILE)
-        try:
-            with open(idx_path) as f:
-                idx = json.load(f)
-            if idx.get("fingerprint") == fp and os.path.exists(
-                os.path.join(vdir, idx["dat"])
-            ):
-                return idx
-        except (OSError, ValueError, KeyError):
-            pass
-        if version != self._versions(tdir, branch)[-1]:
-            return None
-        return self._plan_index_build(tdir, vdir, version, branch, fp)
-
-    def _plan_index_build(
-        self, tdir: str, vdir: str, version: int, branch: str | None,
-        fp: list,
-    ) -> dict | None:
-        doc = self._manifest_doc(tdir, version, branch)
-        grouped: dict[tuple, list[dict]] = {}
-        for e in doc["files"]:
-            grouped.setdefault(
-                (_part_key(e.get("partition")), e.get("spec", 0)), []
-            ).append(e)
-        dat_name = f"_plan-{uuid.uuid4().hex}.dat"
-        gmeta: list[dict] = []
-        tmp_dat = os.path.join(vdir, f".{dat_name}.tmp")
-        try:
-            off = 0
-            with open(tmp_dat, "wb") as f:
-                for (pk, spec), es in grouped.items():
-                    blob = json.dumps(es, separators=(",", ":")).encode()
-                    f.write(blob)
-                    gmeta.append(
-                        {
-                            # the group's raw partition value (pk is its
-                            # canonical string form, kept for filtering)
-                            "partition": es[0].get("partition"),
-                            "pk": pk,
-                            "spec": spec,
-                            "n": len(es),
-                            "stats": self._merge_group_stats(es),
-                            "offset": off,
-                            "length": len(blob),
-                        }
-                    )
-                    off += len(blob)
-            os.replace(tmp_dat, os.path.join(vdir, dat_name))
-        except OSError:
-            with contextlib.suppress(OSError):
-                os.remove(tmp_dat)
-            return None
-        idx = {
-            "fingerprint": fp,
-            "dat": dat_name,
-            "schema": doc.get("schema"),
-            "physical": doc.get("physical") or {},
-            "n_entries": len(doc["files"]),
-            "groups": gmeta,
-        }
-        tmp = os.path.join(vdir, f".plan-idx-{uuid.uuid4().hex}")
-        try:
-            with open(tmp, "w") as f:
-                json.dump(idx, f)
-            os.replace(tmp, os.path.join(vdir, _PLAN_IDX_FILE))
-        except OSError:
-            with contextlib.suppress(OSError):
-                os.remove(tmp)
-            return None
-        # superseded dats are garbage once the header no longer names
-        # them (a concurrent reader holding an old header fails open)
-        for fn in os.listdir(vdir):
-            if (
-                fn.startswith("_plan-")
-                and fn.endswith(".dat")
-                and fn != dat_name
-            ):
-                with contextlib.suppress(OSError):
-                    os.remove(os.path.join(vdir, fn))
-        return idx
-
-    def _plan_load_groups(
-        self, vdir: str, idx: dict, groups: list[dict]
-    ) -> list[dict]:
-        """Seek-read ONLY the surviving groups' byte ranges."""
-        entries: list[dict] = []
-        with open(os.path.join(vdir, idx["dat"]), "rb") as f:
-            for g in groups:
-                f.seek(g["offset"])
-                entries.extend(json.loads(f.read(g["length"])))
-        self._plan_idx_counters["groups_loaded"] += len(groups)
-        self._plan_idx_counters["entries_loaded"] += len(entries)
-        return entries
 
     def _publish_append(
         self, tdir: str, read_version: int, new_files: list[dict], schema: dict,
@@ -2735,8 +2618,9 @@ class Warehouse:
                 # past ``base``, committing would re-fold the window
                 # (double-counted groups / duplicate appended rows)
                 cur = None
+                vdir = self._vdir(tdir, branch)
                 for pv in reversed(self._versions(tdir, branch)):
-                    pdoc = self._manifest_doc(tdir, pv, branch)
+                    pdoc = txlog.read_version(vdir, pv)
                     if "mv_stamp" in pdoc:
                         cur = pdoc["mv_stamp"]
                         break
@@ -3576,7 +3460,13 @@ class Warehouse:
         """Manifest-level scan planning: the file entries a read with
         these filters will touch (partition pruning + min/max data
         skipping), plus the snapshot's schema. Metadata-only -- the
-        observable pruning surface (Iceberg's planFiles analog)."""
+        observable pruning surface (Iceberg's planFiles analog).
+
+        A selective plan reads the newest checkpoint's header, prunes
+        its partition groups by partition value and by the groups'
+        merged min/max, seek-reads only the surviving groups, and adds
+        the tail's live adds: O(candidate partitions + tail), never the
+        full state."""
         tdir = self._table_dir(ns, table)
         meta = self.table_meta(ns, table)
         versions = self._versions(tdir, branch)
@@ -3588,81 +3478,45 @@ class Warehouse:
             raise ValueError(
                 f"snapshot {version} of {ns}.{table} is unknown or expired"
             )
-        if predicates or partition_filter is not None:
-            # selective plan: partition-grouped index first -- prune
-            # whole partitions from the (small) group table, then parse
-            # and min/max/Bloom-filter ONLY the survivors' entries.
-            # O(candidate partitions), not O(manifest).
-            idx = self._plan_index(tdir, version, branch)
-            if idx is not None:
-                self._plan_idx_counters["idx_plans"] += 1
-                groups = idx["groups"]
-                if partition_filter is not None:
-                    # values are spelled in the CURRENT spec's
-                    # transform; groups written under an earlier spec
-                    # can't be compared and are conservatively kept
-                    cur_spec = meta.get("partition_spec_id", 0)
-                    keep = {_part_key(p) for p in partition_filter}
-                    groups = [
-                        g for g in groups
-                        if g["spec"] != cur_spec or g["pk"] in keep
-                    ]
-                tr = None
-                if predicates:
-                    phys = idx["physical"] or {}
-                    tr = [
-                        (phys.get(c, c), op, v)
-                        for c, op, v in predicates
-                    ]
-                    # group-level stats carry no blooms; omission of a
-                    # column keeps the group (same conservative rule as
-                    # entries)
-                    groups = [
-                        g for g in groups
-                        if _entry_may_match({"stats": g["stats"]}, tr)
-                    ]
-                try:
-                    entries = self._plan_load_groups(
-                        self._vdir(tdir, branch), idx, groups
-                    )
-                except (OSError, ValueError):
-                    # fail-open contract: a concurrent rebuild may
-                    # delete the superseded dat between our header read
-                    # and the seek-read (or leave a torn byte range --
-                    # ValueError covers json decode). Planning must
-                    # never fail-wrong OR fail-stop on index trouble:
-                    # fall through to the full manifest parse and let
-                    # the counter record that the index was useless.
-                    self._plan_idx_counters["idx_fallbacks"] += 1
-                else:
-                    if tr:
-                        entries = self._prune_entries(tdir, entries, tr)
-                    schema = StructType.fromJson(
-                        idx.get("schema") or meta["schema"]
-                    )
-                    return entries, schema
-        doc = self._manifest_doc(tdir, version, branch)
-        entries = doc["files"]
+        if not predicates and partition_filter is None:
+            doc = self._manifest_doc(tdir, version, branch)
+            return doc["files"], StructType.fromJson(
+                doc.get("schema", meta["schema"])
+            )
+        src = txlog.plan_source(self._vdir(tdir, branch), version)
+        groups, tail = src.groups, list(src.adds.values())
         if partition_filter is not None:
             # values are spelled in the CURRENT spec's transform; files
             # written under an earlier spec can't be compared and are
             # conservatively kept (min/max skipping still applies)
             cur_spec = meta.get("partition_spec_id", 0)
             keep = {_part_key(p) for p in partition_filter}
-            entries = [
-                e for e in entries
+            groups = [
+                g for g in groups if g["spec"] != cur_spec or g["pk"] in keep
+            ]
+            tail = [
+                e for e in tail
                 if e.get("spec", 0) != cur_spec
                 or _part_key(e["partition"]) in keep
             ]
+        phys = src.physical or {}
+        tr = None
         if predicates:
             # file stats/blooms are keyed by PHYSICAL column names;
             # translate the (logical) predicate columns via the
-            # snapshot's column mapping before matching
-            phys = self._snapshot_phys(doc, meta)
+            # snapshot's column mapping before matching. Group stats
+            # carry no Blooms; a column a group lacks keeps the group.
             tr = [(phys.get(c, c), op, v) for c, op, v in predicates]
+            groups = [
+                g for g in groups if _entry_may_match({"stats": g["stats"]}, tr)
+            ]
+        loaded = src.load(groups)
+        self._plan_counters["groups_loaded"] += len(groups)
+        self._plan_counters["entries_loaded"] += len(loaded) + len(tail)
+        entries = [e for e in loaded if e["path"] not in src.dropped] + tail
+        if tr:
             entries = self._prune_entries(tdir, entries, tr)
-        schema = StructType.fromJson(doc.get("schema", meta["schema"]))
-        return entries, schema
+        return entries, StructType.fromJson(src.schema or meta["schema"])
 
     @staticmethod
     def _snapshot_phys(doc: dict, meta: dict) -> dict:
@@ -3700,14 +3554,13 @@ class Warehouse:
             ns, table, version, partition_filter, predicates, branch=branch
         )
         tdir = self._table_dir(ns, table)
-        meta = self.table_meta(ns, table)
         if isinstance(version, str):
             version = self._resolve_ref(tdir, version)
         v = version if version is not None else self._versions(tdir, branch)[-1]
-        doc = self._manifest_doc(tdir, v, branch)
-        phys = self._snapshot_phys(doc, meta)
+        st = txlog.state(self._vdir(tdir, branch), v)
         df = self._read_entries(
-            tdir, entries, schema, phys, doc.get("deletes"), meta.get("key")
+            tdir, entries, schema, st.physical or {},
+            list(st.deletes.values()), self.table_meta(ns, table).get("key"),
         )
         if predicates:
             df = df.filter(self._predicate_column(predicates))
@@ -3715,7 +3568,7 @@ class Warehouse:
 
     # -- incremental reads / row-level changelog (Iceberg incremental
     # append scan + table_changes / Delta CDF analog): per-commit deltas
-    # planned from MANIFEST DIFFS alone, so cost scales with each
+    # planned from each commit's LOG ENTRY alone, so cost scales with each
     # commit's own footprint, never with table size --
 
     def _resolve_range(
@@ -3742,23 +3595,16 @@ class Warehouse:
 
     def _commit_diff(
         self, tdir: str, v: int, branch: str | None = None
-    ) -> tuple[list[dict], list[dict], list[dict], str | None]:
-        """File-level delta of commit ``v`` against ``v - 1``:
-        ``(added_data_files, removed_data_files, new_delete_files, op)``.
-        Metadata-only -- two manifest reads and a path-set diff.
+    ) -> tuple[list[dict], list[str], list[dict], str | None]:
+        """File-level delta of commit ``v``, read from its log entry:
+        ``(added_data_files, removed_data_paths, new_delete_files, op)``.
         Dropped DANGLING delete entries are not a data change and are
         ignored."""
-        cur = self._manifest_doc(tdir, v, branch)
-        prev = self._manifest_doc(tdir, v - 1, branch)
-        prev_paths = {e["path"] for e in prev["files"]}
-        cur_paths = {e["path"] for e in cur["files"]}
-        added = [e for e in cur["files"] if e["path"] not in prev_paths]
-        removed = [e for e in prev["files"] if e["path"] not in cur_paths]
-        prev_dels = {d["path"] for d in prev.get("deletes") or []}
-        new_dels = [
-            d for d in cur.get("deletes") or [] if d["path"] not in prev_dels
-        ]
-        return added, removed, new_dels, cur.get("op")
+        d = txlog.delta(self._vdir(tdir, branch), v)
+        return (
+            list(d.get("add", ())), list(d.get("remove", ())),
+            list(d.get("add_deletes", ())), d.get("op"),
+        )
 
     def read_incremental(
         self,
@@ -3772,7 +3618,7 @@ class Warehouse:
         """Rows APPENDED in ``(from_version, to_version]`` -- Iceberg's
         incremental append scan (the backbone of stream-from-table):
         unions exactly the data files each commit in the range added,
-        planned from manifest diffs (no content reads to decide).
+        planned from the commits' log entries (no content reads to decide).
 
         Commits that remove data files or add equality-delete files
         change existing rows and are not expressible as an append
@@ -3865,7 +3711,7 @@ class Warehouse:
         delete(pre-image) + insert(post-image) at the same commit.
 
         Per commit, the delta is computed over TOUCHED FILES ONLY:
-        manifest diff yields added vs removed data files; a new
+        the commit's log entry yields added vs removed data files; a new
         equality-delete file (merge-on-read) resolves to its pre-image
         rows by reading just the prior snapshot's files it can apply to
         (sequence rule + key min/max/Bloom pruning, ghost-aware via the
@@ -3887,17 +3733,11 @@ class Warehouse:
         runs only for commits that actually removed rows. A 10k-commit
         append-only range therefore plans a single scan.
 
-        Driver-side metadata cost over LONG ranges: commits are
-        CLASSIFIED from the ``_commits.idx`` sidecar (one small file
-        read), and the added files of an op="append" run are recovered
-        from the run-END manifest alone by their ``seq`` stamps
-        (appends never remove files, so every file the run added is
-        still listed at its end) -- O(#runs + #DML commits) manifest
-        JSON parses instead of O(#commits), so a 10^5-commit
-        append-mostly history neither scans data NOR grinds the driver
-        through 10^5 JSON parses. A per-commit count cross-check
-        against the index falls back to the manifest diff if any seq
-        attribution looks off (legacy unstamped entries)."""
+        Driver-side metadata cost over LONG ranges: each commit's
+        classification and added files come from its own log entry (a
+        few KB), so a 10^5-commit append-mostly history never rebuilds a
+        full snapshot; only a delete-bearing commit reads its
+        predecessor's state (for pre-image candidates)."""
         tdir = self._table_dir(ns, table)
         meta = self.table_meta(ns, table)
         key = meta.get("key")
@@ -3913,51 +3753,27 @@ class Warehouse:
 
         # segment the range: runs of append-only commits fold together;
         # delete/rewrite commits stay per-commit (their netting needs
-        # commit-local pre-images). op="append" commits are classified
-        # from the index without opening their manifests (entries
-        # resolved lazily per run, below); every other op pays one
-        # manifest diff, exactly as before.
-        idx = {r["version"]: r for r in self._commit_index(tdir, branch)}
-        items: list[tuple] = []  # ("a", v, entries|None) | ("d", ...)
+        # commit-local pre-images)
+        vdir = self._vdir(tdir, branch)
+        items: list[tuple] = []  # ("a", v, entries) | ("c", ...) | ("d", ...)
         for v in rng:
-            if idx[v]["op"] == "append":
-                if idx[v]["n_files"] > idx.get(v - 1, {}).get("n_files", 0):
-                    items.append(("a", v, None))  # lazy: seq-resolved
-                continue  # empty append adds no rows
-            if idx[v]["op"] == "replace":
+            d = txlog.delta(vdir, v)
+            added = list(d.get("add", ()))
+            if d.get("op") == "replace":
                 continue
-            cdoc = self._manifest_doc(tdir, v, branch)
-            if cdoc.get("change_files"):
+            if d.get("op") != "append" and d.get("change_files"):
                 # stored CDF commit: its change set was persisted at
                 # write time -- read it directly, no diff, no netting
                 # shuffle, no pre-image reconstruction
-                items.append(("c", v, cdoc["change_files"]))
+                items.append(("c", v, d["change_files"]))
                 continue
-            added, removed, new_dels, _op = self._commit_diff(tdir, v, branch)
-            if not (added or removed or new_dels):
-                continue
+            removed = list(d.get("remove", ()))
+            new_dels = list(d.get("add_deletes", ()))
             if not removed and not new_dels:
-                items.append(("a", v, added))
+                if added:
+                    items.append(("a", v, added))
             else:
                 items.append(("d", v, added, removed, new_dels))
-
-        def _resolve_run(run: list[tuple]) -> list[tuple]:
-            """[(v, entries|None)] -> [(v, entries)]: one parse of the
-            run-end manifest recovers every lazy member's added files
-            by seq stamp, count-checked against the index."""
-            lazy = [v for v, es in run if es is None]
-            if not lazy:
-                return run
-            by_v: dict[int, list[dict]] = {v: [] for v in lazy}
-            for e in self._manifest(tdir, run[-1][0], branch):
-                s = e.get("seq")
-                if s in by_v:
-                    by_v[s].append(e)
-            for v in lazy:
-                want = idx[v]["n_files"] - idx.get(v - 1, {}).get("n_files", 0)
-                if len(by_v[v]) != want:  # unstamped legacy entries
-                    by_v[v] = self._commit_diff(tdir, v, branch)[0]
-            return [(v, by_v[v] if es is None else es) for v, es in run]
 
         segments: list[tuple] = []
         for it in items:
@@ -3970,10 +3786,6 @@ class Warehouse:
                 segments.append(("cdf", it[1], it[2]))
             else:
                 segments.append(("dml", *it[1:]))
-        segments = [
-            ("append", _resolve_run(seg[1])) if seg[0] == "append" else seg
-            for seg in segments
-        ]
 
         cols = [*schema.fieldNames(), "_change_type", "_commit_version"]
         out: DataFrame | None = None
@@ -4078,9 +3890,11 @@ class Warehouse:
                 ).select(*cols)
                 out = changed if out is None else out.unionByName(changed)
                 continue
-            _tag, v, added, removed, new_dels = seg
+            _tag, v, added, removed_paths, new_dels = seg
             prev_doc = self._manifest_doc(tdir, v - 1, branch)
             prev_deletes = prev_doc.get("deletes")
+            removed_paths = set(removed_paths)
+            removed = [e for e in prev_doc["files"] if e["path"] in removed_paths]
             ins = self._read_files(tdir, added, schema, phys=phys)
             del_parts: list[DataFrame] = []
             if removed:
@@ -4097,7 +3911,6 @@ class Warehouse:
                 if key is None:
                     raise ValueError("equality deletes need a table key")
                 phys_key = (phys or {}).get(key, key)
-                removed_paths = {e["path"] for e in removed}
                 cands = [
                     e
                     for e in prev_doc["files"]
@@ -4125,7 +3938,6 @@ class Warehouse:
                 # position deletes name their target files: pre-images
                 # are the (path, pos)-addressed rows of exactly those
                 # files (ghost-aware via the prior snapshot's deletes)
-                removed_paths = {e["path"] for e in removed}
                 named = {p for d in new_pos for p in d.get("targets") or []}
                 cands = [
                     e
@@ -6192,10 +6004,15 @@ class Warehouse:
         os.makedirs(vdir)
         with open(os.path.join(vdir, "_fork.json"), "w") as f:
             json.dump({"from": v}, f)
-        os.link(
-            os.path.join(self._vdir(tdir), f"{v:08d}.json"),
-            os.path.join(vdir, f"{v:08d}.json"),
-        )
+        # the branch starts at the fork state: main's checkpoint of v
+        # when it has one, else one written now (the branch dir then
+        # replays nothing of main's chain, which main may expire)
+        main_vdir = self._vdir(tdir)
+        try:
+            os.link(txlog.checkpoint_path(main_vdir, v), txlog.checkpoint_path(vdir, v))
+        except FileNotFoundError:
+            txlog.write_checkpoint(vdir, v, txlog.state(main_vdir, v))
+        os.link(txlog.version_path(main_vdir, v), txlog.version_path(vdir, v))
         return v
 
     def list_branches(self, ns: str, table: str) -> list[str]:
@@ -6246,8 +6063,8 @@ class Warehouse:
 
             for v in range(fork + 1, main_tip + 1):
                 try:
-                    same = _sans_ts(self._manifest_doc(tdir, v)) == _sans_ts(
-                        self._manifest_doc(tdir, v, name)
+                    same = _sans_ts(txlog.read_version(self._vdir(tdir), v)) == (
+                        _sans_ts(txlog.read_version(self._vdir(tdir, name), v))
                     )
                 except FileNotFoundError:
                     same = False
@@ -6256,14 +6073,14 @@ class Warehouse:
                         f"main advanced to {main_tip} since branch {name!r} "
                         f"forked at {fork}; cannot fast-forward"
                     ) from None
-        # Replay = the branch manifest VERBATIM (files, schema, deletes,
-        # op, original ts), so hard-link each manifest JSON into main
-        # instead of parse + re-serialize: zero JSON parses however
-        # long the branch (manifests are immutable, and dropping the
-        # branch directory only decrements the link count). link() is
-        # the same CAS _publish uses; main's commit index extends from
-        # the BRANCH's index rows (O(1) sidecar read, rebuilt there if
-        # stale) so timestamp travel stays O(1) after the promote.
+        # Replay = the branch's log entries VERBATIM (actions, schema,
+        # op, original ts): each is a delta against its predecessor, and
+        # main's tip IS the fork, so hard-linking them into main (plus
+        # the branch's checkpoints past the fork) replays the branch
+        # exactly, with zero JSON parses however long the branch. link()
+        # is the same CAS _publish uses; main's commit index extends
+        # from the BRANCH's index rows (O(1) sidecar read, rebuilt there
+        # if stale) so timestamp travel stays O(1) after the promote.
         branch_vdir = self._vdir(tdir, name)
         main_vdir = self._vdir(tdir)
         branch_idx = {
@@ -6274,14 +6091,19 @@ class Warehouse:
                 continue
             try:
                 os.link(
-                    os.path.join(branch_vdir, f"{v:08d}.json"),
-                    os.path.join(main_vdir, f"{v:08d}.json"),
+                    txlog.version_path(branch_vdir, v),
+                    txlog.version_path(main_vdir, v),
                 )
             except FileExistsError as e:
                 raise CommitConflictError(
                     f"main advanced to {v} during fast-forward of "
                     f"{name!r}; cannot continue"
                 ) from e
+            with contextlib.suppress(FileNotFoundError, FileExistsError):
+                os.link(
+                    txlog.checkpoint_path(branch_vdir, v),
+                    txlog.checkpoint_path(main_vdir, v),
+                )
             with open(os.path.join(main_vdir, _COMMIT_IDX), "a") as f:
                 f.write(json.dumps(branch_idx[v]) + "\n")
         new_tip = self._versions(tdir)[-1]
@@ -6555,17 +6377,9 @@ class Warehouse:
         expire = [v for v in versions if v not in keep]
         if not expire:
             return {"expired_versions": [], "removed_files": 0}
-        live = {
-            e["path"]
-            for v in sorted(keep)
-            for e in self._doc_all_entries(tdir, v)
-        }
+        live = self._referenced(tdir, keep)
         for b in self._branches(tdir):
-            live |= {
-                e["path"]
-                for v in self._versions(tdir, b)
-                for e in self._doc_all_entries(tdir, v, b)
-            }
+            live |= self._referenced(tdir, self._versions(tdir, b), b)
         # files registered shallow clones still reference stay live
         # even when every local snapshot referencing them expires
         live |= {
@@ -6575,21 +6389,24 @@ class Warehouse:
         removed = 0
         packs: set[str] = set()
         prefix = os.path.abspath(tdir) + os.sep
+        for rel in sorted(self._referenced(tdir, expire) - live):
+            path = os.path.join(tdir, rel)
+            # a shallow clone's '..'-relative entries BORROW the
+            # source's files -- never this table's to delete (the
+            # reverse of the vacuum footgun: expiring a clone must not
+            # reach into its source's data dir)
+            if not os.path.abspath(path).startswith(prefix):
+                continue
+            packs.add(os.path.join(tdir, _pack_rel(rel)))
+            if os.path.exists(path):
+                os.remove(path)
+                removed += 1
+        # hide the expired versions; their log entries stay on disk only
+        # while a kept version still replays them (no state is rewritten)
+        txlog.expire(self._vdir(tdir), expire, sorted(keep))
         for v in expire:
-            for e in self._doc_all_entries(tdir, v):
-                if e["path"] not in live:
-                    path = os.path.join(tdir, e["path"])
-                    # a shallow clone's '..'-relative entries BORROW the
-                    # source's files -- never this table's to delete
-                    # (the reverse of the vacuum footgun: expiring a
-                    # clone must not reach into its source's data dir)
-                    if not os.path.abspath(path).startswith(prefix):
-                        continue
-                    packs.add(os.path.join(tdir, _pack_rel(e["path"])))
-                    if os.path.exists(path):
-                        os.remove(path)
-                        removed += 1
-            os.remove(os.path.join(tdir, _MANIFEST_DIR, f"{v:08d}.json"))
+            for fn in glob.glob(os.path.join(tdir, MANIFEST_LIST_DIR, f"{v:08d}-*.json")):
+                os.remove(fn)
         # a commit dir's Bloom pack goes with its last data file
         _drop_dead_packs(packs)
         return {"expired_versions": expire, "removed_files": removed}
@@ -6613,17 +6430,10 @@ class Warehouse:
         tdir = self._table_dir(ns, table)
         if not os.path.exists(tdir):
             raise TableNotFoundError(f"{ns}.{table}")
-        live = {
-            os.path.abspath(os.path.join(tdir, e["path"]))
-            for v in self._versions(tdir)
-            for e in self._doc_all_entries(tdir, v)
-        }
+        rel = self._referenced(tdir, self._versions(tdir))
         for b in self._branches(tdir):
-            live |= {
-                os.path.abspath(os.path.join(tdir, e["path"]))
-                for v in self._versions(tdir, b)
-                for e in self._doc_all_entries(tdir, v, b)
-            }
+            rel |= self._referenced(tdir, self._versions(tdir, b), b)
+        live = {os.path.abspath(os.path.join(tdir, p)) for p in rel}
         # WAP staged batches are referenced by no snapshot yet but are
         # NOT orphans: their staging records pin them until published
         # or discarded

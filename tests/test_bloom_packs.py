@@ -5,7 +5,7 @@ Every writer of file entries writes the Bloom bits once, as raw bytes,
 to ``data/<commit_id>/_blooms.bin``; the entry's bloom keeps only
 ``{"type", "m", "k", "off"}``. These tests pin:
 
-- no manifest or plan-index entry carries ``bits``;
+- no log entry or checkpoint carries ``bits``;
 - pack-backed pruning decides exactly as the in-memory ``_build_bloom``
   over the same keys (point lookup, CoW MERGE probe, bulk probe);
 - the pack lifetime: it lives while any data file remains in its
@@ -85,6 +85,7 @@ def _abs(tdir: str, entries) -> list[str]:
 
 
 def test_no_bits_in_manifest_or_plan_index(spark, wh):
+    wh._CHECKPOINT_INTERVAL = 2  # checkpoints among the log's files
     tdir = _table(spark, wh)
     # the other entry writers: MoR MERGE (in-process delete file), CoW
     # MERGE, MoR DELETE (distributed delete file) and compaction
@@ -95,11 +96,11 @@ def test_no_bits_in_manifest_or_plan_index(spark, wh):
     wh.merge_upsert("ns", "t", spark.createDataFrame([(_key(2), "d0", -2)], SCHEMA))
     wh.delete_where("ns", "t", [("id", "=", _key(3))], strategy="mor")
     wh.compact("ns", "t", min_files_per_partition=2)
-    wh.plan_files("ns", "t", predicates=[("id", "=", _key(5))])  # builds the index
     meta_files = glob.glob(os.path.join(tdir, "_v", "*.json")) + glob.glob(
-        os.path.join(tdir, "_v", "_plan-*.dat")
+        os.path.join(tdir, "_v", "*.ckpt")
     )
-    assert any(f.endswith(".dat") for f in meta_files)
+    # the log's version files and at least one checkpoint
+    assert any(f.endswith(".ckpt") for f in meta_files)
     for f in meta_files:
         with open(f, "rb") as fh:
             assert b'"bits"' not in fh.read(), f

@@ -23,11 +23,6 @@ from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse im
     Warehouse,
 )
 
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4).
-# Run everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
-
 SCHEMA = StructType(
     [
         StructField("id", StringType(), False),

@@ -1,15 +1,15 @@
-"""Partition-grouped planning index (VERDICT r9 #3).
+"""Selective planning over the transaction log's checkpoints.
 
-Predicate planning must cost O(candidate partitions), not O(manifest):
-the _plan.idx/_plan-*.dat sidecar pair groups manifest entries by
-partition value with merged min/max stats per group, so a selective
-plan parses ONLY surviving partitions' entries. These tests pin:
+Predicate planning must cost O(candidate partitions), not O(table): a
+checkpoint groups the entries by partition value with merged min/max
+stats per group, so a selective plan parses ONLY surviving partitions'
+entries, plus the commits since the checkpoint. These tests pin:
 
-- result parity: idx-served plans == full-parse plans (paths + schema)
+- result parity: checkpoint plans == full-state plans (paths + schema)
 - the counting invariant: entries parsed == surviving partitions'
-  entries, and zero full-manifest loads on a warm index
-- staleness: a new commit invalidates the fingerprint and rebuilds
-- historical versions fall back to the full parse (idx serves tips)
+  entries, and zero full-state loads
+- a commit after the checkpoint is planned from its log entry
+- historical versions plan from their own checkpoint and tail
 - conservative stats merge: a group with ANY stats-less entry never
   prunes on that column
 """
@@ -22,9 +22,10 @@ import tempfile
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from sample_for_transactional_datalake_using_s3tables_spark.sources import txlog
 from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import (
-    _PLAN_IDX_FILE,
     Warehouse,
+    _entry_may_match,
 )
 
 N_PARTS = 8
@@ -59,6 +60,8 @@ def _entries(n_parts=N_PARTS, files_per_part=FILES_PER_PART, stats=True):
 def wh(spark):
     with tempfile.TemporaryDirectory() as root:
         w = Warehouse(spark, root)
+        # every version checkpointed: version 1's entries sit in groups
+        w._CHECKPOINT_INTERVAL = 1
         w.create_namespace("ns")
         schema = StructType(
             [
@@ -71,6 +74,7 @@ def wh(spark):
         tdir = w._table_dir("ns", "t")
         meta = w.table_meta("ns", "t")
         w._publish(tdir, 1, _entries(), schema=meta["schema"], op="append")
+        w._CHECKPOINT_INTERVAL = 10
         yield w
 
 
@@ -81,6 +85,7 @@ def _paths(entries):
 def test_idx_plan_matches_full_parse(wh):
     tdir = wh._table_dir("ns", "t")
     vdir = wh._vdir(tdir)
+    assert os.path.exists(txlog.checkpoint_path(vdir, 1))
     for preds in (
         [("id", "=", 300_005)],          # one partition
         [("id", "<", 150_000)],          # two partitions
@@ -89,13 +94,8 @@ def test_idx_plan_matches_full_parse(wh):
         [("nope", "=", 1)],              # unknown column -> keep all
     ):
         got, schema = wh.plan_files("ns", "t", predicates=preds)
-        assert os.path.exists(os.path.join(vdir, _PLAN_IDX_FILE))
-        # ground truth: the entry-level filter over the full manifest
+        # ground truth: the entry-level filter over the full state
         doc = wh._manifest_doc(tdir, 1)
-        from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import (
-            _entry_may_match,
-        )
-
         want = [e for e in doc["files"] if _entry_may_match(e, preds)]
         assert _paths(got) == _paths(want), preds
         assert schema is not None
@@ -108,10 +108,8 @@ def test_idx_plan_partition_filter_matches(wh):
 
 
 def test_counting_invariant_entries_parsed(wh, monkeypatch):
-    """Warm-index selective plan: entries parsed == surviving
-    partitions' entries; ZERO full-manifest loads."""
-    # warm the index
-    wh.plan_files("ns", "t", predicates=[("id", "=", 1)])
+    """Selective plan: entries parsed == surviving partitions' entries;
+    ZERO full-state loads."""
     calls = {"n": 0}
     orig = Warehouse._manifest_doc
 
@@ -120,30 +118,24 @@ def test_counting_invariant_entries_parsed(wh, monkeypatch):
         return orig(self, tdir, version, branch)
 
     monkeypatch.setattr(Warehouse, "_manifest_doc", counting)
-    wh._plan_idx_counters.update(
-        groups_loaded=0, entries_loaded=0, idx_plans=0
-    )
+    monkeypatch.setattr(txlog, "read_checkpoint", None)  # no full load
+    wh._plan_counters.update(groups_loaded=0, entries_loaded=0)
     # partition-disjoint id ranges: this predicate survives exactly one
     # partition group
     got, _ = wh.plan_files("ns", "t", predicates=[("id", "=", 300_005)])
-    assert calls["n"] == 0, "warm idx plan must not reload the manifest"
-    assert wh._plan_idx_counters["idx_plans"] == 1
-    assert wh._plan_idx_counters["groups_loaded"] == 1
-    assert wh._plan_idx_counters["entries_loaded"] == FILES_PER_PART
+    assert calls["n"] == 0, "a selective plan must not build the full state"
+    assert wh._plan_counters["groups_loaded"] == 1
+    assert wh._plan_counters["entries_loaded"] == FILES_PER_PART
     assert len(got) >= 1
     assert all(e["partition"] == "d3" for e in got)
 
 
 def test_idx_rebuilds_after_commit(wh):
+    """A commit after the checkpoint is planned from its log entry (the
+    checkpoint is not rebuilt per commit)."""
     tdir = wh._table_dir("ns", "t")
     meta = wh.table_meta("ns", "t")
-    wh.plan_files("ns", "t", predicates=[("id", "=", 1)])
-    vdir = wh._vdir(tdir)
-    import json
-
-    with open(os.path.join(vdir, _PLAN_IDX_FILE)) as f:
-        fp1 = json.load(f)["fingerprint"]
-    # new commit: one more partition
+    # new commit: one more partition, and one file of d3 dropped
     extra = [
         {
             "path": "data/day=d9/fx.parquet",
@@ -155,17 +147,22 @@ def test_idx_rebuilds_after_commit(wh):
         }
     ]
     doc = wh._manifest_doc(tdir, 1)
+    gone = "data/day=d3/f00150.parquet"
     wh._publish(
-        tdir, 2, doc["files"] + extra, schema=meta["schema"], op="append"
+        tdir, 2, [e for e in doc["files"] if e["path"] != gone] + extra,
+        schema=meta["schema"], op="append",
     )
+    vdir = wh._vdir(tdir)
+    assert not os.path.exists(txlog.checkpoint_path(vdir, 2))
+    assert txlog.read_version(vdir, 2)["add"] == extra
     got, _ = wh.plan_files("ns", "t", predicates=[("id", "=", 10**7)])
     assert _paths(got) == ["data/day=d9/fx.parquet"]
-    with open(os.path.join(vdir, _PLAN_IDX_FILE)) as f:
-        fp2 = json.load(f)["fingerprint"]
-    assert fp1 != fp2
+    got, _ = wh.plan_files("ns", "t", partition_filter=["d3"])
+    assert len(got) == FILES_PER_PART - 1 and gone not in _paths(got)
 
 
 def test_historical_version_falls_back(wh):
+    """A historical version plans from its own checkpoint and tail."""
     tdir = wh._table_dir("ns", "t")
     meta = wh.table_meta("ns", "t")
     doc = wh._manifest_doc(tdir, 1)
@@ -173,11 +170,11 @@ def test_historical_version_falls_back(wh):
         tdir, 2, doc["files"][: FILES_PER_PART], schema=meta["schema"],
         op="overwrite",
     )
-    # time-traveled selective plan: correct, no idx requirement
+    # time-traveled selective plan: correct at either version
     got, _ = wh.plan_files(
         "ns", "t", version=1, predicates=[("id", "=", 300_005)]
     )
-    assert all(e["partition"] == "d3" for e in got)
+    assert got and all(e["partition"] == "d3" for e in got)
     got2, _ = wh.plan_files("ns", "t", version=2, predicates=[("v", ">=", 0)])
     assert len(got2) == FILES_PER_PART
 
@@ -187,6 +184,7 @@ def test_statsless_entry_keeps_group_column(spark):
     bound: the group must be KEPT for any predicate on it."""
     with tempfile.TemporaryDirectory() as root:
         w = Warehouse(spark, root)
+        w._CHECKPOINT_INTERVAL = 1
         w.create_namespace("ns")
         schema = StructType([StructField("id", LongType(), False)])
         w.create_table("ns", "t", schema, key="id")
@@ -205,7 +203,7 @@ def test_statsless_entry_keeps_group_column(spark):
 
 
 def test_merge_group_stats_rules():
-    m = Warehouse._merge_group_stats
+    m = txlog.merge_group_stats
     assert m([{"stats": {"a": [1, 5]}}, {"stats": {"a": [3, 9]}}]) == {
         "a": [1, 9]
     }
@@ -221,49 +219,3 @@ def test_merge_group_stats_rules():
     assert m([{"stats": {"a": [1, 5]}}, {"stats": {"a": ["x", "y"]}}]) == {}
     # stats-less entry drops everything
     assert m([{"stats": {"a": [1, 5]}}, {}]) == {}
-
-
-def test_dat_deleted_mid_plan_falls_back(wh, monkeypatch):
-    """Fail-open contract under concurrent rebuilds (VERDICT r10 #4):
-    if the dat vanishes between the header read and the seek-read (a
-    concurrent rebuild GC'd it), planning must fall back to the full
-    manifest parse -- same result, counter recorded -- never raise and
-    never return a partial plan."""
-    preds = [("id", "<", 150_000)]
-    want, _ = wh.plan_files("ns", "t", predicates=preds)  # builds idx
-    vdir = wh._vdir(wh._table_dir("ns", "t"))
-
-    real = Warehouse._plan_load_groups
-
-    def sabotage(self, vdir_, idx, groups):
-        # simulate the rebuild race: header named a dat that is gone
-        # by the time we open it
-        os.remove(os.path.join(vdir_, idx["dat"]))
-        return real(self, vdir_, idx, groups)
-
-    monkeypatch.setattr(Warehouse, "_plan_load_groups", sabotage)
-    before = wh._plan_idx_counters["idx_fallbacks"]
-    got, schema = wh.plan_files("ns", "t", predicates=preds)
-    assert _paths(got) == _paths(want)
-    assert schema is not None
-    assert wh._plan_idx_counters["idx_fallbacks"] == before + 1
-    # next plan rebuilds the sidecar and serves from the index again
-    monkeypatch.setattr(Warehouse, "_plan_load_groups", real)
-    again, _ = wh.plan_files("ns", "t", predicates=preds)
-    assert _paths(again) == _paths(want)
-
-
-def test_torn_dat_read_falls_back(wh, monkeypatch):
-    """A torn/garbage byte range (ValueError from json) also fails open
-    to the full parse instead of failing the plan."""
-    preds = [("id", "=", 300_005)]
-    want, _ = wh.plan_files("ns", "t", predicates=preds)
-
-    def garbage(self, vdir_, idx, groups):
-        raise ValueError("torn read")
-
-    monkeypatch.setattr(Warehouse, "_plan_load_groups", garbage)
-    before = wh._plan_idx_counters["idx_fallbacks"]
-    got, _ = wh.plan_files("ns", "t", predicates=preds)
-    assert _paths(got) == _paths(want)
-    assert wh._plan_idx_counters["idx_fallbacks"] == before + 1

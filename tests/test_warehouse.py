@@ -1416,6 +1416,10 @@ class TestCloneMaintenanceCost:
         import sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse as whmod
 
         wh, S = self._mk(spark, tmp_path)
+        # a checkpoint per version: the clone's '..'-relative entries sit
+        # in its first log entry AND in every checkpoint, so the rebase
+        # stages several files
+        wh._CHECKPOINT_INTERVAL = 1
         wh.clone_table("n", "src", "n", "dev")
         for i in range(3):
             wh.insert(
@@ -1424,35 +1428,37 @@ class TestCloneMaintenanceCost:
                 spark.createDataFrame([(f"c{i}", "d0", i)], S).coalesce(1),
             )
         # fail inside the stage loop: os.replace of staged temps only
-        # happens in the swap pass, so NO manifest may change
+        # happens in the swap pass, so NO log file may change
         import os as _os
 
         dev_dir = wh._table_dir("n", "dev")
         mdir = _os.path.join(dev_dir, "_v")
         before = {
-            fn: open(_os.path.join(mdir, fn)).read()
+            fn: open(_os.path.join(mdir, fn), "rb").read()
             for fn in _os.listdir(mdir)
-            if fn.endswith(".json")
+            if fn.endswith((".json", ".ckpt"))
         }
         calls = {"n": 0}
-        orig_dump = whmod.json.dump
+        orig_dumps = whmod.json.dumps
 
-        def failing_dump(obj, fh, **kw):
-            if isinstance(obj, dict) and "files" in obj:
+        def failing_dumps(obj, **kw):
+            # a version file or a checkpoint header being staged
+            if isinstance(obj, dict) and "version" in obj:
                 calls["n"] += 1
                 if calls["n"] >= 2:
                     raise OSError("disk full mid-stage")
-            return orig_dump(obj, fh, **kw)
+            return orig_dumps(obj, **kw)
 
-        monkeypatch.setattr(whmod.json, "dump", failing_dump)
+        monkeypatch.setattr(whmod.json, "dumps", failing_dumps)
         with pytest.raises(OSError, match="disk full"):
             wh.rename_table("n", "dev", "n", "dev2")
         monkeypatch.undo()
+        assert calls["n"] == 2
         mdir2 = _os.path.join(wh._table_dir("n", "dev2"), "_v")
         after = {
-            fn: open(_os.path.join(mdir2, fn)).read()
+            fn: open(_os.path.join(mdir2, fn), "rb").read()
             for fn in _os.listdir(mdir2)
-            if fn.endswith(".json")
+            if fn.endswith((".json", ".ckpt"))
         }
         assert before == after, "manifests mutated during failed stage pass"
         # recovery: re-running the rebase from the new location heals
@@ -1470,6 +1476,7 @@ class TestCloneMaintenanceCost:
         import sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse as whmod
 
         wh, S = self._mk(spark, tmp_path)
+        wh._CHECKPOINT_INTERVAL = 1  # several log files to swap
         wh.clone_table("n", "src", "n", "dev")
         for i in range(3):
             wh.insert(
@@ -1481,8 +1488,8 @@ class TestCloneMaintenanceCost:
         orig_replace = _os.replace
 
         def failing_replace(a, b):
-            # fail the SECOND manifest swap (first one lands)
-            if "_v" in b and b.endswith(".json"):
+            # fail the SECOND log-file swap (first one lands)
+            if "_v" in b and b.endswith((".json", ".ckpt")):
                 calls["n"] += 1
                 if calls["n"] >= 2:
                     raise OSError("disk full mid-swap")
