@@ -52,10 +52,11 @@ dispatch on (NoSuchNamespaceException, NoSuchTableException,
 AlreadyExistsException, CommitFailedException).
 
 Scale note: the facade is metadata-plane only -- each response is
-O(snapshots) JSON served from the commit index sidecar (O(1) file
-opens), never a data-file walk; at production scale this layer is
-stateless and horizontally shardable because every mutation funnels
-into the warehouse's link() CAS.
+O(snapshots) JSON served from the header line of each version file
+(one short read per snapshot, never the commit's actions or a data-file
+walk); at production scale this layer is stateless and horizontally
+shardable because every mutation funnels into the warehouse's link()
+CAS.
 """
 
 from __future__ import annotations
@@ -1340,14 +1341,13 @@ class IcebergRestCatalogServer:
         )
 
     def _table_uuid(self, ns: str, tbl: str, meta: dict) -> str:
-        """Deterministic v5 UUID from the table path + creation commit
-        wall clock: stable across loads, changes when the table is
-        dropped and re-created (the semantics clients CAS on)."""
-        tdir = self.wh._table_dir(ns, tbl)
-        idx = self.wh._commit_index(tdir)
-        created = idx[0].get("ts") if idx else None
-        return str(
-            uuid.uuid5(uuid.NAMESPACE_URL, f"{tdir}@{created}")
+        """The UUID stamped into the table meta at creation (Iceberg's
+        ``table-uuid``): stable across loads, commits and snapshot
+        expiry, new when the table is dropped and re-created (the
+        semantics clients CAS on). A table created before the stamp
+        gets a v5 UUID of its path."""
+        return meta.get("table_uuid") or str(
+            uuid.uuid5(uuid.NAMESPACE_URL, self.wh._table_dir(ns, tbl))
         )
 
     def _manifest_list(self, tdir: str, v: int) -> str:

@@ -737,7 +737,7 @@ class WarehouseSQL:
         INCREMENTAL when provably safe, full recompute otherwise. Two
         incremental shapes, both requiring (a) exactly ONE source table
         and (b) every commit that source took since the watermark to be
-        a pure APPEND (classified from the _commits.idx sidecar,
+        a pure APPEND (classified from each commit's log header line,
         metadata-only):
 
         - **row-local append**: the analyzed plan has no aggregate/join/
@@ -888,55 +888,14 @@ class WarehouseSQL:
         st["incremental"] = False
         return st
 
-    def _mv_append_window(self, ns, name, refs):
-        """(source_ref, from_version, tip_version) when the refresh
+    def _mv_window(self, ns, name, refs):
+        """(source_ref, from_version, tip_version, ops) when the refresh
         window is incrementally coverable AT ALL: exactly one source,
         a prior refresh watermark against the same source, storage
-        materialized, and every source commit since the watermark a
-        pure APPEND (classified from the _commits.idx sidecar,
-        metadata-only). None means only a full recompute is safe."""
-        doc = self.wh.mv_doc(ns, name)
-        wm = doc.get("watermarks")
-        storage = Warehouse.mv_storage_table(name)
-        if (
-            wm is None
-            or len(wm) != 1
-            or set(refs) != set(wm)
-            or storage not in self.wh.list_tables(ns)
-        ):
-            return None
-        (src_ref, from_v), = wm.items()
-        s_ns, s_tbl = src_ref.split(".", 1)
-        tip = self.wh.current_version(s_ns, s_tbl)
-        if tip == from_v:
-            return None  # already fresh: nothing to fold in
-        idx = {
-            r["version"]: r
-            for r in self.wh._commit_index(self.wh._table_dir(s_ns, s_tbl))
-        }
-        if any(
-            idx.get(v, {}).get("op") != "append"
-            for v in range(from_v + 1, tip + 1)
-        ):
-            return None  # a delete/rewrite landed: only full is correct
-        return src_ref, from_v, tip
-
-    # commit ops the delete-folding aggregate merge can cover: appends
-    # and row-level DML (the changelog yields their exact insert/delete
-    # row sets); "replace" (compaction/Z-order) changes no rows and is
-    # skipped by stamp. Anything else -- overwrite (O(table) delta by
-    # construction), rollback/cherrypick, spec/schema swaps, clones --
-    # forces the full recompute.
-    _MV_CDF_OPS = frozenset({"append", "replace", "merge", "delete",
-                             "update"})
-
-    def _mv_change_window(self, ns, name, refs):
-        """(src_ref, from_v, tip, pure_append) when the refresh window
-        is coverable by the aggregate merge at all: same gates as
-        _mv_append_window except row-level DML commits are allowed
-        (``pure_append=False``) -- the caller folds their changelog
-        deletes as negative partials when the storage carries the CDF
-        partials. None means only a full recompute is safe."""
+        materialized, and the source moved since. ``ops`` is the set of
+        the window's commit ops (classified from each commit's log
+        header line, metadata-only; None for an expired commit). None
+        means only a full recompute is safe."""
         doc = self.wh.mv_doc(ns, name)
         wm = doc.get("watermarks")
         storage = Warehouse.mv_storage_table(name)
@@ -959,9 +918,37 @@ class WarehouseSQL:
         ops = {
             idx.get(v, {}).get("op") for v in range(from_v + 1, tip + 1)
         }
-        if not ops <= self._MV_CDF_OPS:
+        return src_ref, from_v, tip, ops
+
+    def _mv_append_window(self, ns, name, refs):
+        """(source_ref, from_version, tip_version) when every source
+        commit of the :meth:`_mv_window` is a pure APPEND; None means
+        only a full recompute is safe."""
+        win = self._mv_window(ns, name, refs)
+        if win is None or win[3] != {"append"}:
+            return None  # a delete/rewrite landed: only full is correct
+        return win[:3]
+
+    # commit ops the delete-folding aggregate merge can cover: appends
+    # and row-level DML (the changelog yields their exact insert/delete
+    # row sets); "replace" (compaction/Z-order) changes no rows and is
+    # skipped by stamp. Anything else -- overwrite (O(table) delta by
+    # construction), rollback/cherrypick, spec/schema swaps, clones --
+    # forces the full recompute.
+    _MV_CDF_OPS = frozenset({"append", "replace", "merge", "delete",
+                             "update"})
+
+    def _mv_change_window(self, ns, name, refs):
+        """(src_ref, from_v, tip, pure_append) when the refresh window
+        is coverable by the aggregate merge at all: the
+        :meth:`_mv_window` gates, with row-level DML commits allowed
+        (``pure_append=False``) -- the caller folds their changelog
+        deletes as negative partials when the storage carries the CDF
+        partials. None means only a full recompute is safe."""
+        win = self._mv_window(ns, name, refs)
+        if win is None or not win[3] <= self._MV_CDF_OPS:
             return None
-        return src_ref, from_v, tip, ops <= {"append", "replace"}
+        return (*win[:3], win[3] <= {"append", "replace"})
 
     def _mv_insert_delta(self, src_ref: str, from_v: int, tip: int):
         """The INSERT rows the source appended in (from_v, tip] -- the

@@ -1,20 +1,25 @@
 """Table transaction log: per-version action deltas plus partition-grouped
 checkpoints (Delta Lake's log, PAPERS.md VLDB 2020 §3, on a local file
-system). Both ``Warehouse`` and the stream source read tables through it.
+system). It is the table's only metadata store: ``Warehouse`` and the
+stream source read tables, history and idempotence ledgers through it.
 
 A table's version dir (``_v`` on main, ``_v@<branch>`` on a branch) holds:
 
-- ``<v:08d>.json``: commit ``v``'s actions only, published once by an
-  ``os.link`` CAS (the link fails if the version exists). Keys:
-  ``version``, ``ts``, ``op``; ``add`` (file entries the commit adds or
-  changes) and ``remove`` (paths it drops); ``add_deletes`` and
-  ``remove_deletes``, the same for merge-on-read delete files; the
-  commit's ``change_files``, ``txn``, ``copied`` and ``mv_stamp`` when it
-  has them; ``schema`` and ``physical`` only when the commit changes them.
+- ``<v:08d>.json``: commit ``v``, published once by an ``os.link`` CAS
+  (the link fails if the version exists), as two JSON lines. Line 1,
+  the header: ``version``, ``ts``, ``op``; ``txn``, ``copied`` and
+  ``mv_stamp`` when the commit has them; ``schema`` and ``physical``
+  only when it changes them; ``summary``, Iceberg's snapshot summary
+  totals of the new state. Line 2, the actions: ``add`` (file entries
+  the commit adds or changes) and ``remove`` (paths it drops);
+  ``add_deletes`` and ``remove_deletes``, the same for merge-on-read
+  delete files; its ``change_files``. History (:func:`commit_info`)
+  parses line 1 only; :func:`read_version` merges both.
 - ``<v:08d>.ckpt``: the full state after version ``v`` in the planning
   layout. One JSON header line ``{version, schema, physical, deletes,
-  commit, n_entries, groups}`` (``commit``: version ``v``'s own commit
-  fields), where each group is one (partition, spec) with its
+  commit, txns, copied, n_entries, groups}`` (``commit``: version
+  ``v``'s own commit fields; ``txns``/``copied``: the :class:`State`
+  ledgers), where each group is one (partition, spec) with its
   merged per-column min/max ``stats`` and the ``offset``/``length`` of its
   entries, then one compact JSON array of entries per group. The writer
   adds it after the CAS (tmp + ``os.replace``) once ``interval`` commits
@@ -25,13 +30,15 @@ A table's version dir (``_v`` on main, ``_v@<branch>`` on a branch) holds:
   :func:`versions`.
 
 A version file holding ``files`` (the earlier full-manifest layout) is its
-own checkpoint, so tables written before the log read unchanged.
+own checkpoint, and a one-line version file (written before the header
+line) reads whole, so tables written before the log read unchanged.
 
 The state of version ``v`` is the newest checkpoint at or below ``v`` plus
-a replay of the tail. States are memoized in a small LRU; an entry is used
-only while every file it was built from keeps its identity (inode, size,
-mtime), and it is never mutated, so callers get fresh containers from
-:func:`doc` and must not mutate a :class:`State` they read.
+a replay of the tail, which carries the ledgers over expired commits too.
+States are memoized in a small LRU; an entry is used only while every file
+it was built from keeps its identity (inode, size, mtime), and it is never
+mutated, so callers get fresh containers from :func:`doc` and must not
+mutate a :class:`State` they read.
 """
 
 from __future__ import annotations
@@ -51,6 +58,9 @@ NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 EXPIRED = "_expired.json"
 # per-commit fields: they describe commit v itself and never carry over
 COMMIT_KEYS = ("ts", "op", "txn", "copied", "change_files", "mv_stamp")
+# version-file header keys besides ``version``
+HEADER_KEYS = ("ts", "op", "txn", "copied", "mv_stamp", "schema", "physical",
+               "summary")
 _MEMO_STATES = 16
 _MEMO_HEADERS = 64
 
@@ -70,7 +80,9 @@ def checkpoint_path(vdir: str, v: int) -> str:
 
 class State(NamedTuple):
     """A version's table state. ``files``/``deletes`` map path -> entry;
-    ``commit`` holds the version's own COMMIT_KEYS; ``depth`` and ``tail``
+    ``commit`` holds the version's own COMMIT_KEYS; the ledgers ``txns``
+    (app -> highest ``txn`` version) and ``copied`` (COPY INTO source
+    paths) cover every commit up to the version; ``depth`` and ``tail``
     count the commits and added entries replayed since the last
     checkpoint; ``chain`` is the identity of every file it was built from."""
 
@@ -79,12 +91,14 @@ class State(NamedTuple):
     schema: dict | None
     physical: dict | None
     commit: dict
+    txns: dict
+    copied: frozenset
     depth: int
     tail: int
     chain: tuple
 
 
-_EMPTY = State({}, {}, None, None, {}, 0, 0, ())
+_EMPTY = State({}, {}, None, None, {}, {}, frozenset(), 0, 0, ())
 _lock = threading.Lock()
 _states: OrderedDict = OrderedDict()  # (vdir, v) -> State
 _headers: OrderedDict = OrderedDict()  # file identity -> (header, data start)
@@ -97,12 +111,63 @@ def _ident_of(path: str, st) -> tuple:
 def _read(path: str) -> tuple[dict, tuple]:
     with open(path, "rb") as f:
         ident = _ident_of(path, os.fstat(f.fileno()))
-        return json.loads(f.read()), ident
+        raw = f.read()
+    head, _, acts = raw.partition(b"\n")
+    doc = json.loads(head)
+    if acts:
+        doc.update(json.loads(acts))
+    return doc, ident
 
 
 def read_version(vdir: str, v: int) -> dict:
-    """The raw JSON of version ``v``'s file (a delta, or a legacy full doc)."""
+    """Version ``v``'s file, header and actions merged."""
     return _read(version_path(vdir, v))[0]
+
+
+def header(vdir: str, v: int) -> dict:
+    """Version ``v``'s header line alone (a one-line file reads whole)."""
+    with open(version_path(vdir, v), "rb") as f:
+        return json.loads(f.readline())
+
+
+def version_bytes(doc: dict) -> bytes:
+    """``doc`` as a version file: header line, then actions line."""
+    head = {k: doc[k] for k in ("version", *HEADER_KEYS) if k in doc}
+    acts = {k: val for k, val in doc.items() if k not in head}
+    sep = (",", ":")
+    return (json.dumps(head, separators=sep) + "\n"
+            + json.dumps(acts, separators=sep)).encode()
+
+
+def summary(files, deletes) -> dict:
+    """Iceberg's snapshot summary totals of a state's entries."""
+    files = list(files)
+    return {
+        "n_files": len(files),
+        "records": sum(e.get("records", 0) for e in files),
+        "bytes": sum(e.get("bytes", 0) for e in files),
+        "n_partitions": len(
+            {(e.get("spec", 0), part_key(e.get("partition"))) for e in files}
+        ),
+        "n_deletes": len(deletes),
+    }
+
+
+def commit_info(vdir: str, v: int) -> dict:
+    """Commit ``v``'s history row from its header line: ``version``,
+    ``ts``, ``op``, ``txn`` when stamped, and the summary totals (from
+    the state for a file written before the header carried them)."""
+    head = header(vdir, v)
+    row = {"version": v, "ts": head.get("ts", 0.0),
+           "op": head.get("op") or "append"}
+    if head.get("txn"):
+        row["txn"] = head["txn"]
+    if "summary" in head:
+        row.update(head["summary"])
+    else:
+        st = state(vdir, v)
+        row.update(summary(st.files.values(), st.deletes))
+    return row
 
 
 def _memo_get(vdir: str, v: int) -> State | None:
@@ -157,9 +222,8 @@ def hidden(vdir: str) -> set[int]:
 
 def versions(vdir: str) -> list[int]:
     """Live versions of a version dir, oldest first: every version file
-    but the hidden ones. The dir also holds checkpoints, the commit index,
-    a branch's ``_fork.json`` and staged-batch drafts; none parse as a
-    version."""
+    but the hidden ones. The dir also holds checkpoints, a branch's
+    ``_fork.json`` and staged-batch drafts; none parse as a version."""
     names = os.listdir(vdir)
     vs = _numbered(names, ".json")
     if EXPIRED in names:
@@ -224,6 +288,7 @@ def checkpoint_bytes(v: int, st: State) -> bytes:
     head = {
         "version": v, "schema": st.schema, "physical": st.physical,
         "deletes": list(st.deletes.values()), "commit": st.commit,
+        "txns": st.txns, "copied": sorted(st.copied),
         "n_entries": len(st.files), "groups": groups,
     }
     return json.dumps(head, separators=(",", ":")).encode() + b"\n" + b"".join(blobs)
@@ -288,6 +353,18 @@ def read_checkpoint(path: str) -> tuple[dict, list[dict], tuple]:
     return head, entries, ident
 
 
+def checkpoint_state(path: str) -> State:
+    """A checkpoint as a base state."""
+    head, entries, ident = read_checkpoint(path)
+    return State(
+        {e["path"]: e for e in entries},
+        {d["path"]: d for d in head.get("deletes") or ()},
+        head.get("schema"), head.get("physical") or None,
+        head.get("commit") or {}, head.get("txns") or {},
+        frozenset(head.get("copied") or ()), 0, 0, (ident,),
+    )
+
+
 # -- replay ----------------------------------------------------------------
 
 
@@ -295,13 +372,25 @@ def _commit_of(doc: dict) -> dict:
     return {k: doc[k] for k in COMMIT_KEYS if k in doc}
 
 
+def _ledgers(txns: dict, copied: frozenset, doc: dict) -> tuple[dict, frozenset]:
+    """The ledgers after commit ``doc`` (fresh when it adds to them)."""
+    if doc.get("txn"):
+        app, ver = doc["txn"]
+        if app not in txns or ver > txns[app]:
+            txns = {**txns, app: ver}
+    if doc.get("copied"):
+        copied = copied.union(doc["copied"])
+    return txns, copied
+
+
 def _from_full(doc: dict, ident: tuple) -> State:
-    """A legacy full-manifest version file as a base state."""
+    """A legacy full-manifest version file as a base state (ledgers: its
+    own stamps only)."""
     return State(
         {e["path"]: e for e in doc["files"]},
         {d["path"]: d for d in doc.get("deletes") or ()},
         doc.get("schema"), doc.get("physical") or None, _commit_of(doc),
-        0, 0, (ident,),
+        *_ledgers({}, frozenset(), doc), 0, 0, (ident,),
     )
 
 
@@ -332,6 +421,7 @@ def _walk(vdir: str, v: int, use_memo: bool):
 def _replay(base: State, deltas: list[tuple[dict, tuple]]) -> State:
     files, dels = dict(base.files), dict(base.deletes)
     schema, phys, tail = base.schema, base.physical, base.tail
+    txns, copied = base.txns, base.copied
     for doc, _ in deltas:
         for p in doc.get("remove", ()):
             files.pop(p, None)
@@ -346,8 +436,9 @@ def _replay(base: State, deltas: list[tuple[dict, tuple]]) -> State:
         if "physical" in doc:
             phys = doc["physical"]
         tail += len(doc.get("add", ()))
+        txns, copied = _ledgers(txns, copied, doc)
     return State(
-        files, dels, schema, phys, _commit_of(deltas[-1][0]),
+        files, dels, schema, phys, _commit_of(deltas[-1][0]), txns, copied,
         base.depth + len(deltas), tail,
         base.chain + tuple(i for _, i in deltas),
     )
@@ -360,17 +451,12 @@ def state(vdir: str, v: int) -> State:
         return st
     (kind, base), deltas = _walk(vdir, v, use_memo=True)
     if kind == "ckpt":
-        head, entries, ident = read_checkpoint(base)
-        chain = (ident,)
+        base = checkpoint_state(base)
         if not deltas:  # v's own checkpoint: it holds v's commit fields
             vpath = version_path(vdir, v)
-            chain += (_ident_of(vpath, os.stat(vpath)),)
-        base = State(
-            {e["path"]: e for e in entries},
-            {d["path"]: d for d in head.get("deletes") or ()},
-            head.get("schema"), head.get("physical") or None,
-            head.get("commit") or {}, 0, 0, chain,
-        )
+            base = base._replace(
+                chain=base.chain + (_ident_of(vpath, os.stat(vpath)),)
+            )
     st = _replay(base, deltas) if deltas else base
     _memo_put(vdir, v, st)
     return st
@@ -439,10 +525,10 @@ def publish(
     schema: dict | None, physical: dict | None, commit: dict,
     interval: int, max_tail: int,
 ) -> dict:
-    """Publish version ``version`` whose full state is given: writes only
-    its actions against version ``version - 1`` and links them into place
-    (``FileExistsError`` when the version exists: the CAS lost). Then adds
-    a checkpoint when due. Returns the published version file's JSON."""
+    """Publish version ``version`` whose full state is given: writes its
+    header and its actions against version ``version - 1`` and links them
+    into place (``FileExistsError`` when the version exists: the CAS
+    lost). Then adds a checkpoint when due. Returns the published doc."""
     base = state(vdir, version - 1) if version > 0 else _EMPTY
     new_files = {e["path"]: e for e in files}
     new_dels = {d["path"]: d for d in deletes or ()}
@@ -450,10 +536,11 @@ def publish(
     doc = {"version": version}
     doc.update({k: v for k, v in commit.items() if v is not None})
     doc.update(_diff(base, new_files, new_dels, schema, physical))
+    doc["summary"] = summary(new_files.values(), new_dels)
     target = version_path(vdir, version)
     tmp = os.path.join(vdir, f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
+    with open(tmp, "wb") as f:
+        f.write(version_bytes(doc))
     try:
         os.link(tmp, target)
     finally:
@@ -461,6 +548,7 @@ def publish(
     ident = _ident_of(target, os.stat(target))
     st = State(
         new_files, new_dels, schema, physical, _commit_of(doc),
+        *_ledgers(base.txns, base.copied, doc),
         base.depth + 1, base.tail + len(doc.get("add", ())),
         base.chain + (ident,),
     )
@@ -498,37 +586,28 @@ def plan_source(vdir: str, v: int) -> PlanSource:
     if kind == "ckpt":
         head, start, _ = checkpoint_header(base)
         groups = head["groups"]
-        dels = {d["path"]: d for d in head.get("deletes") or ()}
-        schema, phys = head.get("schema"), head.get("physical") or None
 
         def load(gs, path=base, start=start):
             return load_groups(path, start, gs)
+        base = _EMPTY._replace(
+            deletes={d["path"]: d for d in head.get("deletes") or ()},
+            schema=head.get("schema"), physical=head.get("physical") or None,
+        )
     else:
         groups = group_entries(base.files.values())
-        dels = dict(base.deletes)
-        schema, phys = base.schema, base.physical
 
         def load(gs):
             return [e for g in gs for e in g["entries"]]
-    adds: dict = {}
-    dropped: set = set()
-    for d, _ in deltas:
-        for p in d.get("remove", ()):
-            adds.pop(p, None)
-            dropped.add(p)
-        for e in d.get("add", ()):
-            adds[e["path"]] = e
-            dropped.add(e["path"])
-        for p in d.get("remove_deletes", ()):
-            dels.pop(p, None)
-        for x in d.get("add_deletes", ()):
-            dels[x["path"]] = x
-        if "schema" in d:
-            schema = d["schema"]
-        if "physical" in d:
-            phys = d["physical"]
+        base = base._replace(files={})
+    # the tail replayed onto a base without entries: its live adds
+    tip = _replay(base, deltas) if deltas else base
+    dropped = {
+        p for d, _ in deltas
+        for p in (*d.get("remove", ()), *(e["path"] for e in d.get("add", ())))
+    }
     return PlanSource(
-        groups, load, adds, dropped, list(dels.values()), schema, phys
+        groups, load, tip.files, dropped, list(tip.deletes.values()),
+        tip.schema, tip.physical,
     )
 
 

@@ -57,7 +57,6 @@ from . import txlog
 from .txlog import part_key as _part_key
 
 _MANIFEST_DIR = "_v"
-_COMMIT_IDX = "_commits.idx"  # publish-time version->(ts, op) sidecar
 _SCHEMA_FILE = "_table.json"
 _CLONES_FILE = "_clones.json"  # shallow-clone back-refs (clone dirs, root-rel)
 _REFS_IDX_FILE = "_refs.idx"  # cached external-refs of a clone (fingerprinted)
@@ -1007,6 +1006,9 @@ class Warehouse:
             "partition_specs": [partition_by],
             "partition_spec_id": 0,
             "required": list(required),
+            # Iceberg's table-uuid: fixed at creation, so it survives
+            # every commit, expiry and rename of this table
+            "table_uuid": str(uuid.uuid4()),
         }
         if write_order:
             meta["write_order"] = list(write_order)
@@ -1344,31 +1346,29 @@ class Warehouse:
                     continue
                 for fn in os.listdir(mdir):
                     fpath = os.path.join(mdir, fn)
-                    if fn.endswith(".ckpt") and fn[:-5].isdigit():
-                        head, entries, _ = txlog.read_checkpoint(fpath)
-                        entries, t1 = fix(entries)
-                        dels, t2 = fix(head.get("deletes") or [])
-                        commit = dict(head.get("commit") or {})
+                    if not fn[:-5].isdigit():
+                        continue  # not a version file or checkpoint
+                    if fn.endswith(".ckpt"):
+                        st = txlog.checkpoint_state(fpath)
+                        entries, t1 = fix(list(st.files.values()))
+                        dels, t2 = fix(list(st.deletes.values()))
+                        commit = dict(st.commit)
                         commit["change_files"], t3 = fix(
                             commit.get("change_files") or []
                         )
                         if not commit["change_files"]:
                             del commit["change_files"]
                         if t1 or t2 or t3:
-                            st = txlog.State(
-                                {e["path"]: e for e in entries},
-                                {d["path"]: d for d in dels},
-                                head.get("schema"), head.get("physical"),
-                                commit, 0, 0, (),
+                            st = st._replace(
+                                files={e["path"]: e for e in entries},
+                                deletes={d["path"]: d for d in dels},
+                                commit=commit,
                             )
-                            stage(fpath, txlog.checkpoint_bytes(head["version"], st))
+                            stage(fpath, txlog.checkpoint_bytes(int(fn[:-5]), st))
                         continue
-                    if not fn.endswith(".json") or ".tmp-" in fn:
+                    if not fn.endswith(".json"):
                         continue
-                    with open(fpath) as f:
-                        doc = json.load(f)
-                    if not isinstance(doc, dict):
-                        continue  # the expired-version list
+                    doc = txlog.read_version(mdir, int(fn[:-5]))
                     any_touched = False
                     for key in (
                         "files", "deletes", "change_files", "add", "add_deletes"
@@ -1381,7 +1381,7 @@ class Warehouse:
                             doc[key], t = fix_paths(doc[key])
                             any_touched |= t
                     if any_touched:
-                        stage(fpath, json.dumps(doc).encode())
+                        stage(fpath, txlog.version_bytes(doc))
         except BaseException:
             for tmp, _ in staged:
                 with contextlib.suppress(OSError):
@@ -1478,6 +1478,7 @@ class Warehouse:
         if doc.get("schema"):
             new_meta["schema"] = doc["schema"]
         new_meta.pop("meta_seq", None)
+        new_meta["table_uuid"] = str(uuid.uuid4())  # a new table
         props = dict(new_meta.get("properties") or {})
         props["clone_source"] = f"{ns}.{table}@{v}"
         new_meta["properties"] = props
@@ -1686,15 +1687,19 @@ class Warehouse:
         chain -- the authoritative refresh watermark record. Every
         refresh commit carries one, so the reverse walk opens one or
         two log entries, never the history."""
-        storage = self.mv_storage_table(name)
-        tdir = self._table_dir(ns, storage)
+        tdir = self._table_dir(ns, self.mv_storage_table(name))
         if not os.path.exists(tdir):
             return None
-        vdir = self._vdir(tdir)
-        for v in reversed(self._versions(tdir)):
-            doc = txlog.read_version(vdir, v)
-            if "mv_stamp" in doc:
-                return doc["mv_stamp"]
+        return self._last_mv_stamp(tdir)
+
+    def _last_mv_stamp(
+        self, tdir: str, branch: str | None = None
+    ) -> dict | None:
+        vdir = self._vdir(tdir, branch)
+        for v in reversed(self._versions(tdir, branch)):
+            head = txlog.header(vdir, v)
+            if "mv_stamp" in head:
+                return head["mv_stamp"]
         return None
 
     def mv_doc(self, ns: str, name: str) -> dict:
@@ -2299,8 +2304,9 @@ class Warehouse:
         files and live merge-on-read delete files) with its schema and
         logical->physical column mapping, bound to the snapshot
         (Iceberg-style) so time travel sees the historical shape. The
-        version file stores only the actions against ``version - 1``
-        (:func:`txlog.publish`), and a checkpoint follows every
+        version file stores a header line with the commit fields and the
+        snapshot summary, then only the actions against ``version - 1``
+        (:func:`txlog.publish`); a checkpoint follows every
         ``_CHECKPOINT_INTERVAL`` commits. ``op`` stamps the commit's operation type
         (Iceberg snapshot summary ``operation``): incremental/changelog
         readers skip ``replace`` commits (compaction rewrites no data)
@@ -2313,12 +2319,13 @@ class Warehouse:
         if txn:
             # Delta txnAppId/txnVersion analog: the idempotence stamp
             # rides the COMMIT itself, so a crash can never land data
-            # without its stamp (the ledger IS the commit log)
+            # without its stamp; the log state keeps each app's highest
+            # version
             commit["txn"] = [str(txn[0]), int(txn[1])]
         if copied:
             # COPY INTO source-file ledger: rides the commit (atomic
-            # with the data), so "was this file loaded" is answerable
-            # from the log alone and survives index rebuild
+            # with the data), and the log state keeps the union, so
+            # "was this file loaded" survives snapshot expiry
             commit["copied"] = sorted(copied)
         if change_files:
             # stored Change Data Feed (Delta enableChangeDataFeed): the
@@ -2332,59 +2339,33 @@ class Warehouse:
             # atomic publish (a crash can never leave storage holding a
             # delta the watermark doesn't record, or vice versa)
             commit["mv_stamp"] = mv_stamp
-        vdir = self._vdir(tdir, branch)
         try:
-            doc = txlog.publish(
-                vdir, version, files, deletes, schema, phys, commit,
-                self._CHECKPOINT_INTERVAL, self._PLAN_DISTRIBUTE_THRESHOLD,
+            txlog.publish(
+                self._vdir(tdir, branch), version, files, deletes, schema,
+                phys, commit, self._CHECKPOINT_INTERVAL,
+                self._PLAN_DISTRIBUTE_THRESHOLD,
             )
         except FileExistsError as e:
             raise CommitConflictError(
                 f"version {version} was committed concurrently"
             ) from e
-        # Compact commit index: one JSONL line per publish so
-        # snapshot_as_of/history resolve timestamps with O(1) file opens
-        # instead of re-parsing every manifest (manifests stay the
-        # source of truth; _commit_index rebuilds on any gap). Only the
-        # CAS winner reaches this append; O_APPEND keeps small writes
-        # atomic on a local fs.
-        idx_row = {
-            "version": version, "ts": doc["ts"], "op": op or "append",
-            "n_files": len(files),
-            "bytes": sum(e.get("bytes", 0) for e in files),
-            "records": sum(e.get("records", 0) for e in files),
-            "n_partitions": len({_scope_key(e) for e in files}),
-            # pending MoR delete files: lets metadata consumers (the
-            # REST facade's snapshot summaries) say "this snapshot needs
-            # its deletes section applied" without opening the manifest
-            "n_deletes": len(deletes or []),
-        }
-        if txn:
-            idx_row["txn"] = doc["txn"]
-        if copied:
-            idx_row["copied"] = doc["copied"]
-        line = json.dumps(idx_row)
-        with open(os.path.join(vdir, _COMMIT_IDX), "a") as f:
-            f.write(line + "\n")
+
+    def _tip_state(self, tdir: str, branch: str | None) -> txlog.State:
+        return txlog.state(
+            self._vdir(tdir, branch), self._versions(tdir, branch)[-1]
+        )
 
     def _last_txn(
         self, tdir: str, branch: str | None, app: str
     ) -> int | None:
-        """Highest committed txn version for ``app`` (newest first --
-        one reverse scan of the compact commit index)."""
-        for r in reversed(self._commit_index(tdir, branch)):
-            t = r.get("txn")
-            if t and t[0] == app:
-                return int(t[1])
-        return None
+        """Highest committed txn version for ``app`` (the tip state's
+        ledger: expired commits count too)."""
+        return self._tip_state(tdir, branch).txns.get(app)
 
-    def _copied_sources(self, tdir: str, branch: str | None = None) -> set:
-        """Every source file any committed COPY INTO recorded (union of
-        the per-commit ledgers, one pass over the compact index)."""
-        out: set = set()
-        for r in self._commit_index(tdir, branch):
-            out.update(r.get("copied") or [])
-        return out
+    def _copied_sources(self, tdir: str, branch: str | None = None) -> frozenset:
+        """Every source file any committed COPY INTO recorded (the tip
+        state's ledger: expired commits count too)."""
+        return self._tip_state(tdir, branch).copied
 
     def last_txn_version(
         self, ns: str, table: str, app: str, branch: str | None = None
@@ -2399,49 +2380,13 @@ class Warehouse:
     def _commit_index(
         self, tdir: str, branch: str | None = None
     ) -> list[dict]:
-        """Version-ordered ``{version, ts, op, n_files, bytes}`` rows for
-        every live snapshot, served from the publish-time sidecar when it
-        exactly covers the manifest set and rebuilt from manifests
-        otherwise (legacy tables, crashed publishes, expired snapshots).
-        Keeps timestamp resolution O(1) file opens on the happy path."""
-        versions = self._versions(tdir, branch)
+        """Version-ordered history rows (:func:`txlog.commit_info`) for
+        every live snapshot: ``version``, ``ts``, ``op``, ``txn`` when
+        stamped, and the summary totals ``n_files``, ``records``,
+        ``bytes``, ``n_partitions`` and ``n_deletes``. One short read of
+        a header line per version, whatever the commit's size."""
         vdir = self._vdir(tdir, branch)
-        idx_path = os.path.join(vdir, _COMMIT_IDX)
-        rows: dict[int, dict] = {}
-        try:
-            with open(idx_path) as f:
-                for ln in f:
-                    ln = ln.strip()
-                    if ln:
-                        r = json.loads(ln)
-                        rows[r["version"]] = r
-        except (FileNotFoundError, ValueError):
-            rows = {}
-        if set(rows) != set(versions) or any(
-            "records" not in r or "n_deletes" not in r
-            for r in rows.values()
-        ):
-            rows = {}
-            for v in versions:
-                doc = self._manifest_doc(tdir, v, branch)
-                files = doc["files"]
-                rows[v] = {
-                    "version": v, "ts": doc.get("ts", 0.0),
-                    "op": doc.get("op", "append"), "n_files": len(files),
-                    "bytes": sum(e.get("bytes", 0) for e in files),
-                    "records": sum(e.get("records", 0) for e in files),
-                    "n_partitions": len({_scope_key(e) for e in files}),
-                    "n_deletes": len(doc.get("deletes") or []),
-                }
-                if doc.get("txn"):
-                    rows[v]["txn"] = doc["txn"]
-                if doc.get("copied"):
-                    rows[v]["copied"] = doc["copied"]
-            tmp = os.path.join(vdir, f".idx-{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                f.write("".join(json.dumps(rows[v]) + "\n" for v in versions))
-            os.replace(tmp, idx_path)
-        return [rows[v] for v in versions]
+        return [txlog.commit_info(vdir, v) for v in self._versions(tdir, branch)]
 
     # Bounded retries: optimistic concurrency should converge in one or
     # two rounds; an unbounded loop would mask a livelock under
@@ -2617,13 +2562,7 @@ class Warehouse:
                 # if a concurrent refresh already advanced the stamp
                 # past ``base``, committing would re-fold the window
                 # (double-counted groups / duplicate appended rows)
-                cur = None
-                vdir = self._vdir(tdir, branch)
-                for pv in reversed(self._versions(tdir, branch)):
-                    pdoc = txlog.read_version(vdir, pv)
-                    if "mv_stamp" in pdoc:
-                        cur = pdoc["mv_stamp"]
-                        break
+                cur = self._last_mv_stamp(tdir, branch)
                 if cur is not None and (
                     cur.get("watermarks") != mv_stamp["base"]
                     or cur.get("def") != mv_stamp.get("def")
@@ -4593,8 +4532,8 @@ class Warehouse:
 
         Lists ``path`` (glob ``pattern``, default ``*.<format>``),
         skips every file a previous COPY already committed -- the
-        loaded-source ledger rides each commit manifest, atomic with
-        the data and restored by index rebuild -- reads the rest with
+        loaded-source ledger rides each commit, atomic with the data,
+        and the log state keeps it across expiry -- reads the rest with
         the table schema applied by NAME (casts, column defaults, NOT
         NULL, CHECK constraints all via the normal write validation),
         and appends them in ONE commit that records the source list.
@@ -4606,8 +4545,8 @@ class Warehouse:
         COPY_OPTIONS force) reloads every matching file regardless of
         the ledger -- duplicates are then the caller's intent.
 
-        At 100 TB the ledger check is metadata-only (compact commit
-        index, no data scan) and the load is one distributed read of
+        At 100 TB the ledger check is metadata-only (the tip state's
+        ledger, no data scan) and the load is one distributed read of
         only the new files. Reference capability: the reference's
         Firehose delivery stream lands files continuously
         (stack/firehose.py); COPY INTO is the batch-side idempotent
@@ -6078,14 +6017,10 @@ class Warehouse:
         # main's tip IS the fork, so hard-linking them into main (plus
         # the branch's checkpoints past the fork) replays the branch
         # exactly, with zero JSON parses however long the branch. link()
-        # is the same CAS _publish uses; main's commit index extends
-        # from the BRANCH's index rows (O(1) sidecar read, rebuilt there
-        # if stale) so timestamp travel stays O(1) after the promote.
+        # is the same CAS _publish uses; each linked file's header line
+        # carries its commit's history row and original timestamp.
         branch_vdir = self._vdir(tdir, name)
         main_vdir = self._vdir(tdir)
-        branch_idx = {
-            r["version"]: r for r in self._commit_index(tdir, name)
-        }
         for v in self._versions(tdir, name):
             if v <= main_tip:
                 continue
@@ -6104,8 +6039,6 @@ class Warehouse:
                     txlog.checkpoint_path(branch_vdir, v),
                     txlog.checkpoint_path(main_vdir, v),
                 )
-            with open(os.path.join(main_vdir, _COMMIT_IDX), "a") as f:
-                f.write(json.dumps(branch_idx[v]) + "\n")
         new_tip = self._versions(tdir)[-1]
         self.drop_branch(ns, table, name)
         return new_tip
@@ -6569,8 +6502,8 @@ class Warehouse:
         a '1755180000000' millis string lands on the intended moment
         instead of the year 57587. Digit-only 8-char strings are
         YYYYMMDD dates, not epochs, and take the ISO path. Resolution
-        reads the publish-time commit index -- O(1) file opens, not one
-        JSON parse per snapshot."""
+        reads the header line of each live version file -- one short
+        read per snapshot, never its actions."""
         import datetime as _dt
 
         if isinstance(ts, str):
@@ -6620,9 +6553,9 @@ class Warehouse:
 
     def snapshots_df(self, ns: str, table: str) -> DataFrame:
         """One row per live snapshot: version, file/record/byte totals,
-        and distinct partition count -- served from the publish-time
-        commit index (O(1) file opens; manifests only re-parsed when
-        the index needs a rebuild)."""
+        and distinct partition count -- the snapshot summary in the
+        header line of each version file, one short read per snapshot
+        whatever its size."""
         tdir = self._table_dir(ns, table)
         if not os.path.exists(tdir):
             raise TableNotFoundError(f"{ns}.{table}")

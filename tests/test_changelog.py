@@ -472,7 +472,7 @@ def test_stream_cursor_never_regresses(registered, wh, spark):
 @pytest.mark.slow
 def test_changelog_append_run_opens_constant_manifests(wh, spark, monkeypatch):
     """Driver-side metadata cost: a range of N append commits must
-    classify from the _commits.idx sidecar and resolve its added files
+    classify from the commits' log entries and resolve its added files
     from the RUN-END manifest alone -- a constant number of manifest
     JSON parses, not O(N)."""
     import sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse as whmod
@@ -500,8 +500,8 @@ def test_changelog_append_run_opens_constant_manifests(wh, spark, monkeypatch):
 def test_fast_forward_links_manifests_without_parsing(wh, spark, monkeypatch):
     """Happy-path fast-forward (main still at the fork) replays the
     branch by HARD-LINKING its manifest JSONs -- zero manifest parses
-    however long the branch -- and extends main's commit index from
-    the branch's rows so timestamp travel stays O(1) afterwards."""
+    however long the branch -- and each linked file's header line
+    carries its commit's history row and original timestamp."""
     import sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse as whmod
 
     wh.insert("ns", "t", _rows(spark, [("k0", "d0", 0)]).coalesce(1))
@@ -528,7 +528,7 @@ def test_fast_forward_links_manifests_without_parsing(wh, spark, monkeypatch):
     assert calls["n"] == 0, f"fast_forward parsed {calls['n']} manifests"
     monkeypatch.undo()
     # replay is verbatim: rows, per-commit history, and original commit
-    # wall clocks all carried over; index stayed gap-free (no rebuild)
+    # wall clocks all carried over; history is gap-free
     assert {r.id for r in wh.read("ns", "t").collect()} == {
         "k0", "b1", "b2", "b3", "b4", "b5"
     }
@@ -540,10 +540,8 @@ def test_fast_forward_links_manifests_without_parsing(wh, spark, monkeypatch):
 
 def test_idempotent_txn_insert(wh, spark):
     """Delta txnAppId/txnVersion analog: a replayed (app, epoch) insert
-    is a no-op; higher epochs commit; apps are independent; the stamp
-    survives an index rebuild (it rides the manifest)."""
-    import os as _os
-
+    is a no-op; higher epochs commit; apps are independent; the ledger
+    survives the expiry of the commits that stamped it."""
     v1 = wh.insert(
         "ns", "t", _rows(spark, [("a", "d0", 1)]).coalesce(1),
         txn=("etl", 0),
@@ -574,17 +572,18 @@ def test_idempotent_txn_insert(wh, spark):
     assert wh.last_txn_version("ns", "t", "etl") == 1
     assert wh.last_txn_version("ns", "t", "other") == 0
     assert wh.last_txn_version("ns", "t", "nope") is None
-    # ledger == manifest chain: delete the sidecar, force a rebuild,
-    # and the txn stamps come back from the manifests
-    tdir = wh._table_dir("ns", "t")
-    _os.remove(_os.path.join(wh._vdir(tdir), "_commits.idx"))
+    # a later unstamped commit, then expire every stamped snapshot: the
+    # ledger lives in the log state, not in the live versions
+    wh.insert("ns", "t", _rows(spark, [("d", "d0", 4)]).coalesce(1))
+    wh.expire_snapshots("ns", "t", keep_last=1)
     assert wh.last_txn_version("ns", "t", "etl") == 1
-    # replay check still holds after the rebuild
+    assert wh.last_txn_version("ns", "t", "other") == 0
+    # replay check still holds after the expiry
     wh.insert(
         "ns", "t", _rows(spark, [("b", "d0", 2)]).coalesce(1),
         txn=("etl", 1),
     )
-    assert wh.count_rows("ns", "t") == 3
+    assert wh.count_rows("ns", "t") == 4
 
 
 @pytest.mark.slow

@@ -2,14 +2,11 @@
 write-defaults (ANSI SET DEFAULT / Delta column defaults / Iceberg v3
 write-default).
 
-The COPY ledger rides the commit manifests (atomic with the data,
-restored by index rebuild), so re-runs, crashes, and racing COPYs can
+The COPY ledger rides the commits (atomic with the data, kept in the
+log state across snapshot expiry), so re-runs, crashes, and racing COPYs can
 never double-load a source file."""
 
 from __future__ import annotations
-
-import os
-
 
 import pytest
 from pyspark.sql.types import (
@@ -83,14 +80,15 @@ def test_copy_into_loads_only_new_files(wh, spark, tmp_path):
     assert got == {("a", 1), ("b", 2)}
 
 
-def test_copy_ledger_survives_index_rebuild(wh, spark, tmp_path):
+def test_copy_ledger_survives_expiry(wh, spark, tmp_path):
     src = str(tmp_path / "landing")
     _write_src(spark, src, [("a", "d0", 1)])
     wh.copy_into("ns", "t", src)
-    tdir = wh._table_dir("ns", "t")
-    os.unlink(os.path.join(wh._vdir(tdir), "_commits.idx"))
-    r = wh.copy_into("ns", "t", src)  # rebuilt index still knows the file
-    assert r["files_loaded"] == 0 and wh.read("ns", "t").count() == 1
+    # a later non-COPY commit, then expire the COPY's snapshot
+    wh.insert("ns", "t", spark.createDataFrame([("b", "d1", 2)], S))
+    wh.expire_snapshots("ns", "t", keep_last=1)
+    r = wh.copy_into("ns", "t", src)  # the ledger still knows the file
+    assert r["files_loaded"] == 0 and wh.read("ns", "t").count() == 2
 
 
 def test_copy_into_sql_route(wh, spark, tmp_path):

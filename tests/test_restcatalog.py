@@ -24,10 +24,6 @@ from sample_for_transactional_datalake_using_s3tables_spark.sources.restcatalog 
 )
 from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import Warehouse
 
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4).
-# Run everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
 
 SCHEMA = T.StructType(
     [
@@ -92,6 +88,11 @@ def test_table_create_load_drop(cat, spark):
     assert ops == ["create", "props", "append"]
     assert loaded["refs"]["main"]["snapshot-id"] == 2
     assert loaded["table-uuid"] == meta["table-uuid"]  # stable across loads
+    # ... and across snapshot expiry (it dropped the creating commit)
+    wh.expire_snapshots("q", "t", keep_last=1)
+    expired = client.load_table("q", "t")["metadata"]
+    assert [s["snapshot-id"] for s in expired["snapshots"]] == [2]
+    assert expired["table-uuid"] == meta["table-uuid"]
     # duplicate create: protocol 409
     with pytest.raises(RestCatalogError) as e:
         client.create_table("q", "t", SCHEMA)

@@ -3,7 +3,9 @@
 - reconstruction parity: every version rebuilt from the log (deltas,
   replayed from checkpoints) equals the state its writer published, and
   a twin whose every version is a checkpoint (the full-state layout)
-  reads, plans and diffs the same at every version;
+  reads, plans and diffs the same at every version, every history row
+  (a version file's header line) matches its version's doc, and the
+  ``txn`` and COPY ledgers outlive expiry;
 - a table written entirely as legacy full manifest docs still reads;
 - crash and replay: a writer dying between any two commit steps leaves a
   consistent snapshot, a missing checkpoint only lengthens the replay,
@@ -71,7 +73,7 @@ def _canon_doc(doc: dict) -> dict:
     }
 
 
-def _drive(spark, wh: Warehouse) -> dict:
+def _drive(spark, wh: Warehouse, landing: str) -> dict:
     """One operation of every kind that publishes; returns named versions."""
     at = {}
     wh.create_namespace("ns")
@@ -79,6 +81,7 @@ def _drive(spark, wh: Warehouse) -> dict:
     for i in range(3):
         wh.insert("ns", "t", _df(spark, [(f"k{i}{j}", f"d{j % 3}", i * 10 + j)
                                          for j in range(6)]), txn=("app", i))
+    wh.copy_into("ns", "t", landing)
     wh.merge_upsert("ns", "t", _df(spark, [("k01", "d1", 101), ("kn", "d0", 5)]))
     wh.merge_upsert("ns", "t", _df(spark, [("k02", "d2", 102), ("km", "d1", 6)]),
                     strategy="mor")
@@ -129,13 +132,17 @@ def test_reconstruction_parity(spark, tmp_path, monkeypatch):
         return doc
 
     monkeypatch.setattr(txlog, "publish", recording)
+    landing = str(tmp_path / "landing")
+    _df(spark, [("kl", "d1", 11)]).write.parquet(landing)
     wh = Warehouse(spark, str(tmp_path / "a"))  # checkpoints every 10
     twin = Warehouse(spark, str(tmp_path / "b"))
     twin._CHECKPOINT_INTERVAL = 1  # every version a full state
-    at = _drive(spark, wh)
-    _drive(spark, twin)
+    at = _drive(spark, wh, landing)
+    _drive(spark, twin, landing)
     monkeypatch.undo()
     txlog.clear_memo()
+    # the log is the only metadata store: no commit-index sidecar
+    assert not list(tmp_path.rglob("_commits.idx"))
 
     tdir, tdir_b = wh._table_dir("ns", "t"), twin._table_dir("ns", "t")
     vdir = wh._vdir(tdir)
@@ -164,6 +171,12 @@ def test_reconstruction_parity(spark, tmp_path, monkeypatch):
             got_b, sch_b = twin.plan_files("ns", "t", version=v, **kw)
             assert _canon_entries(got) == _canon_entries(got_b), (v, kw)
             assert sch == sch_b
+    # 3. each history row (the version file's header line) is its doc's
+    _assert_history_matches_docs(wh, tdir)
+    _assert_history_matches_docs(twin, tdir_b)
+    # the ledgers cover expired commits too
+    assert wh.last_txn_version("ns", "t", "app") == 2
+    assert twin._copied_sources(tdir_b) == wh._copied_sources(tdir) != set()
     live = [v for v in versions if v - 1 in versions]
     for v in live[-6:]:
         assert _rows(wh.changelog("ns", "t", v - 1, v)) == _rows(
@@ -178,7 +191,31 @@ def test_reconstruction_parity(spark, tmp_path, monkeypatch):
     wh.rename_table("ns", "c", "ns2", "c")
     txlog.clear_memo()
     assert _rows(wh.read("ns2", "c")) == want_c
+    _assert_history_matches_docs(wh, wh._table_dir("ns2", "c"))
     assert _rows(wh.read("ns2", "c", version=0)) == _rows(twin.read("ns", "c", version=0))
+
+
+def _assert_history_matches_docs(wh: Warehouse, tdir: str) -> None:
+    """Every ``_commit_index`` row (ts, op, txn and the five summary
+    totals) equals what the version's full doc yields."""
+    rows = wh._commit_index(tdir)
+    assert [r["version"] for r in rows] == wh._versions(tdir)
+    for row in rows:
+        doc = wh._manifest_doc(tdir, row["version"])
+        files = doc["files"]
+        want = {
+            "version": row["version"], "ts": doc["ts"],
+            "op": doc.get("op") or "append",
+            "n_files": len(files),
+            "records": sum(e.get("records", 0) for e in files),
+            "bytes": sum(e.get("bytes", 0) for e in files),
+            "n_partitions": len({(e.get("spec", 0), str(e["partition"]))
+                                 for e in files}),
+            "n_deletes": len(doc.get("deletes") or []),
+        }
+        if doc.get("txn"):
+            want["txn"] = doc["txn"]
+        assert row == want, tdir
 
 
 def test_legacy_full_doc_table_still_reads(spark, tmp_path):
@@ -242,14 +279,13 @@ def _crash_at(monkeypatch, step: str) -> None:
         def ckpt(*a, **k):
             raise Crash(step)
         monkeypatch.setattr(txlog, "write_checkpoint", ckpt)
-    elif step == "checkpoint":  # checkpointed, index not appended
-        real_open = open
+    elif step == "checkpoint":  # checkpoint written, state not memoized
+        real_ckpt = txlog.write_checkpoint
 
-        def fake_open(path, mode="r", *a, **k):
-            if str(path).endswith(whmod._COMMIT_IDX) and "a" in mode:
-                raise Crash(step)
-            return real_open(path, mode, *a, **k)
-        monkeypatch.setattr(whmod, "open", fake_open, raising=False)
+        def ckpt_then_die(*a, **k):
+            real_ckpt(*a, **k)
+            raise Crash(step)
+        monkeypatch.setattr(txlog, "write_checkpoint", ckpt_then_die)
 
 
 @pytest.mark.parametrize(
@@ -282,6 +318,11 @@ def test_crash_between_commit_steps_then_replay(spark, tmp_path, monkeypatch, st
     assert has_ckpt == (step == "checkpoint")
     if step == "version_link":  # replayed from the previous checkpoint
         assert txlog.state(vdir, tip + 1).depth == 1
+    if step == "checkpoint":  # the ledger reads back from its header
+        txlog.clear_memo()
+        assert again.last_txn_version("ns", "t", "app") == 2
+        st = txlog.state(vdir, tip + 1)
+        assert (st.depth, st.chain[0][0]) == (0, txlog.checkpoint_path(vdir, tip + 1))
     # the replayed epoch: a no-op once its commit landed, else it lands
     again.insert("ns", "t", _df(spark, batch), txn=("app", 2))
     assert again.current_version("ns", "t") == tip + 1
