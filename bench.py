@@ -228,6 +228,9 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
       parse -> AttributeValue unwrap -> quarantine split -> latest-wins
       MERGE path (streaming/cdc.py) over the SF's events re-encoded as
       DynamoDB-Streams envelopes, multi-trigger availableNow.
+    - ``cdc_bytes_per_row`` / ``cdc_mor_bytes_per_row``: bytes under
+      the CoW / MoR table's directory over the rows the sustained run
+      committed, before maintenance.
     - ``cdc_commit_to_queryable_sec``: wall from a NEW landing file to
       its rows readable from the warehouse table -- the engine's
       equivalent of the reference's write->queryable bound.
@@ -326,6 +329,16 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
         def _median(xs: list[float]) -> float:
             return sorted(xs)[len(xs) // 2]
 
+        def _bytes_per_row(table: str) -> float:
+            """Bytes under a table's directory per row the stream
+            committed: data, delete and change files plus metadata."""
+            tdir = wh._table_dir("analytics", table)
+            size = sum(
+                os.path.getsize(os.path.join(d, f))
+                for d, _, fs in os.walk(tdir) for f in fs
+            )
+            return round(size / n_rows, 1)
+
         # (a) sustained CDC ingest: all shards, multiple micro-batches.
         # MEDIAN of N_STREAM_RUNS (VERDICT r10 #5: single-shot streaming
         # probes swung 2041 vs 2570 rows/s on identical code; the judge
@@ -369,6 +382,8 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
                 if not _await(q, 1800, f"cdc run {r}"):
                     break
                 cdc_runs.append(round(n_rows / (time.perf_counter() - t0), 1))
+            if len(cdc_runs) == N_STREAM_RUNS:
+                out["cdc_bytes_per_row"] = _bytes_per_row("transactions")
             if cdc_runs:
                 out["cdc_rows"] = float(n_rows)
                 out["cdc_rows_per_sec"] = _median(cdc_runs)
@@ -466,6 +481,9 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
             if len(mor_runs) == N_STREAM_RUNS:
                 out["cdc_mor_rows_per_sec"] = _median(mor_runs)
                 out["cdc_mor_rows_per_sec_runs"] = mor_runs
+                out["cdc_mor_bytes_per_row"] = _bytes_per_row(
+                    "transactions_mor"
+                )
                 out.update(_phase_medians("cdc_mor_phase", mor_phases))
                 t0 = time.perf_counter()
                 wh.auto_maintain("analytics", "transactions_mor")

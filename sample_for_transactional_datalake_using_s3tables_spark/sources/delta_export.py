@@ -164,11 +164,13 @@ def import_delta_table(
     """Interop in the OTHER direction: materialize a warehouse table
     from a directory holding a Delta-protocol ``_delta_log`` plus its
     data files. The log is replayed to the live file set; files are
-    hard-linked (falling back to copy) into the new table's data dir;
-    per-file footer stats and the optional key Bloom are extracted in
-    EXECUTOR tasks (the same distributed build `_write_files` uses), so
-    the imported table immediately supports min/max + Bloom data
-    skipping even though the Delta log carries only numRecords.
+    hard-linked (falling back to copy) into the new table's data dir,
+    so they keep the codec they were written with (a table may mix
+    codecs); per-file footer stats and the optional key Bloom come
+    from ``Warehouse._file_metas``, the same in-process-or-distributed
+    build ``_write_files`` uses, so the imported table immediately
+    supports min/max + Bloom data skipping even though the Delta log
+    carries only numRecords.
 
     Scope: unpartitioned tables, and tables exported by
     :func:`export_delta_log` (whose ``_p`` partition column is
@@ -180,7 +182,7 @@ def import_delta_table(
 
     from pyspark.sql.types import StructType
 
-    from .warehouse import _extract_file_meta, _pack_blooms
+    from .warehouse import _pack_blooms
 
     state = replay_delta_log(os.path.join(source_dir, "_delta_log"))
     md = state["metaData"]
@@ -216,18 +218,9 @@ def import_delta_table(
     key_col = key if key and key in schema.fieldNames() else None
     entries = []
     if paths:
-        sc = wh.spark.sparkContext
-        n = max(1, min(len(paths), sc.defaultParallelism))
-        metas = (
-            sc.parallelize(paths, n)
-            .map(lambda p: _extract_file_meta(p, key_col))
-            .collect()
-        )
-        for m in metas:
+        for m in wh._file_metas([(p, None) for p in paths], key_col):
             full = m.pop("abs")
-            entries.append(
-                {"path": os.path.relpath(full, tdir), **m, "partition": None}
-            )
+            entries.append({"path": os.path.relpath(full, tdir), **m})
         _pack_blooms(tdir, entries)
     wh._publish_append(
         tdir, wh._versions(tdir)[-1], entries, json.loads(schema.json())
