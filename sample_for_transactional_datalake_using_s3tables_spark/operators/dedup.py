@@ -113,12 +113,6 @@ FROM documents GROUP BY 1
 # MinHash + LSH.
 # --------------------------------------------------------------------------
 
-def _remix(a: int, b: int):
-    """Affine remix of the shingle hash: ``h -> (a*h + b) mod P`` (exact
-    int64: a < 2^28, h < 2^31 => product < 2^59)."""
-    return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
     """``(doc_id, *extra, sh: array<bigint>)`` -- the distinct 31-bit
     shingle hashes of each document (rolling polynomial over per-token

@@ -26,10 +26,6 @@ from ..sources.testdata import load_table, spread
 from ..sources.warehouse import Warehouse
 from ..streaming.cdc import good_rows, parse_cdc
 
-def _ms() -> F.Column:
-    return F.expr("unix_micros(ts) div 1000")
-
-
 def _attr_s(col) -> F.Column:
     return F.create_map(F.lit("S"), col.cast("string"))
 

@@ -6,11 +6,12 @@ aggregate calls, and filter conjuncts below/above the aggregate --
 with every expression rendered to a canonical string over the BASE
 table's columns (attribute references substituted through every
 intermediate projection). Two plans match iff their canonical trees
-match, so view-wrapped aggregates, alias renames, reordered
-commutative operands, implicit casts and HAVING-hoisted hidden
-aggregates all classify structurally -- the cases a text normalizer
-cannot see. The text classifier remains a fast-path hint upstream;
-this module is the authority when the hint fails.
+match, so direct queries, view-wrapped aggregates, alias renames,
+reordered commutative operands, implicit casts and HAVING-hoisted
+hidden aggregates all classify structurally. This module is the only
+classifier ``WarehouseSQL._mv_route`` consults: a query routes from a
+materialized view exactly when its plan shape and the view
+definition's shape match here.
 
 Soundness posture: CONSERVATIVE. Expression classes outside the
 deterministic allowlist, non-deterministic or time-varying functions
@@ -59,7 +60,31 @@ _BINOPS = {
     "LessThanOrEqual": ("<=", False),
     "GreaterThan": (">", False),
     "GreaterThanOrEqual": (">=", False),
+    "BitwiseAnd": ("&", True),
+    "BitwiseOr": ("|", True),
+    "BitwiseXor": ("^", True),
+    # datetime +/- ANSI interval: the analyzer puts the datetime first
+    "TimestampAddInterval": ("+", False),
+    "DateAddYMInterval": ("+", False),
+    "TimestampAddYMInterval": ("+", False),
 }
+
+# one-operand operators
+_UNARY = {
+    "Not": "(not {})", "IsNull": "({} is null)",
+    "IsNotNull": "({} is not null)", "UnaryMinus": "(- {})",
+    "BitwiseNot": "(~ {})",
+}
+
+# RuntimeReplaceable binary functions, rendered from the operands they
+# were written with (a try_ replacement's evaluation mode would not show)
+_WRITTEN = frozenset(
+    {"TryAdd", "TrySubtract", "TryMultiply", "TryDivide", "NullIf"}
+)
+
+# RuntimeReplaceable classes whose only child is their exact
+# replacement (extract/date_part -> year(x); nvl -> coalesce)
+_TRANSPARENT = frozenset({"Extract", "Nvl", "IfNull", "Nvl2"})
 
 # function-style classes rendered as prettyName(children...): every
 # entry must be DETERMINISTIC and carry no constructor parameters a
@@ -80,17 +105,19 @@ _FUNCS = frozenset({
     "ParseToDate", "ParseToTimestamp", "ToTimestamp", "UnixTimestamp",
     "ToUnixTimestamp", "FromUnixTime", "DateAdd", "DateSub",
     "DateDiff", "AddMonths", "LastDay", "NextDay", "MonthsBetween",
+    "MakeDate", "UnixDate", "DateFromUnixDate",
     "UnaryPositive", "Abs", "Round", "BRound", "Floor", "Ceiling",
     "Ceil", "Sqrt", "Cbrt", "Exp", "Expm1", "Log", "Log2", "Log10",
     "Log1p", "Pow", "Signum", "Sin", "Cos", "Tan", "Asin", "Acos",
     "Atan", "Atan2", "Sinh", "Cosh", "Tanh", "Pmod", "Hex", "Unhex",
-    "Least", "Greatest", "Coalesce", "NullIf", "Nvl", "Nvl2", "IfNull",
+    "Logarithm", "Factorial", "Pi", "EulerNumber", "WidthBucket",
+    "IsNaN", "NaNvl", "Least", "Greatest", "Coalesce", "If",
     "Md5", "Sha1", "Sha2", "Crc32", "XxHash64", "Murmur3Hash",
-    "BitwiseAnd", "BitwiseOr", "BitwiseXor", "BitwiseNot",
     "ShiftLeft", "ShiftRight", "ShiftRightUnsigned",
-    "ArrayContains", "Size", "SortArray", "ElementAt", "GetArrayItem",
-    "MapKeys", "MapValues", "JsonToStructs", "GetJsonObject",
-    "StructsToJson", "Decode", "Encode", "FormatNumber",
+    "BitLength", "OctetLength", "FormatString",
+    "ArrayContains", "Size", "SortArray", "ElementAt",
+    "MapKeys", "MapValues", "GetJsonObject",
+    "Decode", "Encode", "FormatNumber",
 })
 
 _AGG_FN = {
@@ -133,8 +160,8 @@ def render(e, sub: dict, node_sub: dict | None = None) -> str:
         return e.sql()
     if not e.deterministic():
         raise Unroutable(f"non-deterministic {c}")
-    if c in ("CurrentDate", "CurrentTimestamp", "Now", "CurrentTimeZone",
-             "LocalTimestamp", "CurrentBatchTimestamp"):
+    if c in ("CurrentDate", "CurrentTimestamp", "CurrentTime", "Now",
+             "CurrentTimeZone", "LocalTimestamp", "CurrentBatchTimestamp"):
         # evaluation-time-varying: a version-fresh MV materialized at
         # an earlier wall clock is semantically stale for these
         raise Unroutable(f"time-varying {c}")
@@ -145,30 +172,42 @@ def render(e, sub: dict, node_sub: dict | None = None) -> str:
         if comm and r < l:
             l, r = r, l
         return f"({l} {op} {r})"
-    if c in ("Cast", "UpCast"):
-        return (
-            f"cast({render(kids[0], sub, node_sub)} as "
-            f"{e.dataType().sql().lower()})"
-        )
-    if c == "TryCast":
-        return (
-            f"try_cast({render(kids[0], sub, node_sub)} as "
-            f"{e.dataType().sql().lower()})"
-        )
-    if c == "Not":
-        return f"(not {render(kids[0], sub, node_sub)})"
-    if c == "IsNull":
-        return f"({render(kids[0], sub, node_sub)} is null)"
-    if c == "IsNotNull":
-        return f"({render(kids[0], sub, node_sub)} is not null)"
-    if c in ("In", "InSet"):
-        if c == "InSet":
-            raise Unroutable("InSet appears only post-optimization")
+    if c in ("Cast", "UpCast", "TryCast"):
+        fn = "try_cast" if c == "TryCast" else "cast"
+        to = e.dataType().sql().lower()
+        return f"{fn}({render(kids[0], sub, node_sub)} as {to})"
+    if c in _UNARY:
+        return _UNARY[c].format(render(kids[0], sub, node_sub))
+    if c == "In":  # (InSet appears only post-optimization)
         v = render(kids[0], sub, node_sub)
         items = sorted(render(k, sub, node_sub) for k in kids[1:])
         return f"({v} in ({', '.join(items)}))"
-    if c == "UnaryMinus":
-        return f"(- {render(kids[0], sub, node_sub)})"
+    if c == "Between":
+        # RuntimeReplaceable: its only child is the With node the
+        # optimizer expands, so render the operands it was written with
+        x, lo, hi = (
+            render(k, sub, node_sub) for k in (e.input(), e.lower(), e.upper())
+        )
+        return f"({x} between {lo} and {hi})"
+    if c == "DatetimeSub":
+        # RuntimeReplaceable like Between: ``ts - INTERVAL ...``
+        start = render(e.start(), sub, node_sub)
+        return f"({start} - {render(e.interval(), sub, node_sub)})"
+    if c in _TRANSPARENT:
+        return render(kids[0], sub, node_sub)
+    if c.startswith("ExtractANSIInterval"):
+        # ``DATE - INTERVAL '7' DAY`` analyzes to date_add(d,
+        # -extractansiintervaldays(...)): render the field it reads
+        field = c[len("ExtractANSIInterval"):-1].lower()  # Days -> day
+        return f"extract({field} from {render(kids[0], sub, node_sub)})"
+    if c in _WRITTEN:
+        l, r = (render(k, sub, node_sub) for k in (e.left(), e.right()))
+        return f"{e.prettyName()}({l}, {r})"
+    if c in ("GetArrayItem", "GetMapValue"):
+        x, i = (render(k, sub, node_sub) for k in kids)
+        return f"{x}[{i}]"
+    if c == "Like" and e.escapeChar() != "\\":
+        raise Unroutable("LIKE with a custom ESCAPE")
     if c == "CaseWhen":
         # children: [c1, v1, c2, v2, ..., else?]
         parts = [render(k, sub, node_sub) for k in kids]
@@ -179,9 +218,6 @@ def render(e, sub: dict, node_sub: dict | None = None) -> str:
         if n % 2 == 1:
             s += f" else {parts[-1]}"
         return s + " end"
-    if c == "If":
-        a, b, d = (render(k, sub, node_sub) for k in kids)
-        return f"if({a}, {b}, {d})"
     if c == "GetStructField":
         inner = render(kids[0], sub, node_sub)
         name = e.extractFieldName()
@@ -233,14 +269,18 @@ def plan_shape(jplan, known_tables: set[tuple[str, str]]):
     Returns ``{"src": (ns, tbl), "where": [canon...],
     "where_nodes": [(jexpr, attr_sub)...], "group": [canon...],
     "items": {token: ("key", canon) | ("agg", FN, canon_inner)},
-    "out": [(output_name, token)], "post": [sql-over-tokens...]}``.
+    "out": [(output_name, token)], "post": [sql-over-tokens...],
+    "base_schema": json, "views": bool}``.
 
     ``where`` holds the conjuncts BELOW the aggregate (source-row
     filters, canonical over base columns); ``post`` the conjuncts
     ABOVE it (HAVING / view-WHERE over aggregate outputs), rendered
     over per-item tokens the router uses as intermediate column
     names. ``items`` not reachable from ``out`` are hidden (HAVING-
-    only aggregates): computed for the post filter, dropped after."""
+    only aggregates): computed for the post filter, dropped after.
+    ``base_schema`` is the base table's schema as analyzed; ``views``
+    says the plan reads through a named view, so the shape depends on
+    more than the SQL text and that schema."""
     try:
         return _shape(jplan, known_tables)
     except Unroutable:
@@ -265,6 +305,7 @@ def _shape(jplan, known_tables):
     node = jplan
     agg = None
     distinct_node = None
+    views = False
     for _ in range(64):
         c = _cls(node)
         if c == "Aggregate":
@@ -283,6 +324,7 @@ def _shape(jplan, known_tables):
                 node.alias(), known_tables
             ):
                 raise Unroutable("no aggregate in plan")
+            views = views or c == "View"
             node = node.child()
         else:
             raise Unroutable(f"plan node {c} above aggregate")
@@ -303,6 +345,7 @@ def _shape(jplan, known_tables):
                 break
             node = node.child()
         elif c == "View":
+            views = True
             node = node.child()
         elif c in ("Project", "Filter"):
             below.append((c, node))
@@ -322,18 +365,13 @@ def _shape(jplan, known_tables):
         if c == "Project":
             new_sub: dict[int, str] = {}
             for ne in _seq(n.projectList()):
+                # render refuses an aggregate below the Aggregate and
+                # an attribute attr_sub does not resolve
                 k = _cls(ne)
-                if k == "Alias":
-                    if _single_agg(ne.child()) is not None:
-                        raise Unroutable("aggregate below the Aggregate")
-                    new_sub[ne.exprId().id()] = render(ne.child(), attr_sub)
-                elif k == "AttributeReference":
-                    eid = ne.exprId().id()
-                    if eid not in attr_sub:
-                        raise Unroutable("unresolved projection input")
-                    new_sub[eid] = attr_sub[eid]
-                else:
+                if k not in ("Alias", "AttributeReference"):
                     raise Unroutable(f"projection item {k}")
+                x = ne.child() if k == "Alias" else ne
+                new_sub[ne.exprId().id()] = render(x, attr_sub)
             attr_sub = new_sub
         else:
             snap = dict(attr_sub)
@@ -396,23 +434,15 @@ def _shape(jplan, known_tables):
             new_cur: dict[int, str] = {}
             renames: list[tuple[str, str]] = []
             for ne in _seq(n.projectList()):
-                k = _cls(ne)
-                if k == "AttributeReference":
-                    eid = ne.exprId().id()
-                    if eid not in cur:
-                        raise Unroutable("unresolved output reference")
-                    new_cur[eid] = cur[eid]
-                    renames.append((ne.name(), cur[eid]))
-                elif k == "Alias" and _cls(ne.child()) == "AttributeReference":
-                    ceid = ne.child().exprId().id()
-                    if ceid not in cur:
-                        raise Unroutable("unresolved output reference")
-                    new_cur[ne.exprId().id()] = cur[ceid]
-                    renames.append((ne.name(), cur[ceid]))
-                else:
-                    raise Unroutable(
-                        "computed expression above the aggregate"
-                    )
+                # a bare reference, or an alias renaming one
+                ref = ne.child() if _cls(ne) == "Alias" else ne
+                if _cls(ref) != "AttributeReference":
+                    raise Unroutable("computed expression above the aggregate")
+                rid = ref.exprId().id()
+                if rid not in cur:
+                    raise Unroutable("unresolved output reference")
+                new_cur[ne.exprId().id()] = cur[rid]
+                renames.append((ne.name(), cur[rid]))
             cur = new_cur
             out = renames
 
@@ -430,4 +460,6 @@ def _shape(jplan, known_tables):
         "items": items,
         "out": out,
         "post": post,
+        "base_schema": base.schema().json(),
+        "views": views,
     }

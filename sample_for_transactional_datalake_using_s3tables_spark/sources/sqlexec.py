@@ -288,6 +288,8 @@ class WarehouseSQL:
         self.mv_route_count = 0
         self._mv_view_seq = 0  # per-route unique temp-view suffix
         self._last_mv_route: str | None = None
+        # (ns, mv) -> (definition, base schema, shape): _mv_def_shape
+        self._mv_shapes: dict[tuple[str, str], tuple] = {}
         # while a REFRESH MATERIALIZED VIEW rewrite runs, every resolved
         # source table records {"ns.tbl": version} here -- the snapshot
         # watermarks freshness is judged against
@@ -307,10 +309,6 @@ class WarehouseSQL:
             )
 
     # -- helpers --
-
-    _META_TABLES = (
-        "snapshots", "files", "partitions", "deletes", "history", "refs"
-    )
 
     def _meta_df(self, ns: str, tbl: str, kind: str) -> DataFrame:
         if kind == "snapshots":
@@ -776,6 +774,10 @@ class WarehouseSQL:
             refs = self._mv_refs
         finally:
             self._mv_refs = None
+        if self.mv_routing:
+            # the definition is analyzed here anyway: memoize its
+            # routing shape so the next routed SELECT skips that work
+            self._mv_def_shape(ns, name, sql_text, df)
         storage = Warehouse.mv_storage_table(name)
         base_doc = self.wh.mv_doc(ns, name)
         def_v = base_doc.get("current")
@@ -1528,152 +1530,6 @@ class WarehouseSQL:
                   else "aggregate-merge-recompute")
         )
 
-    # words allowed (besides bare-column MV key names and literal
-    # placeholders) inside a WHERE-refinement conjunct: pure boolean /
-    # comparison connectives whose value depends only on the key
-    # columns they mention
-    _MV_REFINE_WORDS = frozenset(
-        {"AND", "OR", "NOT", "IN", "IS", "NULL", "BETWEEN", "LIKE",
-         "TRUE", "FALSE"}
-    )
-
-    @classmethod
-    def _mv_where_refinement(cls, q_where, d_where, mv_keys):
-        """The query's extra WHERE conjuncts when they are a pure
-        REFINEMENT of the MV's WHERE over bare-column group keys, else
-        None. A key predicate commutes with grouping (the key is
-        constant within its group), so the extra conjuncts can filter
-        STORED GROUPS instead of source rows. Conjuncts compare as
-        normalized text, order-insensitive; every identifier in an
-        extra conjunct must be a bare-column MV key (its storage alias
-        equals the column name) or a connective from _MV_REFINE_WORDS
-        -- any function call, non-key column, or expression key
-        rejects the refinement."""
-        if q_where is None:
-            return None
-        q_conj = set(_split_top_level_and(q_where))
-        d_conj = set(_split_top_level_and(d_where)) if d_where else set()
-        if not d_conj <= q_conj:
-            return None  # the MV filters rows the query wants back
-        extra = sorted(q_conj - d_conj)
-        if not extra:
-            return None  # identical WHERE: no refinement needed
-        bare_keys = {
-            alias for expr, alias in mv_keys.items() if expr == alias
-        }
-        for conj in extra:
-            masked, _ = _mask_literals(conj)
-            for w in _WORD_RE.findall(masked):
-                up = w.upper()
-                if (
-                    up in cls._MV_REFINE_WORDS
-                    or re.fullmatch(r"LIT\d+", up)
-                    or w in bare_keys
-                ):
-                    continue
-                return None
-        return " AND ".join(f"({c})" for c in extra)
-
-    @staticmethod
-    def _split_having(core: str) -> tuple[str, str]:
-        """(core_sans_having, having_cond): detach a top-level
-        ``HAVING <cond>`` from a SELECT core (the ORDER BY/LIMIT tail
-        must already be split off). HAVING commutes with aggregate
-        routing -- it filters GROUPS, which is a post-filter over the
-        routed frame (VERDICT r11 #2)."""
-        masked, lits = _mask_literals(core)
-        for w, start, end in _top_level_words(masked):
-            if w == "HAVING":
-                return (
-                    _unmask(masked[:start].rstrip(), lits),
-                    _unmask(masked[end:].strip(), lits),
-                )
-        return core, ""
-
-    @classmethod
-    def _mv_having_rewrite(cls, having: str, q_keys, q_aggs):
-        """Rewrite a HAVING condition into a filter over the ROUTED
-        frame's output columns, or None when any part of it can't be
-        proven group-local.
-
-        Each aggregate call ``FN(inner)`` is replaced by the matching
-        query output alias, or by a fresh hidden alias (returned in
-        ``extra_aggs`` for the router to compute and drop after the
-        filter) when the query doesn't project it (``SELECT k, SUM(v)
-        ... HAVING COUNT(*) > 2``). Every remaining identifier must be
-        a bare-column group key or a boolean/comparison connective --
-        anything else (a raw source column, a function call) refuses
-        the rewrite.
-
-        Returns ``(filter_text, extra_aggs)`` where extra_aggs is
-        ``[(FN, norm_inner, hidden_alias)]``."""
-        masked, lits = _mask_literals(having)
-
-        def _norm(expr: str) -> str:
-            folded = " ".join(expr.split()).lower()
-            return re.sub(
-                r"\x00lit(\d+)\x00",
-                lambda g: (
-                    lits[int(g.group(1))]
-                    if int(g.group(1)) < len(lits) else g.group(0)
-                ),
-                folded,
-            )
-
-        by_sig = {(fn, inner): alias for fn, inner, alias in q_aggs}
-        extra: list[tuple[str, str, str]] = []
-        out: list[str] = []
-        agg_aliases: set[str] = set()
-        i = 0
-        fn_re = re.compile(
-            r"\b(SUM|COUNT|MIN|MAX|AVG)\s*\(", re.IGNORECASE
-        )
-        while i < len(masked):
-            m = fn_re.search(masked, i)
-            if m is None:
-                out.append(masked[i:])
-                break
-            out.append(masked[i:m.start()])
-            # depth-match the call's own close paren
-            depth, j = 0, m.end() - 1
-            while j < len(masked):
-                if masked[j] in "([":
-                    depth += 1
-                elif masked[j] in ")]":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            if j >= len(masked) or masked[j] != ")":
-                return None  # unbalanced: refuse
-            call = cls._mv_agg_call(masked[m.start():j + 1])
-            if call is None:
-                return None  # e.g. SUM(DISTINCT ...): refuse
-            sig = (call[0], _norm(call[1]))
-            alias = by_sig.get(sig)
-            if alias is None:
-                alias = f"__hv{len(extra)}"
-                extra.append((sig[0], sig[1], alias))
-                by_sig[sig] = alias
-            agg_aliases.add(alias)
-            out.append(alias)
-            i = j + 1
-        rewritten = "".join(out)
-        bare_keys = {
-            alias for expr, alias in q_keys if expr == alias
-        }
-        for w in _WORD_RE.findall(rewritten):
-            up = w.upper()
-            if (
-                up in cls._MV_REFINE_WORDS
-                or re.fullmatch(r"LIT\d+", up)
-                or w in bare_keys
-                or w in agg_aliases
-            ):
-                continue
-            return None
-        return _unmask(rewritten, lits), extra
-
     @staticmethod
     def _split_select_tail(s: str) -> tuple[str, str]:
         """(core, tail): detach a trailing top-level ``ORDER BY ... /
@@ -1701,299 +1557,65 @@ class WarehouseSQL:
         )
 
     def _mv_route(self, s: str):
-        """Transparent MV routing: the TEXT classifier first (a fast
-        path costing no Spark analysis -- the common direct-query
-        dashboard shapes), then the expression-tree matcher
-        (_mv_route_tree), which classifies the ANALYZED plan and so
-        also serves view-wrapped aggregates, alias renames, reordered
-        operands and implicit casts the text normalizer cannot see."""
-        if not self.mv_routing or self.principal is not None:
-            return None
-        if self._MV_TIME_VARYING_RE.search(_mask_literals(s)[0]):
-            # evaluation-time-varying functions: a version-fresh MV
-            # materialized at an earlier wall clock is semantically
-            # stale for these (current_date moved past the stored
-            # filter), so byte-identical text is NOT equivalence
-            return None
-        routed = self._mv_route_text(s)
-        if routed is not None:
-            return routed
-        return self._mv_route_tree(s)
-
-    _MV_TIME_VARYING_RE = re.compile(
-        r"\b(?:current_date|current_timestamp|current_time|now|"
-        r"localtimestamp)\b|\bunix_timestamp\s*\(\s*\)",
-        re.IGNORECASE,
-    )
-
-    def _mv_route_text(self, s: str):
         """Transparent aggregate routing (Trino/Calcite materialized-
-        view rewrite, Oracle 'aggregate navigation'): serve a
-        ``SELECT ... GROUP BY`` over a SOURCE table from a FRESH
-        matching MV's storage instead of scanning the source --
-        O(groups) read instead of O(table).
+        view rewrite, Oracle 'aggregate navigation'): serve a SELECT
+        from a FRESH matching MV's storage instead of scanning the
+        source -- an O(groups) read instead of O(table).
 
-        A route requires, all textually verified through the same
-        conservative classifier the incremental refresh uses
-        (_mv_select_shape):
+        The query's ANALYZED plan -- not its text -- is classified into
+        the single-level GROUP BY shape over one base table
+        (mvmatch.plan_shape) and matched against each candidate MV's
+        definition classified the same way. Attribute references are
+        substituted through every intermediate projection down to the
+        base table's columns, so a query written against a VIEW of the
+        source (the reference's Athena presentation layer,
+        scripts/update_metadata.py:78-117) classifies identically to
+        the direct query; filters ABOVE the aggregate (a WHERE on the
+        view of an aggregate, or HAVING) become post-filters over the
+        routed groups, with hidden aggregates computed and dropped.
 
-        - same source table; WHERE either BYTE-IDENTICAL (literals
-          included) or a pure REFINEMENT -- the query adds conjuncts
-          over bare-column group keys, which commute with grouping and
-          filter the STORED GROUPS (_mv_where_refinement: the
-          dashboard point-query-on-rollup shape);
-        - the query's group keys a SUBSET of the MV's keys (equal set
-          -> project storage 1:1; proper subset -> re-aggregate the
-          stored partials with the semigroup combiners, the rollup
-          navigation a date-grained MV serves month-grained queries
-          with; empty set -> global re-aggregation);
-        - every query aggregate present in the MV (same function,
-          same normalized inner expression), or -- AVG decomposition
-          (VERDICT r11 #2) -- AVG(x) served as SUM/COUNT: from the
-          MV's SUM(x)+COUNT(x) columns when it stores both, or from
-          the hidden partials an AVG-bearing MV materializes
-          (try_divide: an all-NULL group averages to NULL);
-        - a top-level HAVING, when present, rewrites into a filter
-          over the routed frame (group keys + aggregate calls only;
-          aggregates the query doesn't project are computed as hidden
-          columns and dropped after the filter);
-        - the MV FRESH (exact source-version equality, metadata-only
-          check -- a stale MV never routes, so results are identical
-          to the source scan by construction);
-        - an ungoverned session (a governed reader's grants are
-          enforced against the SOURCE scan; silently reading storage
-          would bypass row/column filters);
-        - the query written directly against the source TABLE --
-          view-wrapped aggregates never route (sound composition
-          needs expression-tree substitution, not text; see
-          ROUND12_NOTES.md 'Design note: MV routing through views').
+        A route requires:
 
-        The routed frame is cast to the EXACT schema the unrouted
-        query would produce (one driver-side analysis of the original
-        statement), so downstream consumers can't tell which path ran.
-        Returns None to fall through to the ordinary scan."""
+        - the same source table, and the definition's WHERE conjuncts a
+          subset of the query's; each extra conjunct must be expressible
+          over the MV's group-key EXPRESSIONS (a key predicate is
+          constant within its group, so it filters the STORED groups;
+          tree substitution admits e.g. ``year(ts) = 2024`` against a
+          ``year(ts)`` key);
+        - the query grain at or above the MV grain (equal -> project
+          storage 1:1; coarser -> re-aggregate the stored partials with
+          the semigroup combiners; no keys -> global re-aggregation);
+        - every aggregate servable: COUNT DISTINCT at equal grain only;
+          AVG through SUM/COUNT columns or the hidden partials an
+          AVG-bearing MV materializes (try_divide: an all-NULL group
+          averages to NULL);
+        - the MV FRESH (exact source-version equality, a metadata-only
+          check -- a stale MV never routes);
+        - an ungoverned session (a governed reader's grants bind to the
+          SOURCE scan; silently reading storage would bypass row/column
+          filters).
+
+        Non-deterministic and evaluation-time-varying functions never
+        route (mvmatch refuses them: a version-fresh MV materialized at
+        an earlier wall clock is stale for a current_date predicate).
+        The routed frame is pinned positionally to the exact schema the
+        unrouted query analyzes to, so downstream consumers can't tell
+        which path ran; a trailing ORDER BY / LIMIT re-applies over it.
+        Stale MVs are skipped before any analysis, and a definition's
+        shape is memoized (_mv_def_shape, seeded by REFRESH), so a
+        routed SELECT usually analyzes only itself. Returns None to
+        fall through to the source scan."""
         if not self.mv_routing or self.principal is not None:
             return None
-        core, tail = self._split_select_tail(s)
-        core_sans, having = self._split_having(core)
-        q = self._mv_select_shape(core_sans, require_group_by=False)
-        if q is None or "." not in q["src"]:
-            return None
-        extra_aggs: list[tuple[str, str, str]] = []
-        having_filter = None
-        if having:
-            hv = self._mv_having_rewrite(having, q["keys"], q["aggs"])
-            if hv is None:
-                return None  # HAVING not provably group-local
-            having_filter, extra_aggs = hv
-        want_aggs = q["aggs"] + extra_aggs
-        s_ns, s_tbl = q["src"].split(".", 1)
-        try:
-            if (
-                s_ns not in self.wh.list_namespaces()
-                or s_tbl not in self.wh.list_tables(s_ns)
-            ):
-                return None
-            candidates = self.wh.list_materialized_views(s_ns)
-        except Exception:  # noqa: BLE001 -- routing must never break SELECT
-            return None
-        for name in candidates:
-            try:
-                d = self._mv_select_shape(
-                    self.wh.mv_definition(s_ns, name)
-                )
-            except Exception:  # noqa: BLE001
-                continue
-            if d is None or d["src"] != q["src"]:
-                continue
-            mv_keys = dict(d["keys"])
-            mv_aggs = {(fn, inner): alias for fn, inner, alias in d["aggs"]}
-            refine = None
-            if d["where"] != q["where"]:
-                # not byte-identical: still routable when the query
-                # only ADDS key-column conjuncts (group-constant
-                # predicates commute with grouping -> filter the
-                # stored groups instead of the source rows)
-                refine = self._mv_where_refinement(
-                    q["where"], d["where"], mv_keys
-                )
-                if refine is None:
-                    continue
-            if not all(expr in mv_keys for expr, _ in q["keys"]):
-                continue
-            storage = Warehouse.mv_storage_table(name)
-            if storage not in self.wh.list_tables(s_ns):
-                continue
-            st = self.wh.mv_status(s_ns, name)
-            if not st.get("fresh"):
-                continue
-            sdf = self.wh.read(s_ns, storage)
-            storage_cols = set(sdf.columns)
-            if not set(mv_keys.values()) | set(mv_aggs.values()) <= (
-                storage_cols
-            ):
-                continue  # storage predates an OR REPLACE: not servable
-            equal_grain = len(q["keys"]) == len(d["keys"])
-
-            def _serve(fn: str, inner: str):
-                """Column expression answering ``FN(inner)`` from this
-                MV's storage at the query's grain, or None."""
-                direct = mv_aggs.get((fn, inner))
-                if equal_grain:
-                    if direct is not None:
-                        return F.col(direct)
-                    if fn == "AVG":
-                        s_col = mv_aggs.get(("SUM", inner))
-                        c_col = mv_aggs.get(("COUNT", inner))
-                        if s_col is not None and c_col is not None:
-                            return F.try_divide(
-                                F.col(s_col), F.col(c_col)
-                            )
-                    return None
-                if fn in self._MV_AGG_COMBINE and direct is not None:
-                    # COUNT partials fold by SUM but a global COUNT
-                    # over zero groups must be 0, not NULL
-                    folded = self._MV_AGG_COMBINE[fn](direct)
-                    if fn == "COUNT":
-                        folded = F.coalesce(folded, F.lit(0))
-                    return folded
-                if fn == "AVG":
-                    # sum of sums / sum of counts -- from explicit
-                    # SUM/COUNT columns, or from the hidden partials
-                    # an AVG-bearing MV materializes
-                    s_col = mv_aggs.get(("SUM", inner))
-                    c_col = mv_aggs.get(("COUNT", inner))
-                    if s_col is None or c_col is None:
-                        avg_alias = mv_aggs.get(("AVG", inner))
-                        if avg_alias is not None:
-                            ps = self._avg_sum_col(avg_alias)
-                            pc = self._avg_cnt_col(avg_alias)
-                            if {ps, pc} <= storage_cols:
-                                s_col, c_col = ps, pc
-                    if s_col is not None and c_col is not None:
-                        return F.try_divide(F.sum(s_col), F.sum(c_col))
-                return None
-
-            served = {
-                (fn, inner): _serve(fn, inner)
-                for fn, inner, _ in want_aggs
-            }
-            if any(c is None for c in served.values()):
-                continue  # an aggregate this MV can't answer
-            if refine is not None:
-                try:
-                    sdf = sdf.filter(F.expr(refine))
-                except Exception:  # noqa: BLE001
-                    continue  # un-analyzable refinement: never guess
-            if equal_grain:
-                # every MV group visible 1:1: project + rename
-                out = sdf.select(
-                    *[
-                        F.col(mv_keys[expr]).alias(alias)
-                        for expr, alias in q["keys"]
-                    ],
-                    *[
-                        served[(fn, inner)].alias(alias)
-                        for fn, inner, alias in want_aggs
-                    ],
-                )
-            else:
-                # coarser grain: re-aggregate the stored partials
-                out = sdf.groupBy(
-                    *[
-                        F.col(mv_keys[expr]).alias(alias)
-                        for expr, alias in q["keys"]
-                    ]
-                ).agg(
-                    *[
-                        served[(fn, inner)].alias(alias)
-                        for fn, inner, alias in want_aggs
-                    ]
-                )
-            if having_filter is not None:
-                # HAVING filters GROUPS: apply over the routed frame,
-                # then drop any hidden aggregates it needed
-                try:
-                    out = out.filter(F.expr(having_filter))
-                except Exception:  # noqa: BLE001
-                    continue
-                if extra_aggs:
-                    out = out.drop(*[a for _, _, a in extra_aggs])
-            # pin the routed output to the EXACT schema the unrouted
-            # query produces (re-aggregation widens SUM's decimal);
-            # anything surprising here (duplicate output names make the
-            # cast-select ambiguous, ...) falls through to the source
-            # scan rather than erroring a legal query
-            try:
-                expected = self.spark.sql(self._rewrite_tables(core)).schema
-                if set(expected.fieldNames()) != set(out.columns):
-                    continue  # classifier/alias drift: never route wrong
-                out = out.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in expected.fields
-                    ]
-                )
-            except Exception:  # noqa: BLE001
-                continue  # this candidate failed; a later MV may serve
-            if tail:
-                # re-apply ORDER BY / LIMIT over the routed frame; a
-                # tail referencing something storage can't resolve
-                # (e.g. ORDER BY a raw source expression) falls through.
-                # Per-route unique view name (and dropped once analysis
-                # binds the plan) so concurrent sessions sharing one
-                # SparkSession never race a fixed name.
-                self._mv_view_seq += 1
-                vname = f"__wh_mv_routed_{self._mv_view_seq}"
-                out.createOrReplaceTempView(vname)
-                try:
-                    out = self.spark.sql(f"SELECT * FROM {vname} {tail}")
-                    out.schema  # force analysis inside the try
-                except Exception:  # noqa: BLE001
-                    continue  # tail unservable from storage: next MV
-                finally:
-                    # analysis resolved the view into the plan; the
-                    # name is no longer needed (and must not linger)
-                    self.spark.catalog.dropTempView(vname)
-            self.mv_route_count += 1
-            self._last_mv_route = f"{s_ns}.{name}"
-            return out
-        return None
-
-    def _mv_route_tree(self, s: str):
-        """Expression-tree MV routing (VERDICT r12 #1): classify the
-        query's ANALYZED plan -- not its text -- into the single-level
-        GROUP BY shape over one base table (mvmatch.plan_shape), and
-        match it against each candidate MV's definition classified the
-        same way. Because attribute references are substituted through
-        every intermediate projection down to the base table's
-        columns, a query written against a VIEW of the source (the
-        reference's Athena presentation layer,
-        scripts/update_metadata.py:78-117) classifies identically to
-        the direct query, so the dashboard-over-view shape routes;
-        filters ABOVE the aggregate (a WHERE on the view of an
-        aggregate, or HAVING) become post-filters over the routed
-        groups, with hidden aggregates computed and dropped.
-
-        Soundness mirrors the text path: same source, definition WHERE
-        conjuncts a subset of the query's (extra conjuncts must be
-        expressible over MV group-key EXPRESSIONS -- tree substitution
-        also admits e.g. ``year(ts) = 2024`` against a ``year(ts)``
-        key), query grain at or above the MV grain, every aggregate
-        servable (COUNT_DISTINCT equal-grain only; AVG decomposes
-        through SUM/COUNT or hidden partials), MV fresh, ungoverned
-        session. The routed frame is pinned positionally to the exact
-        schema the unrouted query analyzes to."""
-        core, tail = self._split_select_tail(s)
         try:
             nss = self.wh.list_namespaces()
-            if not any(self.wh.list_materialized_views(n) for n in nss):
+            mvs = {n: self.wh.list_materialized_views(n) for n in nss}
+            if not any(mvs.values()):
                 return None
-            known = {
-                (n, t) for n in nss for t in self.wh.list_tables(n)
-            }
+            known = self._known_tables()
         except Exception:  # noqa: BLE001 -- routing must never break SELECT
             return None
+        core, tail = self._split_select_tail(s)
         try:
             qdf = self.spark.sql(self._rewrite_tables(core))
             q = mvmatch.plan_shape(
@@ -2003,27 +1625,30 @@ class WarehouseSQL:
             return None
         if q is None:
             return None
-        s_ns, s_tbl = q["src"]
+        s_ns = q["src"][0]
         q_where = set(q["where"])
         q_group = set(q["group"])
         agg_items = [
             (tk, it) for tk, it in q["items"].items() if it[0] == "agg"
         ]
-        try:
-            candidates = self.wh.list_materialized_views(s_ns)
-        except Exception:  # noqa: BLE001
-            return None
-        for name in candidates:
+        for name in mvs.get(s_ns, ()):
             try:
-                ddf = self.spark.sql(
-                    self._rewrite_tables(self.wh.mv_definition(s_ns, name))
-                )
-                d = mvmatch.plan_shape(
-                    ddf._jdf.queryExecution().analyzed(), known
-                )
+                # metadata-only check first: a stale or never-refreshed
+                # MV costs no definition analysis
+                if not self.wh.mv_status(s_ns, name).get("fresh"):
+                    continue
+                definition = self.wh.mv_definition(s_ns, name)
+                memo = self._mv_shapes.get((s_ns, name), (None,) * 3)
+                if memo[:2] == (definition, q["base_schema"]):
+                    d = memo[2]
+                else:
+                    d = self._mv_def_shape(s_ns, name, definition)
             except Exception:  # noqa: BLE001
                 continue
-            if d is None or d["src"] != q["src"] or d["post"]:
+            # a definition read through a named view never serves:
+            # replacing the view leaves the MV fresh (freshness tracks
+            # source versions) while its storage holds the old view
+            if d is None or d["views"] or d["src"] != q["src"] or d["post"]:
                 continue
             if len(d["out"]) != len(d["items"]):
                 continue  # def carries hidden items: storage unservable
@@ -2037,18 +1662,11 @@ class WarehouseSQL:
                     mv_aggs[(it[1], it[2])] = cname
             if set(d["group"]) != set(mv_keys):
                 continue  # an unprojected def key: storage grain hidden
-            if not set(d["where"]) <= q_where:
-                continue
-            if not q_group <= set(mv_keys):
+            if not (set(d["where"]) <= q_where and q_group <= set(mv_keys)):
                 continue
             equal_grain = q_group == set(d["group"])
-            storage = Warehouse.mv_storage_table(name)
             try:
-                if storage not in self.wh.list_tables(s_ns):
-                    continue
-                if not self.wh.mv_status(s_ns, name).get("fresh"):
-                    continue
-                sdf = self.wh.read(s_ns, storage)
+                sdf = self.wh.read(s_ns, Warehouse.mv_storage_table(name))
             except Exception:  # noqa: BLE001
                 continue
             storage_cols = set(sdf.columns)
@@ -2155,12 +1773,16 @@ class WarehouseSQL:
             except Exception:  # noqa: BLE001
                 continue
             if tail:
+                # re-apply ORDER BY / LIMIT over the routed frame; a tail
+                # storage can't resolve falls through to the next MV. A
+                # per-route view name, dropped once analysis binds the
+                # plan, so sessions sharing one SparkSession never race
                 self._mv_view_seq += 1
                 vname = f"__wh_mv_routed_{self._mv_view_seq}"
                 out.createOrReplaceTempView(vname)
                 try:
                     out = self.spark.sql(f"SELECT * FROM {vname} {tail}")
-                    out.schema
+                    out.schema  # force analysis inside the try
                 except Exception:  # noqa: BLE001
                     continue
                 finally:
@@ -2169,6 +1791,35 @@ class WarehouseSQL:
             self._last_mv_route = f"{s_ns}.{name}"
             return out
         return None
+
+    def _known_tables(self) -> set[tuple[str, str]]:
+        return {
+            (n, t) for n in self.wh.list_namespaces()
+            for t in self.wh.list_tables(n)
+        }
+
+    def _mv_def_shape(
+        self, ns: str, name: str, definition: str,
+        ddf: DataFrame | None = None,
+    ) -> dict | None:
+        """mvmatch.plan_shape of MV ``ns.name``'s ``definition`` (over
+        ``ddf`` when the caller already analyzed it), or None. Memoized
+        in ``_mv_shapes``: a definition that reads no named view
+        classifies the same while its text and its base table's
+        analyzed schema are unchanged, which _mv_route checks before
+        reusing it (a view-reading shape never routes)."""
+        try:
+            if ddf is None:
+                ddf = self.spark.sql(self._rewrite_tables(definition))
+            d = mvmatch.plan_shape(
+                ddf._jdf.queryExecution().analyzed(), self._known_tables()
+            )
+        except Exception:  # noqa: BLE001 -- unroutable, never an error
+            return None
+        if d is not None:
+            d.pop("where_nodes")  # JVM handles: only a query's are used
+            self._mv_shapes[(ns, name)] = (definition, d["base_schema"], d)
+        return d
 
     def _source_df(self, src: str) -> DataFrame:
         src = src.strip()

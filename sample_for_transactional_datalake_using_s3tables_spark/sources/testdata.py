@@ -43,8 +43,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def spread(df: DataFrame, *by: str) -> DataFrame:
     """Spread rows across all cores before per-row-expensive compute.

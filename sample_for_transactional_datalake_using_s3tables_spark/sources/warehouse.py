@@ -2963,15 +2963,8 @@ class Warehouse:
         if key_col:
             key_col = phys.get(key_col, key_col)  # files store physical names
         entries = []
-        for m in self._file_metas(paths, key_col):
-            full = m.pop("abs")
-            if m["records"] == 0:
-                # empty part files (parallelism > rows) carry no data
-                # and no stats; keeping them would bloat every
-                # manifest and defeat skip-count observability
-                os.remove(full)
-                continue
-            entry = {"path": os.path.relpath(full, tdir), **m}
+        for m in self._nonempty_metas(paths, key_col):
+            entry = {"path": os.path.relpath(m.pop("abs"), tdir), **m}
             if spec_id:
                 # partition evolution: files remember the spec that
                 # derived their partition value (spec 0 stays implicit)
@@ -2979,6 +2972,19 @@ class Warehouse:
             entries.append(entry)
         _pack_blooms(tdir, entries)
         return entries
+
+    def _nonempty_metas(
+        self, paths: list[tuple[str, str | None]], key_col: str | None
+    ) -> list[dict]:
+        """:meth:`_file_metas` of the files in ``paths`` that hold rows.
+        The empty part files a Spark write leaves (parallelism > rows)
+        are deleted: they carry no data and no stats, yet every manifest
+        would list them and every read would open them."""
+        metas = self._file_metas(paths, key_col)
+        for m in metas:
+            if not m["records"]:
+                os.remove(m["abs"])
+        return [m for m in metas if m["records"]]
 
     def _file_metas(
         self, paths: list[tuple[str, str | None]], key_col: str | None
@@ -4309,9 +4315,13 @@ class Warehouse:
         )
         cdir = os.path.join(tdir, "data", f"changes-{uuid.uuid4().hex[:12]}")
         out.write.parquet(cdir, mode="overwrite", compression=_PARQUET_CODEC)
-        return [
-            {"path": os.path.relpath(os.path.join(d, fn), tdir)}
+        files = [
+            (os.path.join(d, fn), None)
             for d, fn in sorted(_spark_output_files(cdir))
+        ]
+        return [
+            {"path": os.path.relpath(m["abs"], tdir)}
+            for m in self._nonempty_metas(files, None)
         ]
 
     def set_column_default(

@@ -71,14 +71,8 @@ TRANSACTIONS_SCHEMA = StructType(
 
 DERIVED = ("date", "hour", "minute")
 
-# The CDC envelope: NewImage/OldImage are maps of column ->
+# The CDC envelope: NewImage/OldImage map each column to an
 # AttributeValue type-tag map ({"S": ..} | {"N": ..} | {"BOOL": ..}).
-IMAGE_TYPE = "map<string, map<string, string>>"
-CDC_ENVELOPE_DDL = (
-    "eventName string, "
-    f"dynamodb struct<NewImage: {IMAGE_TYPE}, OldImage: {IMAGE_TYPE}>"
-)
-
 # Parse-side schema (optimization r13, guide section 1.2 "per-task
 # work"): the 22-column transactions schema is known up front, so
 # from_json targets a STRUCT naming exactly the attributes the unwrap

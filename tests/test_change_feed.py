@@ -411,3 +411,27 @@ def test_stored_cdf_mixed_pos_equality_history_matches_derived(spark, tmp_path):
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert "Except" not in plan
+
+
+def test_mor_pos_delete_stores_no_empty_change_files(spark, tmp_path):
+    """A one-row position DELETE on a change-feed table stores exactly
+    one change file: the 0-row part files its Spark write leaves are
+    dropped like empty data files, so no changelog read opens them.
+    The stored change set still matches the derived path's."""
+    stored = Warehouse(spark, str(tmp_path / "stored"))
+    derived = Warehouse(spark, str(tmp_path / "derived"))
+    rows = [(f"k{i}", f"d{i % 3}", i) for i in range(40)]
+    for w in (stored, derived):
+        w.create_namespace("ns")
+        w.create_table("ns", "t", S, key="id")
+    stored.set_change_feed("ns", "t", True)
+    for w in (stored, derived):
+        w.insert("ns", "t", spark.createDataFrame(rows, S).coalesce(2))
+        w.delete_where("ns", "t", F.col("id") == "k7", strategy="mor-pos")
+    tdir = stored._table_dir("ns", "t")
+    doc = stored._manifest_doc(tdir, stored._versions(tdir)[-1])
+    assert len(doc["change_files"]) == 1
+    got = _changes(stored.changelog("ns", "t", 0))
+    want = _changes(derived.changelog("ns", "t", 0))
+    assert ("k7", "d1", 7, "delete", 3) in got
+    assert got == sorted((i, d, v, t, cv + 1) for i, d, v, t, cv in want)

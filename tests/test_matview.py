@@ -623,8 +623,8 @@ def test_mv_route_compound_aggregate_never_routes(env):
 
 
 def test_mv_route_between_refinement_on_key(env):
-    """BETWEEN over a bare-column key is a routable refinement now that
-    the conjunct splitter keeps it whole."""
+    """BETWEEN over a bare-column key is a routable refinement: the
+    plan matcher renders Spark's ``Between`` from its operands."""
     wh, sql, spark = env
     _mk_routed_mv(sql)  # keys: id, v % 2 AS parity; WHERE v >= 1
     direct = WarehouseSQL(wh, mv_routing=False)

@@ -17,10 +17,13 @@ tables -- the shape the text classifier could never route).
 
 from __future__ import annotations
 
+import datetime
 import tempfile
 
 import pytest
 from pyspark.sql.types import (
+    DateType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -29,10 +32,6 @@ from pyspark.sql.types import (
 
 from sample_for_transactional_datalake_using_s3tables_spark.sources.sqlexec import WarehouseSQL
 from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import Warehouse
-
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4).
-# Run everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
 
 
 S = StructType(
@@ -112,6 +111,14 @@ def test_view_where_on_key_conjoins_as_refinement(env):
     _run(sql, "SELECT * FROM ns.vw WHERE g = 'g1'", True)
     _run(sql, "SELECT * FROM ns.vw WHERE g IN ('g0', 'g2')", True)
     _run(sql, "SELECT * FROM ns.vw WHERE total > 100", True)
+
+
+def test_view_between_on_key_routes(env):
+    """``BETWEEN`` analyzes to a RuntimeReplaceable ``Between`` over a
+    ``With`` node; the matcher renders it from its operands, so a
+    BETWEEN key refinement over a view routes like any comparison."""
+    _, sql, _ = env
+    _run(sql, "SELECT * FROM ns.vw WHERE g BETWEEN 'g0' AND 'g1'", True)
 
 
 def test_group_by_over_projection_view_routes(env):
@@ -206,6 +213,159 @@ def test_order_by_limit_tail_over_view_route(env):
     )
 
 
+def test_routed_select_reuses_the_definition_shape(env, monkeypatch):
+    """A routed SELECT analyzes an MV definition once per session: the
+    first route memoizes its shape, and REFRESH (which analyzes the
+    definition anyway) seeds the memo."""
+    wh, sql, _ = env
+    sql.execute("REFRESH MATERIALIZED VIEW ns.mv")
+    definition = wh.mv_definition("ns", "mv")
+    stmt = "SELECT g, SUM(v) AS total FROM ns.t GROUP BY g"
+
+    def analyzed_defs(session):
+        seen: list[str] = []
+        orig = session._rewrite_tables
+        monkeypatch.setattr(
+            session, "_rewrite_tables",
+            lambda text, *a: seen.append(text) or orig(text, *a),
+        )
+        return seen
+
+    cold = WarehouseSQL(wh)
+    seen = analyzed_defs(cold)
+    _run(cold, stmt, True)
+    assert seen.count(definition) == 1
+    seen.clear()
+    _run(cold, stmt, True)
+    assert definition not in seen
+
+    seeded = WarehouseSQL(wh)
+    seeded.execute("REFRESH MATERIALIZED VIEW ns.mv")
+    seen = analyzed_defs(seeded)
+    _run(seeded, stmt, True)
+    assert definition not in seen
+
+
+# -- the reference dashboard shapes: interval arithmetic, extract,
+# make_date and try_divide classify like any other expression --
+
+TX = StructType(
+    [
+        StructField("id", LongType(), False),
+        StructField("region", StringType()),
+        StructField("merchant_category", StringType()),
+        StructField("date", DateType()),
+        StructField("amount", DoubleType()),
+        StructField("qty", LongType()),
+        StructField("risk_score", StringType()),
+        StructField("status", StringType()),
+    ]
+)
+
+_RISK_SELECT = (
+    "SELECT region, merchant_category, date, "
+    "COUNT(*) AS total_transactions, "
+    "SUM(CAST(amount AS DECIMAL(12,2))) AS total_amount, "
+    "COUNT(CASE WHEN risk_score = 'HIGH' THEN 1 END) AS high_risk_count, "
+    "COUNT(CASE WHEN status = 'FLAGGED' THEN 1 END) "
+    "AS flagged_transactions "
+    "FROM r.tx WHERE date >= DATE '2024-01-14' - INTERVAL '7' DAY "
+    "GROUP BY region, merchant_category, date"
+)
+
+
+@pytest.fixture(scope="module")
+def risk_env(spark):
+    with tempfile.TemporaryDirectory() as d:
+        wh = Warehouse(spark, d)
+        wh.create_namespace("r")
+        wh.create_table("r", "tx", TX)
+        day0 = datetime.date(2024, 1, 1)
+        rows = [
+            (
+                i, f"reg{i % 3}", f"cat{i % 2}",
+                day0 + datetime.timedelta(days=i % 14),
+                round(10.5 + i * 3.25, 2), 1 + i % 4,
+                "HIGH" if i % 5 == 0 else "LOW",
+                "FLAGGED" if i % 7 == 0 else "OK",
+            )
+            for i in range(60)
+        ]
+        wh.insert("r", "tx", spark.createDataFrame(rows, TX).coalesce(2))
+        sql = WarehouseSQL(wh)
+        for name, body in [
+            ("risk7", _RISK_SELECT),
+            (
+                "daily",
+                "SELECT region, date, COUNT(*) AS n, "
+                "SUM(try_divide(CAST(amount AS DECIMAL(12,2)), qty)) "
+                "AS per_unit FROM r.tx GROUP BY region, date",
+            ),
+            (
+                "monthly",
+                "SELECT make_date(year(date), extract(month FROM date), 1) "
+                "AS month_start, region, "
+                "SUM(CAST(amount AS DECIMAL(12,2))) AS total FROM r.tx "
+                "GROUP BY make_date(year(date), extract(month FROM date), 1), "
+                "region",
+            ),
+        ]:
+            sql.execute(f"CREATE MATERIALIZED VIEW r.{name} AS {body}")
+            sql.execute(f"REFRESH MATERIALIZED VIEW r.{name}")
+        yield sql
+
+
+def test_risk_dashboard_query_routes(risk_env):
+    """The reference's Risk Analysis query (a ``DATE - INTERVAL`` WHERE,
+    HAVING over a conditional count, ORDER BY) routes from an MV
+    holding the same WHERE."""
+    sql = risk_env
+    rows = _run(
+        sql,
+        f"{_RISK_SELECT} "
+        "HAVING COUNT(CASE WHEN risk_score = 'HIGH' THEN 1 END) > 0 "
+        "ORDER BY high_risk_count DESC",
+        True,
+    )
+    assert rows and sql._last_mv_route == "r.risk7"
+
+
+def test_interval_predicate_refines_a_date_key(risk_env):
+    """A different interval window is a refinement conjunct over the
+    ``date`` key: re-rendered over MV storage, it must parse back."""
+    sql = risk_env
+    _run(
+        sql,
+        "SELECT region, COUNT(*) AS n FROM r.tx "
+        "WHERE date >= DATE '2024-01-14' - INTERVAL '3' DAY GROUP BY region",
+        True,
+    )
+    assert sql._last_mv_route == "r.daily"
+    _run(
+        sql,
+        "SELECT date, "
+        "SUM(try_divide(CAST(amount AS DECIMAL(12,2)), qty)) AS per_unit "
+        "FROM r.tx WHERE date < DATE '2024-01-03' + INTERVAL '1' DAY "
+        "AND region = 'reg1' GROUP BY date",
+        True,
+    )
+
+
+def test_extract_and_make_date_keys_route(risk_env):
+    """``date_part('month', d)`` and ``extract(month FROM d)`` analyze
+    to the same ``month(d)``, so a make_date key written either way
+    matches."""
+    sql = risk_env
+    _run(
+        sql,
+        "SELECT make_date(year(date), date_part('month', date), 1) AS ms, "
+        "SUM(CAST(amount AS DECIMAL(12,2))) AS total FROM r.tx "
+        "GROUP BY make_date(year(date), date_part('month', date), 1)",
+        True,
+    )
+    assert sql._last_mv_route == "r.monthly"
+
+
 # -- adversarial no-route cases (must stay correct via direct scan) --
 
 def test_non_key_view_filter_refuses(env):
@@ -251,23 +411,47 @@ def test_mv_def_with_having_never_serves_undiltered_query(env):
     sql.execute("DROP MATERIALIZED VIEW ns.hmv")
 
 
-def test_time_varying_predicate_never_routes(env):
+@pytest.mark.parametrize(
+    "fn",
+    [
+        "current_date",
+        "current_timestamp()",
+        "now()",
+        "localtimestamp()",
+        "current_time()",
+        "unix_timestamp()",
+    ],
+)
+def test_time_varying_predicate_never_routes(env, fn):
+    """An evaluation-time-varying function never routes, whether the
+    MV definition carries it too (a version-fresh MV materialized at an
+    earlier wall clock is stale for it) or only the query does (as a
+    refinement over the group key it would otherwise filter stored
+    groups by a clock the storage never saw)."""
     _, sql, _ = env
+    pred = f"k < CONCAT('z', CAST({fn} AS STRING))"
     sql.execute(
         "CREATE MATERIALIZED VIEW ns.tvmv AS "
-        "SELECT g, SUM(v) AS total FROM ns.t "
-        "WHERE v >= 0 AND k < CONCAT('z', CAST(CURRENT_DATE AS STRING)) "
+        f"SELECT g, SUM(v) AS total FROM ns.t WHERE v >= 0 AND {pred} "
         "GROUP BY g"
     )
     sql.execute("REFRESH MATERIALIZED VIEW ns.tvmv")
+    try:
+        _run(
+            sql,
+            f"SELECT g, SUM(v) AS total FROM ns.t WHERE v >= 0 AND {pred} "
+            "GROUP BY g",
+            False,
+        )
+    finally:
+        sql.execute("DROP MATERIALIZED VIEW ns.tvmv")
+    # only the query: a key predicate ns.mv could otherwise serve
     _run(
         sql,
         "SELECT g, SUM(v) AS total FROM ns.t "
-        "WHERE v >= 0 AND k < CONCAT('z', CAST(CURRENT_DATE AS STRING)) "
-        "GROUP BY g",
+        f"WHERE g < CONCAT('z', CAST({fn} AS STRING)) GROUP BY g",
         False,
     )
-    sql.execute("DROP MATERIALIZED VIEW ns.tvmv")
 
 
 def test_stale_mv_never_routes_through_view(env):
@@ -295,6 +479,29 @@ def test_join_and_subquery_refuse(env):
         "WHERE k IN (SELECT k FROM ns.t WHERE w > 100) GROUP BY g",
         False,
     )
+
+
+def test_mv_defined_over_a_view_never_serves(env):
+    """Replacing a view leaves an MV defined over it fresh (freshness
+    tracks source-table versions) while its storage still holds the old
+    view's rows, so such an MV must never serve a routed query."""
+    wh, sql, _ = env
+    sql.execute("CREATE VIEW ns.wv AS SELECT g, v FROM ns.t")
+    sql.execute(
+        "CREATE MATERIALIZED VIEW ns.overview AS "
+        "SELECT g, MAX(v) AS mx FROM ns.wv GROUP BY g"
+    )
+    sql.execute("REFRESH MATERIALIZED VIEW ns.overview")
+    stmt = "SELECT g, MAX(v) AS mx FROM ns.wv GROUP BY g"  # only it matches
+    try:
+        _run(sql, stmt, False)
+        sql.execute(
+            "CREATE OR REPLACE VIEW ns.wv AS SELECT g, v * 100 AS v FROM ns.t"
+        )
+        assert wh.mv_status("ns", "overview")["fresh"]
+        _run(sql, stmt, False)
+    finally:
+        sql.execute("DROP MATERIALIZED VIEW ns.overview")
 
 
 def test_view_with_order_limit_inside_refuses(env):
