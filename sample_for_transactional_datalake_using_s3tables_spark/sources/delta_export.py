@@ -166,7 +166,8 @@ def import_delta_table(
     data files. The log is replayed to the live file set; files are
     hard-linked (falling back to copy) into the new table's data dir,
     so they keep the codec they were written with (a table may mix
-    codecs); per-file footer stats and the optional key Bloom come
+    codecs); per-file footer stats (of the columns
+    ``Warehouse._stats_columns`` picks) and the optional key Bloom come
     from ``Warehouse._file_metas``, the same in-process-or-distributed
     build ``_write_files`` uses, so the imported table immediately
     supports min/max + Bloom data skipping even though the Delta log
@@ -218,7 +219,8 @@ def import_delta_table(
     key_col = key if key and key in schema.fieldNames() else None
     entries = []
     if paths:
-        for m in wh._file_metas([(p, None) for p in paths], key_col):
+        stats_cols = wh._stats_columns(wh.table_meta(ns, table))
+        for m in wh._file_metas([(p, None) for p in paths], key_col, stats_cols):
             full = m.pop("abs")
             entries.append({"path": os.path.relpath(full, tdir), **m})
         _pack_blooms(tdir, entries)

@@ -292,8 +292,10 @@ class WarehouseSQL:
         self._mv_shapes: dict[tuple[str, str], tuple] = {}
         # while a REFRESH MATERIALIZED VIEW rewrite runs, every resolved
         # source table records {"ns.tbl": version} here -- the snapshot
-        # watermarks freshness is judged against
+        # watermarks freshness is judged against, and every expanded
+        # plain view its text here ({"ns.view": sql})
         self._mv_refs: dict[str, int] | None = None
+        self._mv_views: dict[str, str] | None = None
 
     def _read(self, ns: str, tbl: str):
         if self.principal is None:
@@ -515,6 +517,8 @@ class WarehouseSQL:
                         "(cyclic views?)"
                     )
                 vsql = self.wh.view_definition(ns, tbl)
+                if self._mv_views is not None:
+                    self._mv_views[f"{ns}.{tbl}"] = vsql
                 view = f"__wh_view_{ns}__{tbl}"
                 # invoker rights: the nested rewrite resolves underlying
                 # tables through THIS session's principal
@@ -767,13 +771,13 @@ class WarehouseSQL:
                 "use an ungoverned session"
             )
         sql_text = self.wh.mv_definition(ns, name)
-        self._mv_refs = {}
+        self._mv_refs, self._mv_views = {}, {}
         try:
             rewritten = self._rewrite_tables(sql_text)
             df = self.spark.sql(rewritten)
-            refs = self._mv_refs
+            refs, views = self._mv_refs, self._mv_views
         finally:
-            self._mv_refs = None
+            self._mv_refs = self._mv_views = None
         if self.mv_routing:
             # the definition is analyzed here anyway: memoize its
             # routing shape so the next routed SELECT skips that work
@@ -783,8 +787,14 @@ class WarehouseSQL:
         def_v = base_doc.get("current")
         base_wm = base_doc.get("watermarks")
         vis_cache = base_doc.get("visible")
+        # storage built through other view texts folds no delta: only a
+        # full recompute is correct
+        same_views = views == (base_doc.get("views") or {})
 
-        inc = self._mv_incremental_delta(ns, name, refs, rewritten)
+        inc = (
+            self._mv_incremental_delta(ns, name, refs, rewritten)
+            if same_views else None
+        )
         if inc is not None:
             src_ref, delta, covered_v = inc
             # re-point the source's resolved view at the INSERT delta
@@ -801,26 +811,33 @@ class WarehouseSQL:
                 ns, storage, new_rows,
                 mv_stamp={
                     "def": def_v, "watermarks": {src_ref: covered_v},
-                    "visible": vis_cache, "base": base_wm,
+                    "visible": vis_cache, "base": base_wm, "views": views,
                 },
             )
-            self.wh.mv_record_refresh(ns, name, {src_ref: covered_v})
+            self.wh.mv_record_refresh(
+                ns, name, {src_ref: covered_v}, views=views
+            )
             st = self.wh.mv_status(ns, name)
             st["incremental"] = True
             st["incremental_mode"] = "append"
             return st
 
-        agg = self._mv_incremental_agg(ns, name, refs, rewritten)
+        agg = (
+            self._mv_incremental_agg(ns, name, refs, rewritten)
+            if same_views else None
+        )
         if agg is not None:
             src_ref, merged, covered_v, mode = agg
             self.wh.insert(
                 ns, storage, merged, overwrite=True,
                 mv_stamp={
                     "def": def_v, "watermarks": {src_ref: covered_v},
-                    "visible": vis_cache, "base": base_wm,
+                    "visible": vis_cache, "base": base_wm, "views": views,
                 },
             )
-            self.wh.mv_record_refresh(ns, name, {src_ref: covered_v})
+            self.wh.mv_record_refresh(
+                ns, name, {src_ref: covered_v}, views=views
+            )
             st = self.wh.mv_status(ns, name)
             st["incremental"] = True
             st["incremental_mode"] = mode
@@ -883,9 +900,12 @@ class WarehouseSQL:
         # commit order; each overwrite+stamp is internally consistent)
         self.wh.insert(
             ns, storage, store_df, overwrite=True,
-            mv_stamp={"def": def_v, "watermarks": refs, "visible": visible},
+            mv_stamp={
+                "def": def_v, "watermarks": refs, "visible": visible,
+                "views": views,
+            },
         )
-        self.wh.mv_record_refresh(ns, name, refs, visible=visible)
+        self.wh.mv_record_refresh(ns, name, refs, visible=visible, views=views)
         st = self.wh.mv_status(ns, name)
         st["incremental"] = False
         return st

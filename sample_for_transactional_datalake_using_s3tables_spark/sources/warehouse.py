@@ -87,14 +87,23 @@ def _scope_key(entry: dict) -> tuple[int, str]:
     return (entry.get("spec", 0), _part_key(entry["partition"]))
 
 
-def _file_stats(md) -> dict:
-    """Per-file column min/max from the parquet footer (Iceberg manifest
-    lower_bounds/upper_bounds analog). JSON-safe primitive types only;
-    dates become ISO strings (ISO order == date order). A column with no
-    usable stats is simply absent -- readers must treat absence as
-    'cannot prune'."""
+def _stat_value(v):
+    """``v`` as a manifest stats bound: JSON-safe primitives as they
+    are, dates as ISO strings (ISO order == date order), None for any
+    other type (a column bounded by one carries no stats)."""
     import datetime
 
+    if isinstance(v, datetime.date):
+        return v.isoformat()
+    return v if isinstance(v, (int, float, str, bool)) else None
+
+
+def _file_stats(md, cols=None) -> dict:
+    """Per-file column min/max from the parquet footer (Iceberg manifest
+    lower_bounds/upper_bounds analog) for the physical columns ``cols``
+    (None: every column; see ``Warehouse._stats_columns``), bounds as
+    :func:`_stat_value` gives them. A column with no usable stats is
+    simply absent -- readers must treat absence as 'cannot prune'."""
     agg: dict[str, list] = {}
     bad: set[str] = set()  # any row group without stats poisons the column
     for rg in range(md.num_row_groups):
@@ -102,18 +111,17 @@ def _file_stats(md) -> dict:
         for ci in range(row_group.num_columns):
             col = row_group.column(ci)
             name = col.path_in_schema
+            if cols is not None and name not in cols:
+                continue
             try:
                 st = col.statistics
                 ok = st is not None and st.has_min_max and "." not in name
                 lo, hi = (st.min, st.max) if ok else (None, None)
             except Exception:  # pyarrow: "Cannot extract statistics" etc.
                 ok = False
-            if not ok:
-                bad.add(name)
-                continue
-            if isinstance(lo, datetime.date):
-                lo, hi = lo.isoformat(), hi.isoformat()
-            if not isinstance(lo, (int, float, str, bool)):
+            if ok:
+                lo, hi = _stat_value(lo), _stat_value(hi)
+            if not ok or lo is None or hi is None:
                 bad.add(name)
                 continue
             if name in agg:
@@ -132,15 +140,23 @@ def _file_stats(md) -> dict:
 # per trigger at sf1 and growing linearly with table size). Now
 # m grows with the file's key count (~24 bits/key, capped so manifests
 # stay small) and k with m/n, so a trigger-sized file (~1k keys) gets
-# a 32768-bit / 16-hash bloom whose any-of-50k-keys keep probability
-# is ~4 % instead of ~100 %. The floor is 512 bits: a merge-on-read
-# commit's ~21-key files get 512 bits / 16 hashes (~8e-6 false-positive
-# rate per key) instead of a mostly empty 8192-bit pack slot each.
-# Positions use standard double hashing
-# (h1 + i*h2 mod m, Kirsch-Mitzenmacher) so k is free to vary; blooms
-# store their (m, k). A Bloom of any other shape -- a bare hex string or
-# a dict without its type tag, m or k -- is unreadable and keeps its
-# file (_bloom_usable): it can never mis-prune.
+# a 24576-bit / 16-hash bloom. m rounds up to a 1/8-octave step, at
+# most 12.5 % over 24 bits/key, and at most 8 distinct m per octave
+# keep the bulk probe's (m, k) groups wide. Rounding to a power of two
+# cost up to 100 % more pack bytes for no precision: with m = 2**15 the
+# positions are exact arithmetic progressions mod m (2**64 wraps to 0),
+# and 1k-key files measured 1.1e-5 false positives per absent key (40
+# files x 100k keys), against 7.0e-6 at m = 24576, its theoretical
+# rate (a 1,300-key batch keeps such a file by mistake ~1 % of the
+# time). The floor is 512 bits: a
+# merge-on-read commit's ~21-key files get 512 bits / 16 hashes (~8e-6
+# false-positive rate per key) instead of a mostly empty 8192-bit pack
+# slot each. Positions use standard double hashing (h1 + i*h2 mod m,
+# Kirsch-Mitzenmacher), so neither k nor m needs a special shape;
+# blooms store their (m, k), so packs of an earlier sizing rule (powers
+# of two) probe unchanged. A Bloom of any other shape -- a bare hex
+# string or a dict without its type tag, m or k -- is unreadable and
+# keeps its file (_bloom_usable): it can never mis-prune.
 _BLOOM_M = 512
 _BLOOM_M_MAX = 262144  # 32 KiB of bits per file in its commit's pack
 _BLOOM_BITS_PER_KEY = 24
@@ -148,12 +164,13 @@ _U64 = (1 << 64) - 1
 
 
 def _bloom_params(n: int) -> tuple[int, int]:
-    """(m, k) for a file holding ``n`` keys: m = pow2 >= 24*n within
-    [512, 262144]; k ~ 0.7*m/n capped to [2, 16]."""
-    m = _BLOOM_M
+    """(m, k) for a file holding ``n`` keys: m = 24*n rounded up to a
+    multiple of q = 2**(bit_length(24*n) - 4) (at least 64 bits, so m
+    stays whole bytes), within [512, 262144]; k ~ 0.7*m/n capped to
+    [2, 16]."""
     target = _BLOOM_BITS_PER_KEY * max(1, n)
-    while m < target and m < _BLOOM_M_MAX:
-        m *= 2
+    q = max(64, 1 << (target.bit_length() - 4))
+    m = min(_BLOOM_M_MAX, max(_BLOOM_M, -(-target // q) * q))
     k = max(2, min(16, round(0.7 * m / max(1, n))))
     return m, k
 
@@ -382,13 +399,15 @@ def _zorder_expr(axes: list[tuple[F.Column, float, float]]) -> F.Column:
     return key
 
 
-def _extract_file_meta(full: str, bloom_col: str | None) -> dict:
-    """Footer stats + optional key Bloom for one just-written parquet
-    file. A plain function with no session capture, so
-    ``Warehouse._file_metas`` can run it in this process for a small
-    commit or on executors over a large commit's file list, and a
-    commit with hundreds of thousands of files never serializes footer
-    reads through the driver. The bloom build reads only the single key
+def _extract_file_meta(
+    full: str, bloom_col: str | None, stats_cols=None
+) -> dict:
+    """Footer stats of the columns ``stats_cols`` (None: all) + optional
+    key Bloom for one just-written parquet file. A plain function with
+    no session capture, so ``Warehouse._file_metas`` can run it in this
+    process for a small commit or on executors over a large commit's
+    file list, and a commit with hundreds of thousands of files never
+    serializes footer reads through the driver. The bloom build reads only the single key
     column (columnar, page-local)."""
     import os as _os
 
@@ -399,7 +418,7 @@ def _extract_file_meta(full: str, bloom_col: str | None) -> dict:
         "abs": full,
         "bytes": _os.path.getsize(full),
         "records": md.num_rows,
-        "stats": _file_stats(md) if md.num_rows else {},
+        "stats": _file_stats(md, stats_cols) if md.num_rows else {},
     }
     if md.num_rows and bloom_col:
         bloom = _build_bloom(
@@ -558,14 +577,12 @@ class _BulkKeyProbe:
         if pos.size == 0:
             return True
         h1, h2 = h[:, 0], h[:, 1]
-        # m is always a power of two (_bloom_params doubles from 512),
-        # so "% m" == "& (m-1)" -- identical positions, no uint64 mod
-        mask = np.uint64(m - 1)
+        mu = np.uint64(m)
         lut = np.left_shift(np.uint8(1), np.arange(8, dtype=np.uint8))
         pos = pos.astype(np.uint64)
         for j in range(k):
             if j:  # uint64 wrap matches _bloom_positions' & _U64
-                pos = (h1 + np.uint64(j) * h2) & mask
+                pos = (h1 + np.uint64(j) * h2) % mu
             alive = (
                 bits[(pos >> np.uint64(3)).astype(np.intp)]
                 & lut[(pos & np.uint64(7)).astype(np.uint8)]
@@ -613,7 +630,7 @@ class _BulkKeyProbe:
         n = self.h12.shape[0]
         lut = np.left_shift(np.uint8(1), np.arange(8, dtype=np.uint8))
         for (m, k), members in groups.items():
-            mask = np.uint64(m - 1)
+            mu = np.uint64(m)
             nb = min(k, 4)  # batched hash count: survivors after 4 are
             # ~fill^4 of the batch (a few %), so the per-entry tail is
             # negligible while the matrix passes stay memory-bounded
@@ -623,7 +640,7 @@ class _BulkKeyProbe:
                     self._pos0(m).astype(np.uint64)
                     if j == 0
                     else (self.h12[:, 0] + np.uint64(j) * self.h12[:, 1])
-                    & mask
+                    % mu
                 )
                 idxs.append((pos >> np.uint64(3)).astype(np.intp))
                 sels.append(lut[(pos & np.uint64(7)).astype(np.uint8)])
@@ -648,7 +665,7 @@ class _BulkKeyProbe:
                     h2 = self.h12[surv, 1]
                     bits = bmat[row]
                     for j in range(nb, k):
-                        pos = (h1 + np.uint64(j) * h2) & mask
+                        pos = (h1 + np.uint64(j) * h2) % mu
                         al = (
                             bits[(pos >> np.uint64(3)).astype(np.intp)]
                             & lut[(pos & np.uint64(7)).astype(np.uint8)]
@@ -1721,6 +1738,7 @@ class Warehouse:
         stamp = self.mv_storage_stamp(ns, name)
         if stamp is not None and stamp.get("def") == doc.get("current"):
             doc["watermarks"] = stamp.get("watermarks")
+            doc["views"] = stamp.get("views")
             if stamp.get("visible") is not None:
                 doc["visible"] = stamp["visible"]
             if stamp.get("ts") is not None:
@@ -1737,9 +1755,12 @@ class Warehouse:
         name: str,
         watermarks: dict[str, int] | None,
         visible: list[str] | None = None,
+        views: dict[str, str] | None = None,
     ) -> None:
         """Cache the source-table snapshot versions a refresh read
-        (``{"ns.tbl": version}``); freshness is exact version equality.
+        (``{"ns.tbl": version}``) and the texts of the plain views it
+        expanded (``{"ns.view": sql}``); freshness is exact version
+        and text equality.
         The AUTHORITATIVE stamp rides the storage table's commit
         manifest (``mv_stamp``, overlaid by ``mv_doc``); this ``.mv.
         json`` write is a cache/fallback for storage-less states.
@@ -1753,6 +1774,7 @@ class Warehouse:
         path = self._mv_path(ns, name)
         doc = self._mv_doc_raw(ns, name)
         doc["watermarks"] = watermarks
+        doc["views"] = views
         if visible is not None:
             doc["visible"] = visible
         doc["refreshed_ts"] = _time.time()
@@ -1763,8 +1785,11 @@ class Warehouse:
 
     def mv_status(self, ns: str, name: str) -> dict:
         """{refreshed, fresh, watermarks, stale_sources}: fresh iff
-        every watermarked source still sits at its recorded version
-        (a metadata-only check -- one version listing per source)."""
+        every watermarked source still sits at its recorded version and
+        every plain view the definition read through still has the text
+        it had at REFRESH (a metadata-only check -- one version listing
+        per source, one view file per view). A replaced or dropped view
+        is reported in ``stale_sources`` as ``"ns.view"``."""
         doc = self.mv_doc(ns, name)
         wm = doc.get("watermarks")
         if wm is None:
@@ -1781,6 +1806,14 @@ class Warehouse:
                 cur = -1
             if cur != v:
                 stale.append(ref)
+        for ref, text in (doc.get("views") or {}).items():
+            v_ns, v_name = ref.split(".", 1)
+            try:
+                cur_text = self.view_definition(v_ns, v_name)
+            except (ValueError, OSError):
+                cur_text = None
+            if cur_text != text:
+                stale.append(ref)
         return {
             "refreshed": True, "fresh": not stale,
             "watermarks": wm, "stale_sources": stale,
@@ -1788,8 +1821,9 @@ class Warehouse:
 
     # -- table statistics (the Iceberg Puffin / ANALYZE TABLE analog:
     # per-column NDV + null counts from ONE aggregate pass, column
-    # min/max folded from the MANIFEST's per-file footer stats with no
-    # data scan, stamped with the snapshot version they describe) --
+    # min/max folded from the MANIFEST's per-file footer stats, or from
+    # that same pass for a column some file keeps no stats for, stamped
+    # with the snapshot version they describe) --
 
     def analyze_table(
         self, ns: str, table: str, mode: str = "exact"
@@ -1799,9 +1833,11 @@ class Warehouse:
         column (one shuffle; the cost an explicit ANALYZE signs up
         for); ``mode="approx"`` uses HLL++ (approx_count_distinct) --
         the 100 TB path, constant memory per column. Null counts ride
-        the same single aggregate. Column min/max come from manifest
-        footer stats only (metadata: a column absent from any file's
-        stats reports None -- absence means 'unknown', never a guess).
+        the same single aggregate. Column min/max fold the manifest's
+        footer stats when every live file carries them; a column some
+        file keeps no stats for (see :meth:`_stats_columns`) takes
+        MIN/MAX in the same aggregate instead. Bounds are JSON-safe as
+        :func:`_stat_value` gives them (None for other types).
         Returns the stored stats document."""
         import time as _time
 
@@ -1816,7 +1852,20 @@ class Warehouse:
             if not isinstance(f.dataType, (StructType,))
             and f.dataType.typeName() not in ("array", "map", "binary")
         ]
-        df = self.read(ns, table)
+        # manifest-side min/max (physical column names)
+        phys = meta.get("physical") or {}
+        entries = self._manifest(tdir, version)
+        records = sum(e.get("records", 0) for e in entries)
+        bounds: dict[str, tuple] = {}
+        for c in atomic:
+            pc = phys.get(c, c)
+            file_stats = [(e.get("stats") or {}).get(pc) for e in entries]
+            if entries and None not in file_stats:
+                bounds[c] = (  # stats = [min, max]
+                    min(s[0] for s in file_stats),
+                    max(s[1] for s in file_stats),
+                )
+        df = self.read(ns, table, version=version)
         aggs = []
         for c in atomic:
             ndv = (
@@ -1827,24 +1876,17 @@ class Warehouse:
             aggs.append(
                 F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{c}")
             )
+            if c not in bounds:
+                aggs.append(F.min(c).alias(f"__min_{c}"))
+                aggs.append(F.max(c).alias(f"__max_{c}"))
         row = (
             df.agg(*aggs).collect()[0] if aggs else {}
-        )  # bounded: two scalars per column
-        # manifest-side min/max (physical column names)
-        phys = meta.get("physical") or {}
-        entries = self._manifest(tdir, version)
-        records = sum(e.get("records", 0) for e in entries)
+        )  # bounded: at most four scalars per column
         columns: dict[str, dict] = {}
         for c in atomic:
-            pc = phys.get(c, c)
-            file_stats = [
-                (e.get("stats") or {}).get(pc) for e in entries
-            ]
-            if entries and all(s is not None for s in file_stats):
-                lo = min(s[0] for s in file_stats)  # stats = [min, max]
-                hi = max(s[1] for s in file_stats)
-            else:
-                lo = hi = None
+            lo, hi = bounds.get(c) or (
+                _stat_value(row[f"__min_{c}"]), _stat_value(row[f"__max_{c}"])
+            )
             columns[c] = {
                 "ndv": int(row[f"__ndv_{c}"]) if aggs else 0,
                 "n_nulls": int(row[f"__nulls_{c}"]) if aggs else 0,
@@ -2866,13 +2908,39 @@ class Warehouse:
 
     def _write_table_files(self, tdir: str, df: DataFrame, meta: dict) -> list[dict]:
         """Write a table batch honoring the table's write spec (order /
-        distribution / key bloom / column mapping)."""
+        distribution / key bloom / column mapping / stats columns)."""
         return self._write_files(
             tdir, df, meta["partition_by"], bloom_col=meta.get("key"),
             spec_id=meta.get("partition_spec_id", 0),
             phys=meta.get("physical"), order_by=meta.get("write_order"),
             distribution=meta.get("write_distribution", "none"),
+            stats_cols=self._stats_columns(meta),
         )
+
+    # schema columns whose min/max every file records whatever the
+    # table's layout (Delta's dataSkippingNumIndexedCols, Iceberg's
+    # write.metadata.metrics.max-inferred-column-defaults)
+    _STATS_LEADING_COLUMNS = 8
+
+    def _stats_columns(self, meta: dict, extra=()) -> frozenset[str]:
+        """Physical names of the columns whose min/max a new file of the
+        table records (Iceberg's metrics policy): the partition source
+        columns, the key, the write order, identity columns, ``extra``
+        (a compaction's sort/z-order columns) and the first
+        ``_STATS_LEADING_COLUMNS`` schema columns. Other columns carry no
+        stats, which every reader takes as 'cannot prune'; to prune on
+        one, put it in the write order or ``compact(sort_by=...)``."""
+        names = StructType.fromJson(meta["schema"]).fieldNames()
+        specs = meta.get("partition_specs") or [meta.get("partition_by")]
+        transforms = [(pb, _TRANSFORM_RE.match(pb)) for pb in specs if pb]
+        sources = [m.group(3) if m else pb for pb, m in transforms]
+        cols = {
+            *names[: self._STATS_LEADING_COLUMNS], *sources, meta.get("key"),
+            *(meta.get("write_order") or ()), *(meta.get("identity") or {}),
+            *extra,
+        }
+        phys = meta.get("physical") or {}
+        return frozenset(phys.get(c, c) for c in cols if c in names)
 
     def _write_files(
         self,
@@ -2884,10 +2952,11 @@ class Warehouse:
         order_by: list[str] | None = None,
         distribution: str = "none",
         spec_id: int = 0,
+        stats_cols: frozenset[str] | None = None,
     ) -> list[dict]:
         """Write a batch into a fresh commit dir; return file entries
-        with per-file record counts and column min/max read from the
-        parquet footers (the Iceberg manifest's record_count and
+        with per-file record counts and the min/max of the physical
+        columns ``stats_cols`` (None: all) read from the parquet footers (the Iceberg manifest's record_count and
         lower/upper-bounds fields -- powering metadata-only COUNT(*),
         snapshot stats, and data skipping without a data scan), plus an
         optional per-file Bloom filter over ``bloom_col`` for equality
@@ -2963,7 +3032,7 @@ class Warehouse:
         if key_col:
             key_col = phys.get(key_col, key_col)  # files store physical names
         entries = []
-        for m in self._nonempty_metas(paths, key_col):
+        for m in self._nonempty_metas(paths, key_col, stats_cols):
             entry = {"path": os.path.relpath(m.pop("abs"), tdir), **m}
             if spec_id:
                 # partition evolution: files remember the spec that
@@ -2974,20 +3043,22 @@ class Warehouse:
         return entries
 
     def _nonempty_metas(
-        self, paths: list[tuple[str, str | None]], key_col: str | None
+        self, paths: list[tuple[str, str | None]], key_col: str | None,
+        stats_cols: frozenset[str] | None = None,
     ) -> list[dict]:
         """:meth:`_file_metas` of the files in ``paths`` that hold rows.
         The empty part files a Spark write leaves (parallelism > rows)
         are deleted: they carry no data and no stats, yet every manifest
         would list them and every read would open them."""
-        metas = self._file_metas(paths, key_col)
+        metas = self._file_metas(paths, key_col, stats_cols)
         for m in metas:
             if not m["records"]:
                 os.remove(m["abs"])
         return [m for m in metas if m["records"]]
 
     def _file_metas(
-        self, paths: list[tuple[str, str | None]], key_col: str | None
+        self, paths: list[tuple[str, str | None]], key_col: str | None,
+        stats_cols: frozenset[str] | None = None,
     ) -> list[dict]:
         """``_extract_file_meta`` of each just-written ``(path,
         partition)`` in ``paths`` plus its ``partition``, in order: in
@@ -3001,7 +3072,10 @@ class Warehouse:
             <= self._META_LOCAL_MAX_BYTES
         ):
             return [
-                {**_extract_file_meta(fp, key_col), "partition": part}
+                {
+                    **_extract_file_meta(fp, key_col, stats_cols),
+                    "partition": part,
+                }
                 for fp, part in paths
             ]
         sc = self.spark.sparkContext
@@ -3010,7 +3084,8 @@ class Warehouse:
             sc.parallelize(paths, n_slices)
             .map(
                 lambda fp: {
-                    **_extract_file_meta(fp[0], key_col), "partition": fp[1]
+                    **_extract_file_meta(fp[0], key_col, stats_cols),
+                    "partition": fp[1],
                 }
             )
             .collect()
@@ -5686,14 +5761,18 @@ class Warehouse:
 
     @staticmethod
     def _zorder_axis(
-        c: str, schema: StructType, phys_map: dict, rewrite: list[dict]
+        c: str, schema: StructType, phys_map: dict, rewrite: list[dict],
+        df: DataFrame,
     ) -> tuple[F.Column, float, float]:
         """Quantization axis ``(expr, lo, hi)`` for one z-order column.
 
         Numeric, date, and timestamp columns scale against the rewrite
         set's OWN manifest min/max (dates/timestamps are stored in
         manifests as ISO strings -- ISO order == time order -- and are
-        mapped onto a days/seconds-since-epoch axis here). String
+        mapped onto a days/seconds-since-epoch axis here); when a file
+        of the set carries no stats for ``c`` (a column outside
+        :meth:`_stats_columns` when it was written), one min/max
+        aggregate over ``df``, the rewrite set's rows, stands in. String
         columns use truncated-binary quantization (Iceberg's z-order
         treatment of strings): the first two UTF-8 bytes, left-justified
         so the axis is monotonic in byte order -- a fixed 16-bit domain
@@ -5704,11 +5783,10 @@ class Warehouse:
             raise ValueError(f"z-order column {c} not in schema")
         dtype = schema[c].dataType.simpleString()
         pc = phys_map.get(c, c)
-        vals = [
-            s
-            for s in ((e.get("stats") or {}).get(pc) for e in rewrite)
-            if s is not None
-        ]
+        vals = [(e.get("stats") or {}).get(pc) for e in rewrite]
+        if None in vals:
+            bounds = [_stat_value(v) for v in df.agg(F.min(c), F.max(c)).first()]
+            vals = [bounds] if None not in bounds else []
         if dtype == "string":
             # rpad keeps left-justified byte order: 'a' -> 0x6100 sorts
             # after 'ZZ' -> 0x5A5A, matching lexicographic byte order
@@ -5863,7 +5941,10 @@ class Warehouse:
             # serves its prefix.
             phys_map = meta.get("physical") or {}
             key = _zorder_expr(
-                [self._zorder_axis(c, schema, phys_map, rewrite) for c in sort_by]
+                [
+                    self._zorder_axis(c, schema, phys_map, rewrite, df)
+                    for c in sort_by
+                ]
             )
         elif sort_by:
             key = F.col(sort_by)
@@ -5881,10 +5962,12 @@ class Warehouse:
             df = df.coalesce(1)
         if key is not None:
             df = df.sortWithinPartitions(key)
+        clustered = [sort_by] if isinstance(sort_by, str) else sort_by or ()
         new_files = self._write_files(
             tdir, df, meta["partition_by"], bloom_col=meta.get("key"),
             phys=meta.get("physical"),
             spec_id=meta.get("partition_spec_id", 0),
+            stats_cols=self._stats_columns(meta, clustered),
         )
         paths = {e["path"] for e in rewrite}
         return self._publish_rewrite(

@@ -19,11 +19,6 @@ from pyspark.sql.types import (
 from sample_for_transactional_datalake_using_s3tables_spark.sources.sqlexec import WarehouseSQL
 from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import Warehouse
 
-# Long-tail battery: excluded from the default gate (VERDICT r13 #4
-# -- the full suite outgrew the driver's verification budget). Run
-# everything with:  python -m pytest tests/ -q -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
 
 S = StructType(
     [

@@ -482,9 +482,9 @@ def test_join_and_subquery_refuse(env):
 
 
 def test_mv_defined_over_a_view_never_serves(env):
-    """Replacing a view leaves an MV defined over it fresh (freshness
-    tracks source-table versions) while its storage still holds the old
-    view's rows, so such an MV must never serve a routed query."""
+    """An MV defined over a view never serves a routed query, before
+    and after the view is replaced (the MV is then stale: its storage
+    still holds the old view's rows)."""
     wh, sql, _ = env
     sql.execute("CREATE VIEW ns.wv AS SELECT g, v FROM ns.t")
     sql.execute(
@@ -498,10 +498,53 @@ def test_mv_defined_over_a_view_never_serves(env):
         sql.execute(
             "CREATE OR REPLACE VIEW ns.wv AS SELECT g, v * 100 AS v FROM ns.t"
         )
-        assert wh.mv_status("ns", "overview")["fresh"]
+        assert not wh.mv_status("ns", "overview")["fresh"]
         _run(sql, stmt, False)
     finally:
         sql.execute("DROP MATERIALIZED VIEW ns.overview")
+
+
+def test_replaced_view_makes_mv_stale_until_refresh(env):
+    """REFRESH records the text of every view the definition reads
+    through; replacing one makes the MV stale (``stale_sources`` names
+    the view), and the next REFRESH recomputes through the new text
+    instead of folding a source delta onto storage built from the old
+    one."""
+    wh, sql, spark = env
+    gs = StructType([StructField("g", StringType()), StructField("v", LongType())])
+    wh.create_table("ns", "gv", gs)
+    wh.insert(
+        "ns", "gv",
+        spark.createDataFrame([("g0", 5), ("g0", 15), ("g1", 7)], gs).coalesce(1),
+    )
+    sql.execute("CREATE VIEW ns.gvv AS SELECT g, v FROM ns.gv")
+    sql.execute(
+        "CREATE MATERIALIZED VIEW ns.gvm AS "
+        "SELECT g, SUM(v) AS s FROM ns.gvv GROUP BY g"
+    )
+    try:
+        sql.execute("REFRESH MATERIALIZED VIEW ns.gvm")
+        st = wh.mv_status("ns", "gvm")
+        assert st["fresh"] and st["stale_sources"] == []
+        sql.execute("CREATE OR REPLACE VIEW ns.gvv AS SELECT g, v * 100 AS v FROM ns.gv")
+        st = wh.mv_status("ns", "gvm")
+        assert not st["fresh"] and st["stale_sources"] == ["ns.gvv"]
+        # storage still serves the rows of the old view text
+        assert dict(sql.execute("SELECT * FROM ns.gvm").collect()) == {
+            "g0": 20, "g1": 7,
+        }
+        wh.insert("ns", "gv", spark.createDataFrame([("g1", 1)], gs).coalesce(1))
+        st = sql.execute("REFRESH MATERIALIZED VIEW ns.gvm")
+        assert st["fresh"] and not st["incremental"]
+        assert dict(sql.execute("SELECT * FROM ns.gvm").collect()) == {
+            "g0": 2000, "g1": 800,
+        }
+        sql.execute("DROP VIEW ns.gvv")
+        assert wh.mv_status("ns", "gvm")["stale_sources"] == ["ns.gvv"]
+    finally:
+        sql.execute("DROP MATERIALIZED VIEW ns.gvm")
+        wh.drop_view("ns", "gvv")
+        wh.drop_table("ns", "gv")
 
 
 def test_view_with_order_limit_inside_refuses(env):

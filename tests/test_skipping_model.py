@@ -8,10 +8,17 @@ from __future__ import annotations
 from hypothesis import given
 from hypothesis import strategies as st
 
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
 from sample_for_transactional_datalake_using_s3tables_spark.sources.warehouse import (
     _PRUNE_OPS,
+    Warehouse,
+    _BulkKeyProbe,
+    _bloom_positions,
     _build_bloom,
+    _entry_may_hold_any,
     _entry_may_match,
+    _pack_blooms,
 )
 
 _OPS = {
@@ -219,3 +226,153 @@ def test_bulk_key_probe_matches_scalar():
                 else:
                     assert bulk or not scalar
     shutil.rmtree(tdir)
+
+
+# -- the file-metrics column policy and Bloom pack sizing -------------------
+
+
+def _bloom_with(values, m: int, k: int) -> dict:
+    """A str-key Bloom of the given (m, k) with the engine's positions:
+    what an earlier sizing rule, which made m a power of two, wrote."""
+    bits = bytearray(m // 8)
+    for v in values:
+        for p in _bloom_positions(v, m, k):
+            bits[p // 8] |= 1 << (p % 8)
+    return {"type": "str", "bits": bytes(bits).hex(), "m": m, "k": k}
+
+
+def test_bulk_probe_matches_scalar_on_every_pack_size(tmp_path):
+    """The bulk probe takes positions mod m as the scalar probe does, so
+    it decides exactly as the scalar loop over Blooms whose m is not a
+    power of two (the 1/8-octave sizing) and over the power-of-two Blooms
+    of earlier packs, inline and moved into packs, more than 64 of one
+    (m, k) to a group."""
+    import copy
+    import random
+
+    rng = random.Random(11)
+    entries = []
+    for i in range(140):
+        n = (21, 40, 300, 1000)[i % 4]
+        keys = [f"TXN_{i * 10_000 + j}" for j in rng.sample(range(3 * n), n)]
+        if i % 3 == 0:  # written before: m the next power of two
+            bloom = _bloom_with(keys, max(512, 1 << (24 * n - 1).bit_length()), 16)
+        else:
+            bloom = _build_bloom(keys)
+        # no stats: only the Bloom can prune
+        entries.append({"blooms": {"k": bloom}, "keys": keys})
+    sizes = {e["blooms"]["k"]["m"] for e in entries}
+    assert any(m & (m - 1) for m in sizes) and 32768 in sizes and 24576 in sizes
+    packed = copy.deepcopy(entries)
+    for i, e in enumerate(packed):
+        e["path"] = f"data/c{i}/f.parquet"
+        (tmp_path / "data" / f"c{i}").mkdir(parents=True)
+    _pack_blooms(str(tmp_path), packed)
+    # hits in every fourth file, plus 1,500 keys that no file holds
+    batch = {e["keys"][0] for e in entries[::4]}
+    batch |= {f"TXN_{v}" for v in rng.sample(range(10**7, 2 * 10**7), 1500)}
+    scalar = [_entry_may_hold_any(e, "k", batch) for e in entries]
+    assert scalar[::4] == [True] * len(entries[::4]) and not all(scalar)
+    probe = _BulkKeyProbe(batch)
+    assert probe.entries_may_hold_any(entries, "k") == scalar
+    assert [probe.entry_may_hold_any(e, "k") for e in entries] == scalar
+    pack_probe = _BulkKeyProbe(batch, str(tmp_path))
+    assert pack_probe.entries_may_hold_any(packed, "k") == scalar
+
+
+WIDE = StructType(
+    [StructField(f"c{i}", LongType()) for i in range(8)]
+    + [
+        StructField("wo", LongType()),
+        StructField("id", StringType(), False),
+        StructField("day", StringType()),
+        StructField("late", LongType()),
+    ]
+)
+# the policy's columns of WIDE keyed on id, partitioned by day and
+# written in wo order: all but ``late``
+WIDE_STATS = {f"c{i}" for i in range(8)} | {"wo", "id", "day"}
+
+
+def _wide_table(spark, tmp_path, write_order=None):
+    """Three commits into two day partitions of the 12-column WIDE table:
+    c0 (= row number) and ``late`` rise across commits, ``wo`` does not."""
+    wh = Warehouse(spark, str(tmp_path))
+    wh.create_namespace("ns")
+    wh.create_table("ns", "w", WIDE, key="id", partition_by="day")
+    if write_order:
+        wh.set_write_order("ns", "w", write_order)
+    for c in range(3):
+        rows = [
+            (*(j * (i + 1) for i in range(8)), j % 7, f"k{j:04d}", f"d{j % 2}", j)
+            for j in range(c * 100, c * 100 + 100)
+        ]
+        wh.insert("ns", "w", spark.createDataFrame(rows, WIDE).coalesce(1))
+    return wh
+
+
+def _phys(wh, cols) -> set[str]:
+    phys = wh.table_meta("ns", "w").get("physical") or {}
+    return {phys.get(c, c) for c in cols}
+
+
+def test_stats_columns_policy():
+    """Partition sources of every spec, key, write order, identity
+    columns, the caller's sort columns and the first 8 columns, resolved
+    to physical names; a spec naming a column no longer in the schema
+    contributes nothing."""
+    schema = StructType(
+        WIDE.fields
+        + [StructField("ident", LongType()), StructField("zc", LongType())]
+    )
+    meta = {
+        "schema": schema.jsonValue(),
+        "key": "id",
+        "partition_specs": ["gone", "day", "bucket(4, late)"],
+        "partition_by": "bucket(4, late)",
+        "write_order": ["wo"],
+        "identity": {"ident": {"start": 1, "step": 1}},
+        "physical": {"id": "id_p1", "late": "late_p2", "c0": "c0_p3"},
+    }
+    wh = Warehouse.__new__(Warehouse)  # the policy reads only the meta
+    base = {"c0_p3", *(f"c{i}" for i in range(1, 8))}
+    base |= {"wo", "id_p1", "day", "late_p2", "ident"}
+    assert wh._stats_columns(meta) == base
+    assert wh._stats_columns(meta, ("zc",)) == base | {"zc"}
+    assert wh._stats_columns({"schema": WIDE.jsonValue()}) == {
+        f"c{i}" for i in range(8)
+    }
+
+
+def test_files_keep_min_max_only_for_policy_columns(spark, tmp_path):
+    wh = _wide_table(spark, tmp_path, write_order=["wo"])
+    files = wh.plan_files("ns", "w")[0]
+    assert len(files) == 6
+    assert all(set(e["stats"]) == _phys(wh, WIDE_STATS) for e in files)
+    # no stats on `late`: a predicate on it keeps every file, and the
+    # row filter still returns exactly the matching rows
+    for preds in ([("late", "=", 150)], [("late", ">=", 290)]):
+        assert len(wh.plan_files("ns", "w", predicates=preds)[0]) == len(files)
+    rows = wh.read("ns", "w", predicates=[("late", ">=", 290)]).collect()
+    assert sorted(r.late for r in rows) == list(range(290, 300))
+    # a policy column prunes as before
+    assert len(wh.plan_files("ns", "w", predicates=[("c0", ">=", 200)])[0]) == 2
+
+
+def test_compact_sort_by_late_column_records_and_prunes_on_it(spark, tmp_path):
+    wh = _wide_table(spark, tmp_path)
+    assert not any(
+        _phys(wh, ["late"]) & set(e["stats"]) for e in wh.plan_files("ns", "w")[0]
+    )
+    # the z-order axis of a column the files keep no stats for scales
+    # by one aggregate over the rewrite set instead
+    wh.compact("ns", "w", sort_by=["late"], target_files=3)
+    files = wh.plan_files("ns", "w")[0]
+    (late,) = _phys(wh, ["late"])
+    assert all(late in e["stats"] for e in files)
+    assert min(e["stats"][late][0] for e in files) == 0
+    assert max(e["stats"][late][1] for e in files) == 299
+    kept = wh.plan_files("ns", "w", predicates=[("late", "<", 50)])[0]
+    assert 0 < len(kept) < len(files)
+    rows = wh.read("ns", "w", predicates=[("late", "<", 50)]).collect()
+    assert sorted(r.late for r in rows) == list(range(50))

@@ -1,6 +1,7 @@
 """Table statistics (ANALYZE TABLE + the $stats metadata table): NDV +
 null counts from one aggregate pass, min/max folded from manifest
-footer stats with no data scan, snapshot-version stamping.
+footer stats (or, for a column files keep no stats for, from that same
+pass), snapshot-version stamping.
 """
 
 from __future__ import annotations
@@ -94,3 +95,31 @@ def test_analyze_skips_non_atomic_columns(env, spark):
     )
     doc = wh.analyze_table("ns", "t2")
     assert set(doc["columns"]) == {"id"}  # arr skipped, no crash
+
+
+def test_analyze_min_max_of_columns_without_file_stats(spark):
+    """Files keep min/max only for the first 8 columns (plus key and
+    layout columns); ANALYZE still reports min/max for every column of a
+    wider table, taking the rest from its one aggregate pass."""
+    wide = StructType(
+        [StructField("id", StringType(), False)]
+        + [StructField(f"c{i}", LongType()) for i in range(1, 12)]
+    )
+    with tempfile.TemporaryDirectory() as d:
+        wh = Warehouse(spark, d)
+        wh.create_namespace("ns")
+        wh.create_table("ns", "w", wide, key="id")
+        for lo in (0, 10):
+            rows = [
+                (f"k{j:02d}", *(j * i if j % 4 else None for i in range(1, 12)))
+                for j in range(lo, lo + 10)
+            ]
+            wh.insert("ns", "w", spark.createDataFrame(rows, wide).coalesce(1))
+        files = wh.plan_files("ns", "w")[0]
+        assert all("c11" not in e["stats"] for e in files)  # past the first 8
+        cols = wh.analyze_table("ns", "w")["columns"]
+        assert (cols["id"]["min"], cols["id"]["max"]) == ("k00", "k19")
+        for i in range(1, 12):
+            # rows 0, 4, 8, 12, 16 are NULL; the rest hold j * i
+            assert (cols[f"c{i}"]["min"], cols[f"c{i}"]["max"]) == (i, 19 * i)
+            assert cols[f"c{i}"]["n_nulls"] == 5
