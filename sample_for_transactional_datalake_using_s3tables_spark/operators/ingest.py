@@ -1883,8 +1883,8 @@ def warehouse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE aggregate pass, stamped with the snapshot version. The oracle
     recomputes each column's NDV/nulls directly, so a hash match
     certifies the whole chain: analyze -> sidecar -> $stats read.
-    Column min/max (manifest-folded, no data scan) are pytest-covered
-    rather than certified -- their string rendering is engine-specific.
+    Column min/max (from the same pass) are pytest-covered rather than
+    certified -- their string rendering is engine-specific.
     """
     from ..sources.sqlexec import WarehouseSQL
 

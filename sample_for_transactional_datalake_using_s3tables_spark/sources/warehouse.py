@@ -140,9 +140,13 @@ def _file_stats(md, cols=None) -> dict:
 # per trigger at sf1 and growing linearly with table size). Now
 # m grows with the file's key count (~24 bits/key, capped so manifests
 # stay small) and k with m/n, so a trigger-sized file (~1k keys) gets
-# a 24576-bit / 16-hash bloom. m rounds up to a 1/8-octave step, at
-# most 12.5 % over 24 bits/key, and at most 8 distinct m per octave
-# keep the bulk probe's (m, k) groups wide. Rounding to a power of two
+# a 24576-bit / 16-hash bloom. m rounds up to a 1/4-octave step: at
+# most 25 % over 24 bits/key (5 % on average over 200-3,000 keys), and
+# at most 4 distinct m per octave keep the bulk probe's (m, k) groups
+# few: each group pays its own full-batch position passes, and 1/8-
+# octave steps (31 groups over files of 200-3,000 keys, against 16)
+# probed 50k keys against 300 such files 20-70 % slower on 4 vCPU.
+# Rounding to a power of two
 # cost up to 100 % more pack bytes for no precision: with m = 2**15 the
 # positions are exact arithmetic progressions mod m (2**64 wraps to 0),
 # and 1k-key files measured 1.1e-5 false positives per absent key (40
@@ -165,11 +169,11 @@ _U64 = (1 << 64) - 1
 
 def _bloom_params(n: int) -> tuple[int, int]:
     """(m, k) for a file holding ``n`` keys: m = 24*n rounded up to a
-    multiple of q = 2**(bit_length(24*n) - 4) (at least 64 bits, so m
+    multiple of q = 2**(bit_length(24*n) - 3) (at least 64 bits, so m
     stays whole bytes), within [512, 262144]; k ~ 0.7*m/n capped to
     [2, 16]."""
     target = _BLOOM_BITS_PER_KEY * max(1, n)
-    q = max(64, 1 << (target.bit_length() - 4))
+    q = max(64, 1 << (target.bit_length() - 3))
     m = min(_BLOOM_M_MAX, max(_BLOOM_M, -(-target // q) * q))
     k = max(2, min(16, round(0.7 * m / max(1, n))))
     return m, k
@@ -600,13 +604,13 @@ class _BulkKeyProbe:
         per-entry probe pays ~4-6 numpy passes over the WHOLE key batch
         just for the first hash, so a 50k-key CDC batch against a few
         hundred manifest entries was ~2 ms x entries of driver CPU per
-        MERGE (the measured per-trigger probe wall). Here the first two
+        MERGE (the measured per-trigger probe wall). Here the first four
         hashes run as (chunk x keys) matrix gathers over the stacked
         bloom bit arrays -- one pass per hash for 64 entries at a time
-        -- and only the (geometrically small) per-entry survivor sets
-        pay the remaining k-2 hashes. Semantics identical to
-        entry_may_hold_any on every entry (same positions, same
-        conservative keeps)."""
+        -- and only the (geometrically shrinking) surviving (entry, key)
+        pairs of each chunk pay the remaining hashes. Semantics
+        identical to entry_may_hold_any on every entry (same positions,
+        same conservative keeps)."""
         if self.keep_all or self.h12 is None or self.h12.shape[0] == 0:
             return [self.entry_may_hold_any(e, col) for e in entries]
         np = self._np
@@ -627,20 +631,20 @@ class _BulkKeyProbe:
             groups.setdefault((b["m"], b["k"]), []).append(
                 (i, cand, np.frombuffer(raw, dtype=np.uint8))
             )
-        n = self.h12.shape[0]
+        h1, h2 = self.h12[:, 0], self.h12[:, 1]
+        # h1 + j*h2 of the batched hashes, shared by every (m, k) group
+        hsum = [h1 + np.uint64(j) * h2 for j in range(1, 4)] if groups else []
         lut = np.left_shift(np.uint8(1), np.arange(8, dtype=np.uint8))
         for (m, k), members in groups.items():
             mu = np.uint64(m)
             nb = min(k, 4)  # batched hash count: survivors after 4 are
-            # ~fill^4 of the batch (a few %), so the per-entry tail is
-            # negligible while the matrix passes stay memory-bounded
+            # ~fill^4 of the batch (a few %), so the flat tail is small
+            # while the matrix passes stay memory-bounded
             idxs, sels = [], []
             for j in range(nb):
                 pos = (
-                    self._pos0(m).astype(np.uint64)
-                    if j == 0
-                    else (self.h12[:, 0] + np.uint64(j) * self.h12[:, 1])
-                    % mu
+                    self._pos0(m).astype(np.uint64) if j == 0
+                    else hsum[j - 1] % mu
                 )
                 idxs.append((pos >> np.uint64(3)).astype(np.intp))
                 sels.append(lut[(pos & np.uint64(7)).astype(np.uint8)])
@@ -650,33 +654,28 @@ class _BulkKeyProbe:
                 alive = (bmat[:, idxs[0]] & sels[0][None, :]) != 0
                 for j in range(1, nb):
                     alive &= (bmat[:, idxs[j]] & sels[j][None, :]) != 0
-                for row, (i, cand, _bits) in enumerate(chunk):
-                    a = alive[row]
-                    if cand is not None:
-                        surv = np.nonzero(a[cand])[0] + cand.start
-                    else:
-                        surv = np.nonzero(a)[0]
-                    if surv.size == 0:
-                        out[i] = False
-                        continue
-                    # remaining hashes on the survivor tail only
-                    ok = False
-                    h1 = self.h12[surv, 0]
-                    h2 = self.h12[surv, 1]
-                    bits = bmat[row]
-                    for j in range(nb, k):
-                        pos = (h1 + np.uint64(j) * h2) % mu
-                        al = (
-                            bits[(pos >> np.uint64(3)).astype(np.intp)]
-                            & lut[(pos & np.uint64(7)).astype(np.uint8)]
-                        ) != 0
-                        if not al.any():
-                            break
-                        if not al.all():
-                            h1, h2 = h1[al], h2[al]
-                    else:
-                        ok = True
-                    out[i] = ok
+                for row, (_i, cand, _bits) in enumerate(chunk):
+                    if cand is not None:  # keys outside the file's range
+                        alive[row, : cand.start] = False
+                        alive[row, cand.stop :] = False
+                # remaining hashes on the chunk's surviving (entry, key)
+                # pairs at once, not entry by entry: ~half the pairs
+                # drop per hash, so the tail is a few numpy passes over
+                # a shrinking flat array
+                rows, keys = np.nonzero(alive)
+                for j in range(nb, k):
+                    if rows.size == 0:
+                        break
+                    pos = (h1[keys] + np.uint64(j) * h2[keys]) % mu
+                    al = (
+                        bmat[rows, (pos >> np.uint64(3)).astype(np.intp)]
+                        & lut[(pos & np.uint64(7)).astype(np.uint8)]
+                    ) != 0
+                    rows, keys = rows[al], keys[al]
+                hit = np.zeros(len(chunk), dtype=bool)
+                hit[rows] = True
+                for row, (i, _c, _bits) in enumerate(chunk):
+                    out[i] = bool(hit[row])
         return out
 
 
@@ -1820,10 +1819,8 @@ class Warehouse:
         }
 
     # -- table statistics (the Iceberg Puffin / ANALYZE TABLE analog:
-    # per-column NDV + null counts from ONE aggregate pass, column
-    # min/max folded from the MANIFEST's per-file footer stats, or from
-    # that same pass for a column some file keeps no stats for, stamped
-    # with the snapshot version they describe) --
+    # per-column NDV, null counts and min/max from ONE aggregate pass,
+    # stamped with the snapshot version they describe) --
 
     def analyze_table(
         self, ns: str, table: str, mode: str = "exact"
@@ -1832,11 +1829,10 @@ class Warehouse:
         sidecar). ``mode="exact"`` runs COUNT(DISTINCT) per atomic
         column (one shuffle; the cost an explicit ANALYZE signs up
         for); ``mode="approx"`` uses HLL++ (approx_count_distinct) --
-        the 100 TB path, constant memory per column. Null counts ride
-        the same single aggregate. Column min/max fold the manifest's
-        footer stats when every live file carries them; a column some
-        file keeps no stats for (see :meth:`_stats_columns`) takes
-        MIN/MAX in the same aggregate instead. Bounds are JSON-safe as
+        the 100 TB path, constant memory per column. Null counts and
+        MIN/MAX ride the same single aggregate (files keep footer
+        min/max only for some columns, see :meth:`_stats_columns`, and
+        the scan already reads every column). Bounds are JSON-safe as
         :func:`_stat_value` gives them (None for other types).
         Returns the stored stats document."""
         import time as _time
@@ -1852,19 +1848,9 @@ class Warehouse:
             if not isinstance(f.dataType, (StructType,))
             and f.dataType.typeName() not in ("array", "map", "binary")
         ]
-        # manifest-side min/max (physical column names)
-        phys = meta.get("physical") or {}
-        entries = self._manifest(tdir, version)
-        records = sum(e.get("records", 0) for e in entries)
-        bounds: dict[str, tuple] = {}
-        for c in atomic:
-            pc = phys.get(c, c)
-            file_stats = [(e.get("stats") or {}).get(pc) for e in entries]
-            if entries and None not in file_stats:
-                bounds[c] = (  # stats = [min, max]
-                    min(s[0] for s in file_stats),
-                    max(s[1] for s in file_stats),
-                )
+        records = sum(
+            e.get("records", 0) for e in self._manifest(tdir, version)
+        )
         df = self.read(ns, table, version=version)
         aggs = []
         for c in atomic:
@@ -1876,23 +1862,20 @@ class Warehouse:
             aggs.append(
                 F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls_{c}")
             )
-            if c not in bounds:
-                aggs.append(F.min(c).alias(f"__min_{c}"))
-                aggs.append(F.max(c).alias(f"__max_{c}"))
+            aggs.append(F.min(c).alias(f"__min_{c}"))
+            aggs.append(F.max(c).alias(f"__max_{c}"))
         row = (
             df.agg(*aggs).collect()[0] if aggs else {}
-        )  # bounded: at most four scalars per column
-        columns: dict[str, dict] = {}
-        for c in atomic:
-            lo, hi = bounds.get(c) or (
-                _stat_value(row[f"__min_{c}"]), _stat_value(row[f"__max_{c}"])
-            )
-            columns[c] = {
-                "ndv": int(row[f"__ndv_{c}"]) if aggs else 0,
-                "n_nulls": int(row[f"__nulls_{c}"]) if aggs else 0,
-                "min": lo,
-                "max": hi,
+        )  # bounded: four scalars per column
+        columns: dict[str, dict] = {
+            c: {
+                "ndv": int(row[f"__ndv_{c}"]),
+                "n_nulls": int(row[f"__nulls_{c}"]),
+                "min": _stat_value(row[f"__min_{c}"]),
+                "max": _stat_value(row[f"__max_{c}"]),
             }
+            for c in atomic
+        }
         doc = {
             "as_of_version": version, "ts": _time.time(), "mode": mode,
             "records": records, "columns": columns,
@@ -2931,7 +2914,9 @@ class Warehouse:
         stats, which every reader takes as 'cannot prune'; to prune on
         one, put it in the write order or ``compact(sort_by=...)``."""
         names = StructType.fromJson(meta["schema"]).fieldNames()
-        specs = meta.get("partition_specs") or [meta.get("partition_by")]
+        # the current spec by its own (renamed) name: a rename updates
+        # partition_by but leaves the spec history as it was written
+        specs = [*(meta.get("partition_specs") or ()), meta.get("partition_by")]
         transforms = [(pb, _TRANSFORM_RE.match(pb)) for pb in specs if pb]
         sources = [m.group(3) if m else pb for pb, m in transforms]
         cols = {
@@ -5760,33 +5745,51 @@ class Warehouse:
         return self.merge_upsert(ns, table, source, **kwargs)
 
     @staticmethod
-    def _zorder_axis(
-        c: str, schema: StructType, phys_map: dict, rewrite: list[dict],
-        df: DataFrame,
-    ) -> tuple[F.Column, float, float]:
-        """Quantization axis ``(expr, lo, hi)`` for one z-order column.
+    def _zorder_bounds(
+        cols: list[str], schema: StructType, phys_map: dict,
+        rewrite: list[dict], df: DataFrame,
+    ) -> dict[str, list]:
+        """Each z-order column's ``[min, max]`` bounds over the rewrite
+        set: its files' manifest stats, metadata-only. Columns some file
+        of the set carries no stats for (outside :meth:`_stats_columns`
+        when it was written) share ONE min/max aggregate over ``df``,
+        the rewrite set's rows; a column with no non-null value gets no
+        bounds."""
+        for c in cols:
+            if c not in schema.fieldNames():
+                raise ValueError(f"z-order column {c} not in schema")
+        bounds = {
+            c: [(e.get("stats") or {}).get(phys_map.get(c, c)) for e in rewrite]
+            for c in cols
+        }
+        missing = [c for c in cols if None in bounds[c]]
+        if missing:
+            row = df.agg(
+                *(agg(c) for c in missing for agg in (F.min, F.max))
+            ).first()
+            for i, c in enumerate(missing):
+                lo, hi = _stat_value(row[2 * i]), _stat_value(row[2 * i + 1])
+                bounds[c] = [[lo, hi]] if None not in (lo, hi) else []
+        return bounds
 
-        Numeric, date, and timestamp columns scale against the rewrite
-        set's OWN manifest min/max (dates/timestamps are stored in
-        manifests as ISO strings -- ISO order == time order -- and are
-        mapped onto a days/seconds-since-epoch axis here); when a file
-        of the set carries no stats for ``c`` (a column outside
-        :meth:`_stats_columns` when it was written), one min/max
-        aggregate over ``df``, the rewrite set's rows, stands in. String
+    @staticmethod
+    def _zorder_axis(
+        c: str, schema: StructType, vals: list
+    ) -> tuple[F.Column, float, float]:
+        """Quantization axis ``(expr, lo, hi)`` for one z-order column,
+        given ``vals``, the rewrite set's ``[min, max]`` bounds of ``c``
+        (see :meth:`_zorder_bounds`).
+
+        Numeric, date, and timestamp columns scale against those bounds
+        (dates/timestamps are ISO strings -- ISO order == time order --
+        mapped onto a days/seconds-since-epoch axis here). String
         columns use truncated-binary quantization (Iceberg's z-order
         treatment of strings): the first two UTF-8 bytes, left-justified
         so the axis is monotonic in byte order -- a fixed 16-bit domain
         needing no stats at all."""
         import datetime
 
-        if c not in schema.fieldNames():
-            raise ValueError(f"z-order column {c} not in schema")
         dtype = schema[c].dataType.simpleString()
-        pc = phys_map.get(c, c)
-        vals = [(e.get("stats") or {}).get(pc) for e in rewrite]
-        if None in vals:
-            bounds = [_stat_value(v) for v in df.agg(F.min(c), F.max(c)).first()]
-            vals = [bounds] if None not in bounds else []
         if dtype == "string":
             # rpad keeps left-justified byte order: 'a' -> 0x6100 sorts
             # after 'ZZ' -> 0x5A5A, matching lexicographic byte order
@@ -5933,18 +5936,18 @@ class Warehouse:
             # multi-column Z-order (Iceberg rewrite_data_files zorder):
             # normalize each column onto a bounded integer axis --
             # numeric/date/timestamp scaled by the rewrite set's OWN
-            # manifest min/max (metadata-only -- no extra data pass),
+            # min/max (manifest stats; one aggregate pass for columns
+            # its files keep no stats for),
             # strings by truncated leading bytes -- interleave the bits,
             # and cluster on the interleaved key so files get tight
             # ranges on EVERY z-column at once; data skipping then
             # prunes on any of them, where a lexicographic sort only
             # serves its prefix.
-            phys_map = meta.get("physical") or {}
+            bounds = self._zorder_bounds(
+                sort_by, schema, meta.get("physical") or {}, rewrite, df
+            )
             key = _zorder_expr(
-                [
-                    self._zorder_axis(c, schema, phys_map, rewrite, df)
-                    for c in sort_by
-                ]
+                [self._zorder_axis(c, schema, bounds[c]) for c in sort_by]
             )
         elif sort_by:
             key = F.col(sort_by)

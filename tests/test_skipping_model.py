@@ -244,7 +244,7 @@ def _bloom_with(values, m: int, k: int) -> dict:
 def test_bulk_probe_matches_scalar_on_every_pack_size(tmp_path):
     """The bulk probe takes positions mod m as the scalar probe does, so
     it decides exactly as the scalar loop over Blooms whose m is not a
-    power of two (the 1/8-octave sizing) and over the power-of-two Blooms
+    power of two (the 1/4-octave sizing) and over the power-of-two Blooms
     of earlier packs, inline and moved into packs, more than 64 of one
     (m, k) to a group."""
     import copy
@@ -357,6 +357,51 @@ def test_files_keep_min_max_only_for_policy_columns(spark, tmp_path):
     assert sorted(r.late for r in rows) == list(range(290, 300))
     # a policy column prunes as before
     assert len(wh.plan_files("ns", "w", predicates=[("c0", ">=", 200)])[0]) == 2
+
+
+def test_zorder_bounds_share_one_aggregate(spark, tmp_path, monkeypatch):
+    """Z-order columns the files keep no stats for (wo and late here)
+    are bounded by ONE min/max aggregate over the rewrite set; a policy
+    column keeps its manifest stats."""
+    wh = _wide_table(spark, tmp_path)
+    rewrite = wh.plan_files("ns", "w")[0]
+    df = wh.read("ns", "w")
+    calls = []
+    agg = type(df).agg
+    monkeypatch.setattr(
+        type(df), "agg", lambda self, *a: calls.append(len(a)) or agg(self, *a)
+    )
+    bounds = Warehouse._zorder_bounds(
+        ["c0", "wo", "late"], wh.schema("ns", "w"),
+        wh.table_meta("ns", "w").get("physical") or {}, rewrite, df,
+    )
+    assert calls == [4]  # min and max of wo and late, one pass
+    assert bounds["wo"] == [[0, 6]] and bounds["late"] == [[0, 299]]
+    assert len(bounds["c0"]) == len(rewrite)
+
+
+def test_renamed_partition_source_keeps_its_stats(spark, tmp_path):
+    """A rename updates partition_by but not the spec history: files
+    written after renaming the partition source (past the first 8
+    columns) still carry its min/max and prune on a range predicate."""
+    wh = Warehouse(spark, str(tmp_path))
+    wh.create_namespace("ns")
+    wh.create_table("ns", "w", WIDE, key="id", partition_by="bucket(2, late)")
+    wh.rename_column("ns", "w", "late", "later")
+    schema = wh.schema("ns", "w")
+    for c in range(3):
+        rows = [
+            (*(j % 3 for _ in range(8)), j % 7, f"k{j:04d}", f"d{j % 2}", j)
+            for j in range(c * 100, c * 100 + 100)
+        ]
+        wh.insert("ns", "w", spark.createDataFrame(rows, schema).coalesce(1))
+    files = wh.plan_files("ns", "w")[0]
+    (later,) = _phys(wh, ["later"])
+    assert all(later in e["stats"] for e in files)
+    kept = wh.plan_files("ns", "w", predicates=[("later", ">=", 250)])[0]
+    assert 0 < len(kept) < len(files)
+    rows = wh.read("ns", "w", predicates=[("later", ">=", 250)]).collect()
+    assert sorted(r.later for r in rows) == list(range(250, 300))
 
 
 def test_compact_sort_by_late_column_records_and_prunes_on_it(spark, tmp_path):

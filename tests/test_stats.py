@@ -1,7 +1,6 @@
 """Table statistics (ANALYZE TABLE + the $stats metadata table): NDV +
-null counts from one aggregate pass, min/max folded from manifest
-footer stats (or, for a column files keep no stats for, from that same
-pass), snapshot-version stamping.
+null counts and min/max from one aggregate pass, snapshot-version
+stamping.
 """
 
 from __future__ import annotations
@@ -54,6 +53,17 @@ def test_analyze_exact_ndv_nulls_minmax(env):
         for r in sql.execute("SELECT * FROM ns.t$stats").collect()
     }
     assert got == {"id": (10, 0), "v": (3, 2)}
+
+
+def test_analyze_min_max_skip_merge_on_read_deleted_rows(env):
+    """min/max describe the live rows: a row removed by a merge-on-read
+    equality delete still sits in its data file (and that file's footer
+    bounds) but no longer bounds the column."""
+    wh, _sql, _spark = env
+    wh.delete_where("ns", "t", [("id", "=", "k9")], strategy="mor")
+    c = wh.analyze_table("ns", "t")["columns"]
+    assert c["id"]["max"] == "k8"
+    assert wh.plan_files("ns", "t")[0][0]["stats"]["id"] == ["k0", "k9"]
 
 
 def test_analyze_approx_mode_and_staleness(env):

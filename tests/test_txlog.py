@@ -405,19 +405,19 @@ def test_bloom_params_shapes():
     assert _bloom_params(0) == (512, 16)
     assert _bloom_params(1) == (512, 16)
     assert _bloom_params(21) == (512, 16)  # a merge-on-read commit's file
-    assert _bloom_params(22) == (576, 16)
+    assert _bloom_params(22) == (640, 16)
     assert _bloom_params(1000) == (24576, 16)  # a copy-on-write file
     m, k = _bloom_params(10**6)
     assert (m, k) == (262144, 2)  # capped size, k floor
     for n in (1, 5, 21, 22, 100, 1000, 5000, 10_922, 50_000):
         m, k = _bloom_params(n)
-        # m: 24 bits/key rounded up to a 1/8-octave step of at least 64
-        # bits, so at most 12.5 % over the target and whole bytes
-        q = max(64, 1 << ((24 * n).bit_length() - 4))
+        # m: 24 bits/key rounded up to a 1/4-octave step of at least 64
+        # bits, so at most 25 % over the target and whole bytes
+        q = max(64, 1 << ((24 * n).bit_length() - 3))
         assert m % 64 == 0 and 512 <= m <= 262144 and 2 <= k <= 16
         assert m == min(262144, max(512, -(-24 * n // q) * q))
         assert m >= min(24 * n, 262144)
-        assert m <= max(512, 24 * n * 1.125)
+        assert m <= max(512, 24 * n * 1.25)
 
 
 def test_small_bloom_false_positive_rate():
